@@ -89,20 +89,12 @@ object Catalog {
     bucketedPersist(df, name, bucketCol, buckets)
   }
 
-  /** Full ingest→profile→register pipeline (analyze_file analog,
-    * doc.py:86–131): returns the profile used for NL→SQL grounding.
-    *
-    * `registerView = false` skips the fixed-name registration: on a
-    * SHARED long-lived session (WebServer upload path) a global
-    * `data_table` is exactly the cross-request mutable state the
-    * per-request views in ask_question avoid, so the web tier profiles
-    * without registering. The default keeps the reference's
-    * single-user CLI behavior.
-    */
-  def analyzeFile(spark: SparkSession, path: String,
-      registerView: Boolean = true): DataInfo = {
+  /** Ingest + profile (analyze_file analog, doc.py:86–131): the
+    * frame and the profile used for NL→SQL grounding. Nothing is
+    * registered: on the web tier's shared session a fixed-name view is
+    * cross-request mutable state, so each ask registers its own. */
+  def analyzeFile(spark: SparkSession, path: String): (DataFrame, DataInfo) = {
     val df = Ingest.load(spark, path)
-    if (registerView) register(df)
-    Profile(df)
+    (df, Profile(df))
   }
 }

@@ -1,6 +1,8 @@
 package graft.engine
 
-import java.nio.file.{Files, Path, Paths}
+import java.nio.file.{FileAlreadyExistsException, Files, Path, Paths, StandardOpenOption}
+
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Upload workspace (SURVEY.md §2 Tier A14;
   * /root/reference/app.py:113–168 analog): validate extension against
@@ -18,7 +20,12 @@ object Workspace {
     if (cleaned.isEmpty || cleaned.startsWith(".")) s"upload$cleaned" else cleaned
   }
 
-  /** Save uploaded bytes; returns the stored path.
+  /** Save uploaded bytes under `${now}_${name}`; returns the stored path.
+    * A stored upload is never overwritten: the write is CREATE_NEW, and
+    * a name already taken (same name, same millisecond) gets a `-k`
+    * suffix before its extension. The web tier keys each upload's
+    * analysis by file id and never re-reads its schema, so two uploads
+    * must never share a path.
     * Throws IllegalArgumentException on bad extension / size. */
   def saveUpload(bytes: Array[Byte], originalName: String, uploadDir: String,
       now: Long): Path = {
@@ -28,21 +35,30 @@ object Workspace {
     require(bytes.length <= MaxUploadBytes,
       s"File too large: ${bytes.length} bytes (max $MaxUploadBytes)")
     Files.createDirectories(Paths.get(uploadDir))
-    val target = Paths.get(uploadDir, s"${now}_${secureName(originalName)}")
-    Files.write(target, bytes)
-    target
+    val name = s"${now}_${secureName(originalName)}"
+    // `<ms>_d.csv.gz` → stem `<ms>_d`, suffix `.csv.gz`: the suffix
+    // keeps the extension Ingest dispatches on
+    val dot = name.indexOf('.')
+    val (stem, suffix) = if (dot < 0) (name, "") else name.splitAt(dot)
+    def write(k: Int): Path = {
+      val target = Paths.get(uploadDir, if (k == 1) name else s"$stem-$k$suffix")
+      try Files.write(target, bytes, StandardOpenOption.CREATE_NEW, StandardOpenOption.WRITE)
+      catch { case _: FileAlreadyExistsException => write(k + 1) }
+    }
+    write(1)
   }
 
-  /** Save + analyze; the upload is deleted if analysis fails
-    * (app.py:137–141 cleanup analog). No fixed-name view registration:
-    * the web tier serves concurrent sessions off one SparkSession, so
-    * queries always target per-request views (WebServer.ask_question),
-    * never shared global state. */
-  def uploadAndAnalyze(spark: org.apache.spark.sql.SparkSession,
-      bytes: Array[Byte], originalName: String, uploadDir: String,
-      now: Long): (Path, DataInfo) = {
+  /** Save + analyze: the stored path, the ingested frame and its
+    * profile. The upload is deleted if analysis fails (app.py:137–141
+    * cleanup analog). No view is registered: the web tier serves
+    * concurrent sessions off one SparkSession, so queries always target
+    * per-request views (WebServer ask_question), never shared state. */
+  def uploadAndAnalyze(spark: SparkSession, bytes: Array[Byte],
+      originalName: String, uploadDir: String, now: Long): (Path, DataFrame, DataInfo) = {
     val path = saveUpload(bytes, originalName, uploadDir, now)
-    try (path, Catalog.analyzeFile(spark, path.toString, registerView = false))
-    catch { case e: Throwable => Files.deleteIfExists(path); throw e }
+    try {
+      val (df, info) = Catalog.analyzeFile(spark, path.toString)
+      (path, df, info)
+    } catch { case e: Throwable => Files.deleteIfExists(path); throw e }
   }
 }

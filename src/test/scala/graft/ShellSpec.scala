@@ -56,9 +56,21 @@ class ShellSpec extends AnyFunSuite {
       Workspace.uploadAndAnalyze(spark, badJson, "bad.json", dir, 3L))
     assert(!Files.exists(java.nio.file.Paths.get(dir, "3_bad.json")))
 
-    // happy path registers data_table and returns the profile
-    val (path, info) = Workspace.uploadAndAnalyze(spark, csv, "ok.csv", dir, 4L)
+    // happy path stores the file and returns the frame and its profile
+    val (path, _, info) = Workspace.uploadAndAnalyze(spark, csv, "ok.csv", dir, 4L)
     assert(Files.exists(path) && info.rowCount == 2 && info.columns == Seq("a", "b"))
+  }
+
+  test("workspace: same-name uploads in the same millisecond keep both contents") {
+    val dir = Files.createTempDirectory("uploads").toString
+    val contents = (1 to 3).map(i => s"a,b\n$i,x\n".getBytes("UTF-8"))
+    val paths = contents.map(Workspace.saveUpload(_, "my data.csv", dir, 1700000000123L))
+    assert(paths.map(_.getFileName.toString) == Seq("1700000000123_my_data.csv",
+      "1700000000123_my_data-2.csv", "1700000000123_my_data-3.csv"))
+    paths.zip(contents).foreach { case (p, c) => assert(Files.readAllBytes(p).sameElements(c)) }
+    // the suffix goes before the whole extension, so `.csv.gz` still dispatches
+    val gz = Seq(1, 2).map(_ => Workspace.saveUpload(contents.head, "d.csv.gz", dir, 5L))
+    assert(gz.map(_.getFileName.toString) == Seq("5_d.csv.gz", "5_d-2.csv.gz"))
   }
 
   test("workspace: path traversal neutralized") {

@@ -1,12 +1,16 @@
 package graft
 
 import graft.engine._
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.scalatest.funsuite.AnyFunSuite
 
 import java.net.URI
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
+import java.util.UUID
+import java.util.concurrent.atomic.AtomicInteger
+import scala.jdk.CollectionConverters._
 
 /** End-to-end drive of the HTTP surface over loopback: upload → ask →
   * history → sessions — the reference's app.py:109–275 contract. */
@@ -17,15 +21,15 @@ class WebSpec extends AnyFunSuite {
   private lazy val base = s"http://127.0.0.1:${server.boundPort}"
   private val http = HttpClient.newHttpClient()
 
-  private def get(path: String, cookie: String = ""): HttpResponse[String] = {
-    val b = HttpRequest.newBuilder().uri(URI.create(s"$base$path")).GET()
+  private def get(path: String, cookie: String = "", at: String = base): HttpResponse[String] = {
+    val b = HttpRequest.newBuilder().uri(URI.create(s"$at$path")).GET()
     if (cookie.nonEmpty) b.header("Cookie", cookie)
     http.send(b.build(), HttpResponse.BodyHandlers.ofString())
   }
 
   private def post(path: String, body: String, contentType: String,
-      cookie: String = ""): HttpResponse[String] = {
-    val b = HttpRequest.newBuilder().uri(URI.create(s"$base$path"))
+      cookie: String = "", at: String = base): HttpResponse[String] = {
+    val b = HttpRequest.newBuilder().uri(URI.create(s"$at$path"))
       .header("Content-Type", contentType)
       .POST(HttpRequest.BodyPublishers.ofString(body, StandardCharsets.UTF_8))
     if (cookie.nonEmpty) b.header("Cookie", cookie)
@@ -56,6 +60,62 @@ class WebSpec extends AnyFunSuite {
       .split(";").head
     val fileId = Json.getString(resp.body(), "file_id").get
     (fileId, cookie)
+  }
+
+  /** Uploads `content` as `name` into the session of `cookie` (a new
+    * one if empty); (file id, session cookie). */
+  private def upload(name: String, content: String, cookie: String = ""): (String, String) = {
+    val boundary = "graftBoundaryA"
+    val b = HttpRequest.newBuilder()
+      .uri(URI.create(s"$base/api/upload"))
+      .header("Content-Type", s"multipart/form-data; boundary=$boundary")
+    if (cookie.nonEmpty) b.header("Cookie", cookie)
+    val resp = http.send(b.POST(HttpRequest.BodyPublishers.ofByteArray(
+      multipartBody(name, content.getBytes(StandardCharsets.UTF_8), boundary))).build(),
+      HttpResponse.BodyHandlers.ofString())
+    assert(resp.statusCode() == 200, resp.body())
+    val ck = resp.headers().firstValue("Set-Cookie").orElse("").split(";").head
+    (Json.getString(resp.body(), "file_id").get, if (cookie.nonEmpty) cookie else ck)
+  }
+
+  /** The markdown of one ask on `fileId` at server `at`. */
+  private def askMd(fileId: String, question: String, cookie: String,
+      at: String = base): String = {
+    val r = post("/api/ask_question",
+      Json.obj("file_id" -> Json.str(fileId), "question" -> Json.str(question)),
+      "application/json", cookie, at)
+    assert(r.statusCode() == 200, r.body())
+    Json.getString(r.body(), "markdown_result").get
+  }
+
+  /** Spark jobs `body` starts whose call site passes through `Ingest.load`
+    * or `Profile.apply` — the work of analyzing a file. */
+  private def analysisJobs(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val frames = Seq("graft.engine.Ingest$.load(", "graft.engine.Profile$.apply(")
+    val marker = s"webspec-${UUID.randomUUID()}"
+    val count = new AtomicInteger
+    @volatile var seenMarker = false
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        if (e.stageInfos.exists(s => frames.exists(f => Option(s.details).exists(_.contains(f)))))
+          count.incrementAndGet()
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == marker))
+          seenMarker = true
+      }
+    }
+    sc.addSparkListener(listener)
+    try {
+      body
+      // the bus delivers in order: once the marker job's start arrives,
+      // every job `body` started has been counted
+      sc.setJobGroup(marker, marker)
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      val deadline = System.nanoTime() + 30_000_000_000L
+      while (!seenMarker && System.nanoTime() < deadline) Thread.sleep(5)
+      assert(seenMarker, "listener bus did not drain")
+    } finally sc.removeSparkListener(listener)
+    count.get
   }
 
   test("index page serves the browser app (upload, question, history, sessions)") {
@@ -233,22 +293,9 @@ class WebSpec extends AnyFunSuite {
   test("multi-file ask: cross-file join through the gateway (reference roadmap)") {
     // two frames sharing a join column; totals are hand-computed so the
     // markdown is checked against the DuckDB-oracle answer for this input
-    def uploadNamed(name: String, content: String, cookie: String = ""): (String, String) = {
-      val boundary = "graftBoundaryM"
-      val b = HttpRequest.newBuilder()
-        .uri(URI.create(s"$base/api/upload"))
-        .header("Content-Type", s"multipart/form-data; boundary=$boundary")
-      if (cookie.nonEmpty) b.header("Cookie", cookie)
-      val resp = http.send(b.POST(HttpRequest.BodyPublishers.ofByteArray(
-        multipartBody(name, content.getBytes(StandardCharsets.UTF_8), boundary))).build(),
-        HttpResponse.BodyHandlers.ofString())
-      assert(resp.statusCode() == 200, resp.body())
-      val ck = resp.headers().firstValue("Set-Cookie").orElse("").split(";").head
-      (Json.getString(resp.body(), "file_id").get, if (cookie.nonEmpty) cookie else ck)
-    }
-    val (dimsId, cookie) = uploadNamed("dims.csv",
+    val (dimsId, cookie) = upload("dims.csv",
       "region,manager\neast,alice\nwest,bob\nnorth,carol\n")
-    val (salesId, _) = uploadNamed("sales2.csv",
+    val (salesId, _) = upload("sales2.csv",
       "region,amount\neast,10.5\neast,2.0\nwest,4.25\n", cookie)
     val r = post("/api/ask_question",
       s"""{"file_ids": ["$dimsId", "$salesId"], "question": "total amount by region"}""",
@@ -275,52 +322,86 @@ class WebSpec extends AnyFunSuite {
     // dedup rate, data card, last-touch attribution, language mix —
     // each ask lands on the Stub's operator-family SQL and runs through
     // the SELECT-only gateway against the uploaded table
-    def uploadNamed(name: String, content: String, cookie: String = ""): (String, String) = {
-      val boundary = "graftBoundaryNS"
-      val b = HttpRequest.newBuilder()
-        .uri(URI.create(s"$base/api/upload"))
-        .header("Content-Type", s"multipart/form-data; boundary=$boundary")
-      if (cookie.nonEmpty) b.header("Cookie", cookie)
-      val resp = http.send(b.POST(HttpRequest.BodyPublishers.ofByteArray(
-        multipartBody(name, content.getBytes(StandardCharsets.UTF_8), boundary))).build(),
-        HttpResponse.BodyHandlers.ofString())
-      assert(resp.statusCode() == 200, resp.body())
-      val ck = resp.headers().firstValue("Set-Cookie").orElse("").split(";").head
-      (Json.getString(resp.body(), "file_id").get, if (cookie.nonEmpty) cookie else ck)
-    }
-    def ask(fileId: String, cookie: String, question: String): String = {
-      val r = post("/api/ask_question",
-        Json.obj("file_id" -> Json.str(fileId), "question" -> Json.str(question)),
-        "application/json", cookie)
-      assert(r.statusCode() == 200, r.body())
-      Json.getString(r.body(), "markdown_result").get
-    }
-    val (docsId, cookie) = uploadNamed("docs15.csv",
+    val (docsId, cookie) = upload("docs15.csv",
       "doc_id,text,lang,source,n_chars\n" +
         "1,hello world,en,web,11\n" +
         "2,Hello World,en,web,11\n" +
         "3,unique text,zh,wiki,11\n")
     // dedup rate: 3 docs, 2 canonical-distinct → dup_rate 0.3333 (2dp render)
-    val dd = ask(docsId, cookie, "what fraction of the documents are duplicates?")
+    val dd = askMd(docsId, "what fraction of the documents are duplicates?", cookie)
     assert(dd.contains("dup_rate") && dd.contains("n_unique"), dd.take(500))
     assert(dd.contains("| 3 | 2 |"), dd.take(500))
     // data card per source
-    val dc = ask(docsId, cookie, "show me a data card per source")
+    val dc = askMd(docsId, "show me a data card per source", cookie)
     assert(dc.contains("total_chars") && dc.contains("web") && dc.contains("wiki"),
       dc.take(500))
     // language mix
-    val lm = ask(docsId, cookie, "what is the language mix?")
+    val lm = askMd(docsId, "what is the language mix?", cookie)
     assert(lm.contains("pct") && lm.contains("en") && lm.contains("zh"), lm.take(500))
     // last-touch attribution over an events-shaped upload: purchase 2
     // attributes to view 1 (10 min gap); purchase 3 is out of window
-    val (evId, _) = uploadNamed("events15.csv",
+    val (evId, _) = upload("events15.csv",
       "event_id,ts,user_id,event_type,value\n" +
         "1,2024-01-01 10:00:00,7,view,1.0\n" +
         "2,2024-01-01 10:10:00,7,purchase,5.0\n" +
         "3,2024-01-01 12:00:00,7,purchase,5.0\n", cookie)
-    val at = ask(evId, cookie, "attribute each purchase to the last marketing touch")
+    val at = askMd(evId, "attribute each purchase to the last marketing touch", cookie)
     assert(at.contains("attributed_id"), at.take(500))
     assert(at.contains("| 2 | 7 | 1 |"), at.take(500))
+  }
+
+  test("an ask reuses the upload's analysis: no ingest or profile jobs") {
+    var fileId, cookie = ""
+    // the listener sees an upload's analysis jobs, so a zero below is real
+    assert(analysisJobs { val (f, c) = uploadCsv(); fileId = f; cookie = c } > 0)
+    var md = ""
+    assert(analysisJobs { md = askMd(fileId, "每个城市的销售额", cookie) } == 0)
+    assert(md.contains("customer_city") && md.contains("Query Result"), md.take(400))
+  }
+
+  test("a second server over the same workDir answers files the first analyzed") {
+    val (fileId, cookie) = upload("memo_restart.csv", "region,amount\neast,1.5\nwest,2.25\n")
+    val question = "show rows"
+    val first = askMd(fileId, question, cookie)
+    val other = new WebServer(spark, workDir).start()
+    try {
+      val at = s"http://127.0.0.1:${other.boundPort}"
+      var second = ""
+      // a miss: the new server rebuilds the analysis from the metastore row
+      assert(analysisJobs { second = askMd(fileId, question, cookie, at) } > 0)
+      assert(second == first)
+      // and keeps it
+      assert(analysisJobs { second = askMd(fileId, question, cookie, at) } == 0)
+      assert(second == first)
+      assert(post("/api/ask_question",
+        Json.obj("file_id" -> Json.str("nope"), "question" -> Json.str(question)),
+        "application/json", cookie, at).statusCode() == 404)
+    } finally other.stop()
+  }
+
+  test("after more uploads than the cap, the oldest file still answers") {
+    val (oldestId, cookie) = upload("memo_oldest.csv", "oldest_marker,n\nfirst,1\n")
+    val newer = (1 to WebServer.MaxAnalyses).map(i =>
+      upload(s"memo_$i.csv", s"newer_col_$i,n\nrow_$i,$i\n", cookie)._1)
+    var md = ""
+    // evicted: this ask rebuilds it
+    assert(analysisJobs { md = askMd(oldestId, "show rows", cookie) } > 0)
+    assert(md.contains("oldest_marker") && md.contains("first") && !md.contains("newer_col"),
+      md.take(400))
+    // the newest upload is still kept
+    assert(analysisJobs { md = askMd(newer.last, "show rows", cookie) } == 0)
+    assert(md.contains(s"newer_col_${WebServer.MaxAnalyses}"), md.take(400))
+  }
+
+  test("stop() ends the server's request pool threads") {
+    val ws = new WebServer(spark, Files.createTempDirectory("graft-web-stop").toString).start()
+    val prefix = s"graft-web-${ws.boundPort}-"
+    def poolThreads = Thread.getAllStackTraces.keySet.asScala.toSeq
+      .filter(t => t.getName.startsWith(prefix) && t.isAlive)
+    assert(get("/", at = s"http://127.0.0.1:${ws.boundPort}").statusCode() == 200)
+    assert(poolThreads.nonEmpty, "a request ran on no pool thread of this server")
+    ws.stop()
+    assert(poolThreads.isEmpty, poolThreads.map(_.getName))
   }
 
   test("shutdown") { server.stop() }
