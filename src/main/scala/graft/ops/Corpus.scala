@@ -447,7 +447,10 @@ object Corpus {
         |GROUP BY k.doc_id ORDER BY k.doc_id""".stripMargin) { (s, d) =>
       val toks = split(col("text"), " ")
       val nseg = greatest(lit(1), ceil(size(toks) / lit(8.0))).cast("int")
-      val segs = documents(s, d)
+      // a null-text document has no segments, so it gets no output row,
+      // as in the oracle, whose UNNEST over a NULL token list emits none
+      val docs = documents(s, d).filter(col("text").isNotNull)
+      val segs = docs
         .select(col("doc_id"), toks.as("tk"),
           explode(sequence(lit(0), nseg - 1)).as("i"))
         .select(col("doc_id"), col("i").cast("long").as("seg_idx"),
@@ -474,7 +477,7 @@ object Corpus {
           array_join(transform(
             array_sort(collect_list(struct(col("seg_idx"), col("seg")))),
             x => x.getField("seg")), " ").as("cleaned_text"))
-      documents(s, d)
+      docs
         .select(col("doc_id"), nseg.cast("long").as("n_segs"))
         .join(perDoc, Seq("doc_id"), "left")
         .select(col("doc_id"), col("n_segs"),

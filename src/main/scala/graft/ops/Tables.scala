@@ -26,9 +26,9 @@ object Tables {
     sys.props.get("graft.cache.max.bytes").map(_.toLong).getOrElse(4L << 30)
 
   /** One recursive walker for (max lastModified, total bytes) over a
-    * file or directory — shared by the cache size gate here, the
-    * doc-count content signature in Dedup, and the streaming source's
-    * schema-probe memo, so fixes to traversal (symlink cycles,
+    * file or directory — shared by the schema memo and cache size gate
+    * here (which the streaming source reads too) and the doc-count
+    * content signature in Dedup, so fixes to traversal (symlink cycles,
     * listFiles-null) land in one place. A canonical-path visited set
     * breaks symlink cycles: a directory already walked contributes
     * nothing on re-entry instead of recursing to StackOverflowError
@@ -128,6 +128,33 @@ object Tables {
     df
   }
 
+  /** A file version as the schema memo sees it: (max mtime, total bytes)
+    * from [[mtimeAndBytes]], plus `spark.sql.legacy.parquet.nanosAsLong`,
+    * which changes the inferred type of a TIMESTAMP(NANOS) column. */
+  private type Signature = (Long, Long, String)
+
+  /** path → (signature, inferred schema): one entry per distinct path,
+    * so it is bounded by the number of tables read, with no cap. */
+  private val schemas =
+    new java.util.concurrent.ConcurrentHashMap[String, (Signature, StructType)]()
+
+  /** The parquet schema of `path` from the memo (contract on [[t]]), and
+    * the path's on-disk bytes. Inference, one footer-reading Spark job,
+    * runs outside the map's lock, so concurrent callers never wait on
+    * one another; racing first touches infer the same schema and the
+    * later put wins. */
+  private[graft] def schemaOf(spark: SparkSession, path: String): (StructType, Long) = {
+    val (mtime, bytes) = mtimeAndBytes(path)
+    val sig: Signature =
+      (mtime, bytes, spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", "false"))
+    val schema = Option(schemas.get(path)).collect { case (`sig`, s) => s }.getOrElse {
+      val s = spark.read.parquet(path).schema
+      schemas.put(path, sig -> s)
+      s
+    }
+    (schema, bytes)
+  }
+
   /** Read a testdata table; small tables are cached on first touch. The
     * cache() is idempotent (Spark's CacheManager dedups by canonicalized
     * plan) and plays the buffer-pool role DuckDB gets from the OS page
@@ -135,13 +162,25 @@ object Tables {
     * one session. The size gate keeps the policy honest at scale: only
     * tables under [[cacheMaxBytes]] on disk are pinned; anything larger
     * streams from the source and relies on locality + shuffle reuse.
-    * The operators themselves never depend on the data being resident. */
+    * The operators themselves never depend on the data being resident.
+    *
+    * Schema memo ([[schemaOf]]): the schema is inferred once per file
+    * version, keyed by path and (mtime, bytes, nanosAsLong flag). Only
+    * the StructType is kept, never a DataFrame: every call builds a
+    * fresh `spark.read.schema(..).parquet(path)`, so each call gets new
+    * attribute ids and self-joins such as `orders ⋈ orders` stay
+    * unambiguous, while the relation is the same one CacheManager
+    * already dedups `cache()` on. A rewritten file changes the signature
+    * and is re-inferred, so the schema gate below sees the new columns.
+    * After a table's first touch, building a query therefore starts no
+    * Spark job for its reads. */
   def t(spark: SparkSession, dir: String, name: String): DataFrame = {
     val path = s"$dir/$name.parquet"
-    val df = assertSchema(name, spark.read.parquet(path))
+    val (schema, bytes) = schemaOf(spark, path)
+    val df = assertSchema(name, spark.read.schema(schema).parquet(path))
     // kill-switch: -Dgraft.no.cache=1 (PlanAudit uses it so parquet-scan
     // pushdown is visible instead of InMemoryTableScan pushdown)
-    if (!sys.props.contains("graft.no.cache") && onDiskBytes(path) <= cacheMaxBytes)
+    if (!sys.props.contains("graft.no.cache") && bytes <= cacheMaxBytes)
       df.cache()
     df
   }

@@ -430,6 +430,11 @@ object VectorOps {
         min(col("vec_id")), min_by(col("embedding"), col("vec_id"))).head()
       val dim = dn.getInt(0)
       val qid = dn.getLong(2)
+      // a null query vector has no cosine to rank by: fail loudly here
+      // instead of an NPE on the driver below (ADVICE r21)
+      if (dn.isNullAt(3)) throw new IllegalStateException(
+        s"q_sim_ivf: the min-id row (vec_id $qid) of `embeddings` has no " +
+          "embedding, so there is no query vector to probe with")
       // corpus side and centroid input share the memoized LRU-evicted
       // assignment frame (no unbounded per-corpus pinning)
       val e = lshAssigned(e0, dim, bits = lshBitsFor(dn.getLong(1)))

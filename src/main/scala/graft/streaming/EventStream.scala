@@ -38,16 +38,10 @@ object EventStream {
     StructField("value", DoubleType),
     StructField("props", StringType)))
 
-  /** Memoized ts probe results, keyed by directory + content signature
-    * (mtime+size of events.parquet, same walker as the batch loaders):
-    * the probe is a driver-side footer read + file listing per call, and
-    * [[source]] is invoked per query construction — one probe per events
-    * generation is enough, and a regenerated file changes the signature
-    * and re-probes (ADVICE r11). */
-  private val tsTypeByKey =
-    new java.util.concurrent.ConcurrentHashMap[String, DataType]()
-
-  /** File-based streaming source over a testdata directory. */
+  /** File-based streaming source over a testdata directory. The `ts`
+    * type comes from the batch loader's schema memo
+    * ([[graft.ops.Tables.schemaOf]]), so one probe per events generation
+    * serves both, and a regenerated file re-probes (ADVICE r11). */
   def source(spark: SparkSession, dir: String): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val path = s"$dir/events.parquet"
@@ -55,14 +49,11 @@ object EventStream {
       throw new IllegalArgumentException(
         s"table `events`: no events.parquet under $dir — the streaming " +
           "source reads the same driver testdata layout as the batch loader")
-    val (mtime, bytes) = graft.ops.Tables.mtimeAndBytes(path)
-    val tsType = tsTypeByKey.computeIfAbsent(s"$dir@$mtime:$bytes", _ =>
-      try spark.read
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(dir).schema("ts").dataType
+    val tsType =
+      try graft.ops.Tables.schemaOf(spark, path)._1("ts").dataType
       catch { case e: Exception => throw new IllegalArgumentException(
         s"table `events`: schema probe of $path failed: ${e.getMessage}", e)
-      })
+      }
     graft.ops.Tables.normalizeTs(
       spark.readStream
         .schema(rawSchema(tsType))

@@ -286,4 +286,32 @@ class HardeningSpec extends AnyFunSuite {
       2.minutes)
     assert(caps.forall(_ == 80), s"expected all 80, got $caps")
   }
+
+  // ---- ADVICE r21 fixes: null inputs ------------------------------------
+
+  test("q_sim_ivf names a min-id row without an embedding instead of an NPE") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("ivfnull").toString
+    Seq((1L, None, 0L), (2L, Some(Seq(1.0f, 0.0f)), 1L), (3L, Some(Seq(0.0f, 1.0f)), 0L))
+      .toDF("vec_id", "embedding", "label")
+      .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
+    val e = intercept[IllegalStateException] {
+      SparkEntry.queries("q_sim_ivf")(spark, dir)
+    }
+    assert(e.getMessage.contains("min-id row (vec_id 1)"))
+    assert(e.getMessage.contains("has no embedding"))
+  }
+
+  test("q_text_segment_dedup gives a null-text document no row, like the oracle") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("segnull").toString
+    Seq((1L, Some("a b c d e f g h i j")), (2L, None), (3L, Some("a b c d e f g h x y")))
+      .map { case (id, t) => (id, t, "en", "web", t.fold(0L)(_.length.toLong)) }
+      .toDF("doc_id", "text", "lang", "source", "n_chars")
+      .write.mode("overwrite").parquet(s"$dir/documents.parquet")
+    val got = SparkEntry.queries("q_text_segment_dedup")(spark, dir)
+      .collect().map(_.toString).toSeq
+    // the DuckDB oracle's answer on the same three documents
+    assert(got == Seq("[1,2,2,a b c d e f g h i j]", "[3,2,1,x y]"))
+  }
 }
