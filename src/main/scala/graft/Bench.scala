@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Driver-run benchmark: every SparkEntry query on SPARK_GRAFT_SF_DIR,
   * one shared session (like the reference's per-process engine), full
   * materialization through the noop sink (count() would let Catalyst
@@ -93,45 +91,12 @@ object Bench {
     // pre-existing (neighbor) load this process can get
     val loadStart = loadavg1()
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    // The bench now defaults to the PRODUCTION configuration (AQE on,
-    // 32 shuffle partitions — what Session.local gives a real user).
-    // History: rounds 9-13 ran AQE off / 16 partitions because AQE's
-    // per-round re-planning made the iterative label-propagation loop
-    // pathological (up to 12 s/round); with that loop moved to
-    // co-partitioned RDDs (round 13, Dedup.clusterLabels) the penalty
-    // vanished, and an interleaved A/B at 173 queries × 12 streams
-    // measured AQE-on/32 at 15.5-16.9 s vs AQE-off/16 at 21.0-22.4 s —
-    // the finer partitioning feeds 32 cores better under concurrency
-    // and coalescing handles the tiny shuffles (BENCH_NOTES round 13d
-    // "config flip"). Both knobs stay overridable.
-    val shufflePartitions = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", "32")
-    val aqe = sys.env.getOrElse("SPARK_GRAFT_AQE", "true")
-    val spark = { graft.engine.Session.pinLocale(); SparkSession.builder() }
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shufflePartitions)
-      .config("spark.sql.adaptive.enabled", aqe)
-      .config("spark.sql.session.timeZone", "UTC")
-      // constraint propagation is O(constraints²) optimizer time — real
-      // cost on 85 small plans, no benefit at these sizes
-      .config("spark.sql.constraintPropagation.enabled", "false")
-      // range-sort boundary sampling re-executes the sort child; fewer
-      // samples per partition cost nothing at 16 partitions
-      .config("spark.sql.execution.rangeExchange.sampleSizePerPartition", "20")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val cpus = graft.engine.Session.cores
+    // the production session (see engine.Session for its settings and
+    // their measured reasons): the bench times what users are served
+    val spark = graft.engine.Session.local("graft-bench")
     spark.sparkContext.setLogLevel("ERROR")
-    // untimed warmup: materialize the table caches (graft.ops.Tables
-    // reads are cache()d) so per-query numbers measure steady-state
-    // latency, not first-touch parquet IO — the analog of DuckDB's OS
-    // page cache being warm across its own repeated runs.
-    Seq("region", "nation", "customer", "supplier", "part", "orders",
-        "lineitem", "documents", "embeddings").foreach { t =>
-      try graft.ops.Tables.t(spark, sfDir, t).count()
-      catch { case _: Throwable => () }
-    }
-    try graft.ops.Tables.events(spark, sfDir).count() catch { case _: Throwable => () }
+    graft.ops.Tables.warm(spark, sfDir)
     // Concurrent execution (TPC-H throughput-test style): a median query
     // uses a handful of the 32 cores for ~0.5 s, so running a few
     // streams concurrently measures what the engine can actually
@@ -143,8 +108,7 @@ object Bench {
     val par = sys.env.getOrElse("SPARK_GRAFT_BENCH_PAR", "12").toInt
     // dev-only subset filter, e.g. SPARK_GRAFT_ONLY=q_dedup_minhash,q_topk
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
-    val selected = SparkEntry.queries.toSeq
-      .filter { case (n, _) => only.forall(_.contains(n)) }
+    val selected = SparkEntry.select(only).toSeq
       .sortBy { case (n, _) => (heavyFirst.getOrElse(n, Int.MaxValue), n) }
     // (latency, succeeded) per query — a failure is reported in the
     // "failed" list, never as a plausible-looking duration.
@@ -290,7 +254,7 @@ object Bench {
     // protocol in the artifact forces every committed ratio to be
     // like-for-like (pair with tools/bench_duckdb.py run WITH a
     // timeout arg = per-process, the conservative protocol)
-    val protocol = s""""protocol":"spark local[$cpus] $par-stream concurrent suite, best of ${walls.size} runs, table cache warm; compare to DuckDB per-process sequential (tools/bench_duckdb.py with timeout arg)""""
+    val protocol = s""""protocol":"spark local[$cpus] $par-stream concurrent suite, best of ${walls.size} runs, table cache warm; session Session.local: AQE on, shuffle partitions = cores ($cpus), constraint propagation off, range-exchange sample 20 per partition, GraftExtensions + Udfs; compare to DuckDB per-process sequential (tools/bench_duckdb.py with timeout arg)""""
     val line = s"""{"metric":"total","value":${num(wall)},"unit":"sec","queries":$head,"sf":"$sfDir","sum_sec":${num(sum)},"parallelism":$par,"n_queries":${results.size},"n_failed":${failed.size},"failed":$failedJson,"solo_rerun":$soloJson,"wall_runs":$wallsJson,"steady_state":$steadyState,$contentionJson,$protocol}"""
     println(line)
     spark.stop()

@@ -40,6 +40,18 @@ object SparkEntry {
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     all.map(q => q.name -> q.run).toMap
 
+  /** The queries named in `only`, or all of them when it is None. A
+    * misspelled name fails loudly: an empty selection would let Verify's
+    * oracle check pass vacuously and Bench time nothing. */
+  def select(only: Option[Set[String]]): Map[String, (SparkSession, String) => DataFrame] = {
+    only.foreach { names =>
+      val unknown = names -- queries.keySet
+      require(unknown.isEmpty,
+        s"unknown query name(s) in filter: ${unknown.toSeq.sorted.mkString(", ")}")
+    }
+    queries.filter { case (name, _) => only.forall(_.contains(name)) }
+  }
+
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omitted for non-SQL-expressible ops
     * (HLL/GK sketches, KMeans IVF, stubbed media decode) → rows-only

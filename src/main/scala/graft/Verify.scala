@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -12,22 +11,8 @@ object Verify {
     val (sfDir, outDir) = (args(0), args(1))
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(',').map(_.trim).toSet) else None
-    // A misspelled filter name would silently produce an empty outDir and
-    // a vacuous check_oracle pass — fail loudly instead.
-    only.foreach { names =>
-      val unknown = names -- SparkEntry.queries.keySet
-      require(unknown.isEmpty,
-        s"unknown query name(s) in filter: ${unknown.toSeq.sorted.mkString(", ")}")
-    }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = { graft.engine.Session.pinLocale(); SparkSession.builder() }
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val selected = SparkEntry.select(only)
+    val spark = graft.engine.Session.local("graft-verify")
     new java.io.File(outDir).mkdirs()
     // Failures become a first-class artifact (errors.json beside
     // oracle_sql.json), not just a stderr line: when round 10's loader
@@ -35,9 +20,7 @@ object Verify {
     // correctness file and the root cause had to be re-derived from
     // scratch — one shared exception message in the outDir names it.
     val errors = scala.collection.mutable.LinkedHashMap.empty[String, String]
-    SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .foreach { case (name, fn) =>
+    selected.foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>

@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
@@ -10,10 +10,8 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   * realization of the reference's "custom functions" roadmap item
   * (/root/reference/README.md:112).
   *
-  * Usage: SparkSession.builder().withExtensions(new GraftExtensions) —
-  * wired in engine.Session.local; [[GraftExtensions.register]] installs
-  * the same functions on an existing session (Verify/Bench sessions the
-  * driver builds without extensions).
+  * Usage: every session comes from engine.Session.local, which installs
+  * these extensions (the test session injects them the same way).
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   def apply(e: SparkSessionExtensions): Unit = {
@@ -116,13 +114,4 @@ object GraftExtensions {
     FunctionIdentifier("array_length"),
     info("array_length", "array_length(l) - DuckDB array_length: element count of a list (BIGINT)"),
     (exprs: Seq[Expression]) => { require(exprs.size == 1, "array_length takes 1 argument"); DuckLen(exprs.head) })
-
-  /** Register on an already-built session (idempotent). */
-  def register(spark: SparkSession): Unit =
-    Seq(dotProduct, cosineSim, kllSketchAgg, kllMergeAgg, kllQuantile, scriptCounts,
-        bpeTokenCount, freqSketchAgg, freqMergeAgg, freqEstimate, freqLower,
-        freqUpper, duckDiv, duckLen, arrayLength)
-      .foreach { case (id, i, builder) =>
-        spark.sessionState.functionRegistry.registerFunction(id, i, builder)
-      }
 }

@@ -177,6 +177,9 @@ final class WqSummary {
     n = m
   }
 
+  /** The canonical sorted, coalesced image: a 4-byte count, then 16
+    * bytes per entry. It does not prune, so it holds up to
+    * 2·MaxEntries entries: at most 4 + 16·2·MaxEntries bytes (~64 KB). */
   def toBytes: Array[Byte] = {
     compactForQuery()
     val bos = new ByteArrayOutputStream(8 + 16 * n)
@@ -194,9 +197,13 @@ final class WqSummary {
 
 object WqSummary {
   /** Summary capacity: ≥MaxEntries distinct values survive compaction,
-    * the buffer holds up to 2× before compacting. 2048 keeps the
-    * serialized image ≤32 KB and the normalized rank error ≲0.5%
-    * through Spark's combiner tree. */
+    * the buffer holds up to 2× before compacting. At 2048 the serialized
+    * image is at most 4 + 16·2·MaxEntries bytes (~64 KB; [[toBytes]] does
+    * not prune) and the normalized rank error stays ≲0.5% through
+    * Spark's combiner tree. Each serialize/deserialize hop can add one
+    * pruning compaction to that error's level count: a deserialized
+    * image of 2·MaxEntries entries fills the buffer, so the next insert
+    * compacts. */
   val MaxEntries: Int = 2048
 
   def fromBytes(bytes: Array[Byte]): WqSummary = {

@@ -289,8 +289,8 @@ object Dedup {
   }
 
   /** Memoized doc counts per data directory: [[capFor]] is called at
-    * every dedup-query construction (including inside Bench timings and
-    * PlanPeek), and while the count() result is one long, the job behind
+    * every dedup-query construction (including inside Bench timings),
+    * and while the count() result is one long, the job behind
     * it is only ~free when the documents table is cache()d — under
     * -Dgraft.no.cache=1 (PlanAudit) or for a table over the cache size
     * gate it is a real (cheap, count-only, count(*)-pushdown) Spark scan
@@ -814,8 +814,8 @@ object Dedup {
       // superlinear (~2.1×/doubling, BENCH_NOTES.md), and at a
       // 100 TB-corpus 5M docs the 15-bit scheme generates ~3e9
       // candidate pairs where this one stays O(true near-dups + 20N).
-      // Round-21 probe-and-revert (ProbeSimhash/ProbeBkey have the
-      // numbers): a SIGNATURE-level pairing — distinct signatures
+      // Round-21 probe-and-revert (commit c327396 has the numbers): a
+      // SIGNATURE-level pairing — distinct signatures
       // through the same 20-key blocking (21M candidates vs 298M at
       // doc level; 376k distinct sigs of 500k docs at sf10), then
       // member expansion joins — produced the identical pair set and

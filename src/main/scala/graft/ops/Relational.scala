@@ -380,7 +380,7 @@ object Relational {
       // null pre-filter mirrors histQuantiles' own (pushed-down) filter
       // so all consumers' subtrees canonicalize EQUAL — without it the
       // sketch consumer scans without isnotnull and reuse does not fire
-      // (PlanPeek-verified on q_agg_approx_quantile).
+      // (plan-verified on q_agg_approx_quantile, commit f8323f9).
       val hist = lineitem(s, d)
         .filter(col("l_returnflag").isNotNull && col("l_extendedprice").isNotNull)
         .groupBy(col("l_returnflag").as("g"),
@@ -527,7 +527,7 @@ object Relational {
       // Catalyst pushes below the agg) on the exact side: WITHOUT it
       // the sketch consumer's subtree canonicalizes differently (no
       // isnotnull in its scan) and exchange reuse does NOT fire — the
-      // plan then carries two full scans (PlanPeek-verified). Null
+      // plan then carries two full scans (plan-verified, commit f8323f9). Null
       // group/value rows are excluded by both consumers anyway (SQL
       // aggregate semantics / the sketch's null skip), so the filter
       // changes nothing semantically.
@@ -618,8 +618,8 @@ object Relational {
       // histogram must be exchanged AND regrouped-exchanged again for
       // the price measure (~2× the dominant 594k-row exchange), while
       // the raw scan it saves reads the warm table cache. Kept the
-      // independent one-scan-per-measure histograms (ProbeR21 has the
-      // numbers; three cheap aggregate scans match the oracle's scan
+      // independent one-scan-per-measure histograms (commit f8323f9 has
+      // the numbers; three cheap aggregate scans match the oracle's scan
       // count and shuffle only distinct values, the 100 TB shape).
       val medQty = Quantiles.histQuantilesOf(
           lineitem(s, d), "l_returnflag", "l_quantity", Seq("med_qty" -> 0.5))

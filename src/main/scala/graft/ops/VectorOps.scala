@@ -425,7 +425,7 @@ object VectorOps {
       // aggregate already existed; an earlier probe that fetched qv
       // with a separate filter+head() measured 0.1 s WORSE at sf0.1 —
       // the extra synchronous job barrier cost more than the broadcasts
-      // it replaced; ProbeR21 notes).
+      // it replaced; commit 08a2e32).
       val dn = e0.agg(max(size(col("embedding"))), count(lit(1)),
         min(col("vec_id")), min_by(col("embedding"), col("vec_id"))).head()
       val dim = dn.getInt(0)
@@ -443,7 +443,7 @@ object VectorOps {
       val qLit = typedLit(dn.getSeq[Float](3).map(_.toDouble))
       // Round-21 probe-and-revert: a single wide groupBy(cell) with dim
       // exact-decimal sum columns (1 exchange, no Generate) measured
-      // WORSE than this 2-step chain (ProbeCv interleaved at sf0.1:
+      // WORSE than this 2-step chain (commit 08a2e32, interleaved at sf0.1:
       // 0.46 vs 0.31 s med — 64 decimal agg buffers per group lose to
       // the explode + narrow decimal agg; a double-sum variant wins at
       // 0.27 s but double addition is order-dependent and the exact

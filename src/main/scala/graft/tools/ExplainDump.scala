@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: write `.explain("formatted")` for named queries to files —
   * the plans/rNN/<query>_{before,after}.txt optimization-round evidence.
   *
@@ -17,12 +15,9 @@ object ExplainDump {
     val names = args.drop(2).toSeq
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
     sys.props("graft.no.cache") = "1"
-    val spark = { graft.engine.Session.pinLocale(); SparkSession.builder() }
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.engine.Session.local("graft-explain-dump")
+    // the committed plan text pins 4 shuffle partitions
+    spark.conf.set("spark.sql.shuffle.partitions", "4")
     spark.sparkContext.setLogLevel("ERROR")
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     names.foreach { n =>

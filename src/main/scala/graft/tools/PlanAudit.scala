@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: dump formatted physical plans for representative queries
   * and check the plan properties the 100 TB design depends on
   * (SURVEY.md §4.2): filter/projection pushdown into the parquet scan,
@@ -15,12 +13,9 @@ object PlanAudit {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     sys.props("graft.no.cache") = "1"
-    val spark = { graft.engine.Session.pinLocale(); SparkSession.builder() }
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.engine.Session.local("graft-plan-audit")
+    // the committed plan text pins 4 shuffle partitions
+    spark.conf.set("spark.sql.shuffle.partitions", "4")
     spark.sparkContext.setLogLevel("ERROR")
 
     def plan(name: String): String = {

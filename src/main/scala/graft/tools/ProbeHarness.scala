@@ -21,14 +21,9 @@ object ProbeHarness {
     // differently per rung, confounding the growth signal with plan
     // variance. Absolute probe times are therefore not comparable to
     // Bench walls; only the K-to-K ratios matter here.
-    val spark = { graft.engine.Session.pinLocale(); SparkSession.builder() }
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "16")
-      .config("spark.sql.adaptive.enabled", "false")
-      .config("spark.sql.constraintPropagation.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.engine.Session.local("graft-probe")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    spark.conf.set("spark.sql.shuffle.partitions", "16")
     spark.sparkContext.setLogLevel("ERROR")
     spark
   }

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Count the Spark jobs a query starts, DataFrame construction apart
   * from execution, plus the stages execution completes and wall
   * seconds. Construction should start no job at all (everything it
@@ -28,24 +26,10 @@ object ProbeJobs {
       case Seq() => graft.SparkEntry.queries.keys.toSeq.sorted
       case ns => ns
     }
-    val spark = { graft.engine.Session.pinLocale(); SparkSession.builder() }
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.constraintPropagation.enabled", "false")
-      .config("spark.sql.execution.rangeExchange.sampleSizePerPartition", "20")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.engine.Session.local("graft-probe-jobs")
     spark.sparkContext.setLogLevel("ERROR")
     val counter = new JobCounter(spark.sparkContext)
-    // warm table caches like the bench does
-    Seq("region", "nation", "customer", "supplier", "part", "orders",
-        "lineitem", "documents", "embeddings").foreach { t =>
-      try graft.ops.Tables.t(spark, sfDir, t).count()
-      catch { case _: Throwable => () }
-    }
-    try graft.ops.Tables.events(spark, sfDir).count() catch { case _: Throwable => () }
+    graft.ops.Tables.warm(spark, sfDir)
 
     final case class Run(buildJobs: Int, buildMs: Double, execJobs: Int, execStages: Int,
         execS: Double)

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: solo-latency timing for named operator queries.
   *
   * Usage: runMain graft.tools.Timeit <sfDir> <query> [<query> ...]
@@ -15,21 +13,9 @@ object Timeit {
     val names = args.tail.toSeq
     // env var, not a sys prop: sbt forks the runMain JVM, which drops -D flags
     val reps = sys.env.get("GRAFT_TIMEIT_REPS").map(_.toInt).getOrElse(3)
-    // mirror Bench's session so solo numbers measure the same
-    // configuration the driver benches (round 13d: the production
-    // config — AQE on, 32 partitions — measured FASTER than the old
-    // latency tuning once the cluster loop moved off per-round
-    // re-planning; see Bench.scala)
-    val spark = { graft.engine.Session.pinLocale(); SparkSession.builder() }
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.constraintPropagation.enabled", "false")
-      .config("spark.sql.execution.rangeExchange.sampleSizePerPartition", "20")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.driver.memory", "8g")
-      .getOrCreate()
+    // the session Bench and users get, so solo numbers measure the
+    // configuration the driver benches
+    val spark = graft.engine.Session.local("graft-timeit")
     spark.sparkContext.setLogLevel("ERROR")
     names.foreach { n =>
       val fn = graft.SparkEntry.queries(n)

@@ -120,7 +120,6 @@ class StatsSpec extends AnyFunSuite {
   }
 
   test("KLL sketch aggregates: SQL surface, merge ≈ whole, small-n exactness") {
-    graft.functions.GraftExtensions.register(spark)
     // small n (< sketch K=200): the sketch retains every value, so its
     // median is EXACTLY the inclusive-rank sample median
     val small = spark.sql(
@@ -149,7 +148,6 @@ class StatsSpec extends AnyFunSuite {
   }
 
   test("frequency sketch: exact below capacity, bounds hold above it") {
-    graft.functions.GraftExtensions.register(spark)
     import graft.functions.SketchExprs
     import spark.implicits._
     // below capacity (100 distinct < 512): estimates are exact

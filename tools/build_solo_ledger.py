@@ -49,7 +49,8 @@ def main() -> None:
     doc = {
         "sf": "sf10 (/tmp/graft_sf10, MakeSf1 K=100)",
         "protocol": (
-            "graft.tools.Timeit local[32] SPARK_DRIVER_MEM=48g, min of 3 "
+            "graft.tools.Timeit on Session.local (32 cores) "
+            "SPARK_DRIVER_MEM=48g, min of 3 "
             "reps; first_sec = the recorded COLD first rep (table cache + "
             "codegen + any Caches.cached materialization land there), so "
             "cache-warm minima are visible per query; duckdb_sec from "
