@@ -3,36 +3,38 @@ package graft.engine
 /** DuckDB-dialect acceptance shim (VERDICT r11 #3; SURVEY §7.4-1).
   *
   * The reference's NL→SQL contract pins DuckDB SQL
-  * (/root/reference/doc.py:186-188); this rebuild re-pins the generator
-  * prompt to Spark SQL, but a user pasting DuckDB-isms — `strftime`,
-  * `list_*`, `//` integer division, `epoch()`, `time_bucket` — would get
-  * a parse/analysis error where the reference runs them. [[rewrite]]
-  * pre-translates the well-known spellings into Spark SQL before the
-  * gateway parses; every rewritten name/operator does NOT exist in Spark
-  * SQL, so valid Spark SQL passes through byte-identical and the shim
-  * can run unconditionally.
+  * (the reference's doc.py:186-188); a user pasting DuckDB-isms would
+  * get a parse or analysis error where the reference runs them. The
+  * DuckDB surface is served in two layers:
   *
-  * All passes are string-literal-aware: a `'%Y'` belongs to a format
-  * argument being converted, but `'a//b'` or `'strftime('` inside a
-  * data literal must never be touched.
+  *  - FUNCTIONS Spark's parser reads but Spark does not define
+  *    (`strftime`, `list_*`, `epoch`, `time_bucket`, `quantile_disc`,
+  *    …) are Catalyst function builders in
+  *    [[graft.functions.DuckDbFunctions.table]], injected into every
+  *    session by [[graft.functions.GraftExtensions]]. They resolve at
+  *    analysis time with the analyzed arguments in hand, so DISTINCT,
+  *    FILTER, OVER, lambdas and generators apply as for any builtin.
+  *  - TEXT surgery here, by [[rewrite]], only where Spark cannot take
+  *    the DuckDB spelling as a function call:
+  *     - syntax Spark's parser cannot read or reads differently: `//`,
+  *       FROM-first, QUALIFY, DISTINCT ON, `* REPLACE`, `* EXCLUDE`,
+  *       ASOF JOIN, USING SAMPLE, SIMILAR TO, in-paren IGNORE NULLS,
+  *       bracket lists and 1-based indexing, DISTINCT window
+  *       aggregates, GROUPS frames and frame EXCLUDE;
+  *     - `struct_pack(a := 1)`: Spark cannot parse `:=`;
+  *     - 2-arg `regexp_extract` and 3-arg `date_diff`/`datediff`:
+  *       Spark builtins with other semantics at that arity, so a
+  *       builder override would change Spark SQL for the whole session,
+  *       DataFrame code included. The text pass rewrites only the
+  *       DuckDB arity and leaves Spark's spelling byte-identical.
+  *
+  * Every pass is a no-op on valid Spark SQL (DialectPropertySpec pins
+  * identity on generated ANSI statements and idempotence on generated
+  * DuckDB ones), so the shim runs unconditionally. All passes are
+  * string-literal-aware: `'a//b'` or `'qualify'` inside a data literal
+  * is never touched.
   *
   * Deliberately bounded (documented, not silently wrong):
-  *  - `strftime`/`strptime` accept both DuckDB (value, fmt) and
-  *    sqlite-style (fmt, value) orders — the format is recognized as the
-  *    string literal containing `%` codes — and translate the common
-  *    C-style codes to Spark's pattern letters; an unrecognized `%` code
-  *    throws with the offending code named.
-  *  - `time_bucket(INTERVAL 'N unit', ts)` maps to `date_trunc` for
-  *    single whole units, to floor arithmetic aligned to DuckDB's
-  *    measured default origin 2000-01-03 00:00:00 UTC for N-second/
-  *    minute/hour/day/WEEK multiples (round 14 — the previous epoch
-  *    alignment agreed only for widths dividing 946857600 s, which
-  *    every earlier-fuzzed width coincidentally did), and to
-  *    pmod-floored add_months from DuckDB's measured 2000-01-01 month
-  *    origin for N-month/year multiples. The 3-arg explicit-origin
-  *    form is supported for every unit (second granularity keeps the
-  *    origin's full sub-bucket offset; month granularity truncates the
-  *    origin to its month start — both measured).
   *  - `//` becomes Spark's ` div `, whose analyzed [[IntegralDivide]]
   *    is then replaced by the type-aware
   *    [[graft.functions.DuckDiv]] via an injected resolution rule
@@ -40,8 +42,7 @@ package graft.engine
   *    cannot): INTEGER `//` truncates toward zero (-5//2 = -2,
   *    measured), any FLOAT operand gives plain division (-5.0//2 =
   *    -2.5 — the docs say floor; the engine disagrees), and divisor 0
-  *    yields NULL in both regimes. This closed what was a documented
-  *    bound (float `//` previously surfaced Spark's div type error).
+  *    yields NULL in both regimes.
   *  - Window-frame `EXCLUDE CURRENT ROW` decomposes to frame-minus-
   *    current for SUM/COUNT/AVG; `EXCLUDE GROUP`/`TIES` decompose for
   *    the same aggregates over BOTH frame types (RANGE round 13d; ROWS
@@ -69,15 +70,9 @@ package graft.engine
   *    so a pass-through was the silent off-by-one class. NULL at index
   *    0 / out of bounds / negative-from-end all measured and matched;
   *    slices `x[a:b]` throw (operand type unknowable from text).
-  *  - Function-surface twins (round 16, each measured equal on DuckDB
-  *    1.0): arg_max/arg_min → max_by/min_by; quantile_cont →
-  *    percentile (same linear interpolation, array-q included);
-  *    quantile_disc/quantile → percentile_disc WITHIN GROUP (value
-  *    equal, type widens to double); list_transform/list_filter →
-  *    transform/filter; list() → collect_list; select-list unnest →
-  *    explode; 3-arg date_diff/datediff → per-part BOUNDARY-CROSSING
-  *    arithmetic (calendar-part index difference, ISO-week truncation
-  *    difference, epoch floor for sub-day parts) — Spark's own 2-arg
+  *  - 3-arg date_diff/datediff → per-part BOUNDARY-CROSSING arithmetic
+  *    (calendar-part index difference, ISO-week truncation difference,
+  *    local part truncation for sub-day parts) — Spark's own 2-arg
   *    datediff and unquoted-part spellings pass through untouched.
   *  - DISTINCT window aggregates (`COUNT/SUM/AVG/MIN/MAX(DISTINCT x)
   *    OVER …`, DuckDB-native, rejected outright by Spark) decompose
@@ -86,18 +81,6 @@ package graft.engine
   *    engine), AVG = the pair, MIN/MAX drop the redundant DISTINCT
   *    (round 15; NULL exclusion, frame semantics and empty-frame
   *    results all measured).
-  *  - List functions carry DuckDB's MEASURED semantics where a bare
-  *    rename would silently diverge (round 14): `string_split`/
-  *    `str_split`/`string_to_array` regex-escape their literal
-  *    delimiter (DuckDB splits literally, Spark's split is a regex;
-  *    non-literal delimiters throw), `list_slice` translates its
-  *    1-based inclusive end to Spark's length argument (0-as-1,
-  *    clamped, negative-from-end; the step form throws),
-  *    `list_distinct` filters NULLs first (element ORDER is an
-  *    acceptance bound — DuckDB returns hash order), `array_to_string`
-  *    returns NULL when no non-null element remains, `list_concat`
-  *    treats a NULL side as empty, and `len`/`array_length` resolve via
-  *    the type-dispatching [[graft.functions.DuckLen]] expression.
   *  - `USING SAMPLE n[%|PERCENT|ROWS]` after a table reference becomes
   *    `TABLESAMPLE (n PERCENT|ROWS)` — an acceptance rewrite: both draw
   *    the requested sample size, by different algorithms (sampling is
@@ -105,82 +88,6 @@ package graft.engine
   *    (after WHERE) surfaces Spark's parse error.
   */
 object DuckDbDialect {
-
-  /** name → name substitutions: same arity and argument order in both
-    * engines, so a token-level rename suffices. */
-  private val renames: Seq[(String, String)] = Seq(
-    "list_value" -> "array",
-    "list_pack" -> "array",
-    "list_contains" -> "array_contains",
-    "list_has" -> "array_contains",
-    "list_length" -> "array_size",
-    "list_sort" -> "array_sort",
-
-    "list_position" -> "array_position",
-    "list_indexof" -> "array_position",
-    "list_min" -> "array_min",
-    "list_max" -> "array_max",
-    // both inclusive-end list builders with an optional step; the TABLE-
-    // function placement (FROM generate_series(...)) has no Spark twin
-    // and surfaces Spark's parse error after the rename — clear, not
-    // silently wrong
-    "generate_series" -> "sequence",
-    "regexp_matches" -> "regexp_like",
-    "epoch_ms" -> "unix_millis",
-    "epoch_us" -> "unix_micros",
-    // round 16 — the measured-equal argument-order twins: arg_max/
-    // arg_min(x, y) IS max_by/min_by(x, y) (value of x at the extreme
-    // y; NULL y rows skipped by both); list lambdas map 1:1 (same `x ->`
-    // syntax); `list(x)` is the collect_list aggregate (ORDER BY inside
-    // the call surfaces Spark's parse error — loud, documented);
-    // quantile_cont(x, q) is Spark's `percentile(x, q)` — the same
-    // linear interpolation, measured, and the array-of-quantiles form
-    // carries over since percentile accepts an array too; a basic
-    // unnest(list) in the select list is explode (struct-unnest and
-    // DuckDB's multi-unnest zipping surface Spark's generator errors)
-    "arg_max" -> "max_by",
-    "arg_min" -> "min_by",
-    "argmax" -> "max_by",
-    "argmin" -> "min_by",
-    "list_transform" -> "transform",
-    "list_apply" -> "transform",
-    "list_filter" -> "filter",
-    "quantile_cont" -> "percentile",
-    "list" -> "collect_list",
-    "unnest" -> "explode",
-    // second round-16 batch (each measured on both engines): string
-    // predicates and position, list mutation/indexing (1-based NULL-
-    // safe extract IS try_element_at), reversal, length
-    "starts_with" -> "startswith",
-    "ends_with" -> "endswith",
-    "prefix" -> "startswith",
-    "suffix" -> "endswith",
-    "strpos" -> "instr",
-    "list_reverse" -> "reverse",
-    "array_reverse" -> "reverse",
-    "list_append" -> "array_append",
-    "array_length" -> "array_size",
-    // regex split: Spark's split IS regex-based — the names map 1:1
-    "string_split_regex" -> "split",
-    "str_split_regex" -> "split",
-    "regexp_split_to_array" -> "split",
-    // star-exclusion: DuckDB `* EXCLUDE (c1, c2)` ↔ Spark `* EXCEPT (c1,
-    // c2)`. Safe as a call-shaped rename: the '('-requirement leaves
-    // DuckDB's window-frame `EXCLUDE CURRENT ROW` (no paren) untouched,
-    // and Spark has no EXCLUDE( spelling of its own. The other star
-    // modifier, `* REPLACE (expr AS c)`, is handled structurally by
-    // [[rewriteStarReplace]]. `::` casts and ILIKE need no rewrite —
-    // Spark 4 parses both natively.
-    "exclude" -> "except")
-
-  /** strftime %-codes → Spark datetime pattern letters. */
-  private val fmtCodes: Map[Char, String] = Map(
-    'Y' -> "yyyy", 'y' -> "yy", 'm' -> "MM", 'd' -> "dd",
-    'H' -> "HH", 'I' -> "hh", 'M' -> "mm", 'S' -> "ss",
-    'p' -> "a", 'j' -> "DDD", 'a' -> "EEE", 'A' -> "EEEE",
-    'b' -> "MMM", 'B' -> "MMMM", 'f' -> "SSSSSS", 'g' -> "SSS",
-    'G' -> "yyyy", 'n' -> "M", 'e' -> "d", '%' -> "%")
-
   /** Schema resolver for schema-dependent rewrites (round 20: the
     * GROUPS wrap's multi-relation qualified star + outer-reference
     * dequalification), installed per-call by [[rewriteWithSchema]] —
@@ -213,35 +120,11 @@ object DuckDbDialect {
     s = rewriteDistinctWindow(s)
     s = rewriteGroupsDeep(s)
     s = rewriteFrameExclude(s)
-    s = rewriteCalls(s, "string_split")(stringSplitCall)
-    s = rewriteCalls(s, "str_split")(stringSplitCall)
-    s = rewriteCalls(s, "string_to_array")(stringSplitCall)
-    s = rewriteCalls(s, "list_slice")(listSliceCall)
-    s = rewriteCalls(s, "list_distinct")(listDistinctCall)
-    s = rewriteCalls(s, "array_to_string")(arrayToStringCall)
-    s = rewriteCalls(s, "list_concat")(listConcatCall)
-    s = rewriteCalls(s, "list_cat")(listConcatCall)
-    s = rewriteCalls(s, "strftime")(fmtCall("date_format"))
-    s = rewriteCalls(s, "strptime")(fmtCall("to_timestamp"))
-    s = rewriteCalls(s, "time_bucket")(timeBucket)
-    s = rewriteCalls(s, "epoch")(epochCall)
-    s = rewriteCalls(s, "quantile_disc")(quantileDiscCall)
-    s = rewriteCalls(s, "quantile")(quantileDiscCall) // DuckDB alias of _disc
-    s = rewriteCallsOpt(s, "date_diff")(dateDiffCall)
-    s = rewriteCallsOpt(s, "datediff")(dateDiffCall) // 3-arg alias; 2-arg passes
-    s = rewriteCalls(s, "list_prepend")(listPrependCall)
-    s = rewriteCalls(s, "list_unique")(listUniqueCall)
-    s = rewriteCalls(s, "list_aggregate")(listAggregateCall)
-    s = rewriteCalls(s, "list_extract")(listExtractCall)
-    s = rewriteCalls(s, "array_extract")(listExtractCall)
-    s = rewriteCalls(s, "list_has_any")(listHasAnyCall)
-    s = rewriteCalls(s, "list_has_all")(listHasAllCall)
-    s = rewriteCalls(s, "array_has_any")(listHasAnyCall)
-    s = rewriteCalls(s, "array_has_all")(listHasAllCall)
+    s = rewriteCalls(s, "date_diff")(dateDiffCall)
+    s = rewriteCalls(s, "datediff")(dateDiffCall) // 3-arg alias; 2-arg passes
     s = rewriteCalls(s, "struct_pack")(structPackCall)
-    s = rewriteCallsOpt(s, "regexp_extract")(regexpExtractCall)
-    renames.foreach { case (from, to) => s = renameFn(s, from, to) }
-    s
+    s = rewriteCalls(s, "regexp_extract")(regexpExtractCall)
+    renameFn(s, "exclude", "except")
   }
 
   // ---- FROM-first syntax -------------------------------------------------
@@ -616,17 +499,6 @@ object DuckDbDialect {
       pred = pred.substring(0, idStart) + alias + pred.substring(specEnd)
     }
     throw new IllegalArgumentException("QUALIFY window hoisting did not converge")
-  }
-
-  /** epoch(ts): DuckDB returns DOUBLE seconds INCLUDING the fractional
-    * part (bit-identical to epoch_us/1e6) — a rename to unix_timestamp
-    * would floor to whole seconds and round differently under a later
-    * CAST. The exact translation divides microseconds as a double.
-    * (The `epoch` scan never matches `epoch_ms(`/`epoch_us(` — the
-    * character after the matched name must be `(`.) */
-  private def epochCall(args: Seq[String]): String = {
-    require(args.size == 1, s"epoch: expected 1 argument, got ${args.size}")
-    s"(unix_micros(${args.head}) / 1.0E6)"
   }
 
   // ---- DISTINCT ON -----------------------------------------------------
@@ -3328,7 +3200,11 @@ object DuckDbDialect {
     b.toString
   }
 
-  /** Case-insensitive rename of `from(` call sites outside strings. */
+  /** Case-insensitive rename of `from(` call sites outside strings. Only
+    * star `EXCLUDE (c1, c2)` → Spark's `EXCEPT (c1, c2)` uses it: the
+    * '('-requirement leaves DuckDB's window-frame `EXCLUDE CURRENT ROW`
+    * (no paren; consumed by [[rewriteFrameExclude]]) untouched, and
+    * Spark has no EXCLUDE( spelling of its own. */
   private def renameFn(sql: String, from: String, to: String): String = {
     val in = inString(sql)
     val b = new StringBuilder
@@ -3338,7 +3214,7 @@ object DuckDbDialect {
           (i == 0 || !isIdentChar(sql(i - 1))) && {
             var j = i + from.length
             while (j < sql.length && sql(j).isWhitespace) j += 1
-            j < sql.length && sql(j) == '(' && !isIdentChar(sql(i + from.length - 1 + 1))
+            j < sql.length && sql(j) == '(' && !isIdentChar(sql(i + from.length))
           }) {
         b.append(to); i += from.length
       } else { b.append(sql(i)); i += 1 }
@@ -3346,61 +3222,15 @@ object DuckDbDialect {
     b.toString
   }
 
-  /** Find each `fname( args )` call outside strings (innermost-last via
-    * repeated scans), split its top-level args, and substitute
-    * `f(args)`. Loops until no call remains, so nested occurrences in
-    * rewritten output are handled too. */
-  private def rewriteCalls(sql: String, fname: String)(f: Seq[String] => String): String = {
-    var s = sql
-    var guard = 0
-    while (guard < 100) {
-      guard += 1
-      val in = inString(s)
-      var i = 0
-      var found = -1
-      while (found < 0 && i < s.length) {
-        if (!in(i) && s.regionMatches(true, i, fname, 0, fname.length) &&
-            (i == 0 || !isIdentChar(s(i - 1)))) {
-          var j = i + fname.length
-          while (j < s.length && s(j).isWhitespace) j += 1
-          if (j < s.length && s(j) == '(') found = i
-          else i += 1
-        } else i += 1
-      }
-      if (found < 0) return s
-      // balanced scan from the '(' to the matching ')'
-      var j = s.indexOf('(', found + fname.length)
-      val argStart = j + 1
-      var depth = 1
-      var k = argStart
-      val splits = scala.collection.mutable.ArrayBuffer.empty[Int]
-      while (depth > 0 && k < s.length) {
-        val c = s(k)
-        if (in(k)) ()
-        else if (c == '(') depth += 1
-        else if (c == ')') depth -= 1
-        else if (c == ',' && depth == 1) splits += k
-        k += 1
-      }
-      if (depth != 0) throw new IllegalArgumentException(
-        s"$fname(: unbalanced parentheses in SQL")
-      val argEnd = k - 1 // position of the matching ')'
-      val bounds: Seq[Int] = (argStart +: splits.toSeq.map(_ + 1)) :+ argEnd
-      val args = bounds.sliding(2).map { w =>
-        s.substring(w(0), math.min(w(1), argEnd)).stripSuffix(",").trim
-      }.toSeq.filter(_.nonEmpty)
-      s = s.substring(0, found) + f(args) + s.substring(argEnd + 1)
-    }
-    throw new IllegalArgumentException(s"$fname rewrite did not converge")
-  }
-
-  /** [[rewriteCalls]] with PASS-THROUGH: the callback returns None to
-    * leave a call site untouched (scanning resumes after it). Needed
-    * for names BOTH dialects define with different arities — e.g.
-    * DuckDB's 3-arg date_diff('part', a, b) vs Spark's own 2-arg
-    * date_diff(end, start): the Spark spelling must survive
-    * byte-identical (the shim's standing pass-through contract). */
-  private def rewriteCallsOpt(sql: String, fname: String)(
+  /** Find each `fname( args )` call outside strings, split its top-level
+    * args, and substitute `f(args)`; `f` returns None to leave a call
+    * site untouched (scanning resumes after it) — needed for names both
+    * dialects define with different arities, e.g. DuckDB's 3-arg
+    * date_diff('part', a, b) vs Spark's own 2-arg date_diff(end, start),
+    * whose Spark spelling must survive byte-identical. A replacement
+    * restarts the scan, so nested occurrences in rewritten output are
+    * handled too. */
+  private def rewriteCalls(sql: String, fname: String)(
       f: Seq[String] => Option[String]): String = {
     var s = sql
     var from = 0
@@ -3420,8 +3250,8 @@ object DuckDbDialect {
         } else i += 1
       }
       if (found < 0) return s
-      var j = s.indexOf('(', found + fname.length)
-      val argStart = j + 1
+      // balanced scan from the '(' to the matching ')'
+      val argStart = s.indexOf('(', found + fname.length) + 1
       var depth = 1
       var k = argStart
       val splits = scala.collection.mutable.ArrayBuffer.empty[Int]
@@ -3435,7 +3265,7 @@ object DuckDbDialect {
       }
       if (depth != 0) throw new IllegalArgumentException(
         s"$fname(: unbalanced parentheses in SQL")
-      val argEnd = k - 1
+      val argEnd = k - 1 // position of the matching ')'
       val bounds: Seq[Int] = (argStart +: splits.toSeq.map(_ + 1)) :+ argEnd
       val args = bounds.sliding(2).map { w =>
         s.substring(w(0), math.min(w(1), argEnd)).stripSuffix(",").trim
@@ -3443,129 +3273,26 @@ object DuckDbDialect {
       f(args) match {
         case Some(repl) =>
           s = s.substring(0, found) + repl + s.substring(argEnd + 1)
-          from = 0 // a replacement may expose nested rewritable calls
+          from = 0
         case None =>
-          from = found + fname.length // leave it; scan past
+          from = found + fname.length
       }
     }
     throw new IllegalArgumentException(s"$fname rewrite did not converge")
   }
 
-  // ---- specific translations ------------------------------------------
-
-  /** DuckDB list_prepend(elem, list): the ARGUMENT ORDER is reversed
-    * vs Spark's array_prepend(list, elem) — a rename alone would be the
-    * silent swapped-args class. */
-  private def listPrependCall(args: Seq[String]): String = {
-    require(args.size == 2, s"list_prepend: expected (element, list), got ${args.size}")
-    s"array_prepend(${args(1)}, ${args(0)})"
-  }
-
-  /** DuckDB list_unique(l): the number of DISTINCT NON-NULL elements
-    * (measured: list_unique([1,2,2,3,NULL]) = 3 — NULL is excluded,
-    * where a bare size(array_distinct(l)) would count it). */
-  private def listUniqueCall(args: Seq[String]): String = {
-    require(args.size == 1, s"list_unique: expected 1 argument, got ${args.size}")
-    s"size(filter(array_distinct(${args.head}), __lu_x -> __lu_x IS NOT NULL))"
-  }
-
-  /** DuckDB list_aggregate(l, 'name'): apply a named aggregate over the
-    * list. The supported names map to Spark's array algebra — sum folds
-    * with a BIGINT-widening seed (int lists match DuckDB's widened sum;
-    * doubles keep their type), count counts non-NULLs, avg is the pair.
-    * Other names throw with the supported list. */
-  private def listAggregateCall(args: Seq[String]): String = {
-    require(args.size == 2,
-      s"list_aggregate: expected (list, 'name'), got ${args.size} arguments")
-    val l = args(0)
-    val name = args(1).trim.replaceAll("^'|'$", "").toLowerCase(java.util.Locale.ROOT)
-    // the fold runs over the NULL-FILTERED list (DuckDB's aggregates
-    // skip NULL elements), accumulating in DOUBLE: the seed is the
-    // first element cast to double times zero — 0.0 on a non-empty
-    // list, NULL on an empty one (DuckDB's empty-sum), and a stable
-    // accumulator type for int, double AND decimal element types (an
-    // element-typed decimal seed grows precision per addition and
-    // fails Spark's lambda type check — measured). The result type is
-    // therefore DOUBLE where DuckDB keeps the element-derived type —
-    // value-equal within 2^53, the quantile_disc-style widening bound.
-    def fl = s"filter($l, __la_x -> __la_x IS NOT NULL)"
-    def sum0 = s"aggregate($fl, CAST(try_element_at($fl, 1) AS DOUBLE) * 0, " +
-      s"(__la_a, __la_b) -> __la_a + __la_b)"
-    def cnt = s"size($fl)"
-    name match {
-      case "sum" => s"($sum0)"
-      case "min" => s"array_min($l)"
-      case "max" => s"array_max($l)"
-      case "count" => cnt
-      case "avg" | "mean" => s"(CASE WHEN $cnt > 0 THEN ($sum0) / $cnt ELSE NULL END)"
-      case other => throw new IllegalArgumentException(
-        s"list_aggregate name '$other' is not supported by the dialect shim " +
-          "(sum/min/max/count/avg)")
-    }
-  }
-
-  /** DuckDB list_extract(l, i) / array_extract: 1-based, negative from
-    * the end, NULL for index 0 and out-of-bounds (all measured on
-    * DuckDB 1.0: extract([1,2,3], 0) = NULL, (-1) = 3, (9) = NULL).
-    * Spark's try_element_at matches everywhere EXCEPT index 0, which it
-    * rejects at runtime — the same nullif(idx, 0) guard the bracket
-    * rewrite uses pins that case to NULL. Bound: DuckDB also accepts a
-    * VARCHAR first argument (character extraction); Spark's element_at
-    * family is array/map-only, so string inputs surface Spark's type
-    * error (loud), same as the bracket rewrite's documented bound. */
-  private def listExtractCall(args: Seq[String]): String = {
-    require(args.size == 2, s"list_extract: expected (list, index), got ${args.size}")
-    s"try_element_at(${args(0)}, nullif(${args(1)}, 0))"
-  }
-
-  /** DuckDB list_has_any(a, b): TRUE when the lists share a NON-NULL
-    * element, FALSE when both are non-NULL lists without a shared
-    * element — NULL elements never match (measured:
-    * has_any([1,NULL],[NULL]) = false) — and NULL when EITHER list
-    * argument is NULL (measured: has_any(NULL,[1,2]) = NULL, both
-    * positions). Spark's arrays_overlap is three-valued on NULL
-    * *elements* (NULL when no match but NULLs present), so the no-match
-    * case is pinned to false with coalesce — but only under non-NULL
-    * list arguments, so the whole-argument-NULL case still propagates
-    * NULL like DuckDB. The arguments are spliced twice each; they are
-    * deterministic expressions under the gateway (the documented
-    * duplication class of the other list-call guards). */
-  private def listHasAnyCall(args: Seq[String]): String = {
-    require(args.size == 2, s"list_has_any: expected 2 lists, got ${args.size}")
-    val (a, b) = (args(0), args(1))
-    s"(CASE WHEN ($a) IS NULL OR ($b) IS NULL THEN NULL " +
-      s"ELSE coalesce(arrays_overlap($a, $b), false) END)"
-  }
-
-  /** DuckDB list_has_all(l, sub): TRUE when every element of sub is in
-    * l — including NULL matching NULL (measured:
-    * has_all([1,NULL],[NULL]) = true; has_all(l, []) = true) — and NULL
-    * when either LIST argument is NULL (measured: has_all(NULL,[1]) =
-    * NULL, has_all([1],NULL) = NULL). Spark has no direct twin; forall
-    * + a NULL-aware membership test reproduces the element semantics
-    * exactly (bare array_contains is three-valued on NULL-bearing
-    * lists, hence the coalesce), and forall already propagates a NULL
-    * sub — the CASE adds the NULL-l half so a NULL list on either side
-    * yields NULL instead of a fabricated false. */
-  private def listHasAllCall(args: Seq[String]): String = {
-    require(args.size == 2, s"list_has_all: expected 2 lists, got ${args.size}")
-    val (l, sub) = (args(0), args(1))
-    s"(CASE WHEN ($l) IS NULL THEN NULL ELSE " +
-      s"forall($sub, __ha_x -> CASE WHEN __ha_x IS NULL THEN " +
-      s"exists($l, __ha_y -> __ha_y IS NULL) " +
-      s"ELSE coalesce(array_contains($l, __ha_x), false) END) END)"
-  }
+  // ---- function spellings Spark cannot take as a call -----------------
 
   /** DuckDB struct_pack(a := 1, b := x): named-field struct literal —
     * Spark spells it named_struct('a', 1, 'b', x). */
-  private def structPackCall(args: Seq[String]): String = {
+  private def structPackCall(args: Seq[String]): Option[String] = {
     val field = "(?s)^([A-Za-z_][A-Za-z0-9_]*)\\s*:=\\s*(.+)$".r
     val pairs = args.map {
       case field(n, e) => s"'$n', ${e.trim}"
       case other => throw new IllegalArgumentException(
         s"struct_pack: expected name := expr, got '$other'")
     }
-    s"named_struct(${pairs.mkString(", ")})"
+    Some(s"named_struct(${pairs.mkString(", ")})")
   }
 
   /** DuckDB's 2-arg regexp_extract(s, re) returns the FULL MATCH (group
@@ -3576,25 +3303,6 @@ object DuckDbDialect {
   private def regexpExtractCall(args: Seq[String]): Option[String] =
     if (args.size == 2) Some(s"regexp_extract(${args(0)}, ${args(1)}, 0)")
     else None
-
-  /** DuckDB quantile_disc(x, q) / its alias quantile(x, q): the
-    * discrete quantile — the smallest element whose cumulative
-    * distribution reaches q. Spark's spelling is the ANSI
-    * `percentile_disc(q) WITHIN GROUP (ORDER BY x)` (measured equal on
-    * DuckDB 1.0: quantile_disc over 1..4 gives 2 at 0.5 and 1 at 0.25,
-    * exactly percentile_disc's smallest-cum≥q element; the result TYPE
-    * widens to double where DuckDB keeps the element type — same
-    * element value, callers cast). The CONTINUOUS
-    * twin quantile_cont needs no structure — it is the renames-table
-    * map to Spark's `percentile(x, q)` (same linear interpolation,
-    * measured: 2.5/1.75 over 1..4 at 0.5/0.25), which also carries
-    * DuckDB's array-of-quantiles form for free. Array-q quantile_disc
-    * surfaces percentile_disc's loud arity error — documented bound. */
-  private def quantileDiscCall(args: Seq[String]): String = {
-    require(args.size == 2,
-      s"quantile_disc/quantile: expected (value, quantile), got ${args.size} arguments")
-    s"percentile_disc(${args(1)}) WITHIN GROUP (ORDER BY ${args(0)})"
-  }
 
   /** DuckDB's 3-arg date_diff('part', start, end) / datediff alias:
     * counts PART BOUNDARIES CROSSED between start and end (measured:
@@ -3651,236 +3359,4 @@ object DuckDbDialect {
     })
   }
 
-  /** strftime/strptime: identify the %-format literal among the two args
-    * (DuckDB order (value, fmt); sqlite order (fmt, value)); convert it;
-    * emit target(value, 'converted'). */
-  private def fmtCall(target: String)(args: Seq[String]): String = {
-    require(args.size == 2,
-      s"strftime/strptime: expected 2 arguments, got ${args.size}")
-    def isFmtLiteral(a: String) =
-      a.startsWith("'") && a.endsWith("'") && a.contains("%")
-    val (value, fmt) =
-      if (isFmtLiteral(args(1))) (args(0), args(1))
-      else if (isFmtLiteral(args(0))) (args(1), args(0))
-      else throw new IllegalArgumentException(
-        s"strftime/strptime: no %-format string literal among ($args)")
-    // the converted pattern may itself contain single quotes (literal
-    // runs) — double them so the emitted SQL string literal stays valid
-    val pattern = convertFormat(fmt.substring(1, fmt.length - 1))
-    s"$target($value, '${pattern.replace("'", "''")}')"
-  }
-
-  /** C-style strftime format → Spark datetime pattern: %-codes map via
-    * [[fmtCodes]]; runs of literal letters are wrapped in ONE quoted
-    * section (per-letter quoting would read 'a''b' as the literal a'b —
-    * '' is an escaped quote inside a pattern). */
-  private[graft] def convertFormat(fmt: String): String = {
-    val b = new StringBuilder
-    val lit = new StringBuilder // pending literal run that needs quoting
-    def flush(): Unit = if (lit.nonEmpty) {
-      b.append('\'').append(lit.toString.replace("'", "''")).append('\'')
-      lit.clear()
-    }
-    var i = 0
-    while (i < fmt.length) {
-      val c = fmt(i)
-      if (c == '%') {
-        if (i + 1 >= fmt.length) throw new IllegalArgumentException(
-          "strftime format ends with a bare %")
-        val code = fmt(i + 1)
-        flush()
-        b.append(fmtCodes.getOrElse(code, throw new IllegalArgumentException(
-          s"strftime format code %$code has no Spark pattern mapping")))
-        i += 2
-      } else if (c.isLetter || c == '\'') { lit.append(c); i += 1 }
-      else { flush(); b.append(c); i += 1 }
-    }
-    flush()
-    b.toString
-  }
-
-  private val IntervalRe =
-    "(?i)^INTERVAL\\s+'?(\\d+)\\s*(second|minute|hour|day|week|month|year)s?'?$".r
-
-  /** time_bucket(INTERVAL 'N unit', ts): single whole units become
-    * date_trunc; N-multiples of second/minute/hour/day become
-    * epoch-floor arithmetic (both engines bucket these relative to an
-    * epoch-aligned origin). */
-  /** DuckDB's string_split splits on a LITERAL delimiter; Spark's split
-    * takes a Java REGEX — so the old token rename silently broke any
-    * metachar delimiter (measured: string_split('a.b.c', '.') is
-    * ['a','b','c'] in DuckDB but six empty strings through a bare
-    * split-on-'.'). A literal delimiter is regex-escaped per character;
-    * a non-literal delimiter expression throws (wrapping an arbitrary
-    * expression in \Q..\E would itself break on values containing \E —
-    * bounded, never silently wrong). With the escape in place the edge
-    * behaviors are measured identical: trailing empties kept, empty
-    * delimiter splits per character, empty input gives [''], and
-    * consecutive delimiters yield empty middle elements. */
-  private def stringSplitCall(args: Seq[String]): String = {
-    require(args.size == 2, s"string_split: expected 2 arguments, got ${args.size}")
-    val d = args(1).trim
-    // STRICT quoted-literal pattern (doubled '' is the only interior
-    // quote): the greedy (?s)^'(.*)'$ also matched non-literal
-    // expressions that merely start and end with a quote, e.g.
-    // `'a' || 'b'`, silently splitting on the wrong delimiter instead
-    // of taking the documented non-literal throw below.
-    "(?s)^'((?:[^']|'')*)'$".r.findFirstMatchIn(d) match {
-      case Some(m) =>
-        val raw = m.group(1).replace("''", "'")
-        val meta = "\\^$.|?*+()[]{}"
-        val escaped = raw.flatMap(c =>
-          if (meta.indexOf(c.toInt) >= 0) s"\\$c" else c.toString)
-        // SQL literal image: Spark string literals themselves treat
-        // backslash as an escape, so each regex backslash doubles again
-        val sqlLit = "'" + escaped.replace("\\", "\\\\").replace("'", "''") + "'"
-        s"split(${args(0)}, $sqlLit)"
-      case None => throw new IllegalArgumentException(
-        "string_split: only a string-literal delimiter is supported by the dialect shim " +
-          "(a non-literal delimiter cannot be regex-quoted safely)")
-    }
-  }
-
-  /** DuckDB's list_slice(l, b, e) takes a 1-based INCLUSIVE end index
-    * (negative indexes count from the end, 0 behaves as 1, out-of-range
-    * bounds clamp — all measured), while Spark's slice takes a LENGTH —
-    * the old token rename silently returned one extra element for every
-    * positive-end call (round 14). Translated positionally:
-    * start = clamp(b), length = max(0, pos(e) − pos(b) + 1). The 3-arg
-    * step form throws. */
-  private def listSliceCall(args: Seq[String]): String = {
-    require(args.size == 3,
-      s"list_slice: expected (list, begin, end) — got ${args.size} arguments " +
-        "(the 4-arg step form is not supported)")
-    val l = args(0).trim
-    val b = s"(${args(1).trim})"
-    val e = s"(${args(2).trim})"
-    val pb = s"(CASE WHEN $b < 0 THEN greatest(1, size($l) + $b + 1) ELSE greatest(1, $b) END)"
-    val pe = s"(CASE WHEN $e < 0 THEN size($l) + $e + 1 ELSE $e END)"
-    s"slice($l, $pb, greatest(0, $pe - $pb + 1))"
-  }
-
-  /** DuckDB's list_distinct REMOVES NULL elements (measured:
-    * list_distinct([1,NULL,1,2,NULL]) = [2,1]); a bare array_distinct
-    * keeps one NULL. The rewrite filters NULLs first. Element ORDER is
-    * an ACCEPTANCE bound (the USING SAMPLE precedent): DuckDB returns
-    * hash order ([3,1,3,2] → [2,1,3] — measured, not first-occurrence),
-    * Spark first-occurrence order — both are "the distinct elements",
-    * deterministically per engine, but not bit-identical; wrap in
-    * list_sort for a cross-engine-stable spelling. */
-  private def listDistinctCall(args: Seq[String]): String = {
-    require(args.size == 1, s"list_distinct: expected 1 argument, got ${args.size}")
-    s"array_distinct(filter(${args(0).trim}, __ls_t -> __ls_t IS NOT NULL))"
-  }
-
-  /** DuckDB's array_to_string returns NULL when the list has NO
-    * non-null elements — empty list, [NULL], or a NULL list — and joins
-    * the non-null elements otherwise (measured: [''] gives '', ['','x']
-    * gives '+x', [NULL,'x'] gives 'x'). Spark's array_join returns ''
-    * for the empty cases, so the bare rename (round-14 dlst fuzz,
-    * seed 14011, 2/300) silently turned NULL into ''. Both engines skip
-    * NULL elements once something non-null remains. */
-  private def arrayToStringCall(args: Seq[String]): String = {
-    require(args.size == 2, s"array_to_string: expected 2 arguments, got ${args.size}")
-    val l = args(0).trim
-    s"(CASE WHEN size(filter($l, __ats_t -> __ats_t IS NOT NULL)) = 0 THEN NULL " +
-      s"ELSE array_join($l, ${args(1).trim}) END)"
-  }
-
-  /** DuckDB's list_concat treats a NULL side as EMPTY (measured:
-    * list_concat(NULL, [1,2]) = [1,2]; both-NULL = NULL), while Spark's
-    * concat is NULL-propagating — the bare rename silently nulled any
-    * concat with one NULL side (round 14). Exactly two arguments in
-    * DuckDB 1.0 (the variadic spelling is a binder error there too).
-    *
-    * DUPLICATION BOUND (applies here, to arrayToStringCall and to
-    * listSliceCall): each argument's TEXT is spliced into the rewritten
-    * expression more than once (NULL guard + value branch). For
-    * deterministic arguments Spark's subexpression elimination folds the
-    * copies; a NONDETERMINISTIC argument (rand() inside the list expr)
-    * is evaluated per splice and the guard can diverge from the value —
-    * same class of bound as the non-literal string_split throw, accepted
-    * because DuckDB's own list functions are only defined on
-    * deterministic inputs in our oracle surface. Deep textual nesting of
-    * these calls also grows the rewritten SQL geometrically; the
-    * rewriteCalls 100-iteration guard aborts loudly rather than hanging. */
-  private def listConcatCall(args: Seq[String]): String = {
-    require(args.size == 2, s"list_concat: expected 2 arguments, got ${args.size}")
-    val a = s"(${args(0).trim})"
-    val b = s"(${args(1).trim})"
-    s"(CASE WHEN $a IS NULL THEN $b WHEN $b IS NULL THEN $a ELSE concat($a, $b) END)"
-  }
-
-  private def timeBucket(args: Seq[String]): String = {
-    require(args.size == 2 || args.size == 3,
-      s"time_bucket: expected 2 or 3 arguments, got ${args.size}")
-    val ts = args(1)
-    val origin = args.lift(2).map(_.trim)
-    args(0).trim match {
-      case IntervalRe(n, unit) =>
-        val cnt = n.toLong
-        val u = unit.toLowerCase
-        // Explicit-origin form (round 13). Measured on DuckDB 1.0:
-        // second-granularity buckets keep the origin's FULL sub-bucket
-        // offset (3-day origin 2024-01-02 12:00 → boundaries at 12:00),
-        // month-granularity buckets truncate the origin to its month
-        // start (origin 2024-02-15 06:00 → boundaries 02-01, 04-01, …),
-        // and instants before the origin floor downward in both.
-        if (origin.isDefined && (u == "month" || u == "year")) {
-          val nM = if (u == "year") cnt * 12 else cnt
-          val o = origin.get
-          val md = s"(((year($ts) - year($o)) * 12 + month($ts) - month($o)))"
-          s"CAST(add_months(date_trunc('month', $o), $md - pmod($md, $nM)) AS TIMESTAMP)"
-        } else if (origin.isDefined) {
-          val secs = u match {
-            case "second" => 1L
-            case "minute" => 60L
-            case "hour" => 3600L
-            case "day" => 86400L
-            case "week" => 604800L
-            case other => throw new IllegalArgumentException(
-              s"time_bucket: unsupported origin-form unit $other")
-          }
-          val w = cnt * secs
-          val o = origin.get
-          val oe = s"unix_timestamp($o)"
-          s"timestamp_seconds(CAST(FLOOR((unix_timestamp($ts) - $oe) / $w) AS BIGINT) * $w + $oe)"
-        } else if (cnt == 1L)
-          s"date_trunc('$u', $ts)"
-        else if (u == "month" || u == "year") {
-          // DuckDB aligns month-granularity buckets to origin 2000-01-01
-          // and floors toward it (measured: 2-month bucket of 1999-02-03
-          // → 1999-01-01; 2-year of 1997-07-14 → 1996-01-01). Months
-          // since the origin, floored with pmod so pre-2000 instants
-          // round DOWN, then re-anchored with add_months.
-          val n = if (u == "year") cnt * 12 else cnt
-          val mm = s"((year($ts) - 2000) * 12 + month($ts) - 1)"
-          s"CAST(add_months(DATE '2000-01-01', $mm - pmod($mm, $n)) AS TIMESTAMP)"
-        } else {
-          val secs = u match {
-            case "second" => 1L
-            case "minute" => 60L
-            case "hour" => 3600L
-            case "day" => 86400L
-            case "week" => 604800L
-            case other => throw new IllegalArgumentException(
-              s"time_bucket: unsupported unit $other")
-          }
-          val w = cnt * secs
-          // DuckDB aligns EVERY sub-month no-origin bucket to origin
-          // 2000-01-03 00:00:00 UTC (946857600 s — its documented
-          // default origin, measured here on 2-day/5-hour/90-minute/
-          // 7-second/2-week widths incl. pre-origin floors). The shim's
-          // previous epoch alignment agreed only for widths DIVIDING
-          // 946857600 — true of every width the dtb fuzz kind happened
-          // to draw (300/900/3600/86400 s), false for e.g. 5-hour or
-          // 2-day buckets (round 14). FLOOR of the double quotient is
-          // exact: both operands stay far below 2^53.
-          s"timestamp_seconds(CAST(FLOOR((unix_timestamp($ts) - 946857600) / $w) " +
-            s"AS BIGINT) * $w + 946857600)"
-        }
-      case other => throw new IllegalArgumentException(
-        s"time_bucket: first argument must be an INTERVAL literal, got $other")
-    }
-  }
 }

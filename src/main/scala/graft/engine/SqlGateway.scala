@@ -57,10 +57,13 @@ object SqlGateway {
   /** sanitize → dialect-accept → validate → execute.
     *
     * The dialect pass runs BEFORE validation so the structural
-    * SELECT-only gate judges the statement Spark will actually execute;
-    * it is a no-op on valid Spark SQL (every rewritten spelling —
-    * strftime, list_*, `//`, epoch(), time_bucket — does not exist in
-    * Spark SQL), closing the SURVEY §7.4-1 dialect-drift gap where a
+    * SELECT-only gate judges the statement Spark will actually execute.
+    * It is a no-op on valid Spark SQL: its text passes touch only syntax
+    * Spark cannot parse (`//`, QUALIFY, FROM-first, …) and the DuckDB
+    * arities of regexp_extract/date_diff, while DuckDB function names
+    * (strftime, list_*, epoch, time_bucket, …) resolve at analysis
+    * through the builders [[graft.functions.GraftExtensions]] injects.
+    * Together they close the SURVEY §7.4-1 dialect-drift gap where a
     * user pasting DuckDB SQL (the reference's pinned dialect,
     * /root/reference/doc.py:186-188) got a parse error here. */
   def run(spark: SparkSession, rawSql: String): DataFrame = {

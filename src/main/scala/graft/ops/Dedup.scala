@@ -29,6 +29,11 @@ object Dedup {
   val DfCap = 50       // stop-shingle document-frequency cap (floor)
   val NumPerm = 16     // MinHash permutations
   val Bands = 4        // LSH bands (NumPerm / Bands rows per band)
+  /** Embedding width of the corpus contract: [[refineCentroids]] averages
+    * exactly these dimensions, and the oracle SQL enumerates the same
+    * ones with [[DimRangeSql]]. */
+  private val EmbeddingDims = 64
+  private val DimRangeSql = s"range(1, ${EmbeddingDims + 1})"
 
   /** Effective stop-shingle cap: max(DfCap, 1% of the corpus doc count),
     * ceiling division so both engines compute it in exact integer
@@ -979,7 +984,7 @@ object Dedup {
         |cd AS (
         |  SELECT cid, u.i AS i,
         |         ROUND(AVG(list_extract(v, CAST(u.i AS INT))), 6) AS m
-        |  FROM mv, UNNEST(range(1, 65)) AS u(i)
+        |  FROM mv, UNNEST($DimRangeSql) AS u(i)
         |  GROUP BY cid, u.i),
         |c1 AS (SELECT cid, list(m ORDER BY i) AS c FROM cd GROUP BY cid),
         |${coarseAssignSql("m2", "vn", "c1")},
@@ -1027,7 +1032,7 @@ object Dedup {
         |cd AS (
         |  SELECT cid, u.i AS i,
         |         ROUND(AVG(list_extract(v, CAST(u.i AS INT))), 6) AS m
-        |  FROM mv, UNNEST(range(1, 65)) AS u(i)
+        |  FROM mv, UNNEST($DimRangeSql) AS u(i)
         |  GROUP BY cid, u.i),
         |c1 AS (SELECT cid, list(m ORDER BY i) AS c FROM cd GROUP BY cid),
         |${coarseAssignSql("mc", "corpus", "c1")},
@@ -1135,7 +1140,7 @@ object Dedup {
     s"""${p}sd AS (
        |  SELECT cid % (SELECT g FROM gv) AS gid, u.i AS i,
        |         ROUND(AVG(list_extract(c, CAST(u.i AS INT))), 6) AS m
-       |  FROM $cent, UNNEST(range(1, 65)) AS u(i)
+       |  FROM $cent, UNNEST($DimRangeSql) AS u(i)
        |  GROUP BY 1, 2),
        |${p}sc AS (SELECT gid, list(m ORDER BY i) AS sc FROM ${p}sd GROUP BY gid),
        |${p}s1a AS (
@@ -1262,14 +1267,13 @@ object Dedup {
     * chain materialized 64× the member rows through a Generate and
     * paid TWO exchanges per refinement site (and each semantic query
     * has 3-5 sites: c1 over the corpus + the super-centroid tables of
-    * every two-level assign). The embedding width is the corpus
-    * contract the oracle pins with its hardcoded `range(1, 65)` CTE,
-    * so the 64 element_at columns read exactly the dims the explode
-    * emitted; per-dim avg-of-double semantics (partial per partition,
-    * merged) and the 6-dp round are unchanged. */
+    * every two-level assign). The [[EmbeddingDims]] element_at columns
+    * read exactly the dims the oracle's [[DimRangeSql]] CTE emits;
+    * per-dim avg-of-double semantics (partial per partition, merged)
+    * and the 6-dp round are unchanged. */
   private def refineCentroids(members: DataFrame): DataFrame =
     members.groupBy("cid")
-      .agg(array((1 to 64).map(i =>
+      .agg(array((1 to EmbeddingDims).map(i =>
         round(avg(element_at(col("v"), i)), 6)): _*).as("c"))
 
   /** SemDeDup-style semantic dedup, parameterized: `k` cluster seeds

@@ -287,7 +287,6 @@ object Scalars {
       """SELECT l_returnflag, ROUND(exp(avg(ln(l_quantity))), 6) AS geo_qty
         |FROM lineitem WHERE l_quantity > 0
         |GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin) { (s, d) =>
-      graft.functions.Udfs.register(s)
       lineitem(s, d).filter(col("l_quantity") > 0).createOrReplaceTempView("graft_li_gm")
       s.sql(
         """SELECT l_returnflag, ROUND(geo_mean(l_quantity), 6) AS geo_qty
@@ -300,7 +299,6 @@ object Scalars {
         |       CAST(length(text) - length(regexp_replace(text, '[aeiouAEIOU]', '', 'g')) AS DOUBLE)
         |         / length(text) AS vd
         |FROM documents ORDER BY doc_id""".stripMargin) { (s, d) =>
-      graft.functions.Udfs.register(s)
       documents(s, d).createOrReplaceTempView("graft_docs_vd")
       s.sql("SELECT doc_id, vowel_density(text) AS vd FROM graft_docs_vd ORDER BY doc_id")
     },

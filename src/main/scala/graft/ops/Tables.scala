@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import org.apache.spark.storage.StorageLevel
 
 /** Testdata table loaders + shared determinism helpers.
   *
@@ -155,9 +156,10 @@ object Tables {
     (schema, bytes)
   }
 
-  /** Read a testdata table; small tables are cached on first touch. The
-    * cache() is idempotent (Spark's CacheManager dedups by canonicalized
-    * plan) and plays the buffer-pool role DuckDB gets from the OS page
+  /** Read a testdata table; small tables are cached on first touch
+    * (later touches find the CacheManager's entry for the same
+    * canonicalized plan and skip `cache()`). The cache plays the
+    * buffer-pool role DuckDB gets from the OS page
     * cache when Verify/Bench run ~114 queries over the same ten tables in
     * one session. The size gate keeps the policy honest at scale: only
     * tables under [[cacheMaxBytes]] on disk are pinned; anything larger
@@ -179,8 +181,11 @@ object Tables {
     val (schema, bytes) = schemaOf(spark, path)
     val df = assertSchema(name, spark.read.schema(schema).parquet(path))
     // kill-switch: -Dgraft.no.cache=1 (PlanAudit uses it so parquet-scan
-    // pushdown is visible instead of InMemoryTableScan pushdown)
-    if (!sys.props.contains("graft.no.cache") && bytes <= cacheMaxBytes)
+    // pushdown is visible instead of InMemoryTableScan pushdown). The
+    // CacheManager is asked first, so a table already cached is not
+    // re-registered; one emptied by clearCache() is cached again.
+    if (!sys.props.contains("graft.no.cache") && bytes <= cacheMaxBytes &&
+        df.storageLevel == StorageLevel.NONE)
       df.cache()
     df
   }

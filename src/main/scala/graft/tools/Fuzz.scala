@@ -2211,7 +2211,8 @@ object SqlFuzzer {
   * regexp_matches).
   * The DuckDB oracle runs each statement verbatim; the Spark side runs
   * `engine.DuckDbDialect.rewrite(sql)` — the same shim the SQL gateway
-  * applies — so the mode differentially tests the shim's translations
+  * applies — in a session carrying the DuckDB function builders
+  * (functions.DuckDbFunctions), so the mode differentially tests both
   * against DuckDB's actual semantics.
   *
   * `--nulls`: the driver testdata contains NO nulls, so 3VL predicate

@@ -472,7 +472,6 @@ class EngineSpec extends AnyFunSuite {
   }
 
   test("custom SQL functions: dot_product expression + geo_mean udaf") {
-    graft.functions.Udfs.register(spark)
     // DuckDB len()/array_length() via the type-dispatching DuckLen
     // (round 14; DuckDB goldens: len('héllo')=5 CHARS, len('王红ab')=4,
     // len([1,2,3])=3, BIGINT, NULL→NULL)

@@ -20,6 +20,7 @@ object TestSpark {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
+    graft.functions.Udfs.register(s) // as Session.local does, once per session
     s
   }
   val Sf = "/root/testdata/sf0.001"
