@@ -34,23 +34,6 @@ object Cli {
       case Array(c) => (c, 16)
     }
   }
-  /** View name for file i of n: the reference's fixed name for a single
-    * file, sanitized stems for several. */
-  private[graft] def viewNames(paths: Seq[String]): Seq[String] =
-    if (paths.size == 1) Seq(Catalog.TableName)
-    else {
-      val used = scala.collection.mutable.Set.empty[String]
-      paths.zipWithIndex.map { case (p, i) =>
-        val stem = new java.io.File(p).getName.replaceAll("\\.[^.]*$", "")
-          .replaceAll("[^A-Za-z0-9_]", "_").replaceAll("^([0-9])", "t$1")
-        val base = if (stem.isEmpty || stem.forall(_ == '_'))
-          s"data_table_${i + 1}" else stem
-        var name = base; var k = 1
-        while (!used.add(name)) { k += 1; name = s"${base}_$k" }
-        name
-      }
-    }
-
   def main(args: Array[String]): Unit = {
     val (bucketArgs, rest) = args.partition(_.startsWith("--bucket="))
     require(rest.length >= 2,
@@ -60,7 +43,7 @@ object Cli {
     val query = rest.drop(1).mkString(" ")
     val spark = Session.local("graft-cli")
 
-    val views = viewNames(paths)
+    val views = Catalog.displayNames(paths.map(new java.io.File(_).getName))
     val tables = paths.zip(views).map { case (path, view) =>
       val df = Ingest.load(spark, path)
       bucket match {

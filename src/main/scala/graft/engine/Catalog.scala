@@ -17,6 +17,25 @@ object Catalog {
   def register(df: DataFrame, name: String = TableName): Unit =
     df.createOrReplaceTempView(name)
 
+  /** Table names for files `fileNames`, in order: the reference's fixed
+    * name for a single file; for several, each file's sanitized stem,
+    * `data_table_k` for file k when the stem is unusable, and `_2`, `_3`,
+    * … on a repeated name. */
+  def displayNames(fileNames: Seq[String]): Seq[String] =
+    if (fileNames.size == 1) Seq(TableName)
+    else {
+      val used = scala.collection.mutable.Set.empty[String]
+      fileNames.zipWithIndex.map { case (f, i) =>
+        val stem = f.replaceAll("\\.[^.]*$", "")
+          .replaceAll("[^A-Za-z0-9_]", "_").replaceAll("^([0-9])", "t$1")
+        val base = if (stem.isEmpty || stem.forall(_ == '_'))
+          s"data_table_${i + 1}" else stem
+        var name = base; var k = 1
+        while (!used.add(name)) { k += 1; name = s"${base}_$k" }
+        name
+      }
+    }
+
   /** Persist next to the source file, like doc.py:113–114's db_path. */
   def persistPath(sourcePath: String): String = {
     val p = java.nio.file.Paths.get(sourcePath)

@@ -15,7 +15,8 @@ import java.util.concurrent.atomic.AtomicInteger
   * already-tested engine pieces: [[Workspace]] (upload + cleanup),
   * [[Catalog.analyzeFile]] (ingest + profile), [[SqlGenerator]] (NL→SQL,
   * stub by default), [[SqlGateway]] (SELECT-only), [[Results]]
-  * (markdown), [[MetaStore]] (parquet-backed sessions/files/chats).
+  * (markdown), [[MetaStore]] (sessions/files/chats in a driver-local
+  * append-only log, no Spark job).
   *
   * Transport is the JDK's built-in httpserver — zero added dependencies,
   * same as every other seam in this build. Sessions ride a
@@ -190,23 +191,10 @@ final class WebServer(spark: SparkSession, workDir: String, port: Int = 0,
             // register and run, silently answering against the wrong
             // (possibly another session's) data. The reference avoids
             // this with a per-file DuckDB database; unique names are
-            // the shared-session analog. Display names are stable:
-            // the reference's fixed table name for one file, sanitized
-            // file stems (deduped, data_table_k fallback) for several.
+            // the shared-session analog. Display names are stable
+            // ([[Catalog.displayNames]]).
             val loaded = found.map(_._2.get)
-            val usedNames = scala.collection.mutable.Set.empty[String]
-            val displayNames = loaded.zipWithIndex.map { case (a, i) =>
-              if (loaded.size == 1) Catalog.TableName
-              else {
-                val stem = a.filename.replaceAll("\\.[^.]*$", "")
-                  .replaceAll("[^A-Za-z0-9_]", "_").replaceAll("^([0-9])", "t$1")
-                val base = if (stem.isEmpty || stem.forall(_ == '_'))
-                  s"data_table_${i + 1}" else stem
-                var name = base; var k = 1
-                while (!usedNames.add(name)) { k += 1; name = s"${base}_$k" }
-                name
-              }
-            }
+            val displayNames = Catalog.displayNames(loaded.map(_.filename))
             val views = loaded.map { a =>
               val view = "data_" + UUID.randomUUID().toString.replace("-", "")
               Catalog.register(a.df, view)

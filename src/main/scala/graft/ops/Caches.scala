@@ -1,6 +1,7 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.storage.StorageLevel
 
 /** THE single convention for intra-query `cache()` frames (round-19
   * ADVICE item): operators that materialize a small intermediate (the
@@ -27,6 +28,13 @@ object Caches {
   def cached(df: DataFrame): DataFrame =
     if (sys.props.contains("graft.no.cache")) df
     else { df.cache(); reg.add(df); df }
+
+  /** `df.cache()` unless the CacheManager already holds `df`'s plan, where
+    * `cache()` would only log "Asked to cache already cached data". For
+    * frames kept for the session, not registered for [[release]]: the
+    * [[Tables]] loads and [[Dedup]]'s shingle, posting and pair caches. */
+  def cacheOnce[T](df: Dataset[T]): Dataset[T] =
+    if (df.storageLevel == StorageLevel.NONE) df.cache() else df
 
   /** Unpersist every frame registered since the last release. */
   def release(): Unit = {

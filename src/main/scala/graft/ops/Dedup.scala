@@ -141,7 +141,7 @@ object Dedup {
     val df = docs
       .select(col("doc_id"),
         explode(when(n >= 3, array_distinct(sh)).otherwise(array())).as("shingle"))
-    if (cacheable) df.cache()
+    if (cacheable) Caches.cacheOnce(df)
     df
   }
 
@@ -222,12 +222,12 @@ object Dedup {
     // memory pressure (the 3 GiB 64× probe exercises exactly that).
     val posting = pruned.groupBy("shingle")
       .agg(array_sort(collect_list(col("doc_id"))).as("ids"))
-      .cache()
+      .transform(Caches.cacheOnce)
     // n_sh counts are over the full pruned corpus (same denominator as
     // the exact path), regardless of candidate restriction — re-derived
     // from the cached postings rather than a second raw-stream pass.
     val counts = posting.select(explode(col("ids")).as("doc_id"))
-      .groupBy("doc_id").agg(count(lit(1)).as("n_sh")).cache()
+      .groupBy("doc_id").agg(count(lit(1)).as("n_sh")).transform(Caches.cacheOnce)
     val lists = candidates match {
       case Some(p) =>
         val candDocs = p.select(explode(array(col("id_a"), col("id_b"))).as("doc_id")).distinct()
@@ -289,7 +289,7 @@ object Dedup {
     * clearCache; same policy as `Tables.t`). */
   private[graft] def thresholdedPairs(sh: DataFrame, dfCap: Int): DataFrame = {
     val p = jaccardPairs(sh, dfCap).filter(col("jac") >= JaccardThreshold)
-    p.cache()
+    Caches.cacheOnce(p)
     p
   }
 

@@ -3,7 +3,6 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import org.apache.spark.storage.StorageLevel
 
 /** Testdata table loaders + shared determinism helpers.
   *
@@ -184,9 +183,7 @@ object Tables {
     // pushdown is visible instead of InMemoryTableScan pushdown). The
     // CacheManager is asked first, so a table already cached is not
     // re-registered; one emptied by clearCache() is cached again.
-    if (!sys.props.contains("graft.no.cache") && bytes <= cacheMaxBytes &&
-        df.storageLevel == StorageLevel.NONE)
-      df.cache()
+    if (!sys.props.contains("graft.no.cache") && bytes <= cacheMaxBytes) Caches.cacheOnce(df)
     df
   }
 

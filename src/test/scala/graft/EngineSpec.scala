@@ -459,6 +459,13 @@ class EngineSpec extends AnyFunSuite {
     spark.catalog.dropTempView("sales"); spark.catalog.dropTempView("cities")
   }
 
+  test("display names: data_table alone, else sanitized stems, deduped, data_table_k fallback") {
+    assert(Catalog.displayNames(Seq("sales.csv")) == Seq("data_table"))
+    assert(Catalog.displayNames(Seq("sales.csv", "sales.json", "2024 report.xlsx", "!!!.csv",
+      "数据.csv", ".csv")) ==
+      Seq("sales", "sales_2", "t2024_report", "data_table_4", "data_table_5", "data_table_6"))
+  }
+
   test("Gemini transport: response parsing and fence stripping (no network)") {
     val g = new GeminiSqlGenerator(apiKey = "unused-in-tests")
     val resp = """{"candidates":[{"content":{"parts":[{"text":

@@ -88,21 +88,22 @@ class WebSpec extends AnyFunSuite {
     Json.getString(r.body(), "markdown_result").get
   }
 
-  /** Spark jobs `body` starts whose call site passes through `Ingest.load`
-    * or `Profile.apply` — the work of analyzing a file. */
-  private def analysisJobs(body: => Unit): Int = {
+  /** Spark jobs `body` starts whose call site passes through one of
+    * `frames` (any call site when `frames` is empty) and none of `unless`. */
+  private def jobsThrough(frames: Seq[String], unless: Seq[String] = Nil)(body: => Unit): Int = {
     val sc = spark.sparkContext
-    val frames = Seq("graft.engine.Ingest$.load(", "graft.engine.Profile$.apply(")
     val marker = s"webspec-${UUID.randomUUID()}"
     val count = new AtomicInteger
     @volatile var seenMarker = false
     val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = {
-        if (e.stageInfos.exists(s => frames.exists(f => Option(s.details).exists(_.contains(f)))))
-          count.incrementAndGet()
+      override def onJobStart(e: SparkListenerJobStart): Unit =
         if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == marker))
           seenMarker = true
-      }
+        else {
+          val sites = e.stageInfos.flatMap(s => Option(s.details))
+          def through(fs: Seq[String]) = sites.exists(d => fs.exists(d.contains))
+          if ((frames.isEmpty || through(frames)) && !through(unless)) count.incrementAndGet()
+        }
     }
     sc.addSparkListener(listener)
     try {
@@ -117,6 +118,11 @@ class WebSpec extends AnyFunSuite {
     } finally sc.removeSparkListener(listener)
     count.get
   }
+
+  private val AnalysisFrames = Seq("graft.engine.Ingest$.load(", "graft.engine.Profile$.apply(")
+
+  /** Jobs `body` starts analyzing a file: through `Ingest.load` or `Profile.apply`. */
+  private def analysisJobs(body: => Unit): Int = jobsThrough(AnalysisFrames)(body)
 
   test("index page serves the browser app (upload, question, history, sessions)") {
     val r = get("/")
@@ -357,6 +363,26 @@ class WebSpec extends AnyFunSuite {
     var md = ""
     assert(analysisJobs { md = askMd(fileId, "每个城市的销售额", cookie) } == 0)
     assert(md.contains("customer_city") && md.contains("Query Result"), md.take(400))
+  }
+
+  test("requests start no Spark job besides the query and the upload's analysis") {
+    // every job the web tier starts passes through a WebServer handler;
+    // the user's query runs in Results.materialize, an upload's analysis
+    // in Ingest.load and Profile.apply, and the metastore runs none
+    val web = Seq("graft.engine.WebServer", "graft.engine.MetaStore")
+    val own = Seq("graft.engine.Results$.materialize(") ++ AnalysisFrames
+    // the listener sees the web tier's jobs, so the zeros below are real
+    assert(jobsThrough(web)(uploadCsv()) > 0)
+    var cookie = ""
+    assert(jobsThrough(web, unless = own) {
+      val (fileId, c) = uploadCsv(); cookie = c
+      askMd(fileId, "每个城市的销售额", cookie)
+      Seq("/api/chat_history", "/api/sessions", "/api/files")
+        .foreach(p => assert(get(p, cookie).statusCode() == 200))
+    } == 0)
+    var history = ""
+    assert(jobsThrough(Nil) { history = get("/api/chat_history", cookie).body() } == 0)
+    assert(history.contains("每个城市的销售额"), history.take(400))
   }
 
   test("a second server over the same workDir answers files the first analyzed") {
