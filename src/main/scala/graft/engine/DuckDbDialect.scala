@@ -30,9 +30,17 @@ package graft.engine
   *
   * Every pass is a no-op on valid Spark SQL (DialectPropertySpec pins
   * identity on generated ANSI statements and idempotence on generated
-  * DuckDB ones), so the shim runs unconditionally. All passes are
-  * string-literal-aware: `'a//b'` or `'qualify'` inside a data literal
-  * is never touched.
+  * DuckDB ones), so the shim runs unconditionally.
+  *
+  * Every pass reads its text through one scanner, [[Lex]], and none
+  * scans characters on its own. Its contract: one mask per text (string
+  * literals, quoted identifiers and comments — `'a//b'` or `'qualify'`
+  * inside a data literal is never touched); one keyword test; one
+  * bracket matcher, which raises each pass's own "unbalanced …" message;
+  * one depth-0 search and split; one set-operation cut, where EXCEPT
+  * right after `*` and before a non-query paren list is the star
+  * modifier; and one innermost-query-block-first recursion
+  * ([[innermostFirst]]) for QUALIFY, GROUPS and COLUMNS.
   *
   * Deliberately bounded (documented, not silently wrong):
   *  - `//` becomes Spark's ` div `, whose analyzed [[IntegralDivide]]
@@ -105,27 +113,24 @@ object DuckDbDialect {
     try rewrite(sql) finally schemaResolver.remove()
   }
 
-  def rewrite(sql: String): String = {
-    var s = sql
-    s = rewriteFromFirst(s)
-    s = rewriteQualifyDeep(s)
-    s = rewriteDistinctOn(s)
-    s = rewriteStarReplace(s)
-    s = rewriteAsOfJoin(s)
-    s = rewriteOperatorIntDiv(s)
-    s = rewriteUsingSample(s)
-    s = rewriteSimilarTo(s)
-    s = rewriteIgnoreNulls(s)
-    s = rewriteBrackets(s)
-    s = rewriteDistinctWindow(s)
-    s = rewriteGroupsDeep(s)
-    s = rewriteFrameExclude(s)
-    s = rewriteCalls(s, "date_diff")(dateDiffCall)
-    s = rewriteCalls(s, "datediff")(dateDiffCall) // 3-arg alias; 2-arg passes
-    s = rewriteCalls(s, "struct_pack")(structPackCall)
-    s = rewriteCalls(s, "regexp_extract")(regexpExtractCall)
-    renameFn(s, "exclude", "except")
-  }
+  def rewrite(sql: String): String =
+    passes.foldLeft(new Lex(sql)) { (lx, pass) =>
+      val out = pass(lx)
+      if (out == lx.s) lx else new Lex(out)
+    }.s
+
+  /** The text passes in order. Each reads the [[Lex]] the previous one
+    * left, so the text is scanned again only after a pass changed it. */
+  private val passes: Seq[Lex => String] = Seq(
+    rewriteFromFirst, rewriteQualifyDeep, rewriteDistinctOn, rewriteStarReplace,
+    rewriteAsOfJoin, rewriteOperatorIntDiv, rewriteUsingSample, rewriteSimilarTo,
+    rewriteIgnoreNulls, rewriteBrackets, rewriteDistinctWindow, rewriteGroupsDeep,
+    rewriteFrameExclude,
+    rewriteCalls(_, "date_diff")(dateDiffCall),
+    rewriteCalls(_, "datediff")(dateDiffCall), // 3-arg alias; 2-arg passes
+    rewriteCalls(_, "struct_pack")(structPackCall),
+    rewriteCalls(_, "regexp_extract")(regexpExtractCall),
+    renameFn(_, "exclude", "except"))
 
   // ---- FROM-first syntax -------------------------------------------------
 
@@ -137,40 +142,22 @@ object DuckDbDialect {
     * rewrite relocates the SELECT list (or inserts `SELECT *`) in front
     * of each top-level set-operation branch that starts with FROM.
     * TOP-LEVEL only — a parenthesized FROM-first subquery surfaces
-    * Spark's parse error (loud, documented), and set-op EXCEPT is
-    * distinguished from `* EXCEPT (cols)` by peeking at the token after
-    * the paren. */
-  private def rewriteFromFirst(sql: String): String = {
+    * Spark's parse error (loud, documented), and set-op EXCEPT is told
+    * from `* EXCEPT (cols)` by [[Lex.isSetOp]]. */
+  private def rewriteFromFirst(lx: Lex): String = {
+    val sql = lx.s
     // The statement needs the rewrite when its FIRST branch is
     // FROM-first OR when any LATER set-op branch is (legal in DuckDB:
     // `SELECT 1 UNION ALL FROM t`) — the branch scan below finds the
     // latter, so the head-only gate decides nothing by itself.
     val headFromFirst = "(?is)^\\s*from\\b".r.findFirstIn(sql).isDefined
-    val in = inString(sql)
-    // segment boundaries: top-level set-op keywords whose next token
-    // (after optional ALL/DISTINCT) is FROM — only those branches need
-    // the rewrite, and this sidesteps the star-EXCEPT ambiguity here
-    var bounds = List.empty[Int]
-    var depth = 0
-    var i = 0
-    while (i < sql.length) {
-      if (!in(i)) {
-        val c = sql(i)
-        if (c == '(') depth += 1 else if (c == ')') depth -= 1
-        else if (depth == 0 && isIdentChar(c) && (i == 0 || !isIdentChar(sql(i - 1)))) {
-          Seq("union", "intersect", "except").find(k =>
-            sql.regionMatches(true, i, k, 0, k.length) &&
-              (i + k.length >= sql.length || !isIdentChar(sql(i + k.length)))).foreach { k =>
-            val after = "(?is)^\\s+(?:(?:all|distinct)\\s+)?from\\b".r
-              .findFirstIn(sql.substring(i + k.length))
-            if (after.isDefined) bounds ::= i
-          }
-        }
-      }
-      i += 1
+    // segment boundaries: the set operations whose branch starts with
+    // FROM — only those branches need the rewrite
+    val bounds = lx.setOps().collect {
+      case (op, end) if "(?is)^\\s+from\\b".r.findFirstIn(sql.substring(end)).isDefined => op
     }
     if (!headFromFirst && bounds.isEmpty) return sql
-    val cuts = (0 :: bounds).distinct.sorted :+ sql.length
+    val cuts = (0 +: bounds).distinct.sorted :+ sql.length
     // every cut lands exactly at a set-op keyword; segments join on a
     // NEWLINE (not a space) so a `--` line comment ending one segment
     // cannot swallow the next branch's keywords
@@ -187,71 +174,51 @@ object DuckDbDialect {
       "from(?![A-Za-z0-9_])").r.findFirstMatchIn(seg).getOrElse(return seg)
     val prefix = m.group(1)
     val afterFrom = m.end
-    val in = inString(seg)
-    // clause keywords ending the FROM source / the SELECT list. EXCEPT
-    // counts only as a set-op boundary when NOT introducing a
-    // parenthesized star-exclusion (`* EXCEPT (cols)`) — peek: set-op
-    // EXCEPT is followed by ALL/DISTINCT/SELECT/FROM/( SELECT|FROM.
-    def isClauseKw(i: Int): Boolean = {
-      val kws = Seq("select", "where", "group", "having", "qualify",
-        "window", "order", "limit", "offset", "union", "intersect", "except")
-      kws.exists { k =>
-        seg.regionMatches(true, i, k, 0, k.length) &&
-          (i + k.length >= seg.length || !isIdentChar(seg(i + k.length))) && {
-            if (k != "except") true
-            else {
-              val tail = seg.substring(i + k.length)
-              val paren = "(?is)^\\s*\\(\\s*([A-Za-z]+)".r.findFirstMatchIn(tail)
-              paren match {
-                case Some(pm) => // set-op iff the paren opens a query
-                  pm.group(1).equalsIgnoreCase("select") ||
-                    pm.group(1).equalsIgnoreCase("from")
-                case None => true // ALL/DISTINCT/SELECT/FROM/identifier
-              }
-            }
-          }
-      }
-    }
-    var depth = 0
-    var i = afterFrom
-    var selPos = -1   // first top-level SELECT (starts the relocated list)
-    var selEnd = -1   // first clause keyword after it (ends the list)
-    var clausePos = -1 // first clause keyword when no SELECT came first
-    while (i < seg.length) {
-      if (!in(i)) {
-        val c = seg(i)
-        if (c == '(') depth += 1 else if (c == ')') depth -= 1
-        else if (depth == 0 && isIdentChar(c) && !isIdentChar(seg(i - 1)) && isClauseKw(i)) {
-          val isSelect = seg.regionMatches(true, i, "select", 0, 6) &&
-            (i + 6 >= seg.length || !isIdentChar(seg(i + 6)))
-          if (isSelect) { if (selPos < 0 && clausePos < 0) selPos = i }
-          else if (selPos >= 0) { if (selEnd < 0) selEnd = i }
-          else if (clausePos < 0) clausePos = i
-        }
-      }
-      i += 1
-    }
+    val lx = new Lex(seg)
+    // top-level clause keywords after the source: the first one ends the
+    // source or, when it is SELECT, starts the relocated list, which the
+    // next non-SELECT one ends. A set-op EXCEPT is one; the star modifier
+    // `* EXCEPT (cols)` is not.
+    val clauses = lx.tops(afterFrom)(i => lx.isSetOp(i) ||
+      Seq("select", "where", "group", "having", "qualify", "window", "order",
+        "limit", "offset").exists(lx.word(i, _))).toList
     // Relocated pieces join on NEWLINES: the source (or list) text may
     // end in a `--` line comment, and a space join would comment out
     // the clause that follows it (`FROM t -- c\nWHERE …` must not
     // become `… FROM t -- c WHERE …`).
-    if (selPos >= 0) {
-      val listEnd = if (selEnd >= 0) selEnd else seg.length
-      val source = seg.substring(afterFrom, selPos)
-      val list = seg.substring(selPos + 6, listEnd)
-      val rest = seg.substring(listEnd).trim
-      prefix + "SELECT " + list.trim + "\nFROM " + source.trim +
-        (if (rest.isEmpty) "" else "\n" + rest)
-    } else {
-      val srcEnd = if (clausePos >= 0) clausePos else seg.length
-      val source = seg.substring(afterFrom, srcEnd)
-      val rest = seg.substring(srcEnd).trim
-      prefix + "SELECT * FROM " + source.trim +
-        (if (rest.isEmpty) "" else "\n" + rest)
+    clauses match {
+      case selPos :: later if lx.word(selPos, "select") =>
+        val listEnd = later.find(!lx.word(_, "select")).getOrElse(seg.length)
+        val source = seg.substring(afterFrom, selPos)
+        val list = seg.substring(selPos + 6, listEnd)
+        val rest = seg.substring(listEnd).trim
+        prefix + "SELECT " + list.trim + "\nFROM " + source.trim +
+          (if (rest.isEmpty) "" else "\n" + rest)
+      case _ =>
+        val srcEnd = clauses.headOption.getOrElse(seg.length)
+        val source = seg.substring(afterFrom, srcEnd)
+        val rest = seg.substring(srcEnd).trim
+        prefix + "SELECT * FROM " + source.trim +
+          (if (rest.isEmpty) "" else "\n" + rest)
     }
   }
 
   // ---- QUALIFY ---------------------------------------------------------
+
+  /** QUALIFY at any depth (round 13 — closes the r12 "QUALIFY inside
+    * a subquery" bound): a QUALIFY inside a parenthesized query block is
+    * top-level relative to that block's content, so [[innermostFirst]]
+    * rewrites the innermost such block first (deeper nests resolve
+    * first), splices it back, and repeats until only a top-level QUALIFY
+    * (or none) remains for [[rewriteQualify]]. Each step eliminates one
+    * QUALIFY token, so the recursion is finite; the per-block guards (set
+    * operations, DISTINCT + inline windows) still apply within whichever
+    * block carries the clause. */
+  private def rewriteQualifyDeep(lx: Lex): String =
+    innermostFirst(lx, required("QUALIFY: unbalanced parentheses")) { block =>
+      val nested = block.find()(i => block.word(i, "qualify") && block.opens(i).nonEmpty)
+      Seq(nested, block.find()(block.word(_, "qualify"))).find(_ >= 0)
+    }((block, _) => rewriteQualify(block))
 
   /** DuckDB's `QUALIFY <pred>` (filter on window results — Spark has no
     * equivalent clause) rewrites to a wrapped subquery:
@@ -273,162 +240,39 @@ object DuckDbDialect {
     * top level by a set operation, or combining an inline window with
     * SELECT DISTINCT (appending a column would change the distinct key),
     * is rejected with a message naming the limitation. */
-  /** Recursive QUALIFY driver (round 13 — closes the r12 "QUALIFY inside
-    * a subquery" bound): locate a QUALIFY token at paren depth > 0, take
-    * its innermost enclosing `( ... )` block — relative to that block's
-    * content the QUALIFY is top-level — rewrite the content (recursively,
-    * so deeper nests resolve first), splice it back, and repeat until
-    * only a top-level QUALIFY (or none) remains for [[rewriteQualify]].
-    * Each step eliminates one QUALIFY token, so the recursion is finite;
-    * the per-block guards (set operations, DISTINCT + inline windows)
-    * still apply within whichever block carries the clause. */
-  private def rewriteQualifyDeep(sql: String): String = {
-    val in = inString(sql)
-    def wordAt(i: Int, w: String): Boolean =
-      !in(i) && sql.regionMatches(true, i, w, 0, w.length) &&
-        (i == 0 || !isIdentChar(sql(i - 1))) &&
-        (i + w.length >= sql.length || !isIdentChar(sql(i + w.length)))
-    var opens = List.empty[Int]
-    var i = 0
-    while (i < sql.length) {
-      if (!in(i)) {
-        val c = sql(i)
-        if (c == '(') opens ::= i
-        else if (c == ')') opens = opens.drop(1)
-        else if (opens.nonEmpty && wordAt(i, "qualify")) {
-          val start = opens.head
-          var d = 0
-          var end = start
-          while (end < sql.length && {
-            if (!in(end)) {
-              if (sql(end) == '(') d += 1
-              else if (sql(end) == ')') d -= 1
-            }
-            d != 0
-          }) end += 1
-          require(end < sql.length, "QUALIFY: unbalanced parentheses")
-          val inner = rewriteQualifyDeep(sql.substring(start + 1, end))
-          return rewriteQualifyDeep(
-            sql.substring(0, start + 1) + inner + sql.substring(end))
-        }
-      }
-      i += 1
-    }
-    rewriteQualify(sql)
-  }
-
-  private def rewriteQualify(sql: String): String = {
-    val in = inString(sql)
-    def wordAt(i: Int, w: String): Boolean =
-      !in(i) && sql.regionMatches(true, i, w, 0, w.length) &&
-        (i == 0 || !isIdentChar(sql(i - 1))) &&
-        (i + w.length >= sql.length || !isIdentChar(sql(i + w.length)))
-    // one scan: the FIRST top-level QUALIFY, plus every top-level set
-    // operation keyword span (UNION/INTERSECT/EXCEPT with its optional
-    // ALL/DISTINCT modifier) — QUALIFY binds to ITS OWN branch of a
-    // compound (measured: `A UNION ALL B QUALIFY p` filters only B;
-    // trailing ORDER BY/LIMIT binds to the whole compound), so the
-    // rewrite wraps just the branch between the surrounding set ops.
-    def setOpAt(i: Int): Boolean =
-      wordAt(i, "union") || wordAt(i, "intersect") ||
-        // EXCEPT is also Spark's star-exclusion (`* EXCEPT (c)`);
-        // only the set operation (not preceded by `*`) counts
-        (wordAt(i, "except") && {
-          var p = i - 1
-          while (p >= 0 && sql(p).isWhitespace) p -= 1
-          p < 0 || sql(p) != '*'
-        })
-    def setOpEnd(i: Int): Int = {
-      // end of the keyword plus an optional ALL/DISTINCT modifier
-      var e = i
-      while (e < sql.length && isIdentChar(sql(e))) e += 1
-      var w = e
-      while (w < sql.length && sql(w).isWhitespace) w += 1
-      if (wordAt(w, "all") || wordAt(w, "distinct")) {
-        var e2 = w
-        while (e2 < sql.length && isIdentChar(sql(e2))) e2 += 1
-        e2
-      } else e
-    }
-    var depth = 0
-    var q = -1
-    var branchStart = 0
-    var i = 0
-    while (i < sql.length && q < 0) {
-      val c = sql(i)
-      if (!in(i)) {
-        if (c == '(') depth += 1
-        else if (c == ')') depth -= 1
-        else if (depth == 0 && setOpAt(i)) branchStart = setOpEnd(i)
-        else if (wordAt(i, "qualify")) {
-          if (depth > 0) throw new IllegalStateException(
-            "QUALIFY at depth > 0 reached rewriteQualify — " +
-              "rewriteQualifyDeep should have reduced it first")
-          q = i
-        }
-      }
-      i += 1
-    }
+  private def rewriteQualify(lx: Lex): String = {
+    val sql = lx.s
+    val q = lx.find()(lx.word(_, "qualify"))
     if (q < 0) return sql
+    if (lx.depthAt(q) > 0) throw new IllegalStateException(
+      "QUALIFY at depth > 0 reached rewriteQualify — " +
+        "rewriteQualifyDeep should have reduced it first")
+    // QUALIFY binds to ITS OWN branch of a compound (measured: `A UNION
+    // ALL B QUALIFY p` filters only B; trailing ORDER BY/LIMIT binds to
+    // the whole compound), so the rewrite wraps just the branch between
+    // the surrounding set operations
+    val branchStart = lx.setOps(0, q).lastOption.fold(0)(_._2)
     val prefix =
       if (branchStart == 0) "" else sql.substring(0, branchStart) + " "
     val head = sql.substring(branchStart, q).trim
-    val rest = sql.substring(q + "qualify".length)
     // the predicate ends at the earliest top-level ORDER BY / LIMIT /
     // OFFSET (compound-level tail) or set operation (the next branch)
-    val restIn = inString(rest)
-    var d2 = 0; var tailAt = -1; var j = 0
-    def restWord(i: Int, w: String): Boolean =
-      !restIn(i) && rest.regionMatches(true, i, w, 0, w.length) &&
-        (i == 0 || !isIdentChar(rest(i - 1))) &&
-        (i + w.length >= rest.length || !isIdentChar(rest(i + w.length)))
-    while (j < rest.length && tailAt < 0) {
-      val c = rest(j)
-      if (!restIn(j)) {
-        if (c == '(') d2 += 1
-        else if (c == ')') d2 -= 1
-        else if (d2 == 0 &&
-                 (restWord(j, "order") || restWord(j, "limit") || restWord(j, "offset") ||
-                  restWord(j, "union") || restWord(j, "intersect") ||
-                  (restWord(j, "except") && {
-                    var p = j - 1
-                    while (p >= 0 && rest(p).isWhitespace) p -= 1
-                    p < 0 || rest(p) != '*'
-                  })))
-          tailAt = j
-      }
-      j += 1
-    }
+    val predAt = q + "qualify".length
+    val tailAt = lx.findTop(predAt)(i => lx.isSetOp(i) ||
+      Seq("order", "limit", "offset").exists(lx.word(i, _)))
     val (pred0, tail) =
-      if (tailAt < 0) (rest.trim, "")
-      else (rest.substring(0, tailAt).trim, " " + rest.substring(tailAt).trim)
+      if (tailAt < 0) (sql.substring(predAt).trim, "")
+      else (sql.substring(predAt, tailAt).trim, " " + sql.substring(tailAt).trim)
     val (pred, hoisted) = hoistWindows(pred0)
     if (hoisted.isEmpty)
       // recurse: a later branch of the compound may carry its own QUALIFY
-      rewriteQualify(s"${prefix}SELECT * FROM ( $head ) __qualify WHERE $pred$tail")
+      rewriteQualify(new Lex(s"${prefix}SELECT * FROM ( $head ) __qualify WHERE $pred$tail"))
     else {
       // Locate the head's MAIN select (the LAST top-level SELECT — a
       // WITH-prefixed head keeps its CTE bodies inside parens) and its
       // FROM, so the DISTINCT guard and the synthetic-column insertion
       // both anchor to the right block even under CTEs.
-      val headIn = inString(head)
-      var hd = 0; var fromAt = -1; var selAt = -1; var h = 0
-      def headWord(i: Int, w: String): Boolean =
-        !headIn(i) && head.regionMatches(true, i, w, 0, w.length) &&
-          (i == 0 || !isIdentChar(head(i - 1))) &&
-          (i + w.length >= head.length || !isIdentChar(head(i + w.length)))
-      while (h < head.length) {
-        val c = head(h)
-        if (!headIn(h)) {
-          if (c == '(') hd += 1
-          else if (c == ')') hd -= 1
-          else if (hd == 0) {
-            if (headWord(h, "select")) { selAt = h; fromAt = -1 }
-            else if (fromAt < 0 && headWord(h, "from")) fromAt = h
-          }
-        }
-        h += 1
-      }
+      val (selAt, fromAt) = new Lex(head).selectFrom()
       require(selAt >= 0 && fromAt > selAt,
         "QUALIFY: could not locate the head query's SELECT ... FROM block")
       if ("(?is)^select\\s+distinct\\b".r
@@ -440,8 +284,8 @@ object DuckDbDialect {
       val headWithSynth =
         head.substring(0, fromAt) + s", $synth " + head.substring(fromAt)
       val drop = hoisted.map(_._2).mkString(", ")
-      rewriteQualify(
-        s"${prefix}SELECT * EXCEPT ($drop) FROM ( $headWithSynth ) __qualify WHERE $pred$tail")
+      rewriteQualify(new Lex(
+        s"${prefix}SELECT * EXCEPT ($drop) FROM ( $headWithSynth ) __qualify WHERE $pred$tail"))
     }
   }
 
@@ -453,46 +297,21 @@ object DuckDbDialect {
     var guard = 0
     while (guard < 50) {
       guard += 1
-      val in = inString(pred)
-      var i = 0; var overAt = -1
-      while (i < pred.length && overAt < 0) {
-        if (!in(i) && pred.regionMatches(true, i, "over", 0, 4) &&
-            (i == 0 || !isIdentChar(pred(i - 1))) &&
-            (i + 4 >= pred.length || !isIdentChar(pred(i + 4)))) overAt = i
-        else i += 1
-      }
+      val lx = new Lex(pred)
+      val overAt = lx.find()(lx.word(_, "over"))
       if (overAt < 0) return (pred, hoisted.toSeq)
       // spec parens after OVER
-      var j = overAt + 4
-      while (j < pred.length && pred(j).isWhitespace) j += 1
+      val j = lx.fwd(overAt + 4)
       require(j < pred.length && pred(j) == '(',
         "QUALIFY: expected ( after OVER (named windows are unsupported)")
-      var depth = 1; var k = j + 1
-      while (depth > 0 && k < pred.length) {
-        if (!in(k)) {
-          if (pred(k) == '(') depth += 1 else if (pred(k) == ')') depth -= 1
-        }
-        k += 1
-      }
-      require(depth == 0, "QUALIFY: unbalanced OVER specification")
-      val specEnd = k // exclusive
-      // function call before OVER: walk back over ws to ')', match to
-      // its '(' and take the identifier before it
-      var p = overAt - 1
-      while (p >= 0 && pred(p).isWhitespace) p -= 1
+      val specEnd = lx.closeOf(j, required("QUALIFY: unbalanced OVER specification")) + 1
+      // function call before OVER: its ')' , the matching '(' and the
+      // identifier before it
+      val p = lx.back(overAt - 1)
       require(p >= 0 && pred(p) == ')',
         "QUALIFY: expected fn(...) immediately before OVER")
-      var d3 = 1; var m = p - 1
-      while (d3 > 0 && m >= 0) {
-        if (!in(m)) {
-          if (pred(m) == ')') d3 += 1 else if (pred(m) == '(') d3 -= 1
-        }
-        if (d3 > 0) m -= 1
-      }
-      require(d3 == 0, "QUALIFY: unbalanced window function call")
-      var idStart = m - 1
-      while (idStart >= 0 && isIdentChar(pred(idStart))) idStart -= 1
-      idStart += 1
+      val m = lx.openOf(p, required("QUALIFY: unbalanced window function call"))
+      val idStart = lx.identTo(m - 1)
       require(idStart < m, "QUALIFY: expected a function name before OVER")
       val alias = s"__qualify_w${hoisted.size + 1}"
       hoisted += ((pred.substring(idStart, specEnd), alias))
@@ -520,86 +339,40 @@ object DuckDbDialect {
     * synthetic rank column never leaks. Window ORDER BY reuses the
     * query's ORDER BY text verbatim; ordinal ORDER BY is rejected
     * (ordinals would re-bind inside the window). */
-  private def rewriteDistinctOn(sql: String): String = {
-    val in = inString(sql)
-    def wordAt(i: Int, w: String): Boolean =
-      !in(i) && sql.regionMatches(true, i, w, 0, w.length) &&
-        (i == 0 || !isIdentChar(sql(i - 1))) &&
-        (i + w.length >= sql.length || !isIdentChar(sql(i + w.length)))
-    // locate top-level SELECT DISTINCT ON (
-    var i = 0; var depth = 0; var at = -1
-    while (i < sql.length && at < 0) {
-      if (!in(i)) {
-        if (sql(i) == '(') depth += 1
-        else if (sql(i) == ')') depth -= 1
-        else if (wordAt(i, "select")) {
-          var j = i + 6
-          while (j < sql.length && sql(j).isWhitespace) j += 1
-          if (sql.regionMatches(true, j, "distinct", 0, 8)) {
-            var k = j + 8
-            while (k < sql.length && sql(k).isWhitespace) k += 1
-            if (sql.regionMatches(true, k, "on", 0, 2) &&
-                (k + 2 >= sql.length || !isIdentChar(sql(k + 2)))) {
-              if (depth > 0) throw new IllegalArgumentException(
-                "DISTINCT ON inside a subquery is outside the shim's bounded support")
-              at = i
-            }
-          }
-        }
+  private def rewriteDistinctOn(lx: Lex): String = {
+    val sql = lx.s
+    // locate the SELECT DISTINCT ON (
+    def distinctOnAt(i: Int): Boolean = lx.word(i, "select") && {
+      val j = lx.fwd(i + 6)
+      sql.regionMatches(true, j, "distinct", 0, 8) && {
+        val k = lx.fwd(j + 8)
+        sql.regionMatches(true, k, "on", 0, 2) &&
+          (k + 2 >= sql.length || !isIdentChar(sql(k + 2)))
       }
-      i += 1
     }
+    val at = lx.find()(distinctOnAt)
     if (at < 0) return sql
+    if (lx.depthAt(at) > 0) throw new IllegalArgumentException(
+      "DISTINCT ON inside a subquery is outside the shim's bounded support")
     // keys list
-    var p = sql.indexOf('(', at)
-    var d2 = 1; var k2 = p + 1
-    while (d2 > 0 && k2 < sql.length) {
-      if (!in(k2)) {
-        if (sql(k2) == '(') d2 += 1 else if (sql(k2) == ')') d2 -= 1
-      }
-      k2 += 1
-    }
-    require(d2 == 0, "DISTINCT ON: unbalanced key list")
-    val keys = sql.substring(p + 1, k2 - 1).trim
+    val p = sql.indexOf('(', at)
+    val keysEnd = lx.closeOf(p, required("DISTINCT ON: unbalanced key list"))
+    val keys = sql.substring(p + 1, keysEnd).trim
     require(keys.nonEmpty, "DISTINCT ON: empty key list")
     // select items run to the top-level FROM
-    val itemsStart = k2
-    var q2 = itemsStart; var d3 = 0; var fromAt = -1
-    while (q2 < sql.length && fromAt < 0) {
-      if (!in(q2)) {
-        if (sql(q2) == '(') d3 += 1
-        else if (sql(q2) == ')') d3 -= 1
-        else if (d3 == 0 && wordAt(q2, "from")) fromAt = q2
-      }
-      q2 += 1
-    }
+    val itemsStart = keysEnd + 1
+    val fromAt = lx.topWord(itemsStart, sql.length, "from")
     require(fromAt > 0, "DISTINCT ON: could not locate FROM")
     val items = sql.substring(itemsStart, fromAt).trim
     // from-part runs to the top-level ORDER BY / LIMIT / OFFSET (GROUP/
     // HAVING/QUALIFY/set ops are out of bounds)
-    var r2 = fromAt; var d4 = 0; var tailAt = -1
-    while (r2 < sql.length && tailAt < 0) {
-      if (!in(r2)) {
-        if (sql(r2) == '(') d4 += 1
-        else if (sql(r2) == ')') d4 -= 1
-        else if (d4 == 0) {
-          if (wordAt(r2, "group") || wordAt(r2, "having") ||
-              wordAt(r2, "qualify") || wordAt(r2, "union") ||
-              wordAt(r2, "intersect") ||
-              (wordAt(r2, "except") && { // not the star modifier
-                var s2 = r2 - 1
-                while (s2 >= 0 && sql(s2).isWhitespace) s2 -= 1
-                s2 < 0 || sql(s2) != '*'
-              }))
-            throw new IllegalArgumentException(
-              "DISTINCT ON combined with GROUP BY/HAVING/QUALIFY/set operations " +
-                "is outside the shim's bounded support")
-          else if (wordAt(r2, "order") || wordAt(r2, "limit") || wordAt(r2, "offset"))
-            tailAt = r2
-        }
-      }
-      r2 += 1
-    }
+    val tailWords = Seq("order", "limit", "offset")
+    val tailAt = lx.findTop(fromAt)(i => lx.isSetOp(i) ||
+      (tailWords ++ Seq("group", "having", "qualify")).exists(lx.word(i, _)))
+    if (tailAt >= 0 && !tailWords.exists(lx.word(tailAt, _)))
+      throw new IllegalArgumentException(
+        "DISTINCT ON combined with GROUP BY/HAVING/QUALIFY/set operations " +
+          "is outside the shim's bounded support")
     val fromPart = sql.substring(fromAt + 4,
       if (tailAt < 0) sql.length else tailAt).trim
     val tail = if (tailAt < 0) "" else sql.substring(tailAt).trim
@@ -607,26 +380,16 @@ object DuckDbDialect {
       "DISTINCT ON without ORDER BY picks an engine-arbitrary row — add an " +
         "ORDER BY naming the keys first (the shim refuses rather than diverge)")
     // window order = the ORDER BY expressions, verbatim
-    val obIn = inString(tail)
-    var obEnd = tail.length; var d5 = 0
-    var t2 = 0
-    while (t2 < tail.length && obEnd == tail.length) {
-      if (!obIn(t2)) {
-        if (tail(t2) == '(') d5 += 1
-        else if (tail(t2) == ')') d5 -= 1
-        else if (d5 == 0 && (tail.regionMatches(true, t2, "limit", 0, 5) ||
-                 tail.regionMatches(true, t2, "offset", 0, 6)) &&
-                 (t2 == 0 || !isIdentChar(tail(t2 - 1))))
-          obEnd = t2
-      }
-      t2 += 1
+    val obEnd = lx.topWord(tailAt, sql.length, "limit", "offset") match {
+      case -1 => tail.length
+      case e => e - tailAt
     }
     val orderExprs = tail.substring(tail.toLowerCase.indexOf("by") + 2, obEnd).trim
     require(!orderExprs.split(',').exists(_.trim.matches("[0-9]+.*")),
       "DISTINCT ON with ordinal ORDER BY is outside the shim's bounded " +
         "support — name the expressions")
     // a bare * item must not surface the synthetic rank column
-    val outItems = splitTopLevel(items, ',')
+    val outItems = new Lex(items).split(',')
       .map(it => if (it.trim == "*") "* EXCEPT (__don_rn)" else it.trim)
       .mkString(", ")
     s"SELECT $outItems FROM ( SELECT *, ROW_NUMBER() OVER (PARTITION BY $keys " +
@@ -653,90 +416,58 @@ object DuckDbDialect {
     * merged into the EXCEPT (`* EXCEPT (cols, c), e AS c`). The reversed
     * spelling `* REPLACE (...) EXCLUDE (...)` is not DuckDB grammar and
     * surfaces as a parse error rather than silently-wrong columns. */
-  private def rewriteStarReplace(sql: String): String = {
-    val in = inString(sql)
-    var i = 0
-    while (i < sql.length) {
-      if (!in(i) && sql.regionMatches(true, i, "replace", 0, 7) &&
-          (i == 0 || !isIdentChar(sql(i - 1))) &&
-          (i + 7 >= sql.length || !isIdentChar(sql(i + 7)))) {
-        // star immediately before (modifier), '(' after (argument list);
-        // OR the chain form `* EXCLUDE (cols) REPLACE (...)`, where the
-        // non-space char before REPLACE is the EXCLUDE list's ')'.
-        var p = i - 1
-        while (p >= 0 && sql(p).isWhitespace) p -= 1
-        var a = i + 7
-        while (a < sql.length && sql(a).isWhitespace) a += 1
-        // starPos = the modifier's '*'; for the chain form also collect
-        // the EXCLUDE column list (merged into the EXCEPT below).
-        var starPos = -1
-        var excludeCols: Seq[String] = Nil
-        if (p >= 0 && sql(p) == '*') starPos = p
-        else if (p >= 0 && sql(p) == ')') {
-          var depth = 1; var b = p - 1
-          while (depth > 0 && b >= 0) {
-            if (!in(b)) {
-              if (sql(b) == ')') depth += 1
-              else if (sql(b) == '(') depth -= 1
+  private def rewriteStarReplace(lx: Lex): String = {
+    val sql = lx.s
+    // the statement with the REPLACE at `i` rewritten, if it is the star
+    // modifier
+    def rewriteAt(i: Int): Option[String] = {
+      // star immediately before (modifier), '(' after (argument list);
+      // OR the chain form `* EXCLUDE (cols) REPLACE (...)`, where the
+      // non-space char before REPLACE is the EXCLUDE list's ')'.
+      val p = lx.back(i - 1)
+      val a = lx.fwd(i + 7)
+      // starPos = the modifier's '*'; for the chain form also collect
+      // the EXCLUDE column list (merged into the EXCEPT below).
+      var starPos = -1
+      var excludeCols: Seq[String] = Nil
+      if (p >= 0 && sql(p) == '*') starPos = p
+      else if (p >= 0 && sql(p) == ')') {
+        val b = lx.openOf(p)
+        if (b >= 0) {
+          val q2 = lx.back(b - 1)
+          val kwStart = lx.identTo(q2)
+          val kw = sql.substring(kwStart, q2 + 1).toLowerCase
+          if (kw == "exclude" || kw == "except") {
+            val s2 = lx.back(kwStart - 1)
+            if (s2 >= 0 && sql(s2) == '*') {
+              starPos = s2
+              excludeCols = lx.split(',', b + 1, p).map(_.trim)
             }
-            if (depth > 0) b -= 1
-          }
-          if (depth == 0) {
-            var q2 = b - 1
-            while (q2 >= 0 && sql(q2).isWhitespace) q2 -= 1
-            var e2 = q2
-            while (e2 >= 0 && isIdentChar(sql(e2))) e2 -= 1
-            val kw = sql.substring(e2 + 1, q2 + 1).toLowerCase
-            if (kw == "exclude" || kw == "except") {
-              var s2 = e2
-              while (s2 >= 0 && sql(s2).isWhitespace) s2 -= 1
-              if (s2 >= 0 && sql(s2) == '*') {
-                starPos = s2
-                excludeCols =
-                  splitTopLevel(sql.substring(b + 1, p), ',').map(_.trim)
-              }
-            }
-          }
-        }
-        if (starPos >= 0 && a < sql.length && sql(a) == '(') {
-          val p0 = starPos
-          // context before the star: ',' or SELECT/DISTINCT → modifier
-          var q = p0 - 1
-          while (q >= 0 && sql(q).isWhitespace) q -= 1
-          val isModifier = q < 0 || sql(q) == ',' || {
-            var e = q
-            while (e >= 0 && isIdentChar(sql(e))) e -= 1
-            val w = sql.substring(e + 1, q + 1).toLowerCase
-            w == "select" || w == "distinct"
-          }
-          if (isModifier) {
-            // find the matching ')' of the argument list
-            var depth = 1; var k = a + 1
-            while (depth > 0 && k < sql.length) {
-              if (!in(k)) {
-                if (sql(k) == '(') depth += 1
-                else if (sql(k) == ')') depth -= 1
-              }
-              k += 1
-            }
-            require(depth == 0, "* REPLACE: unbalanced argument list")
-            val items = splitTopLevel(sql.substring(a + 1, k - 1), ',')
-            val pairs = items.map { it =>
-              val m = "(?is)^(.*\\S)\\s+AS\\s+([A-Za-z_][A-Za-z0-9_]*)\\s*$".r
-                .findFirstMatchIn(it.trim).getOrElse(throw new IllegalArgumentException(
-                  s"* REPLACE: expected `expr AS column`, got: ${it.trim}"))
-              (m.group(1), m.group(2))
-            }
-            val except = (excludeCols ++ pairs.map(_._2)).mkString(", ")
-            val repl = pairs.map { case (e, c) => s"$e AS $c" }.mkString(", ")
-            val out = sql.substring(0, p0) + s"* EXCEPT ($except), $repl" + sql.substring(k)
-            return rewriteStarReplace(out) // handle any further occurrence
           }
         }
       }
-      i += 1
+      if (starPos < 0 || a >= sql.length || sql(a) != '(') return None
+      // context before the star: ',' or SELECT/DISTINCT → modifier
+      val q = lx.back(starPos - 1)
+      val isModifier = q < 0 || sql(q) == ',' || {
+        val w = sql.substring(lx.identTo(q), q + 1).toLowerCase
+        w == "select" || w == "distinct"
+      }
+      if (!isModifier) return None
+      val k = lx.closeOf(a, required("* REPLACE: unbalanced argument list"))
+      val pairs = lx.split(',', a + 1, k).map { it =>
+        val m = "(?is)^(.*\\S)\\s+AS\\s+([A-Za-z_][A-Za-z0-9_]*)\\s*$".r
+          .findFirstMatchIn(it.trim).getOrElse(throw new IllegalArgumentException(
+            s"* REPLACE: expected `expr AS column`, got: ${it.trim}"))
+        (m.group(1), m.group(2))
+      }
+      val except = (excludeCols ++ pairs.map(_._2)).mkString(", ")
+      val repl = pairs.map { case (e, c) => s"$e AS $c" }.mkString(", ")
+      Some(sql.substring(0, starPos) + s"* EXCEPT ($except), $repl" + sql.substring(k + 1))
     }
-    sql
+    val at = lx.find()(i => lx.word(i, "replace") && rewriteAt(i).isDefined)
+    if (at < 0) sql
+    else rewriteStarReplace(new Lex(rewriteAt(at).get)) // handle any further occurrence
   }
 
   // ---- ASOF JOIN -------------------------------------------------------
@@ -786,21 +517,15 @@ object DuckDbDialect {
     * artifacts under `<=`), so rows with NULL ordering keys are outside
     * the equivalence bound — filter them explicitly when they can
     * occur. */
-  private def rewriteAsOfJoin(sql: String): String = {
-    val in = inString(sql)
-    def wordAt(i: Int, w: String): Boolean =
-      !in(i) && sql.regionMatches(true, i, w, 0, w.length) &&
-        (i == 0 || !isIdentChar(sql(i - 1))) &&
-        (i + w.length >= sql.length || !isIdentChar(sql(i + w.length)))
-    var i = 0
-    while (i < sql.length && !wordAt(i, "asof")) i += 1
-    if (i >= sql.length) return sql
-    val start = i
-    var j = i + 4
-    def skipWs(): Unit = { while (j < sql.length && sql(j).isWhitespace) j += 1 }
+  private def rewriteAsOfJoin(lx: Lex): String = {
+    val sql = lx.s
+    val start = lx.find()(lx.word(_, "asof"))
+    if (start < 0) return sql
+    var j = start + 4
+    def skipWs(): Unit = j = lx.fwd(j)
     def word(): String = {
       skipWs(); val s0 = j
-      while (j < sql.length && isIdentChar(sql(j))) j += 1
+      j = lx.identFrom(j)
       sql.substring(s0, j)
     }
     var w1 = word()
@@ -816,14 +541,7 @@ object DuckDbDialect {
     val table =
       if (j < sql.length && sql(j) == '(') {
         val s0 = j
-        var d = 1; j += 1
-        while (d > 0 && j < sql.length) {
-          if (!in(j)) {
-            if (sql(j) == '(') d += 1 else if (sql(j) == ')') d -= 1
-          }
-          j += 1
-        }
-        require(d == 0, "ASOF: unbalanced subquery after JOIN")
+        j = lx.closeOf(j, required("ASOF: unbalanced subquery after JOIN")) + 1
         sql.substring(s0, j)
       } else word()
     require(table.nonEmpty, "ASOF: expected a table name or subquery after JOIN")
@@ -838,38 +556,23 @@ object DuckDbDialect {
     val terminators = Seq("where", "group", "having", "order", "limit",
       "offset", "qualify", "window", "union", "intersect", "except",
       "join", "inner", "left", "right", "full", "cross", "asof")
-    var depth = 0
     val condStart = { skipWs(); j }
-    var condEnd = -1
-    while (j < sql.length && condEnd < 0) {
-      val c = sql(j)
-      if (!in(j)) {
-        if (c == '(') depth += 1
-        else if (c == ')') { depth -= 1; if (depth < 0) condEnd = j }
-        else if (depth == 0 && terminators.exists(wordAt(j, _))) condEnd = j
-      }
-      if (condEnd < 0) j += 1
+    val base = lx.depthAt(condStart)
+    val condEnd = lx.find(condStart)(i => !lx.masked(i) &&
+      lx.depthAt(i) == base && (sql(i) == ')' || terminators.exists(lx.word(i, _)))) match {
+      case -1 => sql.length
+      case e => e
     }
-    if (condEnd < 0) condEnd = sql.length
     val cond = sql.substring(condStart, condEnd).trim
-    val conjuncts = splitTopLevelKeyword(cond, "and")
+    val conjuncts = new Lex(cond).splitWord("and")
     def opOf(c: String): Option[(String, String, String)] = {
-      val cIn = inString(c)
-      var d = 0; var k = 0
-      while (k < c.length) {
-        val ch = c(k)
-        if (!cIn(k)) {
-          if (ch == '(') d += 1
-          else if (ch == ')') d -= 1
-          else if (d == 0 && (ch == '<' || ch == '>' || ch == '=')) {
-            val op = if (k + 1 < c.length && (c(k + 1) == '=' || c(k + 1) == '>'))
-              c.substring(k, k + 2) else c.substring(k, k + 1)
-            return Some((c.substring(0, k).trim, op, c.substring(k + op.length).trim))
-          }
-        }
-        k += 1
+      val k = new Lex(c).findTop()(i => c(i) == '<' || c(i) == '>' || c(i) == '=')
+      if (k < 0) None
+      else {
+        val op = if (k + 1 < c.length && (c(k + 1) == '=' || c(k + 1) == '>'))
+          c.substring(k, k + 2) else c.substring(k, k + 1)
+        Some((c.substring(0, k).trim, op, c.substring(k + op.length).trim))
       }
-      None
     }
     val parsed = conjuncts.map(c => (c, opOf(c)))
     parsed.collectFirst { case (c, None) => c }.foreach(c =>
@@ -934,39 +637,18 @@ object DuckDbDialect {
     // a bare star in the governing select list would surface the
     // synthetic __asof_* columns — refuse rather than silently widen
     locally {
-      var selAt = -1; var fromAt = -1; var d0 = 0; var h = 0
-      while (h < start) {
-        val c = sql(h)
-        if (!in(h)) {
-          if (c == '(') d0 += 1
-          else if (c == ')') d0 -= 1
-          else if (d0 == 0) {
-            if (wordAt(h, "select")) { selAt = h; fromAt = -1 }
-            else if (fromAt < 0 && wordAt(h, "from")) fromAt = h
-          }
-        }
-        h += 1
-      }
+      val (selAt, fromAt) = lx.selectFrom(0, start)
       if (selAt >= 0 && fromAt > selAt) {
-        val items = sql.substring(selAt + 6, fromAt)
-        val itemsIn = inString(items)
-        var d1 = 0
-        for (i <- 0 until items.length) {
-          if (!itemsIn(i)) {
-            if (items(i) == '(') d1 += 1
-            else if (items(i) == ')') d1 -= 1
-            else if (items(i) == '*' && d1 == 0) {
-              // multiplication has an operand before the star
-              var q = i - 1
-              while (q >= 0 && items(q).isWhitespace) q -= 1
-              val isMul = q >= 0 && (isIdentChar(items(q)) || items(q) == ')' ||
-                items(q) == '\'' || items(q) == '"')
-              if (!isMul) throw new IllegalArgumentException(
-                "ASOF with a bare * select list is outside the shim's bounded " +
-                  "support (the rewrite would surface synthetic __asof_ columns) " +
-                  "— name the output columns")
-            }
-          }
+        val items = new Lex(sql.substring(selAt + 6, fromAt))
+        items.tops()(items.s(_) == '*').foreach { i =>
+          // multiplication has an operand before the star
+          val q = items.back(i - 1)
+          val isMul = q >= 0 && (isIdentChar(items.s(q)) || items.s(q) == ')' ||
+            items.s(q) == '\'' || items.s(q) == '"')
+          if (!isMul) throw new IllegalArgumentException(
+            "ASOF with a bare * select list is outside the shim's bounded " +
+              "support (the rewrite would surface synthetic __asof_ columns) " +
+              "— name the output columns")
         }
       }
     }
@@ -988,96 +670,293 @@ object DuckDbDialect {
         s"JOIN $table $alias ON $innerOn ) __asof_w WHERE __asof_rn = 1"
     val joinKw = if (isLeft) "LEFT JOIN" else "JOIN"
     val repl = s"$joinKw ( $derived ) $alias ON $outerOn"
-    rewriteAsOfJoin(sql.substring(0, start) + repl + " " + sql.substring(condEnd))
+    rewriteAsOfJoin(new Lex(sql.substring(0, start) + repl + " " + sql.substring(condEnd)))
   }
 
-  /** Split on a top-level single-char separator, paren- and mask-aware. */
-  private def splitTopLevel(s: String, sep: Char): Seq[String] = {
-    val in = inString(s)
-    val out = scala.collection.mutable.ArrayBuffer.empty[String]
-    var depth = 0; var st = 0; var i = 0
-    while (i < s.length) {
-      val c = s(i)
-      if (!in(i)) {
-        if (c == '(') depth += 1
-        else if (c == ')') depth -= 1
-        else if (c == sep && depth == 0) { out += s.substring(st, i); st = i + 1 }
-      }
-      i += 1
-    }
-    out += s.substring(st)
-    out.toSeq
-  }
+  // ---- the lexical scanner ----------------------------------------------
 
-  /** Split on a top-level keyword (e.g. AND), case-insensitive. */
-  private def splitTopLevelKeyword(s: String, kw: String): Seq[String] = {
-    val in = inString(s)
-    val out = scala.collection.mutable.ArrayBuffer.empty[String]
-    var depth = 0; var st = 0; var i = 0
-    while (i < s.length) {
-      val c = s(i)
-      if (!in(i)) {
-        if (c == '(') depth += 1
-        else if (c == ')') depth -= 1
-        else if (depth == 0 && s.regionMatches(true, i, kw, 0, kw.length) &&
-                 (i == 0 || !isIdentChar(s(i - 1))) &&
-                 (i + kw.length >= s.length || !isIdentChar(s(i + kw.length)))) {
-          out += s.substring(st, i); st = i + kw.length; i += kw.length - 1
+  /** The lexical facts of one SQL text, worked out once per text. Every
+    * text pass (and the gateway's statement parsers) reads a text through
+    * one of these instead of scanning characters itself:
+    *
+    *  - MASK: [[masked]] is true inside single-quoted string literals,
+    *    double-quoted identifiers, `--` line comments and `/* */` block
+    *    comments. Nothing in the mask is ever matched: a QUALIFY/UNION/
+    *    ORDER inside a literal, quoted identifier or comment never steers
+    *    a clause scan, and `//` inside a comment is never "rewritten".
+    *  - DEPTH: [[depthAt]] counts the unmasked parens before a position.
+    *    A search "from `from`" stays at the paren depth of `from`, which
+    *    is the clause level of the block that starts there.
+    *  - WORD: [[word]], the one keyword test — case-insensitive, on
+    *    identifier boundaries, outside the mask.
+    *  - MATCHER: [[closeOf]]/[[openOf]], the one bracket matcher. Without
+    *    a message it answers -1 for unbalanced text; with one it throws
+    *    `IllegalArgumentException(message)`, the caller's own text.
+    *  - DEPTH-0 SEARCH and SPLIT: [[find]] (any position), [[findTop]],
+    *    [[tops]], [[topWord]], [[selectFrom]]; [[split]] by a character
+    *    and [[splitWord]] by a keyword.
+    *  - SET-OP CUT: [[setOps]]/[[isSetOp]], with one EXCEPT rule.
+    *  - BLOCKS: [[opens]] and [[opensQuery]], which [[innermostFirst]]
+    *    uses to recurse into the innermost query block.
+    *
+    * A pass that edits its text builds a new Lex over the result. */
+  private[engine] final class Lex(val s: String) {
+    val n: Int = s.length
+    val masked: Array[Boolean] = new Array[Boolean](n)
+    private val depth = new Array[Int](n + 1)
+    /** Comments as [start, end) ranges, in text order. */
+    private val comments = scala.collection.mutable.ArrayBuffer.empty[(Int, Int)]
+    locally {
+      var i = 0
+      while (i < n) {
+        s(i) match {
+          case '\'' | '"' =>
+            val quote = s(i)
+            masked(i) = true; i += 1
+            while (i < n && s(i) != quote) { masked(i) = true; i += 1 }
+            if (i < n) { masked(i) = true; i += 1 } // closing quote
+          case '-' if i + 1 < n && s(i + 1) == '-' =>
+            val start = i
+            while (i < n && s(i) != '\n') { masked(i) = true; i += 1 }
+            comments += ((start, i))
+          case '/' if i + 1 < n && s(i + 1) == '*' =>
+            val start = i
+            masked(i) = true; masked(i + 1) = true; i += 2
+            while (i < n && !(s(i) == '*' && i + 1 < n && s(i + 1) == '/')) {
+              masked(i) = true; i += 1
+            }
+            if (i + 1 < n) { masked(i) = true; masked(i + 1) = true; i += 2 }
+            comments += ((start, i))
+          case _ => i += 1
         }
       }
-      i += 1
+      var d = 0
+      i = 0
+      while (i < n) {
+        depth(i) = d
+        if (!masked(i)) { if (s(i) == '(') d += 1 else if (s(i) == ')') d -= 1 }
+        i += 1
+      }
+      depth(n) = d
     }
-    out += s.substring(st)
-    out.map(_.trim).filter(_.nonEmpty).toSeq
+
+    def depthAt(i: Int): Int = depth(i)
+
+    /** Keyword `w` (lowercase) starts at `i`: outside the mask, in any
+      * case, on identifier boundaries. */
+    def word(i: Int, w: String): Boolean = {
+      val end = i + w.length
+      if (i < 0 || end > n || masked(i) || (i > 0 && isIdentChar(s(i - 1)))) return false
+      var k = 0
+      while (k < w.length) {
+        if (Character.toLowerCase(s(i + k)) != w.charAt(k)) return false
+        k += 1
+      }
+      end == n || !isIdentChar(s(end))
+    }
+
+    /** The `)` (or `]`) matching the `(` (or `[`) at `open`; -1 when the
+      * text ends first. */
+    def closeOf(open: Int): Int = {
+      val (o, c) = if (open >= 0 && s(open) == '[') ('[', ']') else ('(', ')')
+      var d = 1; var k = open + 1
+      while (k < n) {
+        if (!masked(k)) {
+          if (s(k) == o) d += 1
+          else if (s(k) == c) { d -= 1; if (d == 0) return k }
+        }
+        k += 1
+      }
+      -1
+    }
+
+    /** The `(` (or `[`) matching the `)` (or `]`) at `close`; -1 when the
+      * text starts first. */
+    def openOf(close: Int): Int = {
+      val (o, c) = if (s(close) == ']') ('[', ']') else ('(', ')')
+      var d = 1; var k = close - 1
+      while (k >= 0) {
+        if (!masked(k)) {
+          if (s(k) == c) d += 1
+          else if (s(k) == o) { d -= 1; if (d == 0) return k }
+        }
+        k -= 1
+      }
+      -1
+    }
+
+    def closeOf(open: Int, unbalanced: String): Int = matched(closeOf(open), unbalanced)
+    def openOf(close: Int, unbalanced: String): Int = matched(openOf(close), unbalanced)
+    private def matched(at: Int, unbalanced: String): Int =
+      if (at >= 0) at else throw new IllegalArgumentException(unbalanced)
+
+    /** The first position in [from, until) where `p` holds; -1 if none. */
+    def find(from: Int = 0, until: Int = n)(p: Int => Boolean): Int = {
+      var i = from
+      while (i < until) { if (p(i)) return i; i += 1 }
+      -1
+    }
+
+    /** A TOP position of the block starting at `from`: unmasked, no
+      * paren, at the paren depth of `from`. */
+    private def top(from: Int)(i: Int): Boolean =
+      depth(i) == depth(from) && !masked(i) && s(i) != '(' && s(i) != ')'
+
+    /** The first top position in [from, until) where `p` holds; -1 if none. */
+    def findTop(from: Int = 0, until: Int = n)(p: Int => Boolean): Int =
+      find(from, until)(i => top(from)(i) && p(i))
+
+    /** Every top position in [from, until) where `p` holds. */
+    def tops(from: Int = 0, until: Int = n)(p: Int => Boolean): Seq[Int] = {
+      val out = Array.newBuilder[Int]
+      var i = from
+      while (i < until) { if (top(from)(i) && p(i)) out += i; i += 1 }
+      out.result().toSeq
+    }
+
+    /** The first top position where one of `words` starts; -1 if none. */
+    def topWord(from: Int, until: Int, words: String*): Int =
+      findTop(from, until)(i => words.exists(word(i, _)))
+
+    /** The last top-level SELECT in [from, until) and the first top-level
+      * FROM after it (-1 when absent): the main block of a query whose CTE
+      * bodies sit in parens. */
+    def selectFrom(from: Int = 0, until: Int = n): (Int, Int) = {
+      val sel = tops(from, until)(word(_, "select")).lastOption.getOrElse(-1)
+      (sel, if (sel < 0) -1 else topWord(sel, until, "from"))
+    }
+
+    /** The text of [from, until) cut at each top-level `sep`. */
+    def split(sep: Char, from: Int = 0, until: Int = n): Seq[String] =
+      cut(from, until)(i => if (s(i) == sep) 1 else 0)
+
+    /** The text cut at each top-level keyword `kw` (e.g. AND); pieces
+      * trimmed, empty ones dropped. */
+    def splitWord(kw: String): Seq[String] =
+      cut(0, n)(i => if (word(i, kw)) kw.length else 0).map(_.trim).filter(_.nonEmpty)
+
+    private def cut(from: Int, until: Int)(sepLen: Int => Int): Seq[String] = {
+      val out = Seq.newBuilder[String]
+      var st = from
+      tops(from, until)(sepLen(_) > 0).foreach { i =>
+        out += s.substring(st, i)
+        st = i + sepLen(i)
+      }
+      out += s.substring(st, until)
+      out.result()
+    }
+
+    /** A set operation (UNION, INTERSECT, EXCEPT) starts at `i`. The one
+      * EXCEPT rule: right after a `*` and before a parenthesized list
+      * that is not a query, EXCEPT is the star modifier (`* EXCEPT
+      * (cols)`), not a set operation. */
+    def isSetOp(i: Int): Boolean =
+      word(i, "union") || word(i, "intersect") || (word(i, "except") && {
+        val p = code(i - 1, -1)
+        val a = code(i + 6, 1)
+        !(p >= 0 && s(p) == '*' && a < n && s(a) == '(' && !opensQuery(a))
+      })
+
+    /** Top-level set operations in [from, until) as (keyword start, end
+      * past an optional ALL/DISTINCT). */
+    def setOps(from: Int = 0, until: Int = n): Seq[(Int, Int)] =
+      tops(from, until)(isSetOp).map { i =>
+        val kwEnd = identFrom(i)
+        val m = code(kwEnd, 1)
+        (i, if (word(m, "all") || word(m, "distinct")) identFrom(m) else kwEnd)
+      }
+
+    /** The unmasked `(` enclosing position `at`, innermost first. */
+    def opens(at: Int): List[Int] = {
+      var stack = List.empty[Int]
+      for (i <- 0 until at if !masked(i)) {
+        if (s(i) == '(') stack ::= i else if (s(i) == ')') stack = stack.drop(1)
+      }
+      stack
+    }
+
+    /** The paren at `open` starts a query block: past whitespace and
+      * comments, its first word is SELECT, FROM, WITH or VALUES. */
+    def opensQuery(open: Int): Boolean = {
+      var j = fwd(open + 1)
+      var comment = comments.find(_._1 == j)
+      while (comment.isDefined) {
+        j = fwd(comment.get._2)
+        comment = comments.find(_._1 == j)
+      }
+      Seq("select", "from", "with", "values").exists(word(j, _))
+    }
+
+    /** The text with each comment replaced by one space. */
+    def uncommented: String = {
+      val sb = new StringBuilder
+      var from = 0
+      comments.foreach { case (start, end) =>
+        sb.append(s.substring(from, start)).append(' ')
+        from = end
+      }
+      sb.append(s.substring(from)).toString
+    }
+
+    /** First position from `i` in direction `step` (±1) that is neither
+      * whitespace nor masked; -1 or n past either end. */
+    private def code(i: Int, step: Int): Int = {
+      var j = i
+      while (j >= 0 && j < n && (masked(j) || s(j).isWhitespace)) j += step
+      j
+    }
+
+    /** First non-whitespace position at or after `i` (n if none). */
+    def fwd(i: Int): Int = { var j = i; while (j < n && s(j).isWhitespace) j += 1; j }
+
+    /** Last non-whitespace position at or before `i` (-1 if none). */
+    def back(i: Int): Int = { var j = i; while (j >= 0 && s(j).isWhitespace) j -= 1; j }
+
+    /** End (exclusive) of the identifier run starting at `i`. */
+    def identFrom(i: Int): Int = { var j = i; while (j < n && isIdentChar(s(j))) j += 1; j }
+
+    /** Start of the identifier run ending at `i` (inclusive); `i + 1`
+      * when `s(i)` is no identifier character. */
+    def identTo(i: Int): Int = { var j = i; while (j >= 0 && isIdentChar(s(j))) j -= 1; j + 1 }
   }
 
-  // ---- string-literal-aware scanning helpers ---------------------------
+  /** The message `require(false, what)` raises. Most passes report
+    * unbalanced text in this form; the matcher throws exactly the message
+    * it is given, so each pass keeps its error text. */
+  private[engine] def required(what: String): String = s"requirement failed: $what"
 
-  /** Mask of positions the rewrites must not touch: single-quoted string
-    * literals, double-quoted identifiers, `--` line comments and
-    * `/* */` block comments. Without the latter three, a QUALIFY/UNION/
-    * ORDER keyword inside a quoted identifier or comment would mis-steer
-    * the clause scan, and `//` inside a comment would be "rewritten". */
-  private def inString(sql: String): Array[Boolean] = {
-    val in = new Array[Boolean](sql.length)
-    var i = 0
-    while (i < sql.length) {
-      sql(i) match {
-        case '\'' | '"' =>
-          val quote = sql(i)
-          in(i) = true; i += 1
-          while (i < sql.length && sql(i) != quote) { in(i) = true; i += 1 }
-          if (i < sql.length) { in(i) = true; i += 1 } // closing quote
-        case '-' if i + 1 < sql.length && sql(i + 1) == '-' =>
-          while (i < sql.length && sql(i) != '\n') { in(i) = true; i += 1 }
-        case '/' if i + 1 < sql.length && sql(i + 1) == '*' =>
-          in(i) = true; in(i + 1) = true; i += 2
-          while (i < sql.length &&
-                 !(sql(i) == '*' && i + 1 < sql.length && sql(i + 1) == '/')) {
-            in(i) = true; i += 1
-          }
-          if (i + 1 < sql.length) { in(i) = true; in(i + 1) = true; i += 2 }
-        case _ => i += 1
+  /** Innermost query block first — the recursion behind the QUALIFY,
+    * GROUPS and COLUMNS passes. `locate` finds the next construct the pass
+    * rewrites.
+    * When it sits inside a parenthesized QUERY block (a subquery or CTE
+    * body: [[Lex.opensQuery]]), the innermost such block's content is
+    * rewritten on its own (relative to it the construct is top-level),
+    * spliced back, and the whole text is searched again. An expression
+    * paren (CAST, a function call) around the construct belongs to the
+    * same query block and is not recursed into: doing so would strand a
+    * GROUPS hoist without its SELECT ... FROM (the --groups fuzz caught
+    * every CAST-wrapped window failing the wrap). A construct in no query
+    * block goes to `top`, with the text's Lex and the construct's
+    * position. */
+  private def innermostFirst(lx: Lex, unbalanced: String)(
+      locate: Lex => Option[Int])(top: (Lex, Int) => String): String = {
+    val sql = lx.s
+    locate(lx) match {
+      case None => sql
+      case Some(at) => lx.opens(at).find(lx.opensQuery) match {
+        case None => top(lx, at)
+        case Some(open) =>
+          val end = lx.closeOf(open, unbalanced)
+          val inner = innermostFirst(new Lex(sql.substring(open + 1, end)), unbalanced)(locate)(top)
+          innermostFirst(new Lex(sql.substring(0, open + 1) + inner + sql.substring(end)),
+            unbalanced)(locate)(top)
       }
     }
-    in
   }
 
   private def isIdentChar(c: Char): Boolean =
     c.isLetterOrDigit || c == '_'
 
-  /** Replace `//` with ` div ` outside string literals. */
-  /** DuckDB `USING SAMPLE n[%|PERCENT|ROWS]` after a table reference →
-    * Spark `TABLESAMPLE (n PERCENT|ROWS)` (round 13). A bare count is
-    * rows (DuckDB's default). Equivalence bound, stated: both engines
-    * then draw a sample of the requested size — the sampling ALGORITHM
-    * differs (DuckDB reservoir vs Spark bernoulli/row-limit), so this
-    * is an acceptance rewrite (the statement runs and means the same
-    * thing), not a row-identical one; sampling is nondeterministic in
-    * the reference too. DuckDB also allows the clause at query level
-    * (after WHERE); Spark's TABLESAMPLE is table-level only, so that
-    * placement surfaces Spark's parse error — a clear message, never a
-    * silently different result. */
   /** `expr [NOT] SIMILAR TO '<pattern>'` → `expr [NOT] RLIKE
     * '^(?:<pattern>)$'`. The SQL standard (and DuckDB's own docs) says
     * SIMILAR TO treats `%`/`_` as LIKE wildcards, but DuckDB 1.0.0 —
@@ -1088,11 +967,11 @@ object DuckDbDialect {
     * the faithful rewrite is anchor + pass-through, with backslashes
     * doubled for Spark's escaping string-literal parser. Bounds
     * (throws, never silently wrong): an ESCAPE clause. */
-  private def rewriteSimilarTo(sql: String): String = {
-    val in = inString(sql)
+  private def rewriteSimilarTo(lx: Lex): String = {
+    val sql = lx.s
     val re = "(?i)\\b(not\\s+)?similar\\s+to\\s+('(?:[^']|'')*')".r
     re.replaceAllIn(sql, m => {
-      if (in(m.start)) scala.util.matching.Regex.quoteReplacement(m.matched)
+      if (lx.masked(m.start)) scala.util.matching.Regex.quoteReplacement(m.matched)
       else {
         if (sql.substring(m.end).matches("(?is)\\s*escape\\b.*"))
           throw new IllegalArgumentException(
@@ -1129,58 +1008,22 @@ object DuckDbDialect {
     * but a derived-table FROM is rejected). Subquery-level COLUMNS
     * reduces through the same query-block recursion as the GROUPS
     * pass. */
-  def expandColumns(sql: String, schemaOf: String => Option[Seq[String]]): String = {
-    val in = inString(sql)
-    // locate the first COLUMNS( call outside strings
-    var i = 0; var found = -1
-    while (found < 0 && i < sql.length) {
-      if (!in(i) && sql.regionMatches(true, i, "columns", 0, 7) &&
-          (i == 0 || !isIdentChar(sql(i - 1)))) {
-        var j = i + 7
-        while (j < sql.length && sql(j).isWhitespace) j += 1
-        if (j < sql.length && sql(j) == '(') found = i else i += 1
-      } else i += 1
-    }
-    if (found < 0) return sql
-    // inside a subquery? recurse into the innermost QUERY-block paren
-    var enclosing = List.empty[Int]
-    i = 0
-    while (i < found) {
-      if (!in(i)) {
-        if (sql(i) == '(') enclosing ::= i
-        else if (sql(i) == ')') enclosing = enclosing.drop(1)
-      }
-      i += 1
-    }
-    enclosing.find { op =>
-      "(?is)^\\s*(select|from|with|values)\\b".r
-        .findFirstIn(sql.substring(op + 1)).isDefined
-    } match {
-      case Some(outer) =>
-        var d = 0; var end = outer
-        while (end < sql.length && {
-          if (!in(end)) {
-            if (sql(end) == '(') d += 1 else if (sql(end) == ')') d -= 1
-          }
-          d != 0
-        }) end += 1
-        require(end < sql.length, "COLUMNS: unbalanced parentheses")
-        val inner = expandColumns(sql.substring(outer + 1, end), schemaOf)
-        return expandColumns(
-          sql.substring(0, outer + 1) + inner + sql.substring(end), schemaOf)
-      case None => ()
-    }
+  def expandColumns(sql: String, schemaOf: String => Option[Seq[String]]): String =
+    innermostFirst(new Lex(sql), required("COLUMNS: unbalanced parentheses")) { lx =>
+      // the first COLUMNS( call outside strings
+      Some(lx.find()(i => lx.word(i, "columns") && {
+        val j = lx.fwd(i + 7)
+        j < lx.n && lx.s(j) == '('
+      })).filter(_ >= 0)
+    }((lx, found) => expandColumns(expandColumnsAt(lx, found, schemaOf), schemaOf))
+
+  /** One top-level COLUMNS call, at `found`, expanded in place. */
+  private def expandColumnsAt(lx: Lex, found: Int,
+      schemaOf: String => Option[Seq[String]]): String = {
+    val sql = lx.s
     // argument: a single quoted regex literal
     val argOpen = sql.indexOf('(', found + 7)
-    var d2 = 1; var k = argOpen + 1
-    while (d2 > 0 && k < sql.length) {
-      if (!in(k)) {
-        if (sql(k) == '(') d2 += 1 else if (sql(k) == ')') d2 -= 1
-      }
-      k += 1
-    }
-    require(d2 == 0, "COLUMNS: unbalanced parentheses")
-    val colEnd = k - 1
+    val colEnd = lx.closeOf(argOpen, required("COLUMNS: unbalanced parentheses"))
     val arg = sql.substring(argOpen + 1, colEnd).trim
     val litRe = "(?s)^'((?:[^']|'')*)'$".r
     // COLUMNS(*) = every column (measured); a bare-star arg maps to the
@@ -1192,35 +1035,25 @@ object DuckDbDialect {
         "COLUMNS(...) supports a quoted regex literal or * only — the " +
           "* EXCLUDE / lambda forms are outside the dialect shim")
     }
-    // owning SELECT ... FROM of this block (COLUMNS is top-level here)
-    def wordAt(j: Int, w: String): Boolean =
-      !in(j) && sql.regionMatches(true, j, w, 0, w.length) &&
-        (j == 0 || !isIdentChar(sql(j - 1))) &&
-        (j + w.length >= sql.length || !isIdentChar(sql(j + w.length)))
-    var depth = 0; var selAt = -1; var fromAt = -1
-    var j2 = 0
-    while (j2 < sql.length && fromAt < 0) {
-      if (!in(j2)) {
-        val c = sql(j2)
-        if (c == '(') depth += 1
-        else if (c == ')') depth -= 1
-        else if (depth == 0) {
-          if (wordAt(j2, "select")) selAt = j2
-          else if (selAt >= 0 && wordAt(j2, "from")) fromAt = j2
-        }
-      }
-      j2 += 1
-    }
+    // owning SELECT ... FROM of this block (COLUMNS is top-level here):
+    // the first top-level FROM after a SELECT, and the last SELECT
+    // before that FROM
+    val firstSel = lx.topWord(0, sql.length, "select")
+    val fromAt = if (firstSel < 0) -1 else lx.topWord(firstSel, sql.length, "from")
+    val selAt = lx.tops(0, if (fromAt < 0) sql.length else fromAt)(lx.word(_, "select"))
+      .lastOption.getOrElse(-1)
     require(selAt >= 0 && selAt < found && fromAt > colEnd,
       "COLUMNS: could not locate the owning SELECT ... FROM block")
     // relation schema: plain identifiers after FROM and each JOIN,
     // concatenated in order (DuckDB expands over the joined relation)
     val cols = scala.collection.mutable.ArrayBuffer.empty[String]
+    val stopWords = Seq("where", "group", "order", "limit", "having", "window",
+      "qualify", "union", "intersect", "except")
     var p = fromAt + 4
     var expectTable = true
     var stop = false
     while (p < sql.length && !stop) {
-      if (!in(p)) {
+      if (!lx.masked(p)) {
         val c = sql(p)
         if (c == '(')
           throw new IllegalArgumentException(
@@ -1234,17 +1067,13 @@ object DuckDbDialect {
             s"COLUMNS: unknown relation '$name'"))
           expectTable = false
           p = e - 1
-        } else if (!expectTable && wordAt(p, "join")) { expectTable = true; p += 3 }
+        } else if (!expectTable && lx.word(p, "join")) { expectTable = true; p += 3 }
         // a depth-0 comma is a relation separator (comma cross join) —
         // DuckDB expands COLUMNS over the WHOLE comma join (measured:
         // COLUMNS('a|b') FROM t1, t2 yields both relations' columns),
         // so the next identifier is a table again, not an alias
         else if (!expectTable && c == ',') expectTable = true
-        else if (!expectTable &&
-            (wordAt(p, "where") || wordAt(p, "group") || wordAt(p, "order") ||
-             wordAt(p, "limit") || wordAt(p, "having") || wordAt(p, "window") ||
-             wordAt(p, "qualify") || wordAt(p, "union") || wordAt(p, "intersect") ||
-             wordAt(p, "except"))) stop = true
+        else if (!expectTable && stopWords.exists(lx.word(p, _))) stop = true
       }
       p += 1
     }
@@ -1253,28 +1082,16 @@ object DuckDbDialect {
     if (matched.isEmpty)
       throw new IllegalArgumentException(
         s"""No matching columns found that match regex "$regex"""")
-    // the select-list ITEM containing COLUMNS: comma spans at depth 0
-    // within [selAt+6, fromAt)
-    var itemStart = selAt + "select".length
-    var itemEnd = fromAt
-    var dItem = 0; var q = selAt + "select".length
-    while (q < fromAt) {
-      if (!in(q)) {
-        val c = sql(q)
-        if (c == '(') dItem += 1
-        else if (c == ')') dItem -= 1
-        else if (c == ',' && dItem == 0) {
-          if (q < found) itemStart = q + 1
-          else if (q > colEnd && itemEnd == fromAt) itemEnd = q
-        }
-      }
-      q += 1
-    }
+    // the select-list ITEM containing COLUMNS: between the top-level
+    // commas of the list around the call
+    val commas = lx.tops(selAt + "select".length, fromAt)(sql(_) == ',')
+    val itemStart = commas.filter(_ < found).lastOption.fold(selAt + "select".length)(_ + 1)
+    val itemEnd = commas.find(_ > colEnd).getOrElse(fromAt)
     val item = sql.substring(itemStart, itemEnd)
     val rel = found - itemStart
     val relEnd = colEnd - itemStart + 1
     if ("(?i)\\bcolumns\\b".r.findAllMatchIn(
-        item.substring(relEnd)).exists(m => !inString(item)(relEnd + m.start)))
+        item.substring(relEnd)).exists(m => !lx.masked(itemStart + relEnd + m.start)))
       throw new IllegalArgumentException(
         "multiple COLUMNS(...) in one select-list item are outside the dialect shim")
     val suffix = item.substring(relEnd)
@@ -1285,9 +1102,7 @@ object DuckDbDialect {
           "the replicas are named by the matched columns")
     val prefix = item.substring(0, rel)
     val replicas = matched.map(c => s"$prefix`$c`$suffix AS `$c`").mkString(", ")
-    expandColumns(
-      sql.substring(0, itemStart) + " " + replicas + " " + sql.substring(itemEnd),
-      schemaOf)
+    sql.substring(0, itemStart) + " " + replicas + " " + sql.substring(itemEnd)
   }
 
   // ---- GROUPS frames -----------------------------------------------------
@@ -1364,33 +1179,17 @@ object DuckDbDialect {
     * frame-bound-shaped text following (a mere column named `groups`
     * inside a spec does not match the bound shape). Returns
     * (tokenPos, specOpenParen). */
-  private def findGroupsFrame(sql: String): Option[(Int, Int)] = {
-    val in = inString(sql)
-    var opens = List.empty[Int]
-    var i = 0
-    while (i < sql.length) {
-      if (!in(i)) {
-        val c = sql(i)
-        if (c == '(') opens ::= i
-        else if (c == ')') opens = opens.drop(1)
-        else if (opens.nonEmpty && sql.regionMatches(true, i, "groups", 0, 6) &&
-            (i == 0 || !isIdentChar(sql(i - 1))) &&
-            (i + 6 >= sql.length || !isIdentChar(sql(i + 6))) &&
-            GroupsShapeRe.findFirstIn(sql.substring(i)).isDefined) {
-          val sp = opens.head
-          var w = sp - 1
-          while (w >= 0 && sql(w).isWhitespace) w -= 1
-          var e = w
-          while (e >= 0 && isIdentChar(sql(e))) e -= 1
-          val kw = sql.substring(e + 1, w + 1).toLowerCase(java.util.Locale.ROOT)
-          val contentIsSpec = "(?is)^\\s*(select|from|with|values)\\b".r
-            .findFirstIn(sql.substring(sp + 1)).isEmpty
-          if ((kw == "over" || kw == "as") && contentIsSpec) return Some((i, sp))
-        }
+  private def findGroupsFrame(lx: Lex): Option[(Int, Int)] = {
+    val sql = lx.s
+    def specOf(i: Int): Option[Int] =
+      if (!lx.word(i, "groups") || GroupsShapeRe.findFirstIn(sql.substring(i)).isEmpty) None
+      else lx.opens(i).headOption.filter { sp =>
+        val w = lx.back(sp - 1)
+        val kw = sql.substring(lx.identTo(w), w + 1).toLowerCase(java.util.Locale.ROOT)
+        (kw == "over" || kw == "as") && !lx.opensQuery(sp)
       }
-      i += 1
-    }
-    None
+    val at = lx.find()(specOf(_).isDefined)
+    specOf(at).map(sp => (at, sp))
   }
 
   /** ANSI GROUPS window frames — forward-compat (round 16) for the
@@ -1469,55 +1268,19 @@ object DuckDbDialect {
     * without ORDER BY (rejected by both engines). The single-bound
     * shorthand `GROUPS n PRECEDING` is BETWEEN n PRECEDING AND CURRENT
     * ROW, as everywhere else. */
-  private def rewriteGroupsDeep(sql: String): String = {
-    findGroupsFrame(sql) match {
-      case None => sql
-      case Some((_, sp)) =>
-        val in = inString(sql)
-        var enclosing = List.empty[Int]
-        var i = 0
-        while (i < sp) {
-          if (!in(i)) {
-            if (sql(i) == '(') enclosing ::= i
-            else if (sql(i) == ')') enclosing = enclosing.drop(1)
-          }
-          i += 1
-        }
-        // recurse only into an enclosing paren whose content is a QUERY
-        // (a subquery/CTE body) — an expression paren (CAST, a function
-        // call) around the OVER spec still belongs to the SAME query
-        // block, and recursing into it would strand a numeric-offset
-        // hoist without its SELECT...FROM (caught by the --groups fuzz
-        // on first run: every CAST-wrapped window failed the wrap)
-        val queryBlock = enclosing.find { op =>
-          "(?is)^\\s*(select|from|with|values)\\b".r
-            .findFirstIn(sql.substring(op + 1)).isDefined
-        }
-        queryBlock match {
-          case None => rewriteGroupsTop(sql) // the spec belongs to the statement
-          case Some(outer) =>
-            var d = 0; var end = outer
-            while (end < sql.length && {
-              if (!in(end)) {
-                if (sql(end) == '(') d += 1 else if (sql(end) == ')') d -= 1
-              }
-              d != 0
-            }) end += 1
-            require(end < sql.length, "GROUPS frame: unbalanced parentheses")
-            val inner = rewriteGroupsDeep(sql.substring(outer + 1, end))
-            rewriteGroupsDeep(sql.substring(0, outer + 1) + inner + sql.substring(end))
-        }
-    }
-  }
+  private def rewriteGroupsDeep(lx: Lex): String =
+    innermostFirst(lx, required("GROUPS frame: unbalanced parentheses"))(
+      findGroupsFrame(_).map(_._2))((block, _) => rewriteGroupsTop(block))
 
-  private def rewriteGroupsTop(sql0: String): String = {
+  private def rewriteGroupsTop(lx0: Lex): String = {
+    val sql0 = lx0.s
     // set-operation branches are independent window scopes (round 17):
     // split at depth-0 UNION/INTERSECT/EXCEPT and rewrite each branch
     // on its own — a hoist-wrapped branch is still a plain SELECT, so
     // the set op survives, and a statement-level ORDER BY/LIMIT tail
     // (which trails the LAST branch's text) stays outside that branch's
     // wrap, i.e. keeps binding to the whole set operation.
-    val cuts = setOpCuts(sql0)
+    val cuts = lx0.setOps()
     if (cuts.nonEmpty) {
       val sb = new StringBuilder
       var pos = 0
@@ -1527,14 +1290,14 @@ object DuckDbDialect {
       // reference __grpN inside the subquery while defining the helper
       // outside it (unresolved-column AnalysisException)
       for ((s, e) <- cuts) {
-        val seg = rewriteGroupsDeep(sql0.substring(pos, s))
+        val seg = rewriteGroupsDeep(new Lex(sql0.substring(pos, s)))
         sb.append(seg)
         // a rewritten branch may have trimmed its boundary whitespace
         if (seg.nonEmpty && !seg.last.isWhitespace) sb.append(' ')
         sb.append(sql0.substring(s, e))
         pos = e
       }
-      sb.append(rewriteGroupsDeep(sql0.substring(pos)))
+      sb.append(rewriteGroupsDeep(new Lex(sql0.substring(pos))))
       return sb.toString
     }
     var sql = sql0
@@ -1542,11 +1305,11 @@ object DuckDbDialect {
     // spec in this block so the wrap happens ONCE
     val hoists = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
     var guard = 0
-    var next = findGroupsFrame(sql)
+    var lx = lx0
+    var next = findGroupsFrame(lx)
     while (next.isDefined && guard < 50) {
       guard += 1
       val (gPos, sp) = next.get
-      val in = inString(sql)
       val rest = sql.substring(gPos)
       val (aTxt, bTxt, frameLen) = GroupsBetweenRe.findFirstMatchIn(rest) match {
         case Some(m) => (m.group(1), m.group(2), m.matched.length)
@@ -1578,20 +1341,7 @@ object DuckDbDialect {
       val prefix = sql.substring(sp + 1, gPos)
       // the spec's own ORDER BY (required for a GROUPS frame by both
       // engines — and the dense-rank hoist is meaningless without it)
-      val prefIn = inString(prefix)
-      var orderAt = -1; var pd = 0; var pi = 0
-      while (pi < prefix.length && orderAt < 0) {
-        if (!prefIn(pi)) {
-          val c = prefix(pi)
-          if (c == '(') pd += 1
-          else if (c == ')') pd -= 1
-          else if (pd == 0 && prefix.regionMatches(true, pi, "order", 0, 5) &&
-              (pi == 0 || !isIdentChar(prefix(pi - 1))) &&
-              (pi + 5 >= prefix.length || !isIdentChar(prefix(pi + 5))))
-            orderAt = pi
-        }
-        pi += 1
-      }
+      val orderAt = lx.topWord(sp + 1, gPos, "order") - (sp + 1)
       if (orderAt < 0)
         throw new IllegalArgumentException(
           "GROUPS frame requires a window ORDER BY (both engines reject it without one)")
@@ -1627,20 +1377,14 @@ object DuckDbDialect {
             s"${boundTxt(a)} AND ${boundTxt(b)}"
           sql = sql.substring(0, sp + 1) + newSpec + sql.substring(gPos + frameLen)
       }
-      next = findGroupsFrame(sql)
+      lx = new Lex(sql)
+      next = findGroupsFrame(lx)
     }
     if (guard >= 50)
       throw new IllegalArgumentException("GROUPS frame rewriting did not converge")
     if (hoists.isEmpty) return sql
 
     // ---- one wrap for all hoisted dense ranks ----
-    val in2 = inString(sql)
-    def wordAt(i: Int, w: String): Boolean =
-      !in2(i) && sql.regionMatches(true, i, w, 0, w.length) &&
-        (i == 0 || !isIdentChar(sql(i - 1))) &&
-        (i + w.length >= sql.length || !isIdentChar(sql(i + w.length)))
-    var depth = 0; var selAt = -1; var fromAt = -1; var tailAt = -1
-    var groupAt = -1; var windowAt = -1
     // a real named-WINDOW clause is `WINDOW <ident> AS (` — a column
     // that happens to be NAMED window (e.g. `WHERE window > 5`) must
     // not truncate the wrapped body at its reference (round-18 advice)
@@ -1656,32 +1400,13 @@ object DuckDbDialect {
       while (k < sql.length && sql(k).isWhitespace) k += 1
       k < sql.length && sql(k) == '('
     }
-    var j = 0
-    while (j < sql.length) {
-      if (!in2(j)) {
-        val c = sql(j)
-        if (c == '(') depth += 1
-        else if (c == ')') depth -= 1
-        else if (depth == 0) {
-          if (wordAt(j, "select")) {
-            selAt = j; fromAt = -1; tailAt = -1; groupAt = -1; windowAt = -1
-          }
-          else if (selAt >= 0 && fromAt < 0 && wordAt(j, "from")) fromAt = j
-          else if (fromAt >= 0 && groupAt < 0 &&
-              (wordAt(j, "group") || wordAt(j, "having")))
-            groupAt = j
-          else if (fromAt >= 0 && windowAt < 0 && wordAt(j, "window") &&
-              isWindowClauseAt(j))
-            windowAt = j
-          else if (fromAt >= 0 && tailAt < 0 &&
-              (wordAt(j, "order") || wordAt(j, "limit") || wordAt(j, "offset")))
-            tailAt = j
-        }
-      }
-      j += 1
-    }
+    val (selAt, fromAt) = lx.selectFrom()
     require(selAt >= 0 && fromAt > selAt,
       "GROUPS frame: could not locate the SELECT ... FROM block to wrap")
+    val groupAt = lx.topWord(fromAt, sql.length, "group", "having")
+    val windowAt = lx.findTop(fromAt)(i => lx.word(i, "window") && isWindowClauseAt(i))
+    val tailAt = lx.topWord(fromAt, sql.length, "order", "limit", "offset")
+
     if (groupAt >= 0) {
       // grouped block (round 17): the wrap INVERTS — see groupedGroupsWrap
       // (round 18: a named WINDOW clause composes — it stays in the
@@ -1720,35 +1445,23 @@ object DuckDbDialect {
       else {
         // rewrite projection-position `alias.*` → `*` when the alias
         // names the block's sole relation
-        val rawIn = inString(raw)
+        val rl = new Lex(raw)
         val sb = new StringBuilder
-        var d0 = 0; var k0 = 0; var last = 0
-        while (k0 < raw.length) {
-          if (!rawIn(k0)) {
-            val c = raw(k0)
-            if (c == '(') d0 += 1
-            else if (c == ')') d0 -= 1
-            else if (c == '*' && d0 == 0) {
-              var p = k0 - 1
-              while (p >= 0 && raw(p).isWhitespace) p -= 1
-              if (p >= 0 && raw(p) == '.') {
-                var q = p - 1
-                while (q >= 0 && raw(q).isWhitespace) q -= 1
-                val qe = q
-                while (q >= 0 && isIdentChar(raw(q))) q -= 1
-                val qual = raw.substring(q + 1, qe + 1)
-                var b = q
-                while (b >= 0 && raw(b).isWhitespace) b -= 1
-                val projectionPos = b < 0 || raw(b) == ','
-                if (projectionPos && qual.nonEmpty &&
-                    singleRelNames(qual.toLowerCase(java.util.Locale.ROOT))) {
-                  sb.append(raw.substring(last, q + 1)).append('*')
-                  last = k0 + 1
-                }
-              }
+        var last = 0
+        rl.tops()(raw(_) == '*').foreach { k0 =>
+          val p = rl.back(k0 - 1)
+          if (p >= 0 && raw(p) == '.') {
+            val qe = rl.back(p - 1)
+            val q = rl.identTo(qe) - 1
+            val qual = raw.substring(q + 1, qe + 1)
+            val b = rl.back(q)
+            val projectionPos = b < 0 || raw(b) == ','
+            if (projectionPos && qual.nonEmpty &&
+                singleRelNames(qual.toLowerCase(java.util.Locale.ROOT))) {
+              sb.append(raw.substring(last, q + 1)).append('*')
+              last = k0 + 1
             }
           }
-          k0 += 1
         }
         sb.append(raw.substring(last)).toString
       }
@@ -1764,39 +1477,28 @@ object DuckDbDialect {
     // error below.
     val list0 = resolveOuterQualifiers(list00, body)
     // star handling: a projection star must not leak the helper columns
-    val listIn = inString(list0)
-    var ld = 0; var li = 0; var starAt = -1
-    while (li < list0.length) {
-      if (!listIn(li)) {
-        val c = list0(li)
-        if (c == '(') ld += 1
-        else if (c == ')') ld -= 1
-        else if (c == '*' && ld == 0) {
-          var p = li - 1
-          while (p >= 0 && list0(p).isWhitespace) p -= 1
-          if (p < 0 || list0(p) == ',') starAt = li // projection star
-          else if (list0(p) == '.')
-            throw new IllegalArgumentException(
-              "GROUPS frame with integer offsets and a qualified star (t.*) " +
-                "is only supported when the qualifier names the block's sole " +
-                "FROM relation (there t.* ≡ *); over a multi-relation FROM " +
-                "or a shadowed base name, run through the SQL gateway (which " +
-                "resolves relation schemas, round 20) or name the columns")
-          else {
-            // `SELECT DISTINCT *` / `SELECT ALL *`: still the projection
-            // star (round 19 — without this the helper column leaked
-            // through the un-rewritten star into the DISTINCT output)
-            var q = p
-            while (q >= 0 && isIdentChar(list0(q))) q -= 1
-            val w = list0.substring(q + 1, p + 1)
-              .toLowerCase(java.util.Locale.ROOT)
-            if ((w == "distinct" || w == "all") &&
-                list0.substring(0, q + 1).trim.isEmpty)
-              starAt = li
-          }
-        }
+    val ll = new Lex(list0)
+    var starAt = -1
+    ll.tops()(list0(_) == '*').foreach { li =>
+      val p = ll.back(li - 1)
+      if (p < 0 || list0(p) == ',') starAt = li // projection star
+      else if (list0(p) == '.')
+        throw new IllegalArgumentException(
+          "GROUPS frame with integer offsets and a qualified star (t.*) " +
+            "is only supported when the qualifier names the block's sole " +
+            "FROM relation (there t.* ≡ *); over a multi-relation FROM " +
+            "or a shadowed base name, run through the SQL gateway (which " +
+            "resolves relation schemas, round 20) or name the columns")
+      else {
+        // `SELECT DISTINCT *` / `SELECT ALL *`: still the projection
+        // star (round 19 — without this the helper column leaked
+        // through the un-rewritten star into the DISTINCT output)
+        val w = list0.substring(ll.identTo(p), p + 1)
+          .toLowerCase(java.util.Locale.ROOT)
+        if ((w == "distinct" || w == "all") &&
+            list0.substring(0, ll.identTo(p)).trim.isEmpty)
+          starAt = li
       }
-      li += 1
     }
     val aliases = hoists.map(_._1).mkString(", ")
     val list =
@@ -1811,16 +1513,9 @@ object DuckDbDialect {
             // aliases into the existing exclusion list instead of
             // double-nesting a second EXCEPT
             val absOpen = starAt + 1 + m.matched.length - 1
-            var d2 = 1; var k2 = absOpen + 1
-            while (k2 < list0.length && d2 != 0) {
-              if (!listIn(k2)) {
-                if (list0(k2) == '(') d2 += 1
-                else if (list0(k2) == ')') d2 -= 1
-              }
-              k2 += 1
-            }
-            require(d2 == 0, "GROUPS frame: unbalanced * EXCEPT parentheses")
-            list0.substring(0, k2 - 1) + s", $aliases" + list0.substring(k2 - 1)
+            val close = ll.closeOf(absOpen,
+              required("GROUPS frame: unbalanced * EXCEPT parentheses"))
+            list0.substring(0, close) + s", $aliases" + list0.substring(close)
           case None =>
             list0.substring(0, starAt) + s"* EXCEPT ($aliases)" + afterStar
         }
@@ -1840,21 +1535,16 @@ object DuckDbDialect {
     * (only the word JOIN or a depth-0 comma re-arms table
     * expectation). */
   private def groupsFromRelations(body: String): Seq[(String, String)] = {
-    val in = inString(body)
-    def wordAt(j: Int, w: String): Boolean =
-      !in(j) && body.regionMatches(true, j, w, 0, w.length) &&
-        (j == 0 || !isIdentChar(body(j - 1))) &&
-        (j + w.length >= body.length || !isIdentChar(body(j + w.length)))
+    val lx = new Lex(body)
     val aliasStop = Set("on", "using", "join", "inner", "left", "right",
       "full", "cross", "natural", "asof", "anti", "semi", "lateral",
       "where", "qualify", "group", "order", "limit", "offset", "union",
       "intersect", "except", "window", "having")
     val out = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
     var expectTable = true
-    var depth = 0
     var i = 0; var stop = false
     while (i < body.length && !stop) {
-      if (!in(i)) {
+      if (!lx.masked(i)) {
         val c = body(i)
         if (expectTable && c == '(')
           throw new IllegalArgumentException(
@@ -1866,17 +1556,13 @@ object DuckDbDialect {
           while (e < body.length && (isIdentChar(body(e)) || body(e) == '.')) e += 1
           val table = body.substring(i, e)
           var alias = table.split('.').last.toLowerCase(java.util.Locale.ROOT)
-          var k = e
-          while (k < body.length && body(k).isWhitespace) k += 1
-          if (k < body.length && isIdentChar(body(k)) && !in(k)) {
-            var e2 = k
-            while (e2 < body.length && isIdentChar(body(e2))) e2 += 1
+          val k = lx.fwd(e)
+          if (k < body.length && isIdentChar(body(k)) && !lx.masked(k)) {
+            val e2 = lx.identFrom(k)
             val w = body.substring(k, e2).toLowerCase(java.util.Locale.ROOT)
             if (w == "as") {
-              var k2 = e2
-              while (k2 < body.length && body(k2).isWhitespace) k2 += 1
-              var e3 = k2
-              while (e3 < body.length && isIdentChar(body(e3))) e3 += 1
+              val k2 = lx.fwd(e2)
+              val e3 = lx.identFrom(k2)
               require(e3 > k2, "GROUPS frame: dangling AS in FROM")
               alias = body.substring(k2, e3).toLowerCase(java.util.Locale.ROOT)
               e = e3
@@ -1885,13 +1571,10 @@ object DuckDbDialect {
           out += ((alias, table))
           expectTable = false
           i = e - 1
-        } else if (!expectTable) {
-          if (c == '(') depth += 1
-          else if (c == ')') depth -= 1
-          else if (depth == 0 && c == ',') expectTable = true
-          else if (depth == 0 && wordAt(i, "join")) { expectTable = true; i += 3 }
-          else if (depth == 0 && (wordAt(i, "where") || wordAt(i, "qualify")))
-            stop = true
+        } else if (!expectTable && lx.depthAt(i) == 0) {
+          if (c == ',') expectTable = true
+          else if (lx.word(i, "join")) { expectTable = true; i += 3 }
+          else if (lx.word(i, "where") || lx.word(i, "qualify")) stop = true
         }
       }
       i += 1
@@ -1942,21 +1625,18 @@ object DuckDbDialect {
               s"relation '$otab' has no resolvable schema")
         }
       }
-    val in = inString(text)
+    val lx = new Lex(text)
     val sb = new StringBuilder
     var i = 0
     while (i < text.length) {
       val c = text(i)
       var consumed = false
-      if (!in(i) && isIdentChar(c) && (i == 0 ||
+      if (!lx.masked(i) && isIdentChar(c) && (i == 0 ||
           (!isIdentChar(text(i - 1)) && text(i - 1) != '.'))) {
-        var e = i
-        while (e < text.length && isIdentChar(text(e))) e += 1
-        var k = e
-        while (k < text.length && text(k).isWhitespace) k += 1
+        val e = lx.identFrom(i)
+        var k = lx.fwd(e)
         if (k < text.length && text(k) == '.') {
-          k += 1
-          while (k < text.length && text(k).isWhitespace) k += 1
+          k = lx.fwd(k + 1)
           val qual = lc(text.substring(i, e))
           if (rels.exists(_._1 == qual)) {
             if (k < text.length && text(k) == '*') {
@@ -1970,14 +1650,9 @@ object DuckDbDialect {
               i = k + 1
               consumed = true
             } else if (k < text.length && isIdentChar(text(k))) {
-              var e2 = k
-              while (e2 < text.length && isIdentChar(text(e2))) e2 += 1
+              val e2 = lx.identFrom(k)
               // 3-part names (db.tbl.col) pass through untouched
-              val afterIsDot = {
-                var k2 = e2
-                while (k2 < text.length && text(k2).isWhitespace) k2 += 1
-                k2 < text.length && text(k2) == '.'
-              }
+              val afterIsDot = { val k2 = lx.fwd(e2); k2 < text.length && text(k2) == '.' }
               val col = text.substring(k, e2)
               val known = colsOf(qual).exists(_.exists(cc => lc(cc) == lc(col)))
               if (!afterIsDot && known) {
@@ -1993,36 +1668,6 @@ object DuckDbDialect {
       if (!consumed) { sb.append(c); i += 1 }
     }
     sb.toString
-  }
-
-  /** Depth-0 set-operation keyword spans (UNION/INTERSECT/EXCEPT — a
-    * star-EXCEPT projection is skipped), outside strings. */
-  private def setOpCuts(sql: String): List[(Int, Int)] = {
-    val in = inString(sql)
-    def wordAt(i: Int, w: String): Boolean =
-      !in(i) && sql.regionMatches(true, i, w, 0, w.length) &&
-        (i == 0 || !isIdentChar(sql(i - 1))) &&
-        (i + w.length >= sql.length || !isIdentChar(sql(i + w.length)))
-    val out = List.newBuilder[(Int, Int)]
-    var depth = 0; var i = 0
-    while (i < sql.length) {
-      if (!in(i)) {
-        val c = sql(i)
-        if (c == '(') depth += 1
-        else if (c == ')') depth -= 1
-        else if (depth == 0) {
-          if (wordAt(i, "union")) out += ((i, i + 5))
-          else if (wordAt(i, "intersect")) out += ((i, i + 9))
-          else if (wordAt(i, "except") && {
-            var p = i - 1
-            while (p >= 0 && sql(p).isWhitespace) p -= 1
-            p < 0 || sql(p) != '*'
-          }) out += ((i, i + 6))
-        }
-      }
-      i += 1
-    }
-    out.result()
   }
 
   /** Numeric-offset GROUPS frames over a grouped query block (round
@@ -2077,20 +1722,10 @@ object DuckDbDialect {
       if (windowAt >= 0) windowAt else if (tailAt < 0) sql.length else tailAt
     val fromText = sql.substring(fromAt, wrapEnd).trim
     val tail = if (tailAt < 0) "" else " " + sql.substring(tailAt).trim
+    // depth-0, out-of-string position of keyword `w` in `s0`, else -1
+    def kwAt(s0: String, w: String): Int = new Lex(s0).topWord(0, s0.length, w)
     // GROUP BY ordinals / ALL shift through the wrap — bound out
-    val ftIn = inString(fromText)
-    var gb = -1; var d0 = 0; var fi = 0
-    while (fi < fromText.length && gb < 0) {
-      if (!ftIn(fi)) {
-        val c = fromText(fi)
-        if (c == '(') d0 += 1 else if (c == ')') d0 -= 1
-        else if (d0 == 0 && fromText.regionMatches(true, fi, "group", 0, 5) &&
-            (fi == 0 || !isIdentChar(fromText(fi - 1))) &&
-            (fi + 5 >= fromText.length || !isIdentChar(fromText(fi + 5))))
-          gb = fi
-      }
-      fi += 1
-    }
+    val gb = kwAt(fromText, "group")
     var fromTextR = fromText
     if (gb >= 0) {
       val gbTail = fromText.substring(gb)
@@ -2098,7 +1733,7 @@ object DuckDbDialect {
         .map(_.group(1)).getOrElse("")
       val gbEnd = "(?is)\\bhaving\\b".r.findFirstMatchIn(gbList)
         .map(_.start).getOrElse(gbList.length)
-      val keys = splitTopLevel(gbList.substring(0, gbEnd), ',').map(_.trim)
+      val keys = new Lex(gbList.substring(0, gbEnd)).split(',').map(_.trim)
       // GROUP BY ALL + window functions: BOTH engines reject the
       // combination outright (measured round 18 — DuckDB 1.0 "Cannot
       // mix aggregates with non-aggregated columns" / "Cannot group on
@@ -2119,7 +1754,7 @@ object DuckDbDialect {
       // window item resolves to the window text and fails analysis
       // loudly (it was never a legal grouping key).
       if (keys.exists(_.matches("\\d+"))) {
-        val items = splitTopLevel(list0, ',')
+        val items = new Lex(list0).split(',')
         val resolved = keys.map { k =>
           if (!k.matches("\\d+")) k
           else {
@@ -2140,29 +1775,11 @@ object DuckDbDialect {
     val outerItems = scala.collection.mutable.ArrayBuffer.empty[String]
     var waN = 0; var wpN = 0; var woN = 0
     val literalRe = "(?s)^\\s*(\\d+(\\.\\d+)?|'(?:[^']|'')*'|true|false|null)\\s*$"
-    // depth-0, out-of-string position of keyword `w` in `s0`, else -1
-    def kwAt(s0: String, w: String): Int = {
-      val in0 = inString(s0)
-      var at = -1; var d = 0; var i = 0
-      while (i < s0.length && at < 0) {
-        if (!in0(i)) {
-          val c = s0(i)
-          if (c == '(') d += 1
-          else if (c == ')') d -= 1
-          else if (d == 0 && s0.regionMatches(true, i, w, 0, w.length) &&
-              (i == 0 || !isIdentChar(s0(i - 1))) &&
-              (i + w.length >= s0.length || !isIdentChar(s0(i + w.length))))
-            at = i
-        }
-        i += 1
-      }
-      at
-    }
     // window-call argument list → inner __wa aliases (shared by the
     // inline-OVER and named-OVER paths)
     def rewriteArgs(argsTxt: String): String =
       if (argsTxt.trim == "*") argsTxt
-      else splitTopLevel(argsTxt, ',').map { a =>
+      else new Lex(argsTxt).split(',').map { a =>
         if (a.trim.isEmpty || a.trim.toLowerCase.matches(literalRe)) a
         else {
           waN += 1
@@ -2186,7 +1803,7 @@ object DuckDbDialect {
             .findFirstMatchIn(partTxt).map(_.group(1)).getOrElse(
               throw new IllegalArgumentException(
                 s"GROUPS hoist: unexpected spec prefix: $partTxt"))
-          val aliased = splitTopLevel(exprs, ',').map { p =>
+          val aliased = new Lex(exprs).split(',').map { p =>
             wpN += 1
             innerItems += s"${p.trim} AS __wp$wpN"
             s"__wp$wpN"
@@ -2205,7 +1822,7 @@ object DuckDbDialect {
       val frameAt = Seq("rows", "range", "groups").map(kwAt(obBody, _))
         .filter(_ >= 0).sorted.headOption.getOrElse(obBody.length)
       val frame = obBody.substring(frameAt).trim
-      val orderItems = splitTopLevel(obBody.substring(0, frameAt), ',').map { o =>
+      val orderItems = new Lex(obBody.substring(0, frameAt)).split(',').map { o =>
         // split a trailing direction off the expression
         var e = o.trim; var dir = ""
         "(?is)\\s+nulls\\s+(first|last)\\s*$".r.findFirstMatchIn(e).foreach { m =>
@@ -2235,7 +1852,7 @@ object DuckDbDialect {
         .getOrElse(throw new IllegalArgumentException(
           "GROUPS frame over GROUP BY: malformed WINDOW clause"))
       val defRe = "(?is)^\\s*([A-Za-z_][A-Za-z0-9_]*)\\s+as\\s*\\((.*)\\)\\s*$".r
-      val defs = splitTopLevel(defsTxt, ',').map {
+      val defs = new Lex(defsTxt).split(',').map {
         case defRe(nm, spec) => nm -> spec
         case other => throw new IllegalArgumentException(
           s"GROUPS frame over GROUP BY: unsupported WINDOW definition: $other")
@@ -2246,30 +1863,17 @@ object DuckDbDialect {
       }.mkString(", ")
     }
     // does this item reference a defined window name (`OVER <name>`)?
-    def namedRefAt(s0: String, from: Int): Int = {
-      val in0 = inString(s0)
-      var i = from
-      while (i < s0.length) {
-        if (!in0(i) && s0.regionMatches(true, i, "over", 0, 4) &&
-            (i == 0 || !isIdentChar(s0(i - 1))) &&
-            (i + 4 >= s0.length || !isIdentChar(s0(i + 4)))) {
-          var k = i + 4
-          while (k < s0.length && s0(k).isWhitespace) k += 1
-          if (k < s0.length && s0(k) != '(') {
-            val st = k
-            while (k < s0.length && isIdentChar(s0(k))) k += 1
-            if (winNames.contains(
-                s0.substring(st, k).toLowerCase(java.util.Locale.ROOT)))
-              return i
-          }
-        }
-        i += 1
-      }
-      -1
+    def namedRefAt(s0: String): Int = {
+      val l0 = new Lex(s0)
+      l0.find()(i => l0.word(i, "over") && {
+        val k = l0.fwd(i + 4)
+        k < s0.length && s0(k) != '(' &&
+          winNames.contains(s0.substring(k, l0.identFrom(k)).toLowerCase(java.util.Locale.ROOT))
+      })
     }
-    for (item <- splitTopLevel(list0, ',')) {
+    for (item <- new Lex(list0).split(',')) {
       if (!"(?i)__grp\\d".r.findFirstIn(item).isDefined &&
-          namedRefAt(item, 0) < 0) {
+          namedRefAt(item) < 0) {
         // passthrough: compute inner, project by output name
         innerItems += item.trim
         val asRe =
@@ -2299,25 +1903,17 @@ object DuckDbDialect {
       } else {
         // the window CALL immediately before position `ovPos`: fn(args)
         // → args hoisted inner; returns (callStart, rebuilt call text)
-        def rewriteCallBefore(cur: String, ovPos: Int,
-            curIn: Int => Boolean): (Int, String) = {
-          var ce = ovPos - 1
-          while (ce >= 0 && cur(ce).isWhitespace) ce -= 1
+        def rewriteCallBefore(cl: Lex, ovPos: Int): (Int, String) = {
+          val cur = cl.s
+          val ce = cl.back(ovPos - 1)
           require(ce >= 0 && cur(ce) == ')',
             "GROUPS frame over GROUP BY: expected a window CALL before OVER")
-          var d2 = 1; var cs = ce - 1
-          while (cs >= 0 && d2 > 0) {
-            if (!curIn(cs)) {
-              if (cur(cs) == ')') d2 += 1 else if (cur(cs) == '(') d2 -= 1
-            }
-            if (d2 > 0) cs -= 1
-          }
-          var fs = cs - 1
-          while (fs >= 0 && isIdentChar(cur(fs))) fs -= 1
-          val fnName = cur.substring(fs + 1, cs)
+          val cs = cl.openOf(ce)
+          val fs = cl.identTo(cs - 1)
+          val fnName = cur.substring(fs, cs)
           require(fnName.nonEmpty,
             "GROUPS frame over GROUP BY: expected a window CALL before OVER")
-          (fs + 1, fnName + "(" + rewriteArgs(cur.substring(cs + 1, ce)) + ")")
+          (fs, fnName + "(" + rewriteArgs(cur.substring(cs + 1, ce)) + ")")
         }
         // pre-pass: calls bound to DEFINED window names (`fn(...) OVER w`)
         // keep their reference — the rewritten clause sits in the outer
@@ -2325,20 +1921,14 @@ object DuckDbDialect {
         val sbN = new StringBuilder
         var curN = item
         var guardN = 0
-        while (namedRefAt(curN, 0) >= 0 && guardN < 20) {
+        while (namedRefAt(curN) >= 0 && guardN < 20) {
           guardN += 1
-          val ovPos = namedRefAt(curN, 0)
-          val curIn = inString(curN)
-          var k = ovPos + 4
-          while (k < curN.length && curN(k).isWhitespace) k += 1
-          while (k < curN.length && isIdentChar(curN(k))) k += 1 // past the name
-          val (callStart, callTxt) = rewriteCallBefore(curN, ovPos, curIn)
+          val ovPos = namedRefAt(curN)
+          val cl = new Lex(curN)
+          val k = cl.identFrom(cl.fwd(ovPos + 4)) // past the name
+          val (callStart, callTxt) = rewriteCallBefore(cl, ovPos)
           // end of the original call text (the ')' just before OVER)
-          val afterCall = {
-            var ce = ovPos - 1
-            while (ce >= 0 && curN(ce).isWhitespace) ce -= 1
-            ce + 1
-          }
+          val afterCall = cl.back(ovPos - 1) + 1
           sbN.append(curN.substring(0, callStart)).append(callTxt)
             .append(curN.substring(afterCall, k)) // " OVER name" verbatim
           curN = curN.substring(k)
@@ -2351,44 +1941,20 @@ object DuckDbDialect {
         var guard = 0
         while ("(?i)__grp\\d".r.findFirstIn(cur).isDefined && guard < 20) {
           guard += 1
-          val curIn = inString(cur)
+          val cl = new Lex(cur)
+          def specClose(open: Int): Int =
+            cl.closeOf(open, required("GROUPS frame: unbalanced parentheses"))
           // the OVER ( … __grpN … ) span
-          var ov = -1; var oi = 0
-          while (oi < cur.length && ov < 0) {
-            if (!curIn(oi) && cur.regionMatches(true, oi, "over", 0, 4) &&
-                (oi == 0 || !isIdentChar(cur(oi - 1))) &&
-                (oi + 4 >= cur.length || !isIdentChar(cur(oi + 4)))) {
-              var k = oi + 4
-              while (k < cur.length && cur(k).isWhitespace) k += 1
-              if (k < cur.length && cur(k) == '(') {
-                var d = 1; var e = k + 1
-                while (d > 0 && e < cur.length) {
-                  if (!curIn(e)) {
-                    if (cur(e) == '(') d += 1 else if (cur(e) == ')') d -= 1
-                  }
-                  e += 1
-                }
-                val spec = cur.substring(k + 1, e - 1)
-                if ("(?i)__grp\\d".r.findFirstIn(spec).isDefined) ov = oi
-                else oi = e // skip a non-GROUPS window in the same item
-              }
-            }
-            if (ov < 0) oi += 1
-          }
+          val ov = cl.find()(oi => cl.word(oi, "over") && {
+            val k = cl.fwd(oi + 4)
+            k < cur.length && cur(k) == '(' &&
+              "(?i)__grp\\d".r.findFirstIn(cur.substring(k + 1, specClose(k))).isDefined
+          })
           require(ov >= 0, s"GROUPS hoist: lost the rewritten spec in: $item")
-          val (callStart, callTxt) = rewriteCallBefore(cur, ov, curIn)
+          val (callStart, callTxt) = rewriteCallBefore(cl, ov)
           // spec partition exprs → inner aliases; ORDER BY __grpN stays
-          var specK = ov + 4
-          while (specK < cur.length && cur(specK).isWhitespace) specK += 1
-          val specStart = specK + 1
-          var d3 = 1; var specEnd = specStart
-          while (d3 > 0 && specEnd < cur.length) {
-            if (!curIn(specEnd)) {
-              if (cur(specEnd) == '(') d3 += 1
-              else if (cur(specEnd) == ')') d3 -= 1
-            }
-            specEnd += 1
-          }
+          val specStart = cl.fwd(ov + 4) + 1
+          val specEnd = specClose(specStart - 1) + 1
           val spec = cur.substring(specStart, specEnd - 1)
           if (kwAt(spec, "order") < 0)
             throw new IllegalArgumentException(
@@ -2441,7 +2007,7 @@ object DuckDbDialect {
         else if (argsTxt.trim.isEmpty)
           Some(m.group(1).toLowerCase(java.util.Locale.ROOT) + "()")
         else {
-          val args = splitTopLevel(argsTxt, ',').map(_.trim)
+          val args = new Lex(argsTxt).split(',').map(_.trim)
           val identPat = "[A-Za-z_][A-Za-z0-9_]*(\\.[A-Za-z_][A-Za-z0-9_]*)*"
           if (args.forall(a => a.matches(identPat) || a.matches("\\d+")))
             Some(m.group(1).toLowerCase(java.util.Locale.ROOT) + "(" +
@@ -2479,59 +2045,31 @@ object DuckDbDialect {
     * them to ROWS/RANGE first (round 16). Every
     * frame-type × exclusion-kind combination over COUNT/SUM/AVG is now
     * decomposed (the off-frame RANGE CURRENT ROW case closed round 15). */
-  private def rewriteFrameExclude(sql0: String): String = {
-    var sql = sql0
+  private def rewriteFrameExclude(lx0: Lex): String = {
+    var sql = lx0.s
     var guard = 0
     while (guard < 50) {
       guard += 1
-      val in = inString(sql)
-      // find an EXCLUDE token whose enclosing paren group follows OVER
-      var found = -1; var open = -1
-      var i = 0
-      while (i < sql.length && found < 0) {
-        if (!in(i) && sql.regionMatches(true, i, "exclude", 0, 7) &&
-            (i == 0 || !isIdentChar(sql(i - 1))) &&
-            (i + 7 >= sql.length || !isIdentChar(sql(i + 7)))) {
-          var depth = 0; var b = i - 1; var op = -1
-          while (b >= 0 && op < 0) {
-            if (!in(b)) {
-              if (sql(b) == ')') depth += 1
-              else if (sql(b) == '(') { if (depth == 0) op = b else depth -= 1 }
-            }
-            b -= 1
-          }
-          if (op > 0) {
-            var w = op - 1
-            while (w >= 0 && sql(w).isWhitespace) w -= 1
-            var e = w
-            while (e >= 0 && isIdentChar(sql(e))) e -= 1
-            if (sql.substring(e + 1, w + 1).equalsIgnoreCase("over")) {
-              found = i; open = op
-            }
-          }
+      val lx = if (sql eq lx0.s) lx0 else new Lex(sql)
+      // the first EXCLUDE token whose enclosing paren group follows OVER
+      def specOf(i: Int): Option[Int] =
+        if (!lx.word(i, "exclude")) None
+        else lx.opens(i).headOption.filter { op =>
+          val w = lx.back(op - 1)
+          op > 0 && sql.substring(lx.identTo(w), w + 1).equalsIgnoreCase("over")
         }
-        if (found < 0) i += 1
-      }
+      val found = lx.find()(specOf(_).isDefined)
       if (found < 0) return sql
+      val open = specOf(found).get
       val m = "(?is)^exclude\\s+(current\\s+row|group|ties|no\\s+others)".r
         .findFirstMatchIn(sql.substring(found))
         .getOrElse(throw new IllegalArgumentException(
           "window frame EXCLUDE: expected CURRENT ROW, GROUP, TIES or NO OTHERS"))
       val kind = m.group(1).toLowerCase(java.util.Locale.ROOT).replaceAll("\\s+", " ")
-      var exclStart = found - 1
-      while (exclStart >= 0 && sql(exclStart).isWhitespace) exclStart -= 1
-      exclStart += 1
+      val exclStart = lx.back(found - 1) + 1
       val exclEnd = found + m.matched.length
-      // matching close paren of the OVER spec
-      var depth2 = 1; var k = open + 1
-      while (depth2 > 0 && k < sql.length) {
-        if (!in(k)) {
-          if (sql(k) == '(') depth2 += 1 else if (sql(k) == ')') depth2 -= 1
-        }
-        k += 1
-      }
-      require(depth2 == 0, "window frame EXCLUDE: unbalanced OVER specification")
-      val specClose = k - 1
+      val specClose =
+        lx.closeOf(open, required("window frame EXCLUDE: unbalanced OVER specification"))
       require(exclEnd <= specClose, "window frame EXCLUDE: exclusion outside the OVER spec")
       val specNoExcl = (sql.substring(open, exclStart) + sql.substring(exclEnd, specClose + 1))
         .replaceAll("\\s+\\)$", ")")
@@ -2560,7 +2098,7 @@ object DuckDbDialect {
       // RANGE BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW).
       val betweenInfo: Option[(String, String, String, Int)] = frameM.map { fm =>
         val body = fm.group(2).trim
-        val parts = splitTopLevelKeyword(body, "and")
+        val parts = new Lex(body).splitWord("and")
         if (body.toLowerCase(java.util.Locale.ROOT).startsWith("between") && parts.length == 2)
           (parts(0).replaceAll("(?i)^between\\s+", "").trim, parts(1).trim,
             fm.group(1), fm.start)
@@ -2606,28 +2144,15 @@ object DuckDbDialect {
         sql = sql.substring(0, open) + specAdj + sql.substring(specClose + 1)
       } else {
         // fn(args) immediately before OVER
-        var w2 = open - 1
-        while (w2 >= 0 && sql(w2).isWhitespace) w2 -= 1
-        val overWordEnd = w2 + 1
-        var e2 = w2
-        while (e2 >= 0 && isIdentChar(sql(e2))) e2 -= 1
-        require(sql.substring(e2 + 1, overWordEnd).equalsIgnoreCase("over"),
+        val w2 = lx.back(open - 1)
+        val overStart = lx.identTo(w2)
+        require(sql.substring(overStart, w2 + 1).equalsIgnoreCase("over"),
           "window frame EXCLUDE: lost the OVER anchor")
-        var p2 = e2
-        while (p2 >= 0 && sql(p2).isWhitespace) p2 -= 1
+        val p2 = lx.back(overStart - 1)
         require(p2 >= 0 && sql(p2) == ')',
           "window frame EXCLUDE: expected fn(...) immediately before OVER")
-        var d3 = 1; var q3 = p2 - 1
-        while (d3 > 0 && q3 >= 0) {
-          if (!in(q3)) {
-            if (sql(q3) == ')') d3 += 1 else if (sql(q3) == '(') d3 -= 1
-          }
-          if (d3 > 0) q3 -= 1
-        }
-        require(d3 == 0, "window frame EXCLUDE: unbalanced window function call")
-        var idStart = q3 - 1
-        while (idStart >= 0 && isIdentChar(sql(idStart))) idStart -= 1
-        idStart += 1
+        val q3 = lx.openOf(p2, required("window frame EXCLUDE: unbalanced window function call"))
+        val idStart = lx.identTo(q3 - 1)
         require(idStart < q3, "window frame EXCLUDE: expected a function name before OVER")
         val fn = sql.substring(idStart, q3).toLowerCase(java.util.Locale.ROOT)
         val arg = sql.substring(q3 + 1, p2).trim
@@ -2860,56 +2385,47 @@ object DuckDbDialect {
     * MAP bracket access diverges by design — DuckDB wraps the value in
     * a one-element LIST, the rewrite yields the scalar (element_at
     * semantics; documented acceptance). */
-  private def rewriteBrackets(sql0: String): String = {
-    var sql = sql0
+  private def rewriteBrackets(lx0: Lex): String = {
+    var sql = lx0.s
     var guard = 0
     var changed = true
     while (changed && guard < 200) {
       guard += 1
       changed = false
-      val in = inString(sql)
+      val lx = if (sql eq lx0.s) lx0 else new Lex(sql)
       var i = 0
       while (i < sql.length && !changed) {
-        if (sql(i) == '[' && !in(i)) {
-          // matching close bracket; top-level ':' marks a slice
-          var depth = 1; var pdepth = 0; var j = i + 1; var colon = -1
-          while (depth > 0 && j < sql.length) {
-            if (!in(j)) sql(j) match {
-              case '[' => depth += 1
-              case ']' => depth -= 1
-              case '(' => pdepth += 1
-              case ')' => pdepth -= 1
-              case ':' if depth == 1 && pdepth == 0 => colon = j
-              case _ => ()
-            }
-            if (depth > 0) j += 1
-          }
-          if (depth != 0)
-            throw new IllegalArgumentException("unbalanced '[' in expression")
-          val close = j
-          var p = i - 1
-          while (p >= 0 && sql(p).isWhitespace) p -= 1
+        if (sql(i) == '[' && !lx.masked(i)) {
+          val close = lx.closeOf(i, "unbalanced '[' in expression")
+          // a ':' outside nested brackets and parens marks a slice
+          var nested = 0
+          val slice = (i + 1 until close).exists(j => !lx.masked(j) && (sql(j) match {
+            case '[' => nested += 1; false
+            case ']' => nested -= 1; false
+            case ':' => nested == 0 && lx.depthAt(j) == lx.depthAt(i)
+            case _ => false
+          }))
+          val p = lx.back(i - 1)
           // keyword just before the bracket ⇒ literal position; the
           // `ARRAY[...]` spelling consumes its keyword (it abuts the
           // bracket and `array(...)` already says it), other abutting
           // keywords get a separating space
           var kwStart = -1; var kwText = ""
-          if (p >= 0 && isIdentChar(sql(p)) && !in(p)) {
-            var w = p
-            while (w >= 0 && isIdentChar(sql(w))) w -= 1
-            val t = sql.substring(w + 1, p + 1).toLowerCase(java.util.Locale.ROOT)
-            if (BracketKeywords.contains(t)) { kwStart = w + 1; kwText = t }
+          if (p >= 0 && isIdentChar(sql(p)) && !lx.masked(p)) {
+            val w = lx.identTo(p)
+            val t = sql.substring(w, p + 1).toLowerCase(java.util.Locale.ROOT)
+            if (BracketKeywords.contains(t)) { kwStart = w; kwText = t }
           }
           val kwBefore = kwStart >= 0
           val operandPos = p >= 0 && !kwBefore &&
-            (in(p) || isIdentChar(sql(p)) || sql(p) == ')' || sql(p) == ']')
+            (lx.masked(p) || isIdentChar(sql(p)) || sql(p) == ')' || sql(p) == ']')
           if (!operandPos) {
             val spliceAt = if (kwText == "array") kwStart else i
             val sep = if (spliceAt == i && p == i - 1 && kwBefore) " " else ""
             sql = sql.substring(0, spliceAt) + sep + "array(" +
               sql.substring(i + 1, close) + ")" + sql.substring(close + 1)
             changed = true
-          } else if (colon >= 0) {
+          } else if (slice) {
             throw new IllegalArgumentException(
               "bracket slice x[a:b] is not supported by the dialect shim: the " +
                 "text cannot carry the operand's type (list slice vs string " +
@@ -2921,28 +2437,10 @@ object DuckDbDialect {
             var s0 = p
             var cont = true
             while (cont && s0 >= 0) {
-              if (in(s0)) { while (s0 >= 0 && in(s0)) s0 -= 1 }
-              else if (sql(s0) == ')') {
-                var d = 1; s0 -= 1
-                while (s0 >= 0 && d > 0) {
-                  if (!in(s0)) {
-                    if (sql(s0) == ')') d += 1
-                    else if (sql(s0) == '(') d -= 1
-                  }
-                  s0 -= 1
-                }
-              } else if (sql(s0) == ']') {
-                var d = 1; s0 -= 1
-                while (s0 >= 0 && d > 0) {
-                  if (!in(s0)) {
-                    if (sql(s0) == ']') d += 1
-                    else if (sql(s0) == '[') d -= 1
-                  }
-                  s0 -= 1
-                }
-              } else if (isIdentChar(sql(s0))) {
-                while (s0 >= 0 && isIdentChar(sql(s0))) s0 -= 1
-              } else cont = false
+              if (lx.masked(s0)) { while (s0 >= 0 && lx.masked(s0)) s0 -= 1 }
+              else if (sql(s0) == ')' || sql(s0) == ']') s0 = (lx.openOf(s0) max 0) - 1
+              else if (isIdentChar(sql(s0))) s0 = lx.identTo(s0) - 1
+              else cont = false
               if (cont) {
                 if (s0 >= 0 && sql(s0) == '.') s0 -= 1
                 else if (!(s0 >= 0 && isIdentChar(sql(s0)))) cont = false
@@ -2957,18 +2455,11 @@ object DuckDbDialect {
             // surface a misattributed Spark parse error. Detect the
             // two spellings (:: or AS immediately before the captured
             // operand) and throw the NAMED error instead.
-            val beforeOp = {
-              var tp = opStart - 1
-              while (tp >= 0 && sql(tp).isWhitespace) tp -= 1
-              tp
-            }
-            val typePos =
-              (beforeOp >= 1 && sql(beforeOp) == ':' && sql(beforeOp - 1) == ':' && !in(beforeOp)) ||
-              (beforeOp >= 1 && isIdentChar(sql(beforeOp)) && !in(beforeOp) && {
-                var w = beforeOp
-                while (w >= 0 && isIdentChar(sql(w))) w -= 1
-                sql.substring(w + 1, beforeOp + 1).equalsIgnoreCase("as")
-              })
+            val beforeOp = lx.back(opStart - 1)
+            val typePos = beforeOp >= 1 && !lx.masked(beforeOp) && (
+              (sql(beforeOp) == ':' && sql(beforeOp - 1) == ':') ||
+              (isIdentChar(sql(beforeOp)) &&
+                sql.substring(lx.identTo(beforeOp), beforeOp + 1).equalsIgnoreCase("as")))
             if (typePos)
               throw new IllegalArgumentException(
                 s"array-type bracket syntax ('$operand[...]', as in CAST(x AS $operand[]) " +
@@ -3040,71 +2531,39 @@ object DuckDbDialect {
     * (Spark-native). Bound: the collect_set text is spliced 2–4× —
     * the same deterministic-inputs duplication class documented at the
     * list-call NULL guards. */
-  private def rewriteDistinctWindow(sql0: String): String = {
-    var sql = sql0
+  private def rewriteDistinctWindow(lx0: Lex): String = {
+    var sql = lx0.s
     var guard = 0
     val fns = Seq("count", "sum", "avg", "min", "max")
     while (guard < 100) {
       guard += 1
-      val in = inString(sql)
-      // first fn( DISTINCT … ) followed by OVER
-      var matched: Option[(Int, String, Int, Int)] = None
-      var idx = 0
-      while (idx < sql.length && matched.isEmpty) {
-        if (!in(idx) && (idx == 0 || !isIdentChar(sql(idx - 1)))) {
-          fns.find(f => sql.regionMatches(true, idx, f, 0, f.length) &&
-              (idx + f.length >= sql.length || !isIdentChar(sql(idx + f.length))))
-            .foreach { f =>
-              var j = idx + f.length
-              while (j < sql.length && sql(j).isWhitespace) j += 1
-              if (j < sql.length && sql(j) == '(') {
-                var k = j + 1
-                while (k < sql.length && sql(k).isWhitespace) k += 1
-                if (sql.regionMatches(true, k, "distinct", 0, 8) &&
-                    k + 8 < sql.length && !isIdentChar(sql(k + 8))) {
-                  var depth = 1; var p = j + 1
-                  while (depth > 0 && p < sql.length) {
-                    if (!in(p)) {
-                      if (sql(p) == '(') depth += 1
-                      else if (sql(p) == ')') depth -= 1
-                    }
-                    p += 1
-                  }
-                  if (depth == 0) {
-                    val close = p - 1
-                    var q = close + 1
-                    while (q < sql.length && sql(q).isWhitespace) q += 1
-                    if (sql.regionMatches(true, q, "over", 0, 4) &&
-                        (q + 4 >= sql.length || !isIdentChar(sql(q + 4))))
-                      matched = Some((idx, f.toLowerCase(java.util.Locale.ROOT),
-                        k + 8, close))
-                  }
-                }
-              }
-            }
+      val lx = if (sql eq lx0.s) lx0 else new Lex(sql)
+      // first fn( DISTINCT … ) followed by OVER:
+      // (fnStart, fn, end of DISTINCT, the call's close paren)
+      def callAt(idx: Int): Option[(Int, String, Int, Int)] =
+        fns.find(lx.word(idx, _)).flatMap { f =>
+          val j = lx.fwd(idx + f.length)
+          val k = lx.fwd(j + 1)
+          val close = if (j < sql.length && sql(j) == '(' &&
+              sql.regionMatches(true, k, "distinct", 0, 8) &&
+              k + 8 < sql.length && !isIdentChar(sql(k + 8))) lx.closeOf(j) else -1
+          val q = lx.fwd(close + 1)
+          if (close >= 0 && sql.regionMatches(true, q, "over", 0, 4) &&
+              (q + 4 >= sql.length || !isIdentChar(sql(q + 4))))
+            Some((idx, f.toLowerCase(java.util.Locale.ROOT), k + 8, close))
+          else None
         }
-        idx += 1
-      }
-      matched match {
+      callAt(lx.find()(callAt(_).isDefined)) match {
         case None => return sql
         case Some((fnStart, f, distEnd, close)) =>
-          var q = close + 1
-          while (sql(q).isWhitespace) q += 1
-          var ovEnd = q + 4
-          while (ovEnd < sql.length && sql(ovEnd).isWhitespace) ovEnd += 1
-          if (ovEnd < sql.length && sql(ovEnd) == '(') {
-            var depth = 1; ovEnd += 1
-            while (depth > 0 && ovEnd < sql.length) {
-              if (!in(ovEnd)) {
-                if (sql(ovEnd) == '(') depth += 1
-                else if (sql(ovEnd) == ')') depth -= 1
-              }
-              ovEnd += 1
-            }
-            require(depth == 0, "DISTINCT window aggregate: unbalanced OVER specification")
-          } else {
+          val q = lx.fwd(close + 1)
+          var ovEnd = lx.fwd(q + 4)
+          if (ovEnd < sql.length && sql(ovEnd) == '(')
+            ovEnd = lx.closeOf(ovEnd,
+              required("DISTINCT window aggregate: unbalanced OVER specification")) + 1
+          else {
             val idStart = ovEnd
-            while (ovEnd < sql.length && isIdentChar(sql(ovEnd))) ovEnd += 1
+            ovEnd = lx.identFrom(ovEnd)
             require(ovEnd > idStart,
               "DISTINCT window aggregate: expected a window spec or name after OVER")
           }
@@ -3140,60 +2599,63 @@ object DuckDbDialect {
     * DuckDB accepts the modifier), so ordinary identifiers named
     * `ignore`/`nulls` elsewhere are untouched. Spark-style input has no
     * in-paren form to match and passes through byte-identical. */
-  private def rewriteIgnoreNulls(sql: String): String = {
-    val in = inString(sql)
+  private def rewriteIgnoreNulls(lx: Lex): String = {
+    val sql = lx.s
     val re = "(?i)\\s+(ignore|respect)\\s+nulls\\s*\\)(?=\\s*over\\b)".r
     re.replaceAllIn(sql, m =>
-      if (in(m.start)) scala.util.matching.Regex.quoteReplacement(m.matched)
+      if (lx.masked(m.start)) scala.util.matching.Regex.quoteReplacement(m.matched)
       else scala.util.matching.Regex.quoteReplacement(
         s") ${m.group(1).toUpperCase(java.util.Locale.ROOT)} NULLS"))
   }
 
-  private def rewriteUsingSample(sql: String): String = {
-    val in = inString(sql)
-    def wordAt(i: Int, w: String): Boolean =
-      !in(i) && sql.regionMatches(true, i, w, 0, w.length) &&
-        (i == 0 || !isIdentChar(sql(i - 1))) &&
-        (i + w.length >= sql.length || !isIdentChar(sql(i + w.length)))
+  /** DuckDB `USING SAMPLE n[%|PERCENT|ROWS]` after a table reference →
+    * Spark `TABLESAMPLE (n PERCENT|ROWS)` (round 13). A bare count is
+    * rows (DuckDB's default). Equivalence bound, stated: both engines
+    * then draw a sample of the requested size — the sampling ALGORITHM
+    * differs (DuckDB reservoir vs Spark bernoulli/row-limit), so this
+    * is an acceptance rewrite (the statement runs and means the same
+    * thing), not a row-identical one; sampling is nondeterministic in
+    * the reference too. DuckDB also allows the clause at query level
+    * (after WHERE); Spark's TABLESAMPLE is table-level only, so that
+    * placement surfaces Spark's parse error — a clear message, never a
+    * silently different result. */
+  private def rewriteUsingSample(lx: Lex): String = {
+    val sql = lx.s
     val b = new StringBuilder
     var i = 0
     while (i < sql.length) {
-      if (wordAt(i, "using")) {
-        var j = i + "using".length
-        while (j < sql.length && sql(j).isWhitespace) j += 1
-        if (j < sql.length && wordAt(j, "sample")) {
-          var k = j + "sample".length
-          while (k < sql.length && sql(k).isWhitespace) k += 1
-          val numStart = k
-          while (k < sql.length && (sql(k).isDigit || sql(k) == '.')) k += 1
-          require(k > numStart,
-            "USING SAMPLE: expected a numeric sample size")
-          val num = sql.substring(numStart, k)
-          var m = k
-          while (m < sql.length && sql(m).isWhitespace) m += 1
-          val (unit, end) =
-            if (m < sql.length && sql(m) == '%') ("PERCENT", m + 1)
-            else if (m < sql.length && sql.regionMatches(true, m, "percent", 0, 7) &&
-                     (m + 7 >= sql.length || !isIdentChar(sql(m + 7))))
-              ("PERCENT", m + 7)
-            else if (m < sql.length && sql.regionMatches(true, m, "rows", 0, 4) &&
-                     (m + 4 >= sql.length || !isIdentChar(sql(m + 4))))
-              ("ROWS", m + 4)
-            else ("ROWS", k)
-          b.append(s"TABLESAMPLE ($num $unit)")
-          i = end
-        } else { b.append(sql(i)); i += 1 }
+      val j = if (lx.word(i, "using")) lx.fwd(i + "using".length) else -1
+      if (j >= 0 && lx.word(j, "sample")) {
+        var k = lx.fwd(j + "sample".length)
+        val numStart = k
+        while (k < sql.length && (sql(k).isDigit || sql(k) == '.')) k += 1
+        require(k > numStart,
+          "USING SAMPLE: expected a numeric sample size")
+        val num = sql.substring(numStart, k)
+        val m = lx.fwd(k)
+        val (unit, end) =
+          if (m < sql.length && sql(m) == '%') ("PERCENT", m + 1)
+          else if (m < sql.length && sql.regionMatches(true, m, "percent", 0, 7) &&
+                   (m + 7 >= sql.length || !isIdentChar(sql(m + 7))))
+            ("PERCENT", m + 7)
+          else if (m < sql.length && sql.regionMatches(true, m, "rows", 0, 4) &&
+                   (m + 4 >= sql.length || !isIdentChar(sql(m + 4))))
+            ("ROWS", m + 4)
+          else ("ROWS", k)
+        b.append(s"TABLESAMPLE ($num $unit)")
+        i = end
       } else { b.append(sql(i)); i += 1 }
     }
     b.toString
   }
 
-  private def rewriteOperatorIntDiv(sql: String): String = {
-    val in = inString(sql)
+  /** Replace `//` with ` div ` outside string literals. */
+  private def rewriteOperatorIntDiv(lx: Lex): String = {
+    val sql = lx.s
     val b = new StringBuilder
     var i = 0
     while (i < sql.length) {
-      if (!in(i) && i + 1 < sql.length && sql(i) == '/' && sql(i + 1) == '/') {
+      if (!lx.masked(i) && i + 1 < sql.length && sql(i) == '/' && sql(i + 1) == '/') {
         b.append(" div "); i += 2
       } else { b.append(sql(i)); i += 1 }
     }
@@ -3205,16 +2667,14 @@ object DuckDbDialect {
     * '('-requirement leaves DuckDB's window-frame `EXCLUDE CURRENT ROW`
     * (no paren; consumed by [[rewriteFrameExclude]]) untouched, and
     * Spark has no EXCLUDE( spelling of its own. */
-  private def renameFn(sql: String, from: String, to: String): String = {
-    val in = inString(sql)
+  private def renameFn(lx: Lex, from: String, to: String): String = {
+    val sql = lx.s
     val b = new StringBuilder
     var i = 0
     while (i < sql.length) {
-      if (!in(i) && sql.regionMatches(true, i, from, 0, from.length) &&
-          (i == 0 || !isIdentChar(sql(i - 1))) && {
-            var j = i + from.length
-            while (j < sql.length && sql(j).isWhitespace) j += 1
-            j < sql.length && sql(j) == '(' && !isIdentChar(sql(i + from.length))
+      if (lx.word(i, from) && {
+            val j = lx.fwd(i + from.length)
+            j < sql.length && sql(j) == '('
           }) {
         b.append(to); i += from.length
       } else { b.append(sql(i)); i += 1 }
@@ -3230,46 +2690,22 @@ object DuckDbDialect {
     * whose Spark spelling must survive byte-identical. A replacement
     * restarts the scan, so nested occurrences in rewritten output are
     * handled too. */
-  private def rewriteCalls(sql: String, fname: String)(
+  private def rewriteCalls(lx0: Lex, fname: String)(
       f: Seq[String] => Option[String]): String = {
-    var s = sql
+    var s = lx0.s
     var from = 0
     var guard = 0
     while (guard < 200) {
       guard += 1
-      val in = inString(s)
-      var i = from
-      var found = -1
-      while (found < 0 && i < s.length) {
-        if (!in(i) && s.regionMatches(true, i, fname, 0, fname.length) &&
-            (i == 0 || !isIdentChar(s(i - 1)))) {
-          var j = i + fname.length
-          while (j < s.length && s(j).isWhitespace) j += 1
-          if (j < s.length && s(j) == '(') found = i
-          else i += 1
-        } else i += 1
-      }
+      val lx = if (s eq lx0.s) lx0 else new Lex(s)
+      val found = lx.find(from)(i => lx.word(i, fname) && {
+        val j = lx.fwd(i + fname.length)
+        j < s.length && s(j) == '('
+      })
       if (found < 0) return s
-      // balanced scan from the '(' to the matching ')'
-      val argStart = s.indexOf('(', found + fname.length) + 1
-      var depth = 1
-      var k = argStart
-      val splits = scala.collection.mutable.ArrayBuffer.empty[Int]
-      while (depth > 0 && k < s.length) {
-        val c = s(k)
-        if (in(k)) ()
-        else if (c == '(') depth += 1
-        else if (c == ')') depth -= 1
-        else if (c == ',' && depth == 1) splits += k
-        k += 1
-      }
-      if (depth != 0) throw new IllegalArgumentException(
-        s"$fname(: unbalanced parentheses in SQL")
-      val argEnd = k - 1 // position of the matching ')'
-      val bounds: Seq[Int] = (argStart +: splits.toSeq.map(_ + 1)) :+ argEnd
-      val args = bounds.sliding(2).map { w =>
-        s.substring(w(0), math.min(w(1), argEnd)).stripSuffix(",").trim
-      }.toSeq.filter(_.nonEmpty)
+      val open = s.indexOf('(', found + fname.length)
+      val argEnd = lx.closeOf(open, s"$fname(: unbalanced parentheses in SQL")
+      val args = lx.split(',', open + 1, argEnd).map(_.trim).filter(_.nonEmpty)
       f(args) match {
         case Some(repl) =>
           s = s.substring(0, found) + repl + s.substring(argEnd + 1)

@@ -79,50 +79,44 @@ object SqlGateway {
         val rest = rest0.trim
         val df =
           if (rest.matches("[A-Za-z_][A-Za-z0-9_.]*")) spark.table(rest)
-          else {
-            val inner = DuckDbDialect.rewrite(rest)
-            validate(spark, inner)
-            spark.sql(inner)
-          }
+          else spark.sql(gatedSql(spark, rest))
         Profile.summarize(df)
       case _ if s0.matches("(?is)^pivot\\b.*") => runPivot(spark, s0)
       case _ if s0.matches("(?is)^unpivot\\b.*") => runUnpivot(spark, s0)
-      case _ =>
-        // COLUMNS('regex') needs the relation schema — only the gateway
-        // has it, so the expansion runs here, before the text shim
-        val schemaOf: String => Option[Seq[String]] = name =>
-          scala.util.Try(spark.table(name).schema.fieldNames.toSeq).toOption
-        val s1 =
-          if ("(?i)\\bcolumns\\s*\\(".r.findFirstIn(s0).isDefined)
-            DuckDbDialect.expandColumns(s0, schemaOf)
-          else s0
-        // schema-aware rewrite (round 20): the GROUPS wrap resolves
-        // multi-relation qualified stars/references through the same
-        // relation-schema source as COLUMNS expansion above
-        val sql = DuckDbDialect.rewriteWithSchema(s1, schemaOf)
-        validate(spark, sql)
-        spark.sql(sql)
+      case _ => spark.sql(gatedSql(spark, s0))
     }
   }
 
+  /** A DuckDB query → the Spark SQL the gateway runs for it, passed by
+    * the SELECT-only gate. Every query the gateway executes takes this
+    * path: the statement itself, and the inner query of SUMMARIZE,
+    * PIVOT and UNPIVOT. */
+  private def gatedSql(spark: SparkSession, query: String): String = {
+    // COLUMNS('regex') needs the relation schema — only the gateway
+    // has it, so the expansion runs here, before the text shim
+    val schemaOf: String => Option[Seq[String]] = name =>
+      scala.util.Try(spark.table(name).schema.fieldNames.toSeq).toOption
+    val s1 =
+      if ("(?i)\\bcolumns\\s*\\(".r.findFirstIn(query).isDefined)
+        DuckDbDialect.expandColumns(query, schemaOf)
+      else query
+    // schema-aware rewrite (round 20): the GROUPS wrap resolves
+    // multi-relation qualified stars/references through the same
+    // relation-schema source as COLUMNS expansion above
+    val sql = DuckDbDialect.rewriteWithSchema(s1, schemaOf)
+    validate(spark, sql)
+    sql
+  }
+
   /** Split `<dataset> <rest>` where dataset is either a (possibly
-    * qualified) identifier or a parenthesized subquery — paren matching
-    * is quote-aware so a `')'` inside a string literal can't end it. */
+    * qualified) identifier or a parenthesized subquery — the paren match
+    * is the dialect scanner's, so a `)` inside a string literal, quoted
+    * identifier or comment can't end it. */
   private def splitDataset(rest: String): (String, String) = {
     val s = rest.trim
     if (s.startsWith("(")) {
-      var depth = 0; var i = 0; var inStr = false
-      var end = -1
-      while (i < s.length && end < 0) {
-        s(i) match {
-          case '\'' => inStr = !inStr
-          case '(' if !inStr => depth += 1
-          case ')' if !inStr => depth -= 1; if (depth == 0) end = i
-          case _ =>
-        }
-        i += 1
-      }
-      require(end > 0, s"PIVOT/UNPIVOT: unbalanced parens in dataset: $s")
+      val end = new DuckDbDialect.Lex(s).closeOf(0,
+        DuckDbDialect.required(s"PIVOT/UNPIVOT: unbalanced parens in dataset: $s"))
       (s.substring(1, end).trim, s.substring(end + 1))
     } else {
       val m = "^[A-Za-z_][A-Za-z0-9_.]*".r.findFirstIn(s).getOrElse(
@@ -136,11 +130,7 @@ object SqlGateway {
     * the dialect shim and the SELECT-only gate like any other text). */
   private def datasetDf(spark: SparkSession, ds: String): DataFrame =
     if (ds.matches("[A-Za-z_][A-Za-z0-9_.]*")) spark.table(ds)
-    else {
-      val inner = DuckDbDialect.rewrite(ds)
-      validate(spark, inner)
-      spark.sql(inner)
-    }
+    else spark.sql(gatedSql(spark, ds))
 
   /** DuckDB's PIVOT statement (round 13c):
     * `PIVOT ds ON col [IN (v, …)] [USING agg(arg) [AS a]] [GROUP BY g, …]`.
@@ -162,10 +152,10 @@ object SqlGateway {
   private def runPivot(spark: SparkSession, s0: String): DataFrame = {
     import org.apache.spark.sql.functions.{col, lit, count, sum, min, max, avg}
     val (ds, rest0) = splitDataset(s0.trim.substring("pivot".length))
-    // The IN (...) list is extracted with a quote-aware scan BEFORE the
-    // shape regex: a quoted pivot value containing ',' or ')' (e.g.
-    // IN ('a,b')) would otherwise be split at the wrong boundary —
-    // silently wrong pivot columns (round-13 advice).
+    // The IN (...) list is extracted with the scanner BEFORE the shape
+    // regex: a quoted pivot value containing ',' or ')' (e.g. IN
+    // ('a,b')) would otherwise be split at the wrong boundary — silently
+    // wrong pivot columns (round-13 advice).
     val onM = "(?is)^\\s*on\\s+([A-Za-z_][A-Za-z0-9_]*)".r
       .findFirstMatchIn(rest0).getOrElse(throw new IllegalArgumentException(
         "PIVOT: supported form is PIVOT <ds> ON <col> [IN (values)] " +
@@ -174,17 +164,11 @@ object SqlGateway {
     val afterOn = rest0.substring(onM.matched.length)
     val (inList, rest) = "(?is)^\\s+in\\s*\\(".r.findFirstIn(afterOn) match {
       case Some(pre) =>
-        var i = pre.length; var inStr = false; var end = -1
-        while (i < afterOn.length && end < 0) {
-          afterOn(i) match {
-            case '\'' => inStr = !inStr
-            case ')' if !inStr => end = i
-            case _ =>
-          }
-          i += 1
-        }
-        require(end > 0, s"PIVOT: unbalanced IN list: $afterOn")
-        (Some(afterOn.substring(pre.length, end)), afterOn.substring(end + 1))
+        val end = new DuckDbDialect.Lex(afterOn).closeOf(pre.length - 1,
+          DuckDbDialect.required(s"PIVOT: unbalanced IN list: $afterOn"))
+        // a comment inside the list belongs to no value
+        val values = new DuckDbDialect.Lex(afterOn.substring(pre.length, end)).uncommented
+        (Some(values), afterOn.substring(end + 1))
       case None => (None, afterOn)
     }
     val m = ("(?is)^" +
@@ -199,20 +183,10 @@ object SqlGateway {
       (Option(mm.group(1)), Option(mm.group(2)), Option(mm.group(3)),
         Option(mm.group(4)), Option(mm.group(5)))
     val df = datasetDf(spark, ds)
-    // quote-aware comma split ('' stays an escaped quote inside a value)
-    def splitVals(l: String): Seq[String] = {
-      val out = Seq.newBuilder[String]
-      val cur = new StringBuilder; var inStr = false
-      l.foreach {
-        case ',' if !inStr => out += cur.result(); cur.clear()
-        case c => if (c == '\'') inStr = !inStr; cur += c
-      }
-      out += cur.result()
-      out.result()
-    }
     val vals: Seq[Any] = inList match {
       case Some(l) =>
-        splitVals(l).map(_.trim).filter(_.nonEmpty).map { v =>
+        // the scanner's comma split ('' stays an escaped quote inside a value)
+        new DuckDbDialect.Lex(l).split(',').map(_.trim).filter(_.nonEmpty).map { v =>
           if (v.startsWith("'") && v.endsWith("'"))
             v.substring(1, v.length - 1).replace("''", "'")
           else v // numeric literal: Spark matches it by string form
@@ -288,7 +262,7 @@ object SqlGateway {
       s"UNPIVOT: ON must list plain column names, got: ${mm.group(1)}")
     val (nameCol, valueCol) = (mm.group(2), mm.group(3))
     val base = if (ds.matches("[A-Za-z_][A-Za-z0-9_.]*")) ds
-      else { val inner = DuckDbDialect.rewrite(ds); validate(spark, inner); s"($inner)" }
+      else s"(${gatedSql(spark, ds)})"
     val sql = s"SELECT * FROM $base UNPIVOT ($valueCol FOR $nameCol IN " +
       s"(${cols.mkString(", ")}))"
     validate(spark, sql)

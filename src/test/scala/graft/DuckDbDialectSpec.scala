@@ -1358,6 +1358,47 @@ class DuckDbDialectSpec extends AnyFunSuite {
       .head().getInt(0) == 2)
   }
 
+  test("star EXCEPT/EXCLUDE next to a set-op EXCEPT: each pass tells them apart") {
+    // `* EXCEPT (cols)` is the star modifier, `EXCEPT [ALL] <query>` the
+    // set operation; FROM-first, QUALIFY, GROUPS and DISTINCT ON each cut
+    // at set operations, so each must keep the modifier inside its branch
+    def flat(s: String): String = s.replace('\n', ' ')
+    val cases = Seq(
+      "FROM t SELECT * EXCEPT (b) WHERE a > 0 EXCEPT FROM u SELECT * EXCLUDE (b)" ->
+        "SELECT * EXCEPT (b) FROM t WHERE a > 0 EXCEPT SELECT * except (b) FROM u",
+      "FROM t SELECT * EXCLUDE (b) EXCEPT SELECT * EXCEPT (b) FROM u" ->
+        "SELECT * except (b) FROM t EXCEPT SELECT * EXCEPT (b) FROM u",
+      "SELECT * EXCEPT (b) FROM t QUALIFY ROW_NUMBER() OVER (PARTITION BY a ORDER BY b) = 1 " +
+        "EXCEPT SELECT * EXCLUDE (b) FROM u" ->
+        ("SELECT * EXCEPT (__qualify_w1) FROM ( SELECT * EXCEPT (b) , ROW_NUMBER() OVER " +
+          "(PARTITION BY a ORDER BY b) AS __qualify_w1 FROM t ) __qualify WHERE " +
+          "__qualify_w1 = 1 EXCEPT SELECT * except (b) FROM u"),
+      "SELECT * EXCLUDE (b) FROM t EXCEPT SELECT * EXCEPT (b) FROM u " +
+        "QUALIFY SUM(a) OVER (ORDER BY a) > 2 ORDER BY a" ->
+        ("SELECT * except (b) FROM t EXCEPT SELECT * EXCEPT (__qualify_w1) FROM ( " +
+          "SELECT * EXCEPT (b) , SUM(a) OVER (ORDER BY a) AS __qualify_w1 FROM u ) " +
+          "__qualify WHERE __qualify_w1 > 2 ORDER BY a"),
+      "SELECT * EXCEPT (b), SUM(a) OVER (ORDER BY a GROUPS BETWEEN 1 PRECEDING AND " +
+        "CURRENT ROW) AS s FROM t EXCEPT SELECT * EXCLUDE (b), 0 AS s FROM u" ->
+        ("SELECT * EXCEPT (b, __grp1), SUM(a) OVER (ORDER BY __grp1 RANGE BETWEEN 1 " +
+          "PRECEDING AND CURRENT ROW) AS s FROM ( SELECT *, DENSE_RANK() OVER (ORDER " +
+          "BY a) AS __grp1 FROM t ) __groups EXCEPT SELECT * except (b), 0 AS s FROM u"),
+      "SELECT * EXCLUDE (b) FROM u EXCEPT ALL SELECT * EXCEPT (b), SUM(a) OVER " +
+        "(ORDER BY a GROUPS 1 PRECEDING) AS s FROM t" ->
+        ("SELECT * except (b) FROM u EXCEPT ALL SELECT * EXCEPT (b, __grp1), SUM(a) " +
+          "OVER (ORDER BY __grp1 RANGE BETWEEN 1 PRECEDING AND CURRENT ROW) AS s FROM " +
+          "( SELECT *, DENSE_RANK() OVER (ORDER BY a) AS __grp1 FROM t ) __groups"),
+      "SELECT DISTINCT ON (a) * FROM t ORDER BY a, b" ->
+        ("SELECT * EXCEPT (__don_rn) FROM ( SELECT *, ROW_NUMBER() OVER (PARTITION BY " +
+          "a ORDER BY a, b) AS __don_rn FROM t ) __don WHERE __don_rn = 1 ORDER BY a, b"))
+    cases.foreach { case (in, out) => assert(flat(DuckDbDialect.rewrite(in)) == out, in) }
+    // DISTINCT ON refuses a set operation, but not a star modifier
+    val e = intercept[IllegalArgumentException](DuckDbDialect.rewrite(
+      "SELECT DISTINCT ON (a) * EXCEPT (b) FROM t EXCEPT SELECT * EXCEPT (b) FROM u ORDER BY a"))
+    assert(e.getMessage == "DISTINCT ON combined with GROUP BY/HAVING/QUALIFY/set " +
+      "operations is outside the shim's bounded support")
+  }
+
   // ---- * REPLACE -------------------------------------------------------
 
   test("star REPLACE rewrites to EXCEPT + trailing projection") {

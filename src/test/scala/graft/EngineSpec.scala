@@ -161,6 +161,44 @@ class EngineSpec extends AnyFunSuite {
     assert(o == Seq(("r1", "m2", 9), ("r1", "m1", 2), ("r2", "m2", 7)))
   }
 
+  test("SUMMARIZE, PIVOT and UNPIVOT inner queries take the gateway's full dialect path") {
+    val df = Ingest.load(spark, TestSpark.resource("sample_sales_data.csv"))
+    Catalog.register(df)
+    // COLUMNS(...) expands against the relation schemas only the gateway has
+    val s = SqlGateway.run(spark, "SUMMARIZE SELECT COLUMNS('^p') FROM data_table")
+    assert(s.collect().map(_.getString(0)).toSeq == df.columns.filter(_.startsWith("p")).toSeq)
+    val u = SqlGateway.run(spark,
+      "UNPIVOT (SELECT id, COLUMNS('^(price|quantity)$') FROM data_table WHERE id <= 2) " +
+        "ON price, quantity INTO NAME k VALUE v")
+    assert(u.columns.toSeq == Seq("id", "k", "v") && u.count() == 4)
+    val p = SqlGateway.run(spark,
+      "PIVOT (SELECT sales_rep, category, COLUMNS('^quantity$') FROM data_table) " +
+        "ON category USING sum(quantity) GROUP BY sales_rep")
+    val direct = SqlGateway.run(spark,
+      "PIVOT data_table ON category USING sum(quantity) GROUP BY sales_rep")
+    assert(p.collect().toSet == direct.collect().toSet)
+  }
+
+  test("PIVOT/UNPIVOT parens are matched outside comments and literals") {
+    val df = Ingest.load(spark, TestSpark.resource("sample_sales_data.csv"))
+    Catalog.register(df)
+    def rows(sql: String) = SqlGateway.run(spark, sql).collect().toSeq
+    val plainSql = "PIVOT (SELECT sales_rep, category, quantity FROM data_table) " +
+      "ON category IN ('Food', 'Home') USING sum(quantity) GROUP BY sales_rep ORDER BY sales_rep"
+    assert(SqlGateway.run(spark, plainSql).columns.toSeq == Seq("sales_rep", "Food", "Home"))
+    val plain = rows(plainSql)
+    assert(plain.nonEmpty)
+    assert(rows("PIVOT (SELECT sales_rep, category, quantity /* ) */ FROM data_table) " +
+      "ON category IN ('Food', 'Home') USING sum(quantity) GROUP BY sales_rep ORDER BY sales_rep") == plain)
+    assert(rows("PIVOT (SELECT sales_rep, category, quantity FROM data_table) " +
+      "ON category IN ('Food' /* ) */, 'Home') USING sum(quantity) GROUP BY sales_rep " +
+      "ORDER BY sales_rep") == plain)
+    val melt = rows("UNPIVOT (SELECT id, price, quantity FROM data_table WHERE id <= 2) " +
+      "ON price, quantity INTO NAME k VALUE v ORDER BY id, k")
+    assert(rows("UNPIVOT (SELECT id, price, quantity -- ) \n FROM data_table WHERE id <= 2) " +
+      "ON price, quantity INTO NAME k VALUE v ORDER BY id, k") == melt)
+  }
+
   test("DESCRIBE and SHOW TABLES pass the gate as read-only metadata") {
     val df = Ingest.load(spark, TestSpark.resource("sample_sales_data.csv"))
     Catalog.register(df)
