@@ -150,12 +150,10 @@ object DuckDbDialect {
     // FROM-first OR when any LATER set-op branch is (legal in DuckDB:
     // `SELECT 1 UNION ALL FROM t`) — the branch scan below finds the
     // latter, so the head-only gate decides nothing by itself.
-    val headFromFirst = "(?is)^\\s*from\\b".r.findFirstIn(sql).isDefined
+    val headFromFirst = lx.word(lx.code(0, 1), "from")
     // segment boundaries: the set operations whose branch starts with
     // FROM — only those branches need the rewrite
-    val bounds = lx.setOps().collect {
-      case (op, end) if "(?is)^\\s+from\\b".r.findFirstIn(sql.substring(end)).isDefined => op
-    }
+    val bounds = lx.setOps().collect { case (op, end) if lx.word(lx.code(end, 1), "from") => op }
     if (!headFromFirst && bounds.isEmpty) return sql
     val cuts = (0 +: bounds).distinct.sorted :+ sql.length
     // every cut lands exactly at a set-op keyword; segments join on a
@@ -170,11 +168,14 @@ object DuckDbDialect {
     * <source> [SELECT <list>] <rest>` → prefix + `SELECT <list|*> FROM
     * <source> <rest>`. */
   private def rewriteFromFirstSegment(seg: String): String = {
-    val m = ("(?is)^((?:\\s*(?:union|intersect|except)(?:\\s+(?:all|distinct))?)?\\s*)" +
-      "from(?![A-Za-z0-9_])").r.findFirstMatchIn(seg).getOrElse(return seg)
-    val prefix = m.group(1)
-    val afterFrom = m.end
     val lx = new Lex(seg)
+    // the prefix (set-op keyword, ALL/DISTINCT, comments) runs to FROM
+    val first = lx.code(0, 1)
+    val fromAt =
+      if (lx.isSetOp(first)) lx.code(lx.setOps(first, first + 1).head._2, 1) else first
+    if (!lx.word(fromAt, "from")) return seg
+    val prefix = seg.substring(0, fromAt)
+    val afterFrom = fromAt + 4
     // top-level clause keywords after the source: the first one ends the
     // source or, when it is SELECT, starts the relocated list, which the
     // next non-SELECT one ends. A set-op EXCEPT is one; the star modifier
@@ -335,8 +336,10 @@ object DuckDbDialect {
     * (without one the picked row is engine-arbitrary — refusing beats
     * silently diverging); no GROUP BY/HAVING in the same block; one
     * top-level DISTINCT ON per statement (none inside subqueries); and
-    * bare `*` select items become `* EXCEPT (__don_rn)` so the
-    * synthetic rank column never leaks. Window ORDER BY reuses the
+    * every star item drops the synthetic rank column: a bare `*`
+    * becomes `* EXCEPT (__don_rn)`, a `* EXCEPT|EXCLUDE (cols)` gains
+    * `__don_rn` in its list, and a `* REPLACE (…)` gains the EXCEPT
+    * that the star-replace pass merges. Window ORDER BY reuses the
     * query's ORDER BY text verbatim; ordinal ORDER BY is rejected
     * (ordinals would re-bind inside the window). */
   private def rewriteDistinctOn(lx: Lex): String = {
@@ -388,10 +391,20 @@ object DuckDbDialect {
     require(!orderExprs.split(',').exists(_.trim.matches("[0-9]+.*")),
       "DISTINCT ON with ordinal ORDER BY is outside the shim's bounded " +
         "support — name the expressions")
-    // a bare * item must not surface the synthetic rank column
-    val outItems = new Lex(items).split(',')
-      .map(it => if (it.trim == "*") "* EXCEPT (__don_rn)" else it.trim)
-      .mkString(", ")
+    // no star item may surface the synthetic rank column
+    def dropRank(item: String): String = {
+      val it = new Lex(item.trim)
+      if (!it.s.startsWith("*")) return it.s
+      val m = it.code(1, 1)
+      if (m >= it.n) return "* EXCEPT (__don_rn)"
+      val open = it.code(it.identFrom(m), 1)
+      if ((it.word(m, "except") || it.word(m, "exclude")) && open < it.n && it.s(open) == '(') {
+        val close = it.closeOf(open, required("DISTINCT ON: unbalanced star EXCEPT list"))
+        it.s.substring(0, close) + ", __don_rn" + it.s.substring(close)
+      } else if (it.word(m, "replace")) "* EXCEPT (__don_rn) " + it.s.substring(m)
+      else it.s
+    }
+    val outItems = new Lex(items).split(',').map(dropRank).mkString(", ")
     s"SELECT $outItems FROM ( SELECT *, ROW_NUMBER() OVER (PARTITION BY $keys " +
       s"ORDER BY $orderExprs) AS __don_rn FROM $fromPart ) __don " +
       s"WHERE __don_rn = 1 $tail"
@@ -900,7 +913,7 @@ object DuckDbDialect {
 
     /** First position from `i` in direction `step` (±1) that is neither
       * whitespace nor masked; -1 or n past either end. */
-    private def code(i: Int, step: Int): Int = {
+    def code(i: Int, step: Int): Int = {
       var j = i
       while (j >= 0 && j < n && (masked(j) || s(j).isWhitespace)) j += step
       j

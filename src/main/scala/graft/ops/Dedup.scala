@@ -260,7 +260,7 @@ object Dedup {
     // Denominator joins are explicitly SORT-MERGE: both sides are
     // unbounded (`inter` is O(co-occurring pairs), `counts` is
     // O(corpus)), so no broadcast is ever safe here — and leaving the
-    // choice to static estimates is how the 64× ScaleProbe run OOM'd:
+    // choice to static estimates is how the 64× dedup ladder run OOM'd:
     // `inter` sits behind a Generate whose stats don't grow with the
     // pair fan-out, so the planner under-estimated it and broadcast the
     // pair table. AQE would demote that at runtime, but the engine must
@@ -532,17 +532,6 @@ object Dedup {
     import org.apache.spark.HashPartitioner
     import org.apache.spark.rdd.RDD
     import org.apache.spark.storage.StorageLevel
-    // GRAFT_CLUSTER_TRACE=1 prints per-round wall times to stderr — the
-    // dev knob that separated loop latency from dup-pair compute when
-    // diagnosing the AQE-on regression (see BENCH_NOTES round 13).
-    val trace = sys.env.contains("GRAFT_CLUSTER_TRACE")
-    def traced[A](what: String)(f: => A): A = {
-      val t0 = System.nanoTime()
-      val r = f
-      if (trace) System.err.println(
-        f"[cluster-trace] $what%-12s ${(System.nanoTime() - t0) / 1e9}%.3f s")
-      r
-    }
     val part = new HashPartitioner(spark.sessionState.conf.numShufflePartitions)
     // Leaving the SQL world happens exactly once, here: the dup-pair
     // frame (already the output of the planned/pushed-down Jaccard
@@ -554,13 +543,10 @@ object Dedup {
       .partitionBy(part).persist(StorageLevel.MEMORY_AND_DISK)
     // seed: every doc on a dup edge labels itself (reduceByKey into the
     // shared partitioner; mapPartitions preserves it)
-    var labels: RDD[(Long, Long)] = traced("seed") {
-      val l = edges.reduceByKey(part, (a, _) => a)
-        .mapPartitions(_.map { case (k, _) => (k, k) }, preservesPartitioning = true)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      l.count() // materialize so edge-building cost is not billed to round 0
-      l
-    }
+    var labels: RDD[(Long, Long)] = edges.reduceByKey(part, (a, _) => a)
+      .mapPartitions(_.map { case (k, _) => (k, k) }, preservesPartitioning = true)
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    labels.count() // materialize so edge-building cost is not billed to round 0
     def lblSum(l: RDD[(Long, Long)]): BigInt =
       l.aggregate(BigInt(0))((acc, kv) => acc + kv._2, _ + _)
     // one min-label propagation step; both joins are co-partitioned on
@@ -596,7 +582,7 @@ object Dedup {
       val isCkptRound = round % 5 == 4
       val next = step(step(labels)).persist(StorageLevel.MEMORY_AND_DISK)
       if (isCkptRound) next.localCheckpoint()
-      val s = traced(s"round $round")(lblSum(next)) // materializes next (and any checkpoint)
+      val s = lblSum(next) // materializes next (and any checkpoint)
       if (labels ne pinnedCkpt) labels.unpersist(blocking = false)
       if (isCkptRound) {
         if (pinnedCkpt != null) pinnedCkpt.unpersist(blocking = false)
@@ -1287,9 +1273,10 @@ object Dedup {
     * APPROXIMATION of exact nearest-centroid (a vector near a group
     * boundary can land in the neighboring cell), which is fine for a
     * dedup blocker; the degenerate g=1 configuration is exactly brute
-    * force (spec-pinned). q_dedup_semantic is the k=8, tau=0.3
-    * brute-force oracle instance; [[graft.tools.ScaleProbeNew]] ladders
-    * both paths with k scaled to the corpus. */
+    * force (spec-pinned). q_dedup_semantic is the tau=0.3 instance with
+    * k derived from the corpus ([[semanticKFor]]) through the derived
+    * two-level path ([[semanticGFor]]); the `new` family of
+    * [[graft.tools.Ladder]] ladders it. */
   private[graft] def semanticDedup(s: SparkSession, d: String, k: Int,
       tau: Double, coarseGroups: Option[Int] = None): DataFrame = {
     val vn = normedVectors(s, d)

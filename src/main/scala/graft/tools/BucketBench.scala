@@ -8,7 +8,8 @@ import org.apache.spark.sql.functions._
   * Catalog.bucketedPersist was spec-pinned only at sf0.001
   * (BucketingSpec: SMJ with zero Exchange); this runs the join-heavy
   * shapes — the Q5-style multiway star, TPC-H Q3 and Q18 — over the
-  * sf≈1 tables (MakeSf1 output, 6M-row lineitem) twice: once reading
+  * sf≈1 tables (`MakeSf1 <sf0.1 dir> <sf1Dir> 10`, 6M-row lineitem,
+  * every join resolving within one replica) twice: once reading
   * plain parquet, once reading the SAME data as co-bucketed catalog
   * tables (lineitem/orders bucketed on the order key), and reports the
   * per-query Exchange count and wall delta. The one-time persist cost
@@ -22,13 +23,14 @@ import org.apache.spark.sql.functions._
   * are keyed on a parquet directory and cannot be pointed at a catalog
   * table without changing what is being measured).
   *
-  * Usage: runMain graft.tools.BucketBench [sf1Dir] [buckets=32]
+  * Usage: runMain graft.tools.BucketBench <sf1Dir> [buckets=32]
   */
 object BucketBench {
   def main(args: Array[String]): Unit = {
-    val dir = args.headOption.getOrElse("/tmp/graft_sf1")
+    require(args.nonEmpty, "usage: BucketBench <sf1Dir> [buckets=32]")
+    val dir = args(0)
     val buckets = args.lift(1).map(_.toInt).getOrElse(32)
-    val spark = ProbeHarness.session()
+    val spark = Ladder.session()
     def pq(t: String) = spark.read.parquet(s"$dir/$t.parquet")
     val cust = pq("customer"); val nat = pq("nation"); val reg = pq("region")
 

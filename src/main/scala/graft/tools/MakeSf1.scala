@@ -1,116 +1,32 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
+import graft.tools.Policy._
 
-/** Dev tool: synthesize an sf≈1 dataset (VERDICT r12 #7) by replicating
-  * the driver's sf0.1 tables K× with consistent key offsets, so the
-  * full 134-query bench suite can be recorded at a 6M-row lineitem with
-  * the SAME semantics per key:
-  *  - fact/entity keys shift by `r * (max(key)+1)` per replica — joins
-  *    resolve within one replica, per-key group sizes stay constant;
-  *  - nation/region stay verbatim (dimensions — sf-invariant in TPC-H);
-  *  - documents get ScaleProbe's per-replica token suffix, so replicas
-  *    share no shingles and the dedup/minhash/simhash candidate
-  *    structure grows linearly, like genuinely distinct documents would
-  *    (verbatim copies would make every doc a 10-way exact duplicate —
-  *    a different, quadratic workload the real sf1 would not have);
-  *  - events keep their timestamps (10× density per window, constant
-  *    sessions per user) with event_id/user_id offset;
-  *  - embeddings keep their vectors with vec_id offset (10× corpus for
-  *    the ANN scans; duplicate vectors only create score ties).
+/** Dev tool: a larger dataset from a smaller one — K replicas of every
+  * table (sf0.1 × 10 ≈ sf1, × 100 ≈ sf10), so the full bench suite can
+  * be recorded at scale with the same semantics per key. Every key
+  * domain shifts per replica, so every join (the as-of join's
+  * events.user_id ⋈ orders.o_custkey included) resolves within one
+  * replica and per-key group sizes stay constant; nation and region are
+  * verbatim (TPC-H dimensions do not scale); documents are disjoint
+  * replicas, as genuinely distinct documents would be; embeddings keep
+  * their vectors and shift their labels, so label blocks keep their size.
   *
-  * Usage: runMain graft.tools.MakeSf1 [sfDir] [outDir] [K=10]
+  * Usage: runMain graft.tools.MakeSf1 <sfDir> <outDir> [K=10]
   */
 object MakeSf1 {
+  val Replicated: Seq[(String, Policy)] = Seq(
+    "customer" -> Keys("custkey"), "supplier" -> Keys("suppkey"), "part" -> Keys("partkey"),
+    "orders" -> Keys("orderkey", "custkey"),
+    "lineitem" -> Keys("orderkey", "partkey", "suppkey"),
+    "events" -> Keys("event_id", "custkey"), "documents" -> Disjoint, "embeddings" -> Labeled)
+  val Copied: Seq[String] = Seq("nation", "region")
+
   def main(args: Array[String]): Unit = {
-    val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val outDir = args.lift(1).getOrElse("/tmp/graft_sf1")
-    val k = args.lift(2).map(_.toInt).getOrElse(10)
-    val spark = ProbeHarness.session()
-
-    def rep(t: String, keys: Seq[String]): Unit = {
-      val base = spark.read.parquet(s"$sfDir/$t.parquet")
-      val offs: Map[String, Long] = keys.map { c =>
-        c -> (base.agg(max(col(c))).head().get(0) match {
-          case l: Long => l + 1L
-          case i: Int => i.toLong + 1L
-        })
-      }.toMap
-      (0 until k).map { r =>
-        keys.foldLeft(base) { (df, c) =>
-          df.withColumn(c, (col(c) + lit(r * offs(c))).cast(df.schema(c).dataType))
-        }
-      }.reduce(_ unionAll _)
-        .write.mode("overwrite").parquet(s"$outDir/$t.parquet")
-      println(s"[sf1] $t x$k done")
-    }
-
-    rep("customer", Seq("c_custkey"))
-    rep("supplier", Seq("s_suppkey"))
-    rep("part", Seq("p_partkey"))
-    // orders/lineitem share the customer/part/supplier offsets so FK
-    // edges resolve within one replica
-    val ord = spark.read.parquet(s"$sfDir/orders.parquet")
-    val li = spark.read.parquet(s"$sfDir/lineitem.parquet")
-    val cust = spark.read.parquet(s"$sfDir/customer.parquet")
-    val oOff = ord.agg(max(col("o_orderkey"))).head().getLong(0) + 1
-    val cOff = cust.agg(max(col("c_custkey"))).head().getLong(0) + 1
-    val pOff = spark.read.parquet(s"$sfDir/part.parquet")
-      .agg(max(col("p_partkey"))).head().getLong(0) + 1
-    val sOff = spark.read.parquet(s"$sfDir/supplier.parquet")
-      .agg(max(col("s_suppkey"))).head().getLong(0) + 1
-    (0 until k).map { r =>
-      ord.withColumn("o_orderkey", col("o_orderkey") + lit(r * oOff))
-        .withColumn("o_custkey", col("o_custkey") + lit(r * cOff))
-    }.reduce(_ unionAll _).write.mode("overwrite").parquet(s"$outDir/orders.parquet")
-    println(s"[sf1] orders x$k done")
-    (0 until k).map { r =>
-      li.withColumn("l_orderkey", col("l_orderkey") + lit(r * oOff))
-        .withColumn("l_partkey", col("l_partkey") + lit(r * pOff))
-        .withColumn("l_suppkey", col("l_suppkey") + lit(r * sOff))
-    }.reduce(_ unionAll _).write.mode("overwrite").parquet(s"$outDir/lineitem.parquet")
-    println(s"[sf1] lineitem x$k done")
-
-    val ev = graft.ops.Tables.events(spark, sfDir)
-    val eOff = ev.agg(max(col("event_id"))).head().getLong(0) + 1
-    val uOff = ev.agg(max(col("user_id"))).head().getLong(0) + 1
-    (0 until k).map { r =>
-      ev.withColumn("event_id", col("event_id") + lit(r * eOff))
-        .withColumn("user_id", col("user_id") + lit(r * uOff))
-    }.reduce(_ unionAll _).write.mode("overwrite").parquet(s"$outDir/events.parquet")
-    println(s"[sf1] events x$k done")
-
-    val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-    val dOff = docs.agg(max(col("doc_id"))).head().getLong(0) + 1
-    (0 until k).map { r =>
-      docs.select(
-        (col("doc_id") + lit(r * dOff)).as("doc_id"),
-        (if (r == 0) col("text")
-         else regexp_replace(col("text"), "(\\S+)", s"$$1~$r")).as("text"),
-        col("lang"), col("source"), col("n_chars"))
-    }.reduce(_ unionAll _).write.mode("overwrite").parquet(s"$outDir/documents.parquet")
-    println(s"[sf1] documents x$k done")
-
-    val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
-    val vOff = emb.agg(max(col("vec_id"))).head().getLong(0) + 1
-    // labels jitter per replica like every other key (round 18): a
-    // bigger corpus has MORE label blocks of corpus-realistic size, not
-    // the same 10 blocks K× deeper — verbatim labels made every
-    // label-blocked query (q_dedup_embedding) quadratic in K, a
-    // workload the real sf10 would not have (VERDICT r17 #1a)
-    val lOff = emb.agg(max(col("label"))).head().getInt(0) + 1
-    (0 until k).map { r =>
-      emb.withColumn("vec_id", col("vec_id") + lit(r * vOff))
-        .withColumn("label", (col("label") + lit(r * lOff)).cast("int"))
-    }.reduce(_ unionAll _).write.mode("overwrite").parquet(s"$outDir/embeddings.parquet")
-    println(s"[sf1] embeddings x$k done")
-
-    Seq("nation", "region").foreach { t =>
-      spark.read.parquet(s"$sfDir/$t.parquet")
-        .write.mode("overwrite").parquet(s"$outDir/$t.parquet")
-    }
-    println(s"[sf1] dims done -> $outDir")
+    require(args.length >= 2, "usage: MakeSf1 <sfDir> <outDir> [K=10]")
+    val k = args.lift(2).fold(10)(_.toInt)
+    val spark = Ladder.session()
+    new Replicas(spark, args(0)).write(Replicated, Copied, k, args(1))
     spark.stop()
   }
 }

@@ -109,7 +109,7 @@ object StateProbe {
   }
 
   def main(args: Array[String]): Unit = {
-    val spark = ProbeHarness.session()
+    val spark = Ladder.session()
     var failures = List.empty[String]
     def check(cond: Boolean, msg: => String): Unit =
       if (!cond) { failures ::= msg; println(s"FAIL: $msg") }

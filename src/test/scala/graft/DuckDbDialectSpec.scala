@@ -1474,6 +1474,11 @@ class DuckDbDialectSpec extends AnyFunSuite {
     // bare * never leaks the synthetic rank
     val star = DuckDbDialect.rewrite("SELECT DISTINCT ON (k) * FROM t ORDER BY k, ts DESC")
     assert(star.contains("SELECT * EXCEPT (__don_rn) FROM"), star)
+    // nor does a star that already carries an EXCEPT/EXCLUDE list
+    val except = DuckDbDialect.rewrite("SELECT DISTINCT ON (a) * EXCEPT (b) FROM t ORDER BY a, b")
+    assert(except.startsWith("SELECT * EXCEPT (b, __don_rn) FROM ( SELECT *,"), except)
+    val exclude = DuckDbDialect.rewrite("SELECT DISTINCT ON (a) * EXCLUDE (b) FROM t ORDER BY a, b")
+    assert(exclude.startsWith("SELECT * except (b, __don_rn) FROM ( SELECT *,"), exclude)
     // plain DISTINCT (no ON) is untouched
     val plain = "SELECT DISTINCT k FROM t ORDER BY k"
     assert(DuckDbDialect.rewrite(plain) == plain)

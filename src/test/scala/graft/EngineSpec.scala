@@ -372,6 +372,37 @@ class EngineSpec extends AnyFunSuite {
     assert(n == 5)
   }
 
+  test("DISTINCT ON with a star EXCEPT/EXCLUDE/REPLACE modifier returns no rank column") {
+    import spark.implicits._
+    Seq((1, "a", 10), (2, "a", 30), (3, "b", 5))
+      .toDF("id", "k", "v").createOrReplaceTempView("don_ex")
+    for (kw <- Seq("EXCEPT", "EXCLUDE")) {
+      val df = SqlGateway.run(spark,
+        s"SELECT DISTINCT ON (k) * $kw (v) FROM don_ex ORDER BY k, v DESC")
+      assert(df.columns.toSeq == Seq("id", "k"), kw)
+      assert(df.collect().map(r => (r.getInt(0), r.getString(1))).toSeq
+        == Seq((2, "a"), (3, "b")), kw)
+    }
+    val replaced = SqlGateway.run(spark,
+      "SELECT DISTINCT ON (k) * REPLACE (v * 2 AS v) FROM don_ex ORDER BY k, v DESC")
+    assert(replaced.columns.toSeq == Seq("id", "k", "v"))
+    assert(replaced.collect().map(_.getInt(2)).toSeq == Seq(60, 10))
+  }
+
+  test("a FROM-first branch after a commented set operation runs") {
+    import spark.implicits._
+    Seq(1, 2).toDF("a").createOrReplaceTempView("ff_t")
+    Seq(2, 3).toDF("a").createOrReplaceTempView("ff_u")
+    def rows(sql: String) = SqlGateway.run(spark, sql).collect().map(_.getInt(0)).sorted.toSeq
+    // Spark parses a bare `FROM u` branch on its own, but not `FROM u WHERE …`
+    for ((branch, expected) <- Seq("FROM ff_u" -> Seq(1, 2, 2, 3), "FROM ff_u WHERE a > 2" -> Seq(1, 2, 3))) {
+      val plain = rows(s"SELECT a FROM ff_t UNION ALL SELECT * $branch")
+      assert(plain == expected, branch)
+      assert(rows(s"SELECT a FROM ff_t UNION /*c*/ ALL $branch") == plain, branch)
+      assert(rows(s"SELECT a FROM ff_t UNION -- c\nALL $branch") == plain, branch)
+    }
+  }
+
   // --- results / markdown (app.py:81–99 analog) -------------------------
   test("markdown formatting rules") {
     assert(Results.formatCell(null) == "null")
