@@ -1,5 +1,8 @@
 package graft
 
+import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
+
 /** Driver-run benchmark: every SparkEntry query on SPARK_GRAFT_SF_DIR,
   * one shared session (like the reference's per-process engine), full
   * materialization through the noop sink (count() would let Catalyst
@@ -167,6 +170,13 @@ object Bench {
     val maxRuns = math.max(minRuns,
       maxEnv.orElse(runsEnv).getOrElse("6").toInt)
     val acc = scala.collection.mutable.ArrayBuffer.empty[(Double, Seq[(String, Double, Boolean)])]
+    // Janino compiles (misses of Spark's compiled-class cache, see
+    // Session.CodegenCacheEntries) over the timed phase: every suite run
+    // and solo re-run, so an artifact tells "recompiled" from "ran slower".
+    // The time is CodeGenerator's exact sum over the same compiles (the
+    // metric's histogram keeps only a sample of their times).
+    val compiles0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    val compileNs0 = CodeGenerator.compileTime
     while (acc.size < minRuns || (acc.size < maxRuns && !plateaued(acc.map(_._1).toSeq)))
       acc += runSuite()
     // per-query min across runs (contention on either run is one-sided)
@@ -229,6 +239,8 @@ object Bench {
       spread = currentSpread()
     }
     val contended = spread.exists(_ > SpreadBound)
+    val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiles0
+    val compileMs = (CodeGenerator.compileTime - compileNs0) / 1e6
     val walls = acc.map(_._1).toSeq
     val steadyState = plateaued(walls)
     val wall = walls.min
@@ -240,11 +252,12 @@ object Bench {
     val spreadJson = spread.map(num).getOrElse("null")
     val loadJson = loadRuns.map(num).mkString("[", ",", "]")
     val contentionJson = s""""loadavg_start":${num(loadStart)},"loadavg_runs":$loadJson,"spread":$spreadJson,"contended":$contended"""
+    val codegenJson = s""""codegen_compiles":$compiles,"codegen_compile_ms":${num(compileMs)}"""
     // full map → file (too long for one safely-parseable stdout line)
     val full = jmap(results.map(r => r._1 -> r._2).sortBy(_._1))
     try {
       val w = new java.io.PrintWriter("bench_full.json")
-      try w.println(s"""{"wall_sec":${num(wall)},"wall_runs":$wallsJson,"steady_state":$steadyState,$contentionJson,"parallelism":$par,"sf":"$sfDir","failed":$failedJson,"solo_rerun":$soloJson,"queries":$full}""")
+      try w.println(s"""{"wall_sec":${num(wall)},"wall_runs":$wallsJson,"steady_state":$steadyState,$contentionJson,$codegenJson,"parallelism":$par,"sf":"$sfDir","failed":$failedJson,"solo_rerun":$soloJson,"queries":$full}""")
       finally w.close()
     } catch { case _: Throwable => () }
     val head = jmap(headline.flatMap(n => okLatency.get(n).map(n -> _)))
@@ -254,8 +267,8 @@ object Bench {
     // protocol in the artifact forces every committed ratio to be
     // like-for-like (pair with tools/bench_duckdb.py run WITH a
     // timeout arg = per-process, the conservative protocol)
-    val protocol = s""""protocol":"spark local[$cpus] $par-stream concurrent suite, best of ${walls.size} runs, table cache warm; session Session.local: AQE on, shuffle partitions = cores ($cpus), constraint propagation off, range-exchange sample 20 per partition, GraftExtensions + Udfs; compare to DuckDB per-process sequential (tools/bench_duckdb.py with timeout arg)""""
-    val line = s"""{"metric":"total","value":${num(wall)},"unit":"sec","queries":$head,"sf":"$sfDir","sum_sec":${num(sum)},"parallelism":$par,"n_queries":${results.size},"n_failed":${failed.size},"failed":$failedJson,"solo_rerun":$soloJson,"wall_runs":$wallsJson,"steady_state":$steadyState,$contentionJson,$protocol}"""
+    val protocol = s""""protocol":"spark local[$cpus] $par-stream concurrent suite, best of ${walls.size} runs, table cache warm; session Session.local: AQE on, shuffle partitions = cores ($cpus), constraint propagation off, range-exchange sample 20 per partition, codegen cache ${graft.engine.Session.CodegenCacheEntries} entries, GraftExtensions + Udfs; compare to DuckDB per-process sequential (tools/bench_duckdb.py with timeout arg)""""
+    val line = s"""{"metric":"total","value":${num(wall)},"unit":"sec","queries":$head,"sf":"$sfDir","sum_sec":${num(sum)},"parallelism":$par,"n_queries":${results.size},"n_failed":${failed.size},"failed":$failedJson,"solo_rerun":$soloJson,"wall_runs":$wallsJson,"steady_state":$steadyState,$contentionJson,$codegenJson,$protocol}"""
     println(line)
     spark.stop()
     // re-print after spark.stop(): guarantees the JSON is the last

@@ -25,6 +25,8 @@ import org.apache.spark.sql.SparkSession
   *  - 20 range-exchange samples per partition (Spark's default is 100):
   *    range-sort boundary sampling re-executes the sort's child, and fewer
   *    samples per partition cost nothing at these partition counts,
+  *  - [[CodegenCacheEntries]] compiled classes kept (Spark's default is
+  *    100; see there),
   *  - UTC session timezone so results are reproducible against the
   *    DuckDB oracle regardless of host timezone,
   *  - [[graft.functions.GraftExtensions]] (custom SQL functions and the
@@ -35,6 +37,28 @@ import org.apache.spark.sql.SparkSession
   * session this returns.
   */
 object Session {
+  /** Entries of Spark's compiled-class cache
+    * (`spark.sql.codegen.cache.maxEntries`, default 100). The cache is an
+    * LRU, and every round of the same work asks for the same classes in
+    * the same cyclic order: a cache smaller than that working set evicts
+    * each class just before it is asked for again, so nearly every class
+    * is recompiled (Janino) every round. Measured on 4 cores, Janino
+    * compiles per warm round, 100 entries -> this size: a `web_session`
+    * round (3 uploads, 10 asks) 48-83 -> 0, an `ops_mix` pass 75-87 ->
+    * 0-10, a pass over the 180-query library at sf0.01 2,439 -> 34-58.
+    * That library's working set is about 1,800 classes (its first pass
+    * compiles 1,782-1,792), so this size holds it with room to spare.
+    * An entry holds about 32 KB of heap: the 1,876 entries of two
+    * library passes held 60 MB.
+    *
+    * The cache is JVM-global, and its size is read once, from the SQLConf
+    * that is active at the JVM's first code generation (it is a static
+    * conf). It holds only because [[local]] builds the first session of
+    * every main (Cli, WebMain, Bench, Verify, the tools) and `TestSpark`
+    * the first one of the test JVM; a session built after the first
+    * code generation leaves the size as it found it. */
+  val CodegenCacheEntries = 4096
+
   def cores: Int = sys.env.getOrElse("SPARK_GRAFT_CPUS",
     Runtime.getRuntime.availableProcessors().toString).toInt
 
@@ -58,6 +82,7 @@ object Session {
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.constraintPropagation.enabled", "false")
       .config("spark.sql.execution.rangeExchange.sampleSizePerPartition", "20")
+      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .getOrCreate()

@@ -419,6 +419,21 @@ class WebSpec extends AnyFunSuite {
     assert(md.contains(s"newer_col_${WebServer.MaxAnalyses}"), md.take(400))
   }
 
+  test("a second upload of a file, asked the same questions, compiles no class") {
+    // a column order no other test uploads, so the first round compiles
+    val csv = "sales_rep,quantity,customer_city,commission_rate,product_name,price\n" +
+      "Li,2,Beijing,0.05,Phone,999.99\nWang,1,Shanghai,0.08,Laptop,2499.99\n" +
+      "Li,3,Beijing,0.05,Cable,9.5\n"
+    val questions = Seq("每个城市的销售额", "top revenue", "commission", "quantity", "show rows")
+    def round(): Unit = {
+      val (fileId, cookie) = upload("codegen_round.csv", csv)
+      questions.foreach(q => assert(askMd(fileId, q, cookie).contains("Query Result")))
+    }
+    // the counter sees the classes the server's threads compile
+    assert(TestSpark.codegenCompiles(round()) > 0)
+    assert(TestSpark.codegenCompiles(round()) == 0)
+  }
+
   test("stop() ends the server's request pool threads") {
     val ws = new WebServer(spark, Files.createTempDirectory("graft-web-stop").toString).start()
     val prefix = s"graft-web-${ws.boundPort}-"
