@@ -1,5 +1,7 @@
 package graft.engine
 
+import graft.functions.GroupsFrame
+
 /** DuckDB-dialect acceptance shim (VERDICT r11 #3; SURVEY §7.4-1).
   *
   * The reference's NL→SQL contract pins DuckDB SQL
@@ -40,7 +42,7 @@ package graft.engine
   * one depth-0 search and split; one set-operation cut, where EXCEPT
   * right after `*` and before a non-query paren list is the star
   * modifier; and one innermost-query-block-first recursion
-  * ([[innermostFirst]]) for QUALIFY, GROUPS and COLUMNS.
+  * ([[innermostFirst]]) for QUALIFY and COLUMNS.
   *
   * Deliberately bounded (documented, not silently wrong):
   *  - `//` becomes Spark's ` div `, whose analyzed [[IntegralDivide]]
@@ -64,14 +66,13 @@ package graft.engine
   *    ORDER BY peers — decomposes over mixed ROWS/RANGE prefix windows
   *    (round 15; it was the last frame-exclusion throw). MIN/MAX
   *    (non-subtractive) and DISTINCT arguments throw.
-  *  - GROUPS frames (round 16 — forward-compat for the reference's
-  *    pinned duckdb>=1.3.2; the LOCAL 1.0 oracle rejects them, so the
-  *    rewrites are spec-pinned against ANSI semantics, not
-  *    driver-oracled): UNBOUNDED/CURRENT bound mixes map in place to
-  *    the equivalent RANGE/ROWS frame; integer offsets decompose to a
-  *    RANGE of ±n over a hoisted DENSE_RANK helper column (dense ranks
-  *    are gapless, so value distance IS group distance — exact),
-  *    wrapping the SELECT once for all such specs.
+  *  - GROUPS frames (for the reference's pinned duckdb>=1.3.2; the
+  *    local 1.0 oracle rejects them, so they are pinned against ANSI
+  *    goldens, not oracle-checked): the text pass only spells the frame
+  *    as ROWS and marks the spec ([[rewriteGroups]]); the analyzer rule
+  *    [[graft.functions.GroupsFrameRule]] computes it as a RANGE over
+  *    the spec's DENSE_RANK (dense ranks have no gaps, so value distance
+  *    is group distance — exact). Offsets must be constant integers.
   *  - Bracket syntax (round 15): list literals `[e, …]` (and the
   *    `ARRAY[…]` spelling) become array(...); 1-based indexing `x[i]`
   *    becomes try_element_at — Spark's own bracket indexing is 0-BASED,
@@ -96,22 +97,12 @@ package graft.engine
   *    (after WHERE) surfaces Spark's parse error.
   */
 object DuckDbDialect {
-  /** Schema resolver for schema-dependent rewrites (round 20: the
-    * GROUPS wrap's multi-relation qualified star + outer-reference
-    * dequalification), installed per-call by [[rewriteWithSchema]] —
-    * the same information source [[expandColumns]] takes as an
-    * argument, but threaded implicitly because the GROUPS pass sits
-    * many private calls deep. Direct [[rewrite]] callers have none and
-    * keep the named bounded errors. */
-  private val schemaResolver = new ThreadLocal[String => Option[Seq[String]]]
-
   /** [[rewrite]] with relation schemas available (the gateway path):
-    * closes the text-only bounds that are schema-resolvable. */
+    * [[expandColumns]], which needs the FROM relation's columns, and
+    * then the text passes. */
   def rewriteWithSchema(sql: String,
-      schemaOf: String => Option[Seq[String]]): String = {
-    schemaResolver.set(schemaOf)
-    try rewrite(sql) finally schemaResolver.remove()
-  }
+      schemaOf: String => Option[Seq[String]]): String =
+    rewrite(expandColumns(sql, schemaOf))
 
   def rewrite(sql: String): String =
     passes.foldLeft(new Lex(sql)) { (lx, pass) =>
@@ -124,8 +115,10 @@ object DuckDbDialect {
   private val passes: Seq[Lex => String] = Seq(
     rewriteFromFirst, rewriteQualifyDeep, rewriteDistinctOn, rewriteStarReplace,
     rewriteAsOfJoin, rewriteOperatorIntDiv, rewriteUsingSample, rewriteSimilarTo,
-    rewriteIgnoreNulls, rewriteBrackets, rewriteDistinctWindow, rewriteGroupsDeep,
-    rewriteFrameExclude,
+    rewriteIgnoreNulls, rewriteBrackets, rewriteDistinctWindow,
+    // EXCLUDE first: it decomposes a GROUPS frame peer-wise and emits GROUPS
+    // frames, which the GROUPS pass then marks with the rest
+    rewriteFrameExclude, rewriteGroups,
     rewriteCalls(_, "date_diff")(dateDiffCall),
     rewriteCalls(_, "datediff")(dateDiffCall), // 3-arg alias; 2-arg passes
     rewriteCalls(_, "struct_pack")(structPackCall),
@@ -938,8 +931,8 @@ object DuckDbDialect {
     * it is given, so each pass keeps its error text. */
   private[engine] def required(what: String): String = s"requirement failed: $what"
 
-  /** Innermost query block first — the recursion behind the QUALIFY,
-    * GROUPS and COLUMNS passes. `locate` finds the next construct the pass
+  /** Innermost query block first — the recursion behind the QUALIFY
+    * and COLUMNS passes. `locate` finds the next construct the pass
     * rewrites.
     * When it sits inside a parenthesized QUERY block (a subquery or CTE
     * body: [[Lex.opensQuery]]), the innermost such block's content is
@@ -947,10 +940,9 @@ object DuckDbDialect {
     * spliced back, and the whole text is searched again. An expression
     * paren (CAST, a function call) around the construct belongs to the
     * same query block and is not recursed into: doing so would strand a
-    * GROUPS hoist without its SELECT ... FROM (the --groups fuzz caught
-    * every CAST-wrapped window failing the wrap). A construct in no query
-    * block goes to `top`, with the text's Lex and the construct's
-    * position. */
+    * COLUMNS call (`min(COLUMNS('x'))`) without its SELECT ... FROM. A
+    * construct in no query block goes to `top`, with the text's Lex and
+    * the construct's position. */
   private def innermostFirst(lx: Lex, unbalanced: String)(
       locate: Lex => Option[Int])(top: (Lex, Int) => String): String = {
     val sql = lx.s
@@ -1019,7 +1011,7 @@ object DuckDbDialect {
     * (the replicas are named by column); the FROM must list plain
     * identifiers (joins supported — schemas concatenate in FROM order —
     * but a derived-table FROM is rejected). Subquery-level COLUMNS
-    * reduces through the same query-block recursion as the GROUPS
+    * reduces through the same query-block recursion as the QUALIFY
     * pass. */
   def expandColumns(sql: String, schemaOf: String => Option[Seq[String]]): String =
     innermostFirst(new Lex(sql), required("COLUMNS: unbalanced parentheses")) { lx =>
@@ -1134,11 +1126,12 @@ object DuckDbDialect {
   private val GroupsSingleRe = s"(?is)^groups\\s+($GroupsBound)".r
   private val GroupsShapeRe =
     s"(?is)^groups\\s+(between\\s|unbounded\\s+preceding|current\\s+row|(?:\\d+|$GroupsIntExpr)\\s+(preceding|following))".r
+  private val GroupsOffsetRe = s"(?is)(\\d+|$GroupsIntExpr)(\\s+(?:preceding|following))".r
 
   /** Folds the constant-integer offset grammar [[GroupsIntExpr]] admits
-    * into the literal Spark's RANGE bound requires. Throws (named, never
-    * silent) on anything non-constant, negative, or outside the +|−|*
-    * grammar. */
+    * into the literal offset [[rewriteGroups]] writes. Throws (named,
+    * never silent) on anything non-constant, negative, or outside the
+    * +|−|* grammar. */
   private def foldIntOffset(expr0: String): Long = {
     val expr = expr0.trim
     if (expr.nonEmpty && expr.forall(_.isDigit)) return expr.toLong
@@ -1151,7 +1144,7 @@ object DuckDbDialect {
     def fail(why: String): Nothing = throw new IllegalArgumentException(
       s"GROUPS frame offset `$expr0`: $why — only constant integer " +
         "+|-|* arithmetic and CAST(<int> AS <int type>) fold to the " +
-        "literal bound Spark's decomposition needs")
+        "literal bound of a rank-space frame")
     def atom(): Long = {
       ws()
       if (i < expr.length && expr(i) == '(') {
@@ -1205,830 +1198,62 @@ object DuckDbDialect {
     specOf(at).map(sp => (at, sp))
   }
 
-  /** ANSI GROUPS window frames — forward-compat (round 16) for the
-    * reference's pinned `duckdb>=1.3.2` (pyproject.toml:8), which parses
-    * them; the LOCAL DuckDB 1.0 oracle does not ("GROUPS mode for window
-    * functions is not implemented yet", measured), so these rewrites are
-    * spec-pinned against hand-derived ANSI semantics
-    * (DuckDbDialectSpec) and carry no driver oracle — documented in
-    * COVERAGE.md. Spark has no GROUPS token at all (checked against the
-    * 4.1 SqlBaseLexer), so the shim decomposes EXACTLY:
+  /** ANSI GROUPS window frames, for the reference's pinned
+    * `duckdb>=1.3.2` (pyproject.toml:8), which parses them. The local
+    * DuckDB 1.0 oracle does not ("GROUPS mode for window functions is
+    * not implemented yet", measured), so the semantics are pinned
+    * against hand-derived ANSI goldens (DuckDbDialectSpec) and the
+    * soaks' oracle runs a dense-rank equivalent (COVERAGE.md). Spark has
+    * no GROUPS token (checked against the 4.1 SqlBaseLexer), and a text
+    * pass cannot add the Window operator the semantics need, so this
+    * pass only carries the syntax into Catalyst:
     *
-    *  - Bounds drawn only from {UNBOUNDED, CURRENT ROW} (0 PRECEDING/
-    *    FOLLOWING included — both engines read it as CURRENT ROW): the
-    *    frame is directly expressible, rewritten in place —
-    *      UNBOUNDED PRECEDING..CURRENT ROW ≡ RANGE of the same (both
-    *        end at the LAST PEER of the current group);
-    *      CURRENT ROW..UNBOUNDED FOLLOWING ≡ RANGE of the same;
-    *      UNBOUNDED..UNBOUNDED ≡ ROWS UNBOUNDED..UNBOUNDED;
-    *      CURRENT ROW..CURRENT ROW ≡ RANGE CURRENT..CURRENT (the peer
-    *        group).
-    *    Any query shape, named windows included; an EXCLUDE clause is
-    *    preserved (the exclusion pass runs after this one, and its
-    *    row-space segment arithmetic is frame-type-agnostic — ORDER BY
-    *    peers ARE the row's group, so GROUPS exclusion composes).
-    *  - Integer offsets (`GROUPS n PRECEDING/FOLLOWING`): n groups
-    *    back/forward equals a RANGE of ±n over the DENSE_RANK of the
-    *    window's own partition/order — dense ranks are gapless, so
-    *    value distance IS group distance, exact for every bound mix.
-    *    A rank cannot nest inside a window spec, so the query wraps:
-    *      SELECT <list> FROM <rest> [tail]
-    *        → SELECT <list'> FROM ( SELECT *, DENSE_RANK() OVER
-    *            (<partition> <order>) AS __grpN FROM <rest> ) __groups [tail]
-    *    with the spec rewritten to `<partition> ORDER BY __grpN RANGE
-    *    BETWEEN a AND b`. WHERE stays inside the wrap (windows see
-    *    filtered rows, per evaluation order); ORDER BY/LIMIT tails stay
-    *    outside; a bare `*` select list becomes `* EXCEPT (__grpN...)`.
+    *   OVER ([PARTITION BY p] ORDER BY o GROUPS <bounds>)
+    *     → OVER (PARTITION BY graft_groups_frame()[, p] ORDER BY o ROWS <bounds>)
     *
-    * Numeric offsets compose with top-level GROUP BY/HAVING (the wrap
-    * inverts — [[groupedGroupsWrap]], GROUP BY ordinals resolved to
-    * their item expressions), with set-operation branches (each branch
-    * re-enters the deep pass independently), with a named WINDOW
-    * clause (the clause stays in the wrapped block's outer select),
-    * and — round 18 — with GROUP BY and a named WINDOW clause
-    * COMBINED (the clause stays outer with its partition/order
-    * expressions hoisted into the grouped block as __wp/__wo).
+    * in inline OVER specs and named-WINDOW definitions alike. ROWS
+    * parses and resolves with any number of ORDER BY keys and constant
+    * offsets; [[graft.functions.GroupsFrameRule]] then sees the marker
+    * in the analyzed Window's partition spec and moves its frames to
+    * rank space (RANGE over a DENSE_RANK of the spec's own partition and
+    * order — exact, since dense ranks have no gaps). WHERE, GROUP BY,
+    * DISTINCT, QUALIFY, set operations and qualified stars compose
+    * because the rule works on the analyzed plan.
     *
-    * Round 19 closed four former bounds: CONSTANT expression offsets
-    * ((1+1), CAST(2 AS INT) — folded to the literal by
-    * [[foldIntOffset]]; +|−|* only, division excluded because DuckDB's
-    * `/` is float division); a qualified star over a SINGLE-relation
-    * FROM (`SELECT t.*, … FROM tbl t` — there `t.*` ≡ `*`, so it
-    * normalizes into the hoist-star path); `* EXCEPT (cols)` alongside
-    * the hoist star (the helper aliases merge into the existing
-    * exclusion list); and SELECT DISTINCT + GROUP BY (windows evaluate
-    * before DISTINCT, so the keyword moves to the inverted wrap's
-    * OUTER select — the outer list preserves the original items, so
-    * the distinct key tuple is unchanged).
-    *
-    * Round 20 closed the multi-relation qualified star THROUGH THE
-    * GATEWAY: [[rewriteWithSchema]] installs a relation-schema
-    * resolver (the same source as COLUMNS expansion), and the wrap's
-    * outer text resolves `t.*` to the relation's columns and
-    * dequalifies `t.col` references to bare names — each emitted name
-    * verified unique across the joined relations' schemas (shared
-    * names throw, named, since the wrap hides the aliases). Direct
-    * rewrite() callers (no schema source) keep the bounded error.
-    *
-    * Bounded (throws, names the limitation — never silently wrong):
-    * GROUP BY ALL with numeric offsets (both engines reject GROUP BY
-    * ALL + window functions outright — measured, the loud error is
-    * parity); grouped select items that are neither plain columns,
-    * aliased, nor simple calls with identifier/integer arguments;
-    * a qualified star over a MULTI-relation FROM without a schema
-    * resolver, or whose bare names would collide post-wrap;
-    * non-constant (column-dependent) offset expressions; GROUPS
-    * without ORDER BY (rejected by both engines). The single-bound
-    * shorthand `GROUPS n PRECEDING` is BETWEEN n PRECEDING AND CURRENT
-    * ROW, as everywhere else. */
-  private def rewriteGroupsDeep(lx: Lex): String =
-    innermostFirst(lx, required("GROUPS frame: unbalanced parentheses"))(
-      findGroupsFrame(_).map(_._2))((block, _) => rewriteGroupsTop(block))
-
-  private def rewriteGroupsTop(lx0: Lex): String = {
-    val sql0 = lx0.s
-    // set-operation branches are independent window scopes (round 17):
-    // split at depth-0 UNION/INTERSECT/EXCEPT and rewrite each branch
-    // on its own — a hoist-wrapped branch is still a plain SELECT, so
-    // the set op survives, and a statement-level ORDER BY/LIMIT tail
-    // (which trails the LAST branch's text) stays outside that branch's
-    // wrap, i.e. keeps binding to the whole set operation.
-    val cuts = lx0.setOps()
-    if (cuts.nonEmpty) {
-      val sb = new StringBuilder
-      var pos = 0
-      // each branch re-enters the DEEP pass, not the top one: a frame
-      // nested in a subquery inside a branch must be rewritten (and
-      // wrapped) at ITS query block — hoisting it at branch level would
-      // reference __grpN inside the subquery while defining the helper
-      // outside it (unresolved-column AnalysisException)
-      for ((s, e) <- cuts) {
-        val seg = rewriteGroupsDeep(new Lex(sql0.substring(pos, s)))
-        sb.append(seg)
-        // a rewritten branch may have trimmed its boundary whitespace
-        if (seg.nonEmpty && !seg.last.isWhitespace) sb.append(' ')
-        sb.append(sql0.substring(s, e))
-        pos = e
-      }
-      sb.append(rewriteGroupsDeep(new Lex(sql0.substring(pos))))
-      return sb.toString
-    }
-    var sql = sql0
-    // alias → DENSE_RANK expr, collected across every numeric-offset
-    // spec in this block so the wrap happens ONCE
-    val hoists = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
-    var guard = 0
+    * Checked here, each with a named error: offsets must be integer
+    * literals or the constant expressions [[foldIntOffset]] folds (a
+    * folded expression is replaced by its literal); a negative fold; a
+    * spec without ORDER BY (both engines reject it). The shorthand
+    * `GROUPS n PRECEDING` is BETWEEN n PRECEDING AND CURRENT ROW, as
+    * everywhere else. */
+  private def rewriteGroups(lx0: Lex): String = {
     var lx = lx0
     var next = findGroupsFrame(lx)
-    while (next.isDefined && guard < 50) {
-      guard += 1
-      val (gPos, sp) = next.get
-      val rest = sql.substring(gPos)
-      val (aTxt, bTxt, frameLen) = GroupsBetweenRe.findFirstMatchIn(rest) match {
-        case Some(m) => (m.group(1), m.group(2), m.matched.length)
-        case None =>
-          val m = GroupsSingleRe.findFirstMatchIn(rest).getOrElse(
-            throw new IllegalArgumentException(
-              "GROUPS frame: only integer-literal, constant-expression " +
-                "((1+1), CAST(2 AS INT)) and UNBOUNDED/CURRENT ROW bounds are " +
-                "supported by the dialect shim (a column-dependent offset " +
-                "cannot be hoisted into the dense-rank decomposition)"))
-          (m.group(1), "current row", m.matched.length)
-      }
-      def classify(t0: String): (Int, Long) = { // (kind: -2 UP / 2 UF / 0 CUR / -1 nPREC / 1 nFOLL, n)
-        val t = t0.trim.replaceAll("\\s+", " ").toLowerCase(java.util.Locale.ROOT)
-        if (t == "unbounded preceding") (-2, 0L)
-        else if (t == "unbounded following") (2, 0L)
-        else if (t == "current row") (0, 0L)
-        else {
-          // `<offset expr> preceding|following` — the offset is a digit
-          // literal or a constant expression the regex admitted; fold it
-          // (round 19: (1+1), CAST(2 AS INT) — loud error if non-constant)
-          val dir = if (t.endsWith("following")) 1 else -1
-          val v = foldIntOffset(
-            t.stripSuffix("following").stripSuffix("preceding").trim)
-          if (v == 0L) (0, 0L) else (dir, v)
-        }
-      }
-      val a = classify(aTxt); val b = classify(bTxt)
-      val prefix = sql.substring(sp + 1, gPos)
-      // the spec's own ORDER BY (required for a GROUPS frame by both
-      // engines — and the dense-rank hoist is meaningless without it)
-      val orderAt = lx.topWord(sp + 1, gPos, "order") - (sp + 1)
-      if (orderAt < 0)
+    while (next.isDefined) {
+      val (at, sp) = next.get
+      val sql = lx.s
+      val m = GroupsBetweenRe.findFirstMatchIn(sql.substring(at))
+        .orElse(GroupsSingleRe.findFirstMatchIn(sql.substring(at)))
+        .getOrElse(throw new IllegalArgumentException(
+          "GROUPS frame: only integer-literal, constant-expression " +
+            "((1+1), CAST(2 AS INT)) and UNBOUNDED/CURRENT ROW bounds are " +
+            "supported by the dialect shim (a column-dependent offset has " +
+            "no rank-space frame)"))
+      if (lx.topWord(sp + 1, at, "order") < 0)
         throw new IllegalArgumentException(
           "GROUPS frame requires a window ORDER BY (both engines reject it without one)")
-      val inline: Option[String] = (a._1, b._1) match {
-        case (-2, 0) => Some("RANGE BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW")
-        case (0, 2) => Some("RANGE BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING")
-        case (-2, 2) => Some("ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING")
-        case (0, 0) => Some("RANGE BETWEEN CURRENT ROW AND CURRENT ROW")
-        case _ => None
-      }
-      inline match {
-        case Some(mapped) =>
-          sql = sql.substring(0, gPos) + mapped + sql.substring(gPos + frameLen)
-        case None =>
-          // numeric offsets → dense-rank hoist. Works for inline OVER
-          // specs AND named-window definitions (round 17): the WINDOW
-          // clause stays in the wrapped block's OUTER select, where the
-          // helper column the wrap synthesizes IS in reach.
-          val alias = s"__grp${hoists.size + 1}"
-          val partitionClause = prefix.substring(0, orderAt).trim
-          val orderClause = prefix.substring(orderAt).trim
-          hoists += alias ->
-            s"DENSE_RANK() OVER (${(partitionClause + " " + orderClause).trim})"
-          def boundTxt(k: (Int, Long)): String = k match {
-            case (-2, _) => "UNBOUNDED PRECEDING"
-            case (2, _) => "UNBOUNDED FOLLOWING"
-            case (0, _) => "CURRENT ROW"
-            case (1, n) => s"$n FOLLOWING"
-            case (_, n) => s"$n PRECEDING"
-          }
-          val pb = if (partitionClause.nonEmpty) partitionClause + " " else ""
-          val newSpec = s"${pb}ORDER BY $alias RANGE BETWEEN " +
-            s"${boundTxt(a)} AND ${boundTxt(b)}"
-          sql = sql.substring(0, sp + 1) + newSpec + sql.substring(gPos + frameLen)
-      }
-      lx = new Lex(sql)
+      // ROWS for GROUPS, each offset folded (a literal stays as it is)
+      val frame = "ROWS" + GroupsOffsetRe.replaceAllIn(m.matched.substring("groups".length),
+        o => foldIntOffset(o.group(1)).toString + o.group(2))
+      val partAt = lx.topWord(sp + 1, at, "partition")
+      val (markAt, mark) =
+        if (partAt < 0) (lx.fwd(sp + 1), s"PARTITION BY ${GroupsFrame.Name}() ")
+        else (lx.code(partAt + "partition".length, 1) + "by".length, s" ${GroupsFrame.Name}(),")
+      lx = new Lex(sql.substring(0, markAt) + mark + sql.substring(markAt, at) + frame +
+        sql.substring(at + m.matched.length))
       next = findGroupsFrame(lx)
     }
-    if (guard >= 50)
-      throw new IllegalArgumentException("GROUPS frame rewriting did not converge")
-    if (hoists.isEmpty) return sql
-
-    // ---- one wrap for all hoisted dense ranks ----
-    // a real named-WINDOW clause is `WINDOW <ident> AS (` — a column
-    // that happens to be NAMED window (e.g. `WHERE window > 5`) must
-    // not truncate the wrapped body at its reference (round-18 advice)
-    def isWindowClauseAt(i: Int): Boolean = {
-      var k = i + "window".length
-      while (k < sql.length && sql(k).isWhitespace) k += 1
-      val idStart = k
-      while (k < sql.length && isIdentChar(sql(k))) k += 1
-      if (k == idStart) return false
-      while (k < sql.length && sql(k).isWhitespace) k += 1
-      if (!sql.regionMatches(true, k, "as", 0, 2)) return false
-      k += 2
-      while (k < sql.length && sql(k).isWhitespace) k += 1
-      k < sql.length && sql(k) == '('
-    }
-    val (selAt, fromAt) = lx.selectFrom()
-    require(selAt >= 0 && fromAt > selAt,
-      "GROUPS frame: could not locate the SELECT ... FROM block to wrap")
-    val groupAt = lx.topWord(fromAt, sql.length, "group", "having")
-    val windowAt = lx.findTop(fromAt)(i => lx.word(i, "window") && isWindowClauseAt(i))
-    val tailAt = lx.topWord(fromAt, sql.length, "order", "limit", "offset")
-
-    if (groupAt >= 0) {
-      // grouped block (round 17): the wrap INVERTS — see groupedGroupsWrap
-      // (round 18: a named WINDOW clause composes — it stays in the
-      // outer select with its partition/order expressions hoisted inner)
-      return groupedGroupsWrap(sql, selAt, fromAt, tailAt, windowAt, hoists.toSeq)
-    }
-    // a named WINDOW clause stays in the OUTER select (its rewritten
-    // spec references the hoisted __grpN, defined by the wrap); WHERE
-    // stays inside (windows see filtered rows)
-    val restEnd =
-      if (windowAt >= 0) windowAt else if (tailAt < 0) sql.length else tailAt
-    val body = sql.substring(fromAt + "from".length, restEnd).trim
-    // Round 19: when the block reads exactly ONE relation (`FROM name
-    // [AS] [alias] [WHERE …]` — no join, no comma, no subquery), a
-    // qualified star over that relation's alias (or base name) selects
-    // the same columns as a bare `*`, so `t.*` normalizes to `*` before
-    // the star handling below. Multi-relation FROMs stay bounded out:
-    // there the wrap hides the alias and the column subset is unknowable
-    // from text.
-    val singleRelNames: Set[String] =
-      "(?is)^([A-Za-z_][\\w.$]*|\"[^\"]+\"|`[^`]+`)(?:\\s+(?:as\\s+)?(?!where\\b|qualify\\b)([A-Za-z_]\\w*))?\\s*(?:where\\b.*)?$".r
-        .findFirstMatchIn(body) match {
-        case Some(m) =>
-          val base = m.group(1).split('.').last.replaceAll("[\"`]", "")
-            .toLowerCase(java.util.Locale.ROOT)
-          Option(m.group(2)) match {
-            // an explicit alias SHADOWS the base name (both engines)
-            case Some(al) => Set(al.toLowerCase(java.util.Locale.ROOT))
-            case None => Set(base)
-          }
-        case None => Set.empty
-      }
-    val list00 = {
-      val raw = sql.substring(selAt + "select".length, fromAt)
-      if (singleRelNames.isEmpty) raw
-      else {
-        // rewrite projection-position `alias.*` → `*` when the alias
-        // names the block's sole relation
-        val rl = new Lex(raw)
-        val sb = new StringBuilder
-        var last = 0
-        rl.tops()(raw(_) == '*').foreach { k0 =>
-          val p = rl.back(k0 - 1)
-          if (p >= 0 && raw(p) == '.') {
-            val qe = rl.back(p - 1)
-            val q = rl.identTo(qe) - 1
-            val qual = raw.substring(q + 1, qe + 1)
-            val b = rl.back(q)
-            val projectionPos = b < 0 || raw(b) == ','
-            if (projectionPos && qual.nonEmpty &&
-                singleRelNames(qual.toLowerCase(java.util.Locale.ROOT))) {
-              sb.append(raw.substring(last, q + 1)).append('*')
-              last = k0 + 1
-            }
-          }
-        }
-        sb.append(raw.substring(last)).toString
-      }
-    }
-    // Round 20: with the gateway's schema resolver installed, a
-    // REMAINING projection-position qualified star (multi-relation
-    // FROM) expands to its relation's column names, and qualified
-    // column references in the outer text (select list + statement
-    // tail — both evaluate OUTSIDE the wrap, where the relation
-    // aliases are hidden) dequalify to bare names; both steps verify
-    // each bare name is unique across the joined relations. A direct
-    // rewrite() caller has no resolver and keeps the named bounded
-    // error below.
-    val list0 = resolveOuterQualifiers(list00, body)
-    // star handling: a projection star must not leak the helper columns
-    val ll = new Lex(list0)
-    var starAt = -1
-    ll.tops()(list0(_) == '*').foreach { li =>
-      val p = ll.back(li - 1)
-      if (p < 0 || list0(p) == ',') starAt = li // projection star
-      else if (list0(p) == '.')
-        throw new IllegalArgumentException(
-          "GROUPS frame with integer offsets and a qualified star (t.*) " +
-            "is only supported when the qualifier names the block's sole " +
-            "FROM relation (there t.* ≡ *); over a multi-relation FROM " +
-            "or a shadowed base name, run through the SQL gateway (which " +
-            "resolves relation schemas, round 20) or name the columns")
-      else {
-        // `SELECT DISTINCT *` / `SELECT ALL *`: still the projection
-        // star (round 19 — without this the helper column leaked
-        // through the un-rewritten star into the DISTINCT output)
-        val w = list0.substring(ll.identTo(p), p + 1)
-          .toLowerCase(java.util.Locale.ROOT)
-        if ((w == "distinct" || w == "all") &&
-            list0.substring(0, ll.identTo(p)).trim.isEmpty)
-          starAt = li
-      }
-    }
-    val aliases = hoists.map(_._1).mkString(", ")
-    val list =
-      if (starAt < 0) list0
-      else {
-        val afterStar = list0.substring(starAt + 1)
-        // EXCLUDE is matched too: the call-shaped EXCLUDE→EXCEPT rename
-        // runs AFTER this pass, so DuckDB spelling still reads EXCLUDE here
-        "(?is)^\\s*(?:except|exclude)\\s*\\(".r.findFirstMatchIn(afterStar) match {
-          case Some(m) =>
-            // round 19: `* EXCEPT (cols)` composes — merge the helper
-            // aliases into the existing exclusion list instead of
-            // double-nesting a second EXCEPT
-            val absOpen = starAt + 1 + m.matched.length - 1
-            val close = ll.closeOf(absOpen,
-              required("GROUPS frame: unbalanced * EXCEPT parentheses"))
-            list0.substring(0, close) + s", $aliases" + list0.substring(close)
-          case None =>
-            list0.substring(0, starAt) + s"* EXCEPT ($aliases)" + afterStar
-        }
-      }
-    val tail = if (restEnd >= sql.length) ""
-      else " " + resolveOuterQualifiers(sql.substring(restEnd).trim, body)
-    val synth = hoists.map { case (al, ex) => s"$ex AS $al" }.mkString(", ")
-    sql.substring(0, selAt) + "SELECT " + list.trim +
-      s" FROM ( SELECT *, $synth FROM $body ) __groups" + tail
-  }
-
-  /** Relations of a FROM body (`a [AS] x JOIN b y ON … [, c z]`) as
-    * (aliasLower, tableNameText) in order — identifier relations only;
-    * a derived table throws (named — the caller's qualified-star
-    * expansion cannot know a subquery's columns from text). The body
-    * may carry a WHERE/QUALIFY tail; ON/USING expressions are skipped
-    * (only the word JOIN or a depth-0 comma re-arms table
-    * expectation). */
-  private def groupsFromRelations(body: String): Seq[(String, String)] = {
-    val lx = new Lex(body)
-    val aliasStop = Set("on", "using", "join", "inner", "left", "right",
-      "full", "cross", "natural", "asof", "anti", "semi", "lateral",
-      "where", "qualify", "group", "order", "limit", "offset", "union",
-      "intersect", "except", "window", "having")
-    val out = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
-    var expectTable = true
-    var i = 0; var stop = false
-    while (i < body.length && !stop) {
-      if (!lx.masked(i)) {
-        val c = body(i)
-        if (expectTable && c == '(')
-          throw new IllegalArgumentException(
-            "GROUPS frame: qualified-star/reference resolution over a " +
-              "derived-table FROM is outside the dialect shim — name the " +
-              "columns")
-        else if (expectTable && isIdentChar(c)) {
-          var e = i
-          while (e < body.length && (isIdentChar(body(e)) || body(e) == '.')) e += 1
-          val table = body.substring(i, e)
-          var alias = table.split('.').last.toLowerCase(java.util.Locale.ROOT)
-          val k = lx.fwd(e)
-          if (k < body.length && isIdentChar(body(k)) && !lx.masked(k)) {
-            val e2 = lx.identFrom(k)
-            val w = body.substring(k, e2).toLowerCase(java.util.Locale.ROOT)
-            if (w == "as") {
-              val k2 = lx.fwd(e2)
-              val e3 = lx.identFrom(k2)
-              require(e3 > k2, "GROUPS frame: dangling AS in FROM")
-              alias = body.substring(k2, e3).toLowerCase(java.util.Locale.ROOT)
-              e = e3
-            } else if (!aliasStop(w)) { alias = w; e = e2 }
-          }
-          out += ((alias, table))
-          expectTable = false
-          i = e - 1
-        } else if (!expectTable && lx.depthAt(i) == 0) {
-          if (c == ',') expectTable = true
-          else if (lx.word(i, "join")) { expectTable = true; i += 3 }
-          else if (lx.word(i, "where") || lx.word(i, "qualify")) stop = true
-        }
-      }
-      i += 1
-    }
-    out.toSeq
-  }
-
-  /** Round 20: schema-resolvable handling of qualified names in the
-    * GROUPS wrap's OUTER text (select list / statement tail), where the
-    * FROM aliases are hidden behind the `__groups` subquery. With the
-    * gateway resolver installed ([[rewriteWithSchema]]):
-    *  - a projection-position `alias.*` expands to the relation's
-    *    column names (bare, backticked);
-    *  - any `alias.col` reference dequalifies to bare `col`;
-    * and in BOTH cases every emitted bare name is verified unique
-    * across the OTHER joined relations' schemas (the inner `SELECT *`
-    * exposes all relations' columns, so a shared name would be
-    * ambiguous — thrown, named, never silently wrong). Unknown
-    * qualifiers pass through untouched (struct fields, map access —
-    * the engine resolves or rejects them itself). Without a resolver
-    * the text is returned unchanged, so the existing bounded error
-    * fires for multi-relation stars exactly as before. */
-  private def resolveOuterQualifiers(text: String, body: String): String = {
-    val resolver = schemaResolver.get()
-    if (resolver == null || !text.contains(".")) return text
-    // an unparseable FROM (derived table) yields NO relations: every
-    // qualified candidate then passes through untouched — exactly the
-    // pre-round-20 behavior (struct-field access over a derived FROM
-    // keeps working; a multi-relation star still hits the bounded
-    // error downstream)
-    lazy val rels: Seq[(String, String)] =
-      scala.util.Try(groupsFromRelations(body)).getOrElse(Seq.empty)
-    def lc(s: String) = s.toLowerCase(java.util.Locale.ROOT)
-    def colsOf(alias: String): Option[Seq[String]] =
-      rels.find(_._1 == alias).flatMap { case (_, tab) => resolver(tab) }
-    def assertUnique(alias: String, col: String): Unit =
-      rels.filter(_._1 != alias).foreach { case (oal, otab) =>
-        resolver(otab) match {
-          case Some(ocols) if ocols.exists(c => lc(c) == lc(col)) =>
-            throw new IllegalArgumentException(
-              s"GROUPS frame: column `$col` of '$alias' also exists in " +
-                s"'$oal' — the wrapped subquery hides the relation " +
-                "aliases, so the shared name would be ambiguous; project " +
-                "and alias it before the window")
-          case Some(_) => ()
-          case None => throw new IllegalArgumentException(
-            s"GROUPS frame: cannot verify `$alias.$col` is unambiguous — " +
-              s"relation '$otab' has no resolvable schema")
-        }
-      }
-    val lx = new Lex(text)
-    val sb = new StringBuilder
-    var i = 0
-    while (i < text.length) {
-      val c = text(i)
-      var consumed = false
-      if (!lx.masked(i) && isIdentChar(c) && (i == 0 ||
-          (!isIdentChar(text(i - 1)) && text(i - 1) != '.'))) {
-        val e = lx.identFrom(i)
-        var k = lx.fwd(e)
-        if (k < text.length && text(k) == '.') {
-          k = lx.fwd(k + 1)
-          val qual = lc(text.substring(i, e))
-          if (rels.exists(_._1 == qual)) {
-            if (k < text.length && text(k) == '*') {
-              // `alias.*` — expand to the relation's columns
-              val cols = colsOf(qual).getOrElse(
-                throw new IllegalArgumentException(
-                  s"GROUPS frame: relation of qualified star " +
-                    s"`${text.substring(i, e)}.*` has no resolvable schema"))
-              cols.foreach(assertUnique(qual, _))
-              sb.append(cols.map(cc => s"`$cc`").mkString(", "))
-              i = k + 1
-              consumed = true
-            } else if (k < text.length && isIdentChar(text(k))) {
-              val e2 = lx.identFrom(k)
-              // 3-part names (db.tbl.col) pass through untouched
-              val afterIsDot = { val k2 = lx.fwd(e2); k2 < text.length && text(k2) == '.' }
-              val col = text.substring(k, e2)
-              val known = colsOf(qual).exists(_.exists(cc => lc(cc) == lc(col)))
-              if (!afterIsDot && known) {
-                assertUnique(qual, col)
-                sb.append(s"`$col`")
-                i = e2
-                consumed = true
-              }
-            }
-          }
-        }
-      }
-      if (!consumed) { sb.append(c); i += 1 }
-    }
-    sb.toString
-  }
-
-  /** Numeric-offset GROUPS frames over a grouped query block (round
-    * 17). Windows evaluate AFTER grouping, so the dense-rank helper
-    * must rank the GROUPED rows — the wrap therefore INVERTS relative
-    * to the plain case: the grouped query becomes the inner subquery
-    * (keeping FROM/WHERE/GROUP BY/HAVING and every non-window select
-    * item verbatim, so aggregates compute where their inputs live), and
-    * the GROUPS windows evaluate in the OUTER block over synthesized
-    * columns:
-    *   - each non-literal window ARGUMENT expression (an aggregate of
-    *     the grouped block, e.g. the inner SUM of SUM(SUM(x)) OVER …)
-    *     moves inner as `__waK`; the outer call reads the alias.
-    *     `COUNT(*)` needs nothing — it counts the grouped rows.
-    *   - each spec PARTITION BY expression moves inner as `__wpK`.
-    *   - the DENSE_RANK hoists (original partition/order text — grouped
-    *     expressions, valid inner) compute inner as `__grpN`; windows
-    *     in a grouped select list evaluate after the aggregation.
-    *   - a named WINDOW clause (round 18) stays in the OUTER block:
-    *     every defined spec is rewritten for outer evaluation (GROUPS
-    *     specs keep ORDER BY __grpN; plain specs hoist their partition
-    *     AND order expressions as __wp/__wo, keeping direction tokens
-    *     and frame text), and every item referencing a defined name
-    *     keeps the reference with its call arguments hoisted as __waK.
-    * Non-window items pass through by OUTPUT NAME: a trailing
-    * `AS alias`, a plain (qualified) identifier, or a simple call whose
-    * auto-name both engines derive identically ([[derivedCallName]]);
-    * anything else is bounded out loudly (alias it). GROUP BY ordinals
-    * are resolved to their item expressions before the wrap (positions
-    * shift through it); GROUP BY ALL is bounded out — both engines
-    * reject ALL + window functions (measured round 18). ORDER BY
-    * ordinals in the statement tail are safe — the outer list preserves
-    * the original arity and order. A wrapper expression AROUND the
-    * window call that references other grouped values stays in the
-    * outer text: it resolves against the inner aliases when they exist
-    * and fails ANALYSIS (loudly, never silently) when they don't. */
-  private def groupedGroupsWrap(sql: String, selAt: Int, fromAt: Int,
-      tailAt: Int, windowAt: Int, hoists: Seq[(String, String)]): String = {
-    // SELECT DISTINCT composes (round 19, closing the r16 bound):
-    // windows evaluate BEFORE DISTINCT in both engines, so the keyword
-    // moves to the OUTER select of the inverted wrap — the outer list
-    // preserves the original items exactly (arity, order, names), so
-    // the distinct key tuple is unchanged; the INNER grouped block must
-    // NOT carry it (deduping grouped rows before the windows see them
-    // would change frame contents).
-    val rawList = sql.substring(selAt + "select".length, fromAt)
-    val distinctHead = "(?is)^\\s*distinct\\b".r.findFirstIn(rawList).isDefined
-    val list0 =
-      if (distinctHead) rawList.replaceFirst("(?is)^\\s*distinct\\b", " ")
-      else rawList
-    val wrapEnd =
-      if (windowAt >= 0) windowAt else if (tailAt < 0) sql.length else tailAt
-    val fromText = sql.substring(fromAt, wrapEnd).trim
-    val tail = if (tailAt < 0) "" else " " + sql.substring(tailAt).trim
-    // depth-0, out-of-string position of keyword `w` in `s0`, else -1
-    def kwAt(s0: String, w: String): Int = new Lex(s0).topWord(0, s0.length, w)
-    // GROUP BY ordinals / ALL shift through the wrap — bound out
-    val gb = kwAt(fromText, "group")
-    var fromTextR = fromText
-    if (gb >= 0) {
-      val gbTail = fromText.substring(gb)
-      val gbList = "(?is)^group\\s+by\\s+(.*)$".r.findFirstMatchIn(gbTail)
-        .map(_.group(1)).getOrElse("")
-      val gbEnd = "(?is)\\bhaving\\b".r.findFirstMatchIn(gbList)
-        .map(_.start).getOrElse(gbList.length)
-      val keys = new Lex(gbList.substring(0, gbEnd)).split(',').map(_.trim)
-      // GROUP BY ALL + window functions: BOTH engines reject the
-      // combination outright (measured round 18 — DuckDB 1.0 "Cannot
-      // mix aggregates with non-aggregated columns" / "Cannot group on
-      // a window clause"; Spark 4.1 UNSUPPORTED_EXPR_FOR_OPERATOR on
-      // the inferred window key) — so the shim's loud error IS parity
-      if (keys.exists(_.equalsIgnoreCase("all")))
-        throw new IllegalArgumentException(
-          "GROUPS frame with integer offsets over GROUP BY ALL: both " +
-            "engines reject GROUP BY ALL combined with window functions " +
-            "(measured: DuckDB 'Cannot mix aggregates with non-aggregated " +
-            "columns', Spark UNSUPPORTED_EXPR_FOR_OPERATOR) — name the " +
-            "grouping keys")
-      // GROUP BY ordinals (round 18): resolve each ordinal to the
-      // alias-stripped text of the referenced select item BEFORE the
-      // wrap — positions shift through the hoist (window items leave
-      // the inner list; __wa/__wp extracts join it), so the ordinal
-      // must be pinned to its expression here. An ordinal naming a
-      // window item resolves to the window text and fails analysis
-      // loudly (it was never a legal grouping key).
-      if (keys.exists(_.matches("\\d+"))) {
-        val items = new Lex(list0).split(',')
-        val resolved = keys.map { k =>
-          if (!k.matches("\\d+")) k
-          else {
-            val i = k.toInt
-            if (i < 1 || i > items.length)
-              throw new IllegalArgumentException(
-                s"GROUP BY ordinal $i out of range (${items.length} select items)")
-            stripTrailingAlias(items(i - 1)).trim
-          }
-        }
-        val gbHead = gbTail.substring(0, gbTail.length - gbList.length)
-        val having = gbList.substring(gbEnd).trim
-        fromTextR = fromText.substring(0, gb) + gbHead +
-          resolved.mkString(", ") + (if (having.nonEmpty) " " + having else "")
-      }
-    }
-    val innerItems = scala.collection.mutable.ArrayBuffer.empty[String]
-    val outerItems = scala.collection.mutable.ArrayBuffer.empty[String]
-    var waN = 0; var wpN = 0; var woN = 0
-    val literalRe = "(?s)^\\s*(\\d+(\\.\\d+)?|'(?:[^']|'')*'|true|false|null)\\s*$"
-    // window-call argument list → inner __wa aliases (shared by the
-    // inline-OVER and named-OVER paths)
-    def rewriteArgs(argsTxt: String): String =
-      if (argsTxt.trim == "*") argsTxt
-      else new Lex(argsTxt).split(',').map { a =>
-        if (a.trim.isEmpty || a.trim.toLowerCase.matches(literalRe)) a
-        else {
-          waN += 1
-          innerItems += s"${a.trim} AS __wa$waN"
-          s"__wa$waN"
-        }
-      }.mkString(", ")
-    // a window SPEC evaluated in the OUTER (post-wrap) block: partition
-    // and order EXPRESSIONS move inner as __wp/__wo aliases (grouped
-    // expressions are only computable inside the grouped block); an
-    // already-hoisted GROUPS spec keeps its ORDER BY __grpN + frame
-    // verbatim (the rank is synthesized inner); a frame over a plain
-    // order expr keeps its text (the alias carries the same values)
-    def rewriteSpecForOuter(spec: String): String = {
-      val obAt = kwAt(spec, "order")
-      val partTxt = (if (obAt < 0) spec else spec.substring(0, obAt)).trim
-      val partOut =
-        if (partTxt.isEmpty) ""
-        else {
-          val exprs = "(?is)^partition\\s+by\\s+(.*)$".r
-            .findFirstMatchIn(partTxt).map(_.group(1)).getOrElse(
-              throw new IllegalArgumentException(
-                s"GROUPS hoist: unexpected spec prefix: $partTxt"))
-          val aliased = new Lex(exprs).split(',').map { p =>
-            wpN += 1
-            innerItems += s"${p.trim} AS __wp$wpN"
-            s"__wp$wpN"
-          }.mkString(", ")
-          s"PARTITION BY $aliased "
-        }
-      if (obAt < 0) return partOut.trim
-      val obTail = spec.substring(obAt)
-      if ("(?i)__grp\\d".r.findFirstIn(obTail).isDefined)
-        return (partOut + obTail).trim
-      // plain spec: ORDER BY e1 [dir], e2 [dir] [frame]
-      val obBody = "(?is)^order\\s+by\\s+(.*)$".r
-        .findFirstMatchIn(obTail).map(_.group(1)).getOrElse(
-          throw new IllegalArgumentException(
-            s"GROUPS hoist: malformed window ORDER BY: $obTail"))
-      val frameAt = Seq("rows", "range", "groups").map(kwAt(obBody, _))
-        .filter(_ >= 0).sorted.headOption.getOrElse(obBody.length)
-      val frame = obBody.substring(frameAt).trim
-      val orderItems = new Lex(obBody.substring(0, frameAt)).split(',').map { o =>
-        // split a trailing direction off the expression
-        var e = o.trim; var dir = ""
-        "(?is)\\s+nulls\\s+(first|last)\\s*$".r.findFirstMatchIn(e).foreach { m =>
-          dir = e.substring(m.start).trim; e = e.substring(0, m.start)
-        }
-        "(?is)\\s+(asc|desc)\\s*$".r.findFirstMatchIn(e).foreach { m =>
-          dir = (e.substring(m.start).trim + " " + dir).trim
-          e = e.substring(0, m.start)
-        }
-        woN += 1
-        innerItems += s"${e.trim} AS __wo$woN"
-        if (dir.isEmpty) s"__wo$woN" else s"__wo$woN $dir"
-      }
-      (partOut + "ORDER BY " + orderItems.mkString(", ") +
-        (if (frame.isEmpty) "" else " " + frame)).trim
-    }
-    // named WINDOW clause (round 18): the clause stays in the OUTER
-    // select — every defined spec is rewritten for outer evaluation,
-    // and every select item referencing a defined name has its call
-    // arguments hoisted inner like an inline item
-    var windowOuter = ""
-    var winNames = Set.empty[String]
-    if (windowAt >= 0) {
-      val winEnd = if (tailAt < 0) sql.length else tailAt
-      val defsTxt = "(?is)^window\\s+(.*)$".r
-        .findFirstMatchIn(sql.substring(windowAt, winEnd).trim).map(_.group(1))
-        .getOrElse(throw new IllegalArgumentException(
-          "GROUPS frame over GROUP BY: malformed WINDOW clause"))
-      val defRe = "(?is)^\\s*([A-Za-z_][A-Za-z0-9_]*)\\s+as\\s*\\((.*)\\)\\s*$".r
-      val defs = new Lex(defsTxt).split(',').map {
-        case defRe(nm, spec) => nm -> spec
-        case other => throw new IllegalArgumentException(
-          s"GROUPS frame over GROUP BY: unsupported WINDOW definition: $other")
-      }
-      winNames = defs.map(_._1.toLowerCase(java.util.Locale.ROOT)).toSet
-      windowOuter = " WINDOW " + defs.map { case (nm, spec) =>
-        s"$nm AS (${rewriteSpecForOuter(spec)})"
-      }.mkString(", ")
-    }
-    // does this item reference a defined window name (`OVER <name>`)?
-    def namedRefAt(s0: String): Int = {
-      val l0 = new Lex(s0)
-      l0.find()(i => l0.word(i, "over") && {
-        val k = l0.fwd(i + 4)
-        k < s0.length && s0(k) != '(' &&
-          winNames.contains(s0.substring(k, l0.identFrom(k)).toLowerCase(java.util.Locale.ROOT))
-      })
-    }
-    for (item <- new Lex(list0).split(',')) {
-      if (!"(?i)__grp\\d".r.findFirstIn(item).isDefined &&
-          namedRefAt(item) < 0) {
-        // passthrough: compute inner, project by output name
-        innerItems += item.trim
-        val asRe =
-          "(?is)^.*\\S\\s+as\\s+([A-Za-z_][A-Za-z0-9_]*|`[^`]+`)\\s*$".r
-        val identRe =
-          "(?s)^\\s*([A-Za-z_][A-Za-z0-9_]*(?:\\.[A-Za-z_][A-Za-z0-9_]*)*)\\s*$".r
-        item match {
-          case asRe(alias) => outerItems += alias
-          case identRe(path) => outerItems += path.split('.').last
-          case _ => derivedCallName(item) match {
-            // unaliased simple call (round 18): the inner block keeps
-            // the item verbatim, so Spark auto-names it with the same
-            // pretty-print DuckDB generates (measured on both engines:
-            // sum(x) → `sum(x)`, substr(s,1,2) → `substr(s, 1, 2)`);
-            // the outer projects that derived name. A shape the rule
-            // cannot derive stays bounded out; a wrong derivation fails
-            // ANALYSIS as an unresolved column — loud, never silent.
-            case Some(n) => outerItems += s"`$n`"
-            case None => throw new IllegalArgumentException(
-              "GROUPS frame with integer offsets over GROUP BY requires every " +
-                "other select item to be a plain column, a simple call " +
-                "(identifier/integer arguments), or carry an explicit " +
-                "alias (the item must pass through the hoist wrap by name): " +
-                item.trim)
-          }
-        }
-      } else {
-        // the window CALL immediately before position `ovPos`: fn(args)
-        // → args hoisted inner; returns (callStart, rebuilt call text)
-        def rewriteCallBefore(cl: Lex, ovPos: Int): (Int, String) = {
-          val cur = cl.s
-          val ce = cl.back(ovPos - 1)
-          require(ce >= 0 && cur(ce) == ')',
-            "GROUPS frame over GROUP BY: expected a window CALL before OVER")
-          val cs = cl.openOf(ce)
-          val fs = cl.identTo(cs - 1)
-          val fnName = cur.substring(fs, cs)
-          require(fnName.nonEmpty,
-            "GROUPS frame over GROUP BY: expected a window CALL before OVER")
-          (fs, fnName + "(" + rewriteArgs(cur.substring(cs + 1, ce)) + ")")
-        }
-        // pre-pass: calls bound to DEFINED window names (`fn(...) OVER w`)
-        // keep their reference — the rewritten clause sits in the outer
-        // select — but their argument aggregates hoist inner
-        val sbN = new StringBuilder
-        var curN = item
-        var guardN = 0
-        while (namedRefAt(curN) >= 0 && guardN < 20) {
-          guardN += 1
-          val ovPos = namedRefAt(curN)
-          val cl = new Lex(curN)
-          val k = cl.identFrom(cl.fwd(ovPos + 4)) // past the name
-          val (callStart, callTxt) = rewriteCallBefore(cl, ovPos)
-          // end of the original call text (the ')' just before OVER)
-          val afterCall = cl.back(ovPos - 1) + 1
-          sbN.append(curN.substring(0, callStart)).append(callTxt)
-            .append(curN.substring(afterCall, k)) // " OVER name" verbatim
-          curN = curN.substring(k)
-        }
-        require(guardN < 20, "GROUPS grouped wrap (named) did not converge")
-        sbN.append(curN)
-        // inline pass: rewrite each hoisted `OVER ( … __grpN … )` call
-        val sb = new StringBuilder
-        var cur = sbN.toString
-        var guard = 0
-        while ("(?i)__grp\\d".r.findFirstIn(cur).isDefined && guard < 20) {
-          guard += 1
-          val cl = new Lex(cur)
-          def specClose(open: Int): Int =
-            cl.closeOf(open, required("GROUPS frame: unbalanced parentheses"))
-          // the OVER ( … __grpN … ) span
-          val ov = cl.find()(oi => cl.word(oi, "over") && {
-            val k = cl.fwd(oi + 4)
-            k < cur.length && cur(k) == '(' &&
-              "(?i)__grp\\d".r.findFirstIn(cur.substring(k + 1, specClose(k))).isDefined
-          })
-          require(ov >= 0, s"GROUPS hoist: lost the rewritten spec in: $item")
-          val (callStart, callTxt) = rewriteCallBefore(cl, ov)
-          // spec partition exprs → inner aliases; ORDER BY __grpN stays
-          val specStart = cl.fwd(ov + 4) + 1
-          val specEnd = specClose(specStart - 1) + 1
-          val spec = cur.substring(specStart, specEnd - 1)
-          if (kwAt(spec, "order") < 0)
-            throw new IllegalArgumentException(
-              s"GROUPS hoist: rewritten spec lost its ORDER BY: $spec")
-          sb.append(cur.substring(0, callStart)).append(callTxt)
-            .append(" OVER (").append(rewriteSpecForOuter(spec)).append(')')
-          cur = cur.substring(specEnd)
-        }
-        require(guard < 20, "GROUPS grouped wrap did not converge")
-        sb.append(cur)
-        outerItems += sb.toString.trim
-      }
-    }
-    val synth = hoists.map { case (al, ex) => s"$ex AS $al" }
-    val innerAll = (innerItems ++ synth).mkString(", ")
-    sql.substring(0, selAt) + "SELECT " +
-      (if (distinctHead) "DISTINCT " else "") + outerItems.mkString(", ") +
-      s" FROM ( SELECT $innerAll $fromTextR ) __groups" + windowOuter + tail
-  }
-
-  /** The trailing `AS alias` stripped from a select item (for GROUP BY
-    * ordinal resolution — the ordinal groups by the item's EXPRESSION). */
-  private def stripTrailingAlias(item: String): String =
-    "(?is)^(.*\\S)\\s+as\\s+([A-Za-z_][A-Za-z0-9_]*|`[^`]+`)\\s*$".r
-      .findFirstMatchIn(item).map(_.group(1)).getOrElse(item)
-
-  /** The auto-generated column name of an unaliased select item, iff it
-    * is derivable EXACTLY: a single call `fn(a, b, ...)` whose top-level
-    * arguments are all plain (possibly qualified) identifiers or integer
-    * literals → lowercase fn, args joined with ", ", qualified idents
-    * reduced to their last segment. Measured round 18 to be the
-    * identical convention on both engines (Spark toPrettySQL, DuckDB):
-    * `SUM(x)` → `sum(x)`, `substr(s,1,2)` → `substr(s, 1, 2)`.
-    * Excluded (returns None → the caller's loud bound): `count(*)`
-    * (Spark names it count(1), DuckDB count_star()), DISTINCT/nested/
-    * string-literal arguments, anything trailing the call (operators,
-    * OVER). */
-  private def derivedCallName(item: String): Option[String] = {
-    "(?s)^\\s*([A-Za-z_][A-Za-z0-9_]*)\\s*\\((.*)\\)\\s*$".r
-      .findFirstMatchIn(item).flatMap { m =>
-        val argsTxt = m.group(2)
-        // greedy-to-last-')' capture: the parens inside must balance and
-        // never go negative, or the item is NOT one single call
-        var d = 0; var ok = true
-        argsTxt.foreach { c =>
-          if (c == '(') d += 1
-          else if (c == ')') { d -= 1; if (d < 0) ok = false }
-        }
-        if (!ok || d != 0) None
-        else if (argsTxt.trim.isEmpty)
-          Some(m.group(1).toLowerCase(java.util.Locale.ROOT) + "()")
-        else {
-          val args = new Lex(argsTxt).split(',').map(_.trim)
-          val identPat = "[A-Za-z_][A-Za-z0-9_]*(\\.[A-Za-z_][A-Za-z0-9_]*)*"
-          if (args.forall(a => a.matches(identPat) || a.matches("\\d+")))
-            Some(m.group(1).toLowerCase(java.util.Locale.ROOT) + "(" +
-              args.map(a =>
-                if (a.matches("\\d+")) a else a.split('.').last).mkString(", ") + ")")
-          else None
-        }
-      }
+    lx.s
   }
 
   /** DuckDB window frames accept an ANSI frame-exclusion clause
@@ -2053,11 +1278,14 @@ object DuckDbDialect {
     *
     * Bounded (throws, never silently wrong): DISTINCT arguments,
     * non-decomposable functions (MIN/MAX/...), non-integer-literal ROWS
-    * offsets, and a frameless exclusion (DuckDB rejects it too). GROUPS
-    * frames no longer reach this pass — [[rewriteGroupsDeep]] decomposes
-    * them to ROWS/RANGE first (round 16). Every
-    * frame-type × exclusion-kind combination over COUNT/SUM/AVG is now
-    * decomposed (the off-frame RANGE CURRENT ROW case closed round 15). */
+    * offsets, and a frameless exclusion (DuckDB rejects it too). Every
+    * frame-type × exclusion-kind combination over COUNT/SUM/AVG is
+    * decomposed (the off-frame RANGE CURRENT ROW case closed round 15).
+    * A GROUPS frame takes the RANGE decompositions: its peers are the
+    * ORDER BY peers, and the windows over peer-wise frames are emitted
+    * as GROUPS frames, so [[rewriteGroups]], which runs next, marks
+    * them with the spec's own frame; the positional ROWS prefix windows
+    * stay unmarked, in row space. */
   private def rewriteFrameExclude(lx0: Lex): String = {
     var sql = lx0.s
     var guard = 0
@@ -2098,12 +1326,6 @@ object DuckDbDialect {
       // precedent), so the rewrite reproduces the measured frame.
       val inner = specNoExcl.substring(1, specNoExcl.length - 1)
       val frameM = "(?is)\\b(rows|range|groups)\\b(.*)$".r.findFirstMatchIn(inner)
-      frameM.foreach { fm =>
-        if (fm.group(1).equalsIgnoreCase("groups"))
-          throw new IllegalStateException(
-            "GROUPS frame reached rewriteFrameExclude — rewriteGroupsDeep runs " +
-              "first and should have decomposed it to ROWS/RANGE")
-      }
       // Frame clause parsed uniformly: explicit BETWEEN keeps both
       // bounds; the ANSI single-bound shorthand (`ROWS 2 PRECEDING`,
       // accepted by DuckDB with EXCLUDE — measured) is BETWEEN <bound>
@@ -2117,6 +1339,12 @@ object DuckDbDialect {
             fm.group(1), fm.start)
         else (body, "CURRENT ROW", fm.group(1), fm.start)
       }
+      // GROUPS decomposes peer-wise, like RANGE (its peers are the ORDER
+      // BY peers), and its peer-wise pieces stay GROUPS frames, which
+      // rewriteGroups marks next; the positional ROWS pieces stay in row
+      // space
+      val peerKw =
+        if (betweenInfo.exists(_._3.equalsIgnoreCase("groups"))) "GROUPS" else "RANGE"
       // Bounds are classified by their TRAILING keyword so multi-token
       // offsets (e.g. INTERVAL '5' DAY PRECEDING) are positively
       // recognized — the old ^\S+\s+preceding$ single-token matcher let
@@ -2204,10 +1432,10 @@ object DuckDbDialect {
           def segs(g: String => String): String =
             if (endsBefore)
               s"(${g("ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING")} " +
-                s"- (${g("RANGE BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW")} " +
-                s"- ${g(s"RANGE BETWEEN $bA AND CURRENT ROW")}))"
+                s"- (${g(s"$peerKw BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW")} " +
+                s"- ${g(s"$peerKw BETWEEN $bA AND CURRENT ROW")}))"
             else
-              s"(${g(s"RANGE BETWEEN UNBOUNDED PRECEDING AND $bB")} " +
+              s"(${g(s"$peerKw BETWEEN UNBOUNDED PRECEDING AND $bB")} " +
                 s"- ${g("ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW")})"
           val remCnt = segs(cnt)
           fn match {
@@ -2273,31 +1501,31 @@ object DuckDbDialect {
           val oPrefix = inner.substring(0, fStart)
           val sep = if (oPrefix.isEmpty || oPrefix.last.isWhitespace) "" else " "
           def w(frame: String) = s"OVER (${oPrefix}${sep}${frame})"
-          val peersF = "RANGE BETWEEN CURRENT ROW AND CURRENT ROW"
+          val peersF = s"$peerKw BETWEEN CURRENT ROW AND CURRENT ROW"
           val cntFn = if (arg == "*") "COUNT(*)" else s"COUNT($arg)"
           def cnt(frame: String) = s"$cntFn ${w(frame)}"
           def sum(frame: String) = s"COALESCE(SUM($arg) ${w(frame)}, 0)"
           val keepCur = if (kind == "ties") (if (arg == "*") " + 1" else s" + $nonNullCur") else ""
           val sumBack = if (kind == "ties") s" + COALESCE($arg, 0)" else ""
           val (remCnt, remSum): (String, String) =
-            if (kw.equalsIgnoreCase("range") &&
+            if (!kw.equalsIgnoreCase("rows") &&
                 boundKind(boundA) <= 0 && boundKind(boundB) >= 0) {
               // case 1 — frame ⊇ peer group
               val peersSpec = "(" + oPrefix + sep + peersF + ")"
               (s"($cntFn OVER $specNoExcl - $cntFn OVER $peersSpec$keepCur)",
                 s"(SUM($arg) OVER $specNoExcl " +
                   s"- COALESCE(SUM($arg) OVER $peersSpec, 0)$sumBack)")
-            } else if (kw.equalsIgnoreCase("range")) {
+            } else if (!kw.equalsIgnoreCase("rows")) {
               // case 2 — value-space segments
               val (c1, s1) =
                 if (boundKind(boundA) <= 0)
-                  (s"(${cnt(s"RANGE BETWEEN $boundA AND CURRENT ROW")} - ${cnt(peersF)})",
-                    s"(${sum(s"RANGE BETWEEN $boundA AND CURRENT ROW")} - ${sum(peersF)})")
+                  (s"(${cnt(s"$peerKw BETWEEN $boundA AND CURRENT ROW")} - ${cnt(peersF)})",
+                    s"(${sum(s"$peerKw BETWEEN $boundA AND CURRENT ROW")} - ${sum(peersF)})")
                 else ("0", "0")
               val (c2, s2) =
                 if (boundKind(boundB) >= 0)
-                  (s"(${cnt(s"RANGE BETWEEN CURRENT ROW AND $boundB")} - ${cnt(peersF)})",
-                    s"(${sum(s"RANGE BETWEEN CURRENT ROW AND $boundB")} - ${sum(peersF)})")
+                  (s"(${cnt(s"$peerKw BETWEEN CURRENT ROW AND $boundB")} - ${cnt(peersF)})",
+                    s"(${sum(s"$peerKw BETWEEN CURRENT ROW AND $boundB")} - ${sum(peersF)})")
                 else ("0", "0")
               (s"($c1 + $c2$keepCur)", s"($s1 + $s2$sumBack)")
             } else {

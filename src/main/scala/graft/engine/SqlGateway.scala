@@ -92,18 +92,9 @@ object SqlGateway {
     * path: the statement itself, and the inner query of SUMMARIZE,
     * PIVOT and UNPIVOT. */
   private def gatedSql(spark: SparkSession, query: String): String = {
-    // COLUMNS('regex') needs the relation schema — only the gateway
-    // has it, so the expansion runs here, before the text shim
-    val schemaOf: String => Option[Seq[String]] = name =>
-      scala.util.Try(spark.table(name).schema.fieldNames.toSeq).toOption
-    val s1 =
-      if ("(?i)\\bcolumns\\s*\\(".r.findFirstIn(query).isDefined)
-        DuckDbDialect.expandColumns(query, schemaOf)
-      else query
-    // schema-aware rewrite (round 20): the GROUPS wrap resolves
-    // multi-relation qualified stars/references through the same
-    // relation-schema source as COLUMNS expansion above
-    val sql = DuckDbDialect.rewriteWithSchema(s1, schemaOf)
+    // COLUMNS('regex') needs the relation schema — only the gateway has it
+    val sql = DuckDbDialect.rewriteWithSchema(query, name =>
+      scala.util.Try(spark.table(name).schema.fieldNames.toSeq).toOption)
     validate(spark, sql)
     sql
   }

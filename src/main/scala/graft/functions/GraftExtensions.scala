@@ -21,6 +21,9 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // `div` (the shim's image of DuckDB `//`) gets DuckDB's measured
     // type-aware semantics — see [[DuckDiv]] for the contract
     e.injectResolutionRule(_ => DuckDivRule)
+    // GROUPS window frames: the shim marks the spec, the rule moves its
+    // frames to rank space — see [[GroupsFrameRule]]
+    e.injectResolutionRule(_ => GroupsFrameRule)
   }
 }
 
@@ -61,5 +64,7 @@ object GraftExtensions {
     entry("freq_sketch_upper", "freq_sketch_upper(sk, item) - deterministic Misra-Gries upper bound")(
       e => FreqUpperBound(e(0), e(1))),
     entry("duck_div", "duck_div(a, b) - DuckDB // semantics: truncating int division / plain float division, 0 divisor -> NULL")(
-      e => DuckDiv(e(0), e(1))))
+      e => DuckDiv(e(0), e(1))),
+    entry(GroupsFrame.Name, s"${GroupsFrame.Name}() - marks a GROUPS window frame; valid only first in a window's PARTITION BY")(
+      _ => GroupsFrame()))
 }

@@ -230,19 +230,9 @@ object VectorOps {
     * codebooks as literals — zero shuffles before the TakeOrdered
     * shortlist, exact cosine re-rank on the 50 candidates. Determinism:
     * md5-ordered sample, argmin ties to the lower codeword id, empty
-    * clusters keep their previous centroid.
-    *
-    * `fitDistributed = true` (round 16) trains the same Lloyd over the
-    * FULL corpus instead of the sample: per iteration one map-side
-    * assign against the codebook literal + one m·k-group mean
-    * aggregation, decimal-accumulated so the fit is deterministic
-    * regardless of partition order. Sampling stays the default (it is
-    * the standard practice and one pass cheaper per iteration); the
-    * distributed path is the 100 TB fit for corpora a 16k-row sample
-    * cannot represent. */
+    * clusters keep their previous centroid. */
   def pqProbe(e0: org.apache.spark.sql.DataFrame, m: Int = 4, k0: Int = 0,
-      iters: Int = 5, sampleN0: Int = 0,
-      fitDistributed: Boolean = false): org.apache.spark.sql.DataFrame = {
+      iters: Int = 5, sampleN0: Int = 0): org.apache.spark.sql.DataFrame = {
     // one combined (dim, count) scan, memoized per corpus (round 16) —
     // repeated probes of the same corpus skip it entirely
     val (dim, n) = dimAndCount(e0)
@@ -266,7 +256,6 @@ object VectorOps {
       acc
     }
     // argmin codeword for a sub-vector column against codebook literals
-    // — shared by the scorer below and the distributed fit's assign step
     val zero = struct(lit(Double.MaxValue).as("dist"), lit(-1).as("j"))
     def codeExpr(vs: Column, cbLit: Column, ss: Column): Column =
       aggregate(sequence(lit(0), lit(k - 1)), zero, (accJ, jj) => {
@@ -276,42 +265,7 @@ object VectorOps {
         when(dd < accJ.getField("dist"),
           struct(dd.as("dist"), jj.as("j"))).otherwise(accJ)
       }).getField("j")
-    val codebooks: Array[Array[Array[Double]]] =
-      if (fitDistributed) {
-        // DISTRIBUTED Lloyd (round 16 — the 100 TB fit): per iteration,
-        // every (row, subspace) pair is assigned its nearest codeword
-        // map-side against the m×k codebook literal, and the new
-        // centroids come from ONE m·k-group aggregation (partial
-        // map-side combine; ≤256 groups collected). Means accumulate in
-        // DECIMAL, so the result is independent of partition order —
-        // the fit is bit-deterministic, like the sampled path. The
-        // sample path stays the default (sampling-based PQ training is
-        // the standard practice); this path is for when the sample
-        // can't represent the corpus.
-        var cent = Array.tabulate(m) { s =>
-          sample.take(k).map(v => java.util.Arrays.copyOfRange(v, s * sub, (s + 1) * sub))
-        }
-        (0 until iters).foreach { _ =>
-          val cbLit = typedLit(cent.map(_.map(_.toSeq).toSeq).toSeq)
-          val coded = e
-            .select(explode(sequence(lit(0), lit(m - 1))).as("ss"), col("v"))
-            .select(col("ss"), slice(col("v"), col("ss") * sub + 1, lit(sub)).as("vs"))
-            .withColumn("code", codeExpr(col("vs"), cbLit, col("ss")))
-          val meanCols = (0 until sub).map(d =>
-            (sum(element_at(col("vs"), d + 1).cast("decimal(38,12)")) /
-              count(lit(1))).cast("double").as(s"c$d"))
-          val rows = coded.groupBy("ss", "code")
-            .agg(meanCols.head, meanCols.tail: _*).collect()
-          val next = cent.map(_.map(_.clone)) // empty clusters keep centroids
-          rows.foreach { r =>
-            val s = r.getInt(0); val j = r.getInt(1)
-            if (j >= 0)
-              (0 until sub).foreach(d => next(s)(j)(d) = r.getDouble(2 + d))
-          }
-          cent = next
-        }
-        cent
-      } else Array.tabulate(m) { s =>
+    val codebooks: Array[Array[Array[Double]]] = Array.tabulate(m) { s =>
       val pts = sample.map(v => java.util.Arrays.copyOfRange(v, s * sub, (s + 1) * sub))
       var cent = pts.take(k).map(_.clone)
       (0 until iters).foreach { _ =>

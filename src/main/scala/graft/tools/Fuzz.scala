@@ -1547,13 +1547,13 @@ final class SqlFuzzer(seed: Long) {
     * text DIFFERS from the Spark text: the generator templates an
     * equivalent the oracle CAN run — the direct RANGE/ROWS mapping for
     * UNBOUNDED/CURRENT bound mixes, an explicit DENSE_RANK subquery +
-    * RANGE for integer offsets — independently of the shim's text
-    * machinery. The comparison therefore proves the REWRITE MACHINERY
-    * (spec splicing, the SELECT-level wrap, repeated-spec hoists, WHERE
-    * placement inside the wrap, ORDER BY/LIMIT tails outside) on random
-    * shapes; the decomposition CONCEPT (RANGE over gapless dense ranks
-    * = GROUPS) is pinned separately against hand-derived ANSI goldens
-    * in DuckDbDialectSpec. Aggregates are SUM/COUNT over group frames —
+    * RANGE for integer offsets — independently of the shim's marker and
+    * the analyzer rule (graft.functions.GroupsFrameRule) that computes
+    * the frame. The comparison therefore proves the rule on random
+    * shapes (repeated specs, WHERE, named windows, set operations,
+    * grouped blocks, ORDER BY/LIMIT tails); the decomposition CONCEPT
+    * (RANGE over gapless dense ranks = GROUPS) is pinned separately
+    * against hand-derived ANSI goldens in DuckDbDialectSpec. Aggregates are SUM/COUNT over group frames —
     * frame membership is group-based, so tie order cannot affect them.
     * Returns (name, sparkSql, oracleSql). */
   def groupsQueries(count: Int): Vector[(String, String, String)] =
@@ -1563,10 +1563,10 @@ final class SqlFuzzer(seed: Long) {
     }.toVector
 
   /** Round-18 composed kind (--groupsx): every query combines a
-    * NUMERIC-offset GROUPS frame (the hoist-wrap path) with at least
-    * one of the OTHER wrapping passes — QUALIFY (wraps the head into a
-    * subquery BEFORE the groups pass sees it, and hoists the predicate
-    * window into the head's select list) or a DISTINCT window aggregate
+    * NUMERIC-offset GROUPS frame with at least one of the wrapping
+    * passes — QUALIFY (wraps the head into a subquery BEFORE the groups
+    * pass sees it, and hoists the predicate window into the head's
+    * select list) or a DISTINCT window aggregate
     * (decomposed inline over collect_set) — across the inline /
     * named-WINDOW / grouped / set-op-subquery contexts. The round-17
     * dgf kind covers each context singly; this kind pins the
@@ -1610,12 +1610,10 @@ final class SqlFuzzer(seed: Long) {
     val oSpec = s"PARTITION BY p ORDER BY g ASC NULLS FIRST $rFrame"
     rnd.nextInt(10) match {
       case 9 => // round 20: multi-relation qualified star + qualified
-        // OUTER references, resolved through the GATEWAY's schema
-        // resolver (the leading /*dgq*/ marker routes this query
-        // through SqlGateway.run — a direct rewrite() has no schema
-        // source and keeps the bounded error). supplier ⋈ nation have
-        // disjoint FIXED parquet schemas, so s.* is schema-stable for
-        // the hash compare and every dequalified bare name is unique.
+        // references, through the GATEWAY (the leading /*dgq*/ marker
+        // routes this query through SqlGateway.run). supplier ⋈ nation
+        // have disjoint FIXED parquet schemas, so s.* is schema-stable
+        // for the hash compare.
         val k9 = intLit(3, 9)
         val n9 = 1 + rnd.nextInt(3)
         val sv9 = if (rnd.nextBoolean()) "s_suppkey" else "s_nationkey"
@@ -1633,8 +1631,7 @@ final class SqlFuzzer(seed: Long) {
             s"DENSE_RANK() OVER (PARTITION BY s.s_nationkey ORDER BY $ov9 " +
             s"ASC NULLS FIRST) AS g $join9) q $tail9")
       case 8 => // round 19: SELECT DISTINCT over a grouped GROUPS block
-        // (the former r16 bound) — the keyword moves to the inverted
-        // wrap's outer select. c2 is constant within each order-value
+        // (the former r16 bound). c2 is constant within each order-value
         // peer group (group-frame SUM), so DISTINCT collapses each
         // order value to one row deterministically; the oracle applies
         // the same DISTINCT over the dense-rank formulation.
@@ -1652,8 +1649,8 @@ final class SqlFuzzer(seed: Long) {
       case 6 => // round 19: quoted keywords inside the spec + constant-
         // expression offsets. The named-window partition expression
         // carries string literals spelling 'order by'/'rows between'
-        // (kwAt/splitTopLevel are string-masked — a mis-split would
-        // break the grouped hoist), and the GROUPS offsets are spelled
+        // (the scanner masks them — a mis-split would put the marker in
+        // the wrong place), and the GROUPS offsets are spelled
         // as foldable arithmetic / CAST forms (foldIntOffset); the
         // oracle runs the CASE verbatim and the offsets pre-folded.
         val k = intLit(4, 9)
@@ -1678,10 +1675,9 @@ final class SqlFuzzer(seed: Long) {
             s"COUNT(*) AS cnt, $qp AS qp, " +
             s"DENSE_RANK() OVER (PARTITION BY $qp ORDER BY $gov ASC NULLS " +
             s"FIRST) AS g FROM $t WHERE $where GROUP BY $part) q $tail")
-      case 7 => // round 19: `* EXCLUDE (cols)` alongside the hoist star —
-        // the shim must merge the helper alias into the existing
-        // exclusion list (a second nested EXCEPT is a Spark parse
-        // error); offsets again in constant-expression spelling. The
+      case 7 => // round 19: `* EXCLUDE (cols)` beside a GROUPS window —
+        // the rank column must not leak through the star; offsets
+        // again in constant-expression spelling. The
         // derived table fixes the column set so the star is schema-
         // stable for the hash compare.
         val n1 = 1 + rnd.nextInt(3)
@@ -1700,9 +1696,8 @@ final class SqlFuzzer(seed: Long) {
             s"DENSE_RANK() OVER (PARTITION BY $part ORDER BY CAST($ov AS " +
             s"BIGINT) ASC NULLS FIRST) AS g " +
             s"FROM $t WHERE $where) q $tail")
-      case 5 => // grouped block + named WINDOW clause (round 18): the
-        // clause stays outer with partition/order exprs hoisted inner;
-        // a second PLAIN named window rides along in the same clause
+      case 5 => // grouped block + named WINDOW clause (round 18); a
+        // second PLAIN named window rides along in the same clause
         val k = intLit(3, 9)
         val gov = s"($part % $k)"
         val tail = s"${orderAll(4)} ${limit()}"
@@ -1825,7 +1820,7 @@ final class SqlFuzzer(seed: Long) {
     // 6 set-operation branches, 7 grouped block — the three contexts
     // the round-16 shim bounded out and round 17 closed
     val shape = rnd.nextInt(8)
-    val secondWindow = shape <= 4 && rnd.nextInt(4) == 0 // repeated-spec hoist stress
+    val secondWindow = shape <= 4 && rnd.nextInt(4) == 0 // repeated-spec stress
     val where = s"$v IS NOT NULL AND $part IS NOT NULL AND ${pred(tbl, 1)}"
     val tailCols = if (secondWindow) 4 else 3
     val tail = s"${orderAll(tailCols)} ${limit()}"
@@ -1853,16 +1848,16 @@ final class SqlFuzzer(seed: Long) {
           s" FROM $t WHERE $whereTxt"
       else oracleHoisted(whereTxt)
     val (sparkSql, oracleSql) = shape match {
-      case 5 => // named WINDOW clause (round 17): hoist resolves outer
+      case 5 => // named WINDOW clause (round 17)
         (s"SELECT $key AS c1, CAST($ov AS BIGINT) AS c2, " +
           s"CAST(SUM($sv) OVER w AS BIGINT) AS c3 FROM $t WHERE $where " +
           s"WINDOW w AS ($sSpec) $tail",
           s"${oracleBranch(where)} $tail")
-      case 6 => // set-operation branches: each hoists/wraps on its own
+      case 6 => // set-operation branches: each has its own window
         val where2 = s"$v IS NOT NULL AND $part IS NOT NULL AND ${pred(tbl, 1)}"
         (s"${sparkBranch(where)} UNION ALL ${sparkBranch(where2)} $tail",
           s"${oracleBranch(where)} UNION ALL ${oracleBranch(where2)} $tail")
-      case 7 => // grouped block: the wrap inverts, windows rank groups
+      case 7 => // grouped block: windows rank groups
         val k = intLit(3, 9)
         val gov = s"($part % $k)"
         val gTail = s"${orderAll(3)} ${limit()}"
@@ -2297,7 +2292,7 @@ object Fuzz {
     // --groups: GROUPS-frame differential — the one suite whose oracle
     // text differs from the Spark text (DuckDB 1.0 cannot parse GROUPS;
     // the generator templates the equivalent the oracle runs)
-    // --groupsx: round-18 composed kind — GROUPS hoists × QUALIFY ×
+    // --groupsx: round-18 composed kind — GROUPS frames × QUALIFY ×
     // DISTINCT-window interactions (same oracle convention as --groups)
     val groupsMode = flags.contains("--groups")
     val groupsXMode = flags.contains("--groupsx")
@@ -2326,8 +2321,8 @@ object Fuzz {
         if (r != sql)
           errors(name) = s"IDENTITY violated — rewrite changed ANSI text to: ${r.take(300)}"
       } else if (!isStmt("pivot") && !isStmt("unpivot")) {
-        // /*dgq*/ queries are schema-dependent: the idempotence check
-        // must rewrite them the way the gateway does (resolver installed)
+        // /*dgq*/ queries run through the gateway, so the idempotence
+        // check rewrites them the way the gateway does
         val rw: String => String =
           if (sql.startsWith("/*dgq*/"))
             s => graft.engine.DuckDbDialect.rewriteWithSchema(s, name =>
@@ -2341,8 +2336,8 @@ object Fuzz {
       def sparkDf() =
         if (dialect && (isStmt("pivot") || isStmt("unpivot") ||
             "(?i)\\bcolumns\\s*\\(".r.findFirstIn(sql).isDefined ||
-            // round 20: schema-dependent GROUPS queries (multi-relation
-            // qualified star) need the gateway's relation resolver
+            // round 20: multi-relation qualified-star GROUPS queries
+            // take the gateway path
             sql.startsWith("/*dgq*/")))
           graft.engine.SqlGateway.run(spark, sql)
         else spark.sql(if (dialect) graft.engine.DuckDbDialect.rewrite(sql) else sql)

@@ -215,9 +215,8 @@ object Ladder {
       f"max_pop=${pop.getLong(1)} fixed4_pop=${n / 16}")
   }
 
-  /** Both PQ fit paths (the md5-sampled Lloyd and the full-corpus one)
-    * at the top rung: wall and recall@10 against the brute-force cosine
-    * top-10, so the distributed fit is measured at scale. */
+  /** The PQ fit (the md5-sampled Lloyd) at the top rung: wall and
+    * recall@10 against the brute-force cosine top-10. */
   private def pqFitRecall(r: Rung): Unit = {
     val e = r.spark.read.parquet(s"${r.dir}/embeddings.parquet")
     val qid = e.agg(min(col("vec_id"))).head().getLong(0)
@@ -229,15 +228,12 @@ object Ladder {
         transform(col("embedding"), x => x.cast("double")), typedLit(qv)).as("cs"))
       .orderBy(col("cs").desc, col("vec_id")).limit(10)
       .collect().map(_.getLong(0)).toSet
-    Seq(false, true).foreach { dist =>
-      val t0 = System.nanoTime()
-      val got = graft.ops.VectorOps.pqProbe(e, fitDistributed = dist)
-        .collect().map(_.getLong(0)).toSet
-      val wall = (System.nanoTime() - t0) / 1e9
-      val recall = got.count(brute.contains).toDouble / brute.size
-      System.err.println(f"[ladder] pq-fit(${if (dist) "distributed" else "sampled"}) " +
-        f"@K=${r.k}: wall=$wall%.2f s recall@10=$recall%.2f")
-    }
+    val t0 = System.nanoTime()
+    val got = graft.ops.VectorOps.pqProbe(e).collect().map(_.getLong(0)).toSet
+    val wall = (System.nanoTime() - t0) / 1e9
+    val recall = got.count(brute.contains).toDouble / brute.size
+    System.err.println(
+      f"[ladder] pq-fit(sampled) @K=${r.k}: wall=$wall%.2f s recall@10=$recall%.2f")
   }
 
   /** The bloom screen's pruned fraction and false-positive rate: disjoint

@@ -207,27 +207,6 @@ class DedupVectorSpec extends AnyFunSuite {
     assert(recall >= 0.2, s"pqProbe recall@10 = $recall (Lloyd codebooks, 50-shortlist)")
   }
 
-  test("pqProbe distributed fit: deterministic, scores exact, recall holds") {
-    // the full-corpus Lloyd (fitDistributed=true): same contract as the
-    // sampled fit — rerank scores are exact cosines and recall clears
-    // the same bar — plus bit-determinism across runs (the fit's means
-    // accumulate in decimal, so partition order cannot perturb them)
-    val brute = q("q_sim_cosine_topk").collect()
-      .map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    val e = ops.Tables.embeddings(spark, TestSpark.Sf)
-    def run() = ops.VectorOps.pqProbe(e, fitDistributed = true)
-      .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-    val pq = run()
-    assert(pq.size == 10)
-    pq.foreach { case (id, cos) =>
-      brute.get(id).foreach(b => assert(math.abs(b - cos) < 1e-9,
-        s"distributed-fit rerank score for $id diverges: $cos vs $b"))
-    }
-    val recall = pq.count { case (id, _) => brute.contains(id) }.toDouble / brute.size
-    assert(recall >= 0.2, s"distributed-fit recall@10 = $recall")
-    assert(run() == pq, "distributed fit must be run-to-run deterministic")
-  }
-
   test("salted join is row-identical to the plain equi-join") {
     val li = ops.Tables.lineitem(spark, TestSpark.Sf).select("l_orderkey", "l_quantity", "l_linenumber")
     val o = ops.Tables.orders(spark, TestSpark.Sf).select("o_orderkey", "o_orderstatus")

@@ -56,9 +56,8 @@ class DialectPropertySpec extends AnyFunSuite {
       // round 18: the composed kind (GROUPS × QUALIFY × DISTINCT
       // windows × grouped/named-WINDOW contexts) under the same pin
       new SqlFuzzer(18001).groupsComposedQueries(300).map { case (n, s, _) => (n, s) }
-    // /*dgq*/ queries (round 20) are schema-dependent: the gateway
-    // installs a relation-schema resolver before rewriting them, and a
-    // bare rewrite() deliberately throws its bounded error. The
+    // /*dgq*/ queries (round 20) run through the gateway, which
+    // rewrites with relation schemas (rewriteWithSchema). The
     // idempotence pin therefore runs them the way the gateway does,
     // with the generator's two fixed parquet schemas — the SHARED
     // constant (SqlFuzzer.DgqSchemas, round 21 per the r20 advice), so

@@ -54,12 +54,12 @@ class DialectScanSpec extends AnyFunSuite {
       s"unbalanced raised outside the scanner at ${raisers.mkString(", ")}")
   }
 
-  test("QUALIFY, GROUPS and COLUMNS share one innermost-block recursion") {
+  test("QUALIFY and COLUMNS share one innermost-block recursion") {
     // each `): String = innermostFirst(` body belongs to the nearest def above it
     val users = "\\)\\s*:\\s*String\\s*=\\s*innermostFirst\\(".r.findAllMatchIn(src).map { m =>
       "def (\\w+)".r.findAllMatchIn(src.substring(0, m.start)).toSeq.last.group(1)
     }.toSet
-    assert(users == Set("rewriteQualifyDeep", "rewriteGroupsDeep", "expandColumns"))
+    assert(users == Set("rewriteQualifyDeep", "expandColumns"))
     assert(!src.contains("def setOpCuts"))
   }
 }

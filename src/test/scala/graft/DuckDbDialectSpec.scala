@@ -472,7 +472,7 @@ class DuckDbDialectSpec extends AnyFunSuite {
     def sums(q: String): Seq[Long] =
       spark.sql(DuckDbDialect.rewrite(q)).collect()
         .map(_.getAs[Number]("s").longValue).toSeq
-    // numeric offsets → dense-rank hoist (1 PRECEDING..CURRENT ROW)
+    // numeric offsets (1 PRECEDING..CURRENT ROW)
     assert(sums("SELECT i, SUM(x) OVER (ORDER BY o GROUPS BETWEEN 1 PRECEDING " +
       "AND CURRENT ROW) s FROM gft ORDER BY i")
       == Seq(3L, 3L, 7L, 60L, 60L, 60L, 120L))
@@ -483,7 +483,7 @@ class DuckDbDialectSpec extends AnyFunSuite {
     // single-bound shorthand == BETWEEN n PRECEDING AND CURRENT ROW
     assert(sums("SELECT i, SUM(x) OVER (ORDER BY o GROUPS 1 PRECEDING) s " +
       "FROM gft ORDER BY i") == Seq(3L, 3L, 7L, 60L, 60L, 60L, 120L))
-    // UNBOUNDED/CURRENT mixes map in place (no wrap)
+    // UNBOUNDED/CURRENT mixes
     assert(sums("SELECT i, SUM(x) OVER (ORDER BY o GROUPS BETWEEN UNBOUNDED " +
       "PRECEDING AND CURRENT ROW) s FROM gft ORDER BY i")
       == Seq(3L, 3L, 7L, 63L, 63L, 63L, 127L))
@@ -494,12 +494,16 @@ class DuckDbDialectSpec extends AnyFunSuite {
     assert(spark.sql(DuckDbDialect.rewrite("SELECT i, COUNT(*) OVER (ORDER BY o " +
       "GROUPS BETWEEN CURRENT ROW AND CURRENT ROW) s FROM gft ORDER BY i"))
       .collect().map(_.getLong(1)).toSeq == Seq(2L, 2L, 1L, 3L, 3L, 3L, 1L))
-    // WHERE stays inside the wrap: windows see the FILTERED rows
+    // a ranking function keeps its own frame (DuckDB ignores the frame)
+    assert(spark.sql(DuckDbDialect.rewrite("SELECT i, RANK() OVER (ORDER BY o " +
+      "GROUPS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) s FROM gft ORDER BY i"))
+      .collect().map(_.getInt(1)).toSeq == Seq(1, 1, 3, 4, 4, 4, 7))
+    // windows see the FILTERED rows
     // (drop i=3, the whole G2 group → G3's preceding group becomes G1)
     assert(sums("SELECT i, SUM(x) OVER (ORDER BY o GROUPS BETWEEN 1 PRECEDING " +
       "AND CURRENT ROW) s FROM gft WHERE i <> 3 ORDER BY i")
       == Seq(3L, 3L, 59L, 59L, 59L, 120L))
-    // PARTITION BY carries through the hoist (two copies of the data)
+    // PARTITION BY carries through the rank (two copies of the data)
     spark.sql("SELECT 1 AS p, * FROM gft UNION ALL SELECT 2, * FROM gft")
       .createOrReplaceTempView("gft2")
     val part = spark.sql(DuckDbDialect.rewrite("SELECT p, i, SUM(x) OVER " +
@@ -511,11 +515,11 @@ class DuckDbDialectSpec extends AnyFunSuite {
     val star = spark.sql(DuckDbDialect.rewrite("SELECT *, SUM(x) OVER (ORDER BY o " +
       "GROUPS BETWEEN 1 PRECEDING AND CURRENT ROW) s FROM gft ORDER BY i"))
     assert(star.columns.toSeq == Seq("i", "o", "x", "s"), star.columns.mkString(","))
-    // subquery-level GROUPS reduces through the deep driver
+    // subquery-level GROUPS
     assert(spark.sql(DuckDbDialect.rewrite("SELECT count(*) c FROM (SELECT i, " +
       "SUM(x) OVER (ORDER BY o GROUPS BETWEEN 1 PRECEDING AND CURRENT ROW) s " +
       "FROM gft) WHERE s > 10")).head().getLong(0) == 4L)
-    // EXCLUDE composes: inline map to RANGE, then the exclusion pass.
+    // EXCLUDE composes: the exclusion pass decomposes peer-wise.
     // Row i=5 (x=16, G3): frame UNBOUNDED..CURRENT = 63; TIES removes
     // peers 8+32, keeps self → 15; i=7 (singleton G4): 127 unchanged
     val excl = spark.sql(DuckDbDialect.rewrite("SELECT i, SUM(x) OVER (ORDER BY o " +
@@ -527,10 +531,9 @@ class DuckDbDialectSpec extends AnyFunSuite {
     assert(sums("SELECT i, SUM(x) OVER w s FROM gft WINDOW w AS (ORDER BY o " +
       "GROUPS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) ORDER BY i")
       == Seq(3L, 3L, 7L, 63L, 63L, 63L, 127L))
-    // numeric offsets + EXCLUDE compose: the hoist keeps the EXCLUDE
-    // text in the rewritten RANGE spec and the exclusion pass then
-    // decomposes it; __grp peers ARE the original ORDER BY peers, so
-    // the row sets agree. Row i=4 (x=8, G3): 1 PRECEDING..CURRENT is
+    // numeric offsets + EXCLUDE compose: the exclusion pass decomposes
+    // the GROUPS frame peer-wise, and every peer-wise piece is itself a
+    // GROUPS frame. Row i=4 (x=8, G3): 1 PRECEDING..CURRENT is
     // G2+G3 = 60; EXCLUDE GROUP removes G3 (56) → 4; i=3 (G2):
     // G1+G2 = 7 minus G2 (4) → 3; i=7 (G4): G3+G4 minus G4 → 56
     val nex = spark.sql(DuckDbDialect.rewrite("SELECT i, SUM(x) OVER (ORDER BY o " +
@@ -538,8 +541,8 @@ class DuckDbDialectSpec extends AnyFunSuite {
       "FROM gft ORDER BY i")).collect()
     assert(nex.map(r => Option(r.get(1)).map(_.asInstanceOf[Number].longValue)).toSeq
       == Seq(None, None, Some(3L), Some(4L), Some(4L), Some(4L), Some(56L)), nex.mkString(","))
-    // the hoist is shuffle-free beyond the window's own partitioning:
-    // the dense-rank window and the frame window share PARTITION BY p,
+    // the rank is shuffle-free beyond the window's own partitioning:
+    // the dense-rank window and the frame window share PARTITION BY o,
     // so the physical plan carries exactly ONE hash Exchange
     val hoisted = spark.sql(DuckDbDialect.rewrite("SELECT i, SUM(x) OVER " +
       "(PARTITION BY o ORDER BY x GROUPS BETWEEN 1 PRECEDING AND CURRENT ROW) s " +
@@ -550,19 +553,18 @@ class DuckDbDialectSpec extends AnyFunSuite {
     val plan = hoisted.queryExecution.executedPlan.toString
       .split("== Initial Plan ==")(0)
     val nEx = "Exchange hashpartitioning".r.findAllIn(plan).length
-    assert(nEx == 1, s"dense-rank hoist must reuse the window partitioning:\n$plan")
-    // QUALIFY composes: the QUALIFY wrap runs first, the GROUPS hoist
-    // nests inside its head — golden sums Seq(3,3,7,60,60,60,120), so
-    // s > 10 keeps i=4..7
+    assert(nEx == 1, s"the dense rank must reuse the window partitioning:\n$plan")
+    // QUALIFY composes — golden sums Seq(3,3,7,60,60,60,120), so s > 10
+    // keeps i=4..7
     assert(spark.sql(DuckDbDialect.rewrite("SELECT i, SUM(x) OVER (ORDER BY o " +
       "GROUPS BETWEEN 1 PRECEDING AND CURRENT ROW) s FROM gft QUALIFY s > 10 " +
       "ORDER BY i")).collect().map(_.getAs[Number](0).longValue).toSeq
       == Seq(4L, 5L, 6L, 7L))
     // DISTINCT window + GROUPS composes: the collect_set decomposition
-    // splices the GROUPS spec 3x, each splice hoists its own identical
-    // dense rank (CollapseWindow merges them). Row i=8 duplicates x=8
-    // inside G3, so DISTINCT genuinely drops a value: plain SUM over
-    // G2+G3 would be 68, the distinct set {4,8,16,32} sums to 60
+    // splices the GROUPS spec 3x, all three in one marked window. Row
+    // i=8 duplicates x=8 inside G3, so DISTINCT genuinely drops a value:
+    // plain SUM over G2+G3 would be 68, the distinct set {4,8,16,32}
+    // sums to 60
     spark.sql("SELECT * FROM VALUES (1,1,1),(2,1,2),(3,2,4),(4,3,8)," +
         "(5,3,16),(6,3,32),(7,5,64),(8,3,8) AS t(i,o,x)")
       .createOrReplaceTempView("gfd")
@@ -573,28 +575,26 @@ class DuckDbDialectSpec extends AnyFunSuite {
     // a plain column NAMED groups is not hijacked (no frame-bound shape)
     assert(spark.sql(DuckDbDialect.rewrite("SELECT max(groups) OVER (ORDER BY i) m " +
       "FROM (SELECT 1 AS i, 2 AS groups)")).head().getInt(0) == 2)
-    // named WINDOW clause with integer offsets (round 17): the clause
-    // stays in the wrapped block's outer select where __grp1 resolves
+    // named WINDOW clause with integer offsets (round 17)
     assert(sums("SELECT i, SUM(x) OVER w s FROM gft WINDOW w AS (ORDER BY o " +
       "GROUPS BETWEEN 1 PRECEDING AND CURRENT ROW) ORDER BY i")
       == Seq(3L, 3L, 7L, 60L, 60L, 60L, 120L))
-    // set-operation branches (round 17): each branch hoists and wraps
-    // independently; the statement tail keeps binding to the whole op.
+    // set-operation branches (round 17): each branch has its own
+    // window; the statement tail keeps binding to the whole op.
     // Branch 1 (i≤3): groups {1,2},{4} → 3,3,7; branch 2 (i≥6):
     // singleton groups {32},{64} → 32,96
     assert(sums("SELECT i, SUM(x) OVER (ORDER BY o GROUPS 1 PRECEDING) s " +
       "FROM gft WHERE i <= 3 UNION ALL SELECT i, SUM(x) OVER (ORDER BY o " +
       "GROUPS 1 PRECEDING) s FROM gft WHERE i >= 6 ORDER BY i")
       == Seq(3L, 3L, 7L, 32L, 96L))
-    // grouped block (round 17): the wrap inverts — the grouped query is
-    // the inner subquery, the GROUPS window evaluates outside over the
-    // hoisted aggregate argument. Grouped rows (o→SUM(x)): (1,3),(2,4),
+    // grouped block (round 17): the GROUPS window evaluates over the
+    // grouped rows. Grouped rows (o→SUM(x)): (1,3),(2,4),
     // (3,56),(5,64); o unique after grouping → singleton peer groups
     assert(sums("SELECT o, SUM(SUM(x)) OVER (ORDER BY o GROUPS BETWEEN " +
       "1 PRECEDING AND CURRENT ROW) s FROM gft GROUP BY o ORDER BY o")
       == Seq(3L, 7L, 60L, 120L))
-    // grouped + PARTITION BY + aliases: partition exprs hoist as __wp,
-    // the window arg as __wa; per-p windows are the ungrouped golden
+    // grouped + PARTITION BY + aliases: per-p windows are the ungrouped
+    // golden
     val gpart = spark.sql(DuckDbDialect.rewrite("SELECT p, o AS oo, " +
       "CAST(SUM(SUM(x)) OVER (PARTITION BY p ORDER BY o GROUPS 1 PRECEDING) " +
       "AS BIGINT) AS s FROM gft2 GROUP BY p, o ORDER BY p, oo")).collect()
@@ -602,14 +602,13 @@ class DuckDbDialectSpec extends AnyFunSuite {
       == Seq(3L, 7L, 60L, 120L, 3L, 7L, 60L, 120L))
     assert(gpart.map(_.getAs[Number]("oo").intValue).toSeq
       == Seq(1, 2, 3, 5, 1, 2, 3, 5))
-    // grouped + HAVING stays inside the wrap: dropping the o=1 group
-    // BEFORE the window shifts o=2's preceding group away
+    // grouped + HAVING: dropping the o=1 group BEFORE the window shifts
+    // o=2's preceding group away
     assert(sums("SELECT o, SUM(SUM(x)) OVER (ORDER BY o GROUPS 1 PRECEDING) s " +
       "FROM gft GROUP BY o HAVING SUM(x) > 3 ORDER BY o")
       == Seq(4L, 60L, 120L))
-    // bounded out, with the limitation named: expression offsets,
-    // missing the mandatory ORDER BY, grouped+named-window combined,
-    // GROUP BY ordinals, and unaliased grouped expressions
+    // bounded out, with the limitation named: a column offset and a
+    // missing (mandatory) ORDER BY
     def named(q: String, frag: String): Unit = {
       val ex = intercept[IllegalArgumentException](DuckDbDialect.rewrite(q))
       assert(ex.getMessage.toLowerCase.contains(frag), ex.getMessage)
@@ -618,11 +617,16 @@ class DuckDbDialectSpec extends AnyFunSuite {
       "CURRENT ROW) FROM gft", "integer-literal")
     named("SELECT SUM(x) OVER (GROUPS BETWEEN 1 PRECEDING AND CURRENT ROW) " +
       "FROM gft", "order by")
-    named("SELECT o, SUM(x) + 0, SUM(SUM(x)) OVER (ORDER BY o GROUPS " +
-      "1 PRECEDING) s FROM gft GROUP BY o", "alias")
-    // round 18: GROUP BY + named WINDOW clause COMPOSES — the clause
-    // stays outer, partition/order exprs hoist inner (same goldens as
-    // the inline grouped cases above)
+    // an unaliased grouped expression beside a GROUPS window over the
+    // grouped rows: o → SUM(x) is (1,3),(2,4),(3,56),(5,64), and each
+    // o is its own peer group
+    val unaliased = spark.sql(DuckDbDialect.rewrite("SELECT o, SUM(x) + 0, " +
+      "SUM(SUM(x)) OVER (ORDER BY o GROUPS 1 PRECEDING) s FROM gft GROUP BY o"))
+      .collect().map(r => (r.getInt(0), r.getAs[Number](1).longValue,
+        r.getAs[Number](2).longValue)).sortBy(_._1).toSeq
+    assert(unaliased == Seq((1, 3L, 3L), (2, 4L, 7L), (3, 56L, 60L), (5, 64L, 120L)))
+    // round 18: GROUP BY + named WINDOW clause (same goldens as the
+    // inline grouped cases above)
     assert(spark.sql(DuckDbDialect.rewrite(
       "SELECT o, CAST(SUM(SUM(x)) OVER w AS BIGINT) AS s FROM gft " +
         "GROUP BY o WINDOW w AS (ORDER BY o GROUPS 1 PRECEDING) ORDER BY o"))
@@ -647,10 +651,11 @@ class DuckDbDialectSpec extends AnyFunSuite {
         "GROUPS 1 PRECEDING) ORDER BY p, o"))
       .collect().map(_.getAs[Number]("s").longValue).toSeq
       == Seq(3L, 7L, 60L, 120L, 3L, 7L, 60L, 120L))
-    // GROUP BY ALL + window: both engines reject it (measured round 18)
-    // — the shim's error is parity, and says so
-    named("SELECT o, SUM(SUM(x)) OVER (ORDER BY o GROUPS 1 PRECEDING) s " +
-      "FROM gft GROUP BY ALL", "both engines reject")
+    // GROUP BY ALL + window: Spark 4.1 groups by the non-aggregate items
+    // (DuckDB 1.0 rejects ALL + any window, measured); a GROUPS window
+    // there is no different from any other window
+    assert(sums("SELECT o, SUM(SUM(x)) OVER (ORDER BY o GROUPS 1 PRECEDING) s " +
+      "FROM gft GROUP BY ALL ORDER BY o") == Seq(3L, 7L, 60L, 120L))
     // round 18: GROUP BY ordinals resolve to the item expression (same
     // golden as the named-key grouped case above)
     assert(sums("SELECT o, SUM(SUM(x)) OVER (ORDER BY o GROUPS 1 PRECEDING) s " +
@@ -671,8 +676,6 @@ class DuckDbDialectSpec extends AnyFunSuite {
   test("GROUPS round-18 advice closures: set-op subqueries, window-named column, string-literal ORDER BY") {
     val spark = TestSpark.spark
     // a numeric-offset frame nested in a subquery INSIDE a set-op branch
-    // rewrites at ITS query block (round-18 advice: branch recursion
-    // goes through the deep pass, not the top one)
     val setSub = spark.sql(DuckDbDialect.rewrite(
       "SELECT CAST(s AS BIGINT) AS s FROM (SELECT SUM(x) OVER (ORDER BY o " +
         "GROUPS 1 PRECEDING) AS s FROM gft) q1 " +
@@ -684,8 +687,7 @@ class DuckDbDialectSpec extends AnyFunSuite {
     // one before it (the round-16 test's own golden), once per branch
     val once = Seq(3L, 3L, 7L, 60L, 60L, 60L, 120L)
     assert(setSub == (once ++ once).sorted)
-    // a column literally named `window` at depth 0 no longer truncates
-    // the wrap body (round-18 advice: only `WINDOW <ident> AS (` counts)
+    // a column literally named `window` at depth 0 is a column
     spark.sql("SELECT o, x, x AS window FROM gft").createOrReplaceTempView("gftw")
     val wcol = spark.sql(DuckDbDialect.rewrite(
       "SELECT CAST(SUM(x) OVER (ORDER BY o GROUPS 1 PRECEDING) AS BIGINT) " +
@@ -716,8 +718,7 @@ class DuckDbDialectSpec extends AnyFunSuite {
     val once = Seq(3L, 3L, 7L, 60L, 60L, 60L, 120L)
     // constant expression offsets fold to the literal: (1+1) ≡ 2
     // PRECEDING (adds G[c-2]: 3,3,7,63,63,63,124), CAST(1 AS INT) ≡ 1
-    // PRECEDING, (2*2-3) ≡ 1 PRECEDING, and (2-2) ≡ CURRENT ROW (the
-    // inline RANGE mapping — no hoist at all)
+    // PRECEDING, (2*2-3) ≡ 1 PRECEDING, and (2-2) ≡ CURRENT ROW
     assert(sums("SELECT i, SUM(x) OVER (ORDER BY o GROUPS BETWEEN (1+1) " +
       "PRECEDING AND CURRENT ROW) s FROM gft ORDER BY i")
       == Seq(3L, 3L, 7L, 63L, 63L, 63L, 124L))
@@ -749,18 +750,22 @@ class DuckDbDialectSpec extends AnyFunSuite {
       "SELECT gft.*, CAST(SUM(x) OVER (ORDER BY o GROUPS 1 PRECEDING) AS " +
         "BIGINT) AS s FROM gft ORDER BY i")).columns.toSeq
       == Seq("i", "o", "x", "s"))
-    // WHERE stays inside the wrap: windows see the filtered rows
+    // windows see the filtered rows
     assert(sums("SELECT g.*, CAST(SUM(x) OVER (ORDER BY o GROUPS 1 " +
       "PRECEDING) AS BIGINT) AS s FROM gft g WHERE i >= 3 ORDER BY i")
       == Seq(4L, 60L, 60L, 60L, 120L))
-    // an explicit alias SHADOWS the base name (both engines), and a
-    // multi-relation FROM stays bounded out with the limitation named
-    named("SELECT gft.*, SUM(x) OVER (ORDER BY o GROUPS 1 PRECEDING) s " +
-      "FROM gft g", "sole from relation")
-    named("SELECT a.*, SUM(a.x) OVER (ORDER BY a.o GROUPS 1 PRECEDING) s " +
-      "FROM gft a JOIN gft b ON a.i = b.i", "sole from relation")
-    // * EXCEPT (cols) merges the helper alias into the existing
-    // exclusion list (DuckDB's EXCLUDE arrives here already as EXCEPT)
+    // an explicit alias SHADOWS the base name: Spark's analyzer rejects
+    // `gft.*` over `gft g`, as DuckDB's binder does (measured)
+    intercept[org.apache.spark.sql.AnalysisException](spark.sql(DuckDbDialect.rewrite(
+      "SELECT gft.*, SUM(x) OVER (ORDER BY o GROUPS 1 PRECEDING) s FROM gft g")))
+    // a qualified star over a multi-relation FROM is the relation's
+    // columns, as anywhere else (i is unique, so the self-join is 1:1)
+    val selfJoin = spark.sql(DuckDbDialect.rewrite("SELECT a.*, SUM(a.x) OVER " +
+      "(ORDER BY a.o GROUPS 1 PRECEDING) s FROM gft a JOIN gft b ON a.i = b.i"))
+    assert(selfJoin.columns.toSeq == Seq("i", "o", "x", "s"))
+    assert(selfJoin.collect().map(r => (r.getInt(0), r.getAs[Number]("s").longValue))
+      .sortBy(_._1).map(_._2).toSeq == once)
+    // * EXCEPT (cols) and DuckDB's * EXCLUDE (cols) beside a GROUPS window
     val ex1 = spark.sql(DuckDbDialect.rewrite(
       "SELECT * EXCEPT (i), CAST(SUM(x) OVER (ORDER BY o GROUPS 1 " +
         "PRECEDING) AS BIGINT) AS s FROM gft ORDER BY o, x"))
@@ -770,13 +775,10 @@ class DuckDbDialectSpec extends AnyFunSuite {
       "SELECT * EXCLUDE (i, x), CAST(SUM(x) OVER (ORDER BY o GROUPS 1 " +
         "PRECEDING) AS BIGINT) AS s FROM gft ORDER BY o, x"))
     assert(ex2.columns.toSeq == Seq("o", "s"))
-    // groupedGroupsWrap residual (round-19 advice): the PARTITION/ORDER
-    // split in rewriteSpecForOuter runs on the NAMED-window grouped
-    // path too — a string literal 'order by' inside the partition
-    // expression, a comma inside a partition literal, and an order
-    // expression whose literal suffix spells ' desc' must all split at
-    // the real keywords only (kwAt/splitTopLevel are string-masked; the
-    // anchored regexes run after them)
+    // string literals that spell keywords inside the spec: 'order by'
+    // inside the partition expression, a comma inside a partition
+    // literal, and an order expression whose literal suffix spells
+    // ' desc' — the marker goes after the real PARTITION BY only
     assert(spark.sql(DuckDbDialect.rewrite(
       "SELECT o, CAST(SUM(SUM(x)) OVER w AS BIGINT) AS s FROM gft " +
         "GROUP BY o WINDOW w AS (PARTITION BY CASE WHEN 'order by' = 'x' " +
@@ -790,8 +792,7 @@ class DuckDbDialectSpec extends AnyFunSuite {
       "STRING) || ' desc') GROUPS 1 PRECEDING) AS BIGINT) AS s FROM gft " +
       "GROUP BY o ORDER BY o") == Seq(3L, 7L, 60L, 120L))
     // SELECT DISTINCT + GROUP BY + GROUPS composes (round 19): windows
-    // evaluate before DISTINCT, so the keyword moves to the inverted
-    // wrap's outer select and dedups the WINDOWED output rows
+    // evaluate before DISTINCT, which dedups the WINDOWED output rows
     val dg = spark.sql(DuckDbDialect.rewrite(
       "SELECT DISTINCT (o % 2) AS p, CAST(SUM(SUM(x)) OVER (ORDER BY " +
         "(o % 2) GROUPS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS " +
@@ -802,14 +803,42 @@ class DuckDbDialectSpec extends AnyFunSuite {
     // p0 rows → 4, p1 rows → 4+123 = 127 (all three p1 rows identical
     // after windowing) → DISTINCT leaves (0,4) and (1,127)
     assert(dg == Seq((0, 4L), (1, 127L)))
-    // SELECT DISTINCT * (ungrouped) + GROUPS: the star after the
-    // DISTINCT keyword is still the projection star — the dense-rank
-    // helper must not leak through it into the distinct key
+    // SELECT DISTINCT * (ungrouped) + GROUPS: the dense rank must not
+    // leak through the star into the distinct key
     val ds = spark.sql(DuckDbDialect.rewrite(
       "SELECT DISTINCT *, CAST(SUM(x) OVER (ORDER BY o GROUPS 1 " +
         "PRECEDING) AS BIGINT) AS s FROM gft ORDER BY i"))
     assert(ds.columns.toSeq == Seq("i", "o", "x", "s"))
     assert(ds.collect().map(_.getAs[Number]("s").longValue).toSeq == once)
+  }
+
+  test("a GROUPS frame reaches Catalyst as a marked ROWS frame, with no subquery") {
+    // the text pass changes only the frame keyword and the partition
+    // clause; the dense rank is the analyzer rule's (GroupsFrameRule)
+    val cases = Seq(
+      "SELECT i, SUM(x) OVER (ORDER BY o GROUPS BETWEEN 1 PRECEDING AND 1 FOLLOWING) s " +
+        "FROM gft ORDER BY i" ->
+        ("SELECT i, SUM(x) OVER (PARTITION BY graft_groups_frame() ORDER BY o ROWS " +
+          "BETWEEN 1 PRECEDING AND 1 FOLLOWING) s FROM gft ORDER BY i"),
+      "SELECT p, SUM(x) OVER (PARTITION BY p ORDER BY o GROUPS 2 PRECEDING) s FROM gft2" ->
+        ("SELECT p, SUM(x) OVER (PARTITION BY graft_groups_frame(), p ORDER BY o ROWS " +
+          "2 PRECEDING) s FROM gft2"),
+      "SELECT SUM(x) OVER w s FROM gft WINDOW w AS (ORDER BY o GROUPS 1 PRECEDING)" ->
+        ("SELECT SUM(x) OVER w s FROM gft WINDOW w AS (PARTITION BY graft_groups_frame() " +
+          "ORDER BY o ROWS 1 PRECEDING)"))
+    cases.foreach { case (in, out) =>
+      val r = DuckDbDialect.rewrite(in)
+      assert(r == out)
+      assert(!r.contains("__grp") && "(?i)\\bselect\\b".r.findAllIn(r).size == 1, r)
+    }
+  }
+
+  test("the GROUPS marker outside a window partition fails with a named error") {
+    val e = intercept[Throwable](
+      TestSpark.spark.sql("SELECT graft_groups_frame() AS m FROM range(3)").collect())
+    val messages = Iterator.iterate(e)(_.getCause).takeWhile(_ != null).map(_.getMessage)
+    assert(messages.exists(m => m != null &&
+      m.contains("graft_groups_frame() marks a GROUPS window frame")), e.toString)
   }
 
   test("function-surface twins: arg_max, quantiles, list lambdas, unnest, 3-arg date_diff (round 16)") {
@@ -1074,8 +1103,8 @@ class DuckDbDialectSpec extends AnyFunSuite {
     assert(iv.map(r => if (r.isNullAt(1)) None else Some(r.getLong(1))).toSeq
       == Seq(None, Some(15L), Some(30L), None, Some(40L)))
     assert(iv.map(_.getLong(2)).toSeq == Seq(2L, 1L, 1L, 1L, 0L))
-    // GROUPS + EXCLUDE composes since round 16 (GROUPS decomposes to a
-    // dense-rank RANGE first, then the exclusion pass applies): on gft's
+    // GROUPS + EXCLUDE composes (the exclusion pass decomposes a GROUPS
+    // frame peer-wise, in GROUPS frames): on gft's
     // row i=4 (x=8, G3) the 1 PRECEDING..1 FOLLOWING frame is G2+G3+G4
     // = 124; EXCLUDE GROUP removes all of G3 (8+16+32) → 68
     spark.sql("SELECT * FROM VALUES (1,1,1),(2,1,2),(3,2,4),(4,3,8)," +
@@ -1360,8 +1389,9 @@ class DuckDbDialectSpec extends AnyFunSuite {
 
   test("star EXCEPT/EXCLUDE next to a set-op EXCEPT: each pass tells them apart") {
     // `* EXCEPT (cols)` is the star modifier, `EXCEPT [ALL] <query>` the
-    // set operation; FROM-first, QUALIFY, GROUPS and DISTINCT ON each cut
-    // at set operations, so each must keep the modifier inside its branch
+    // set operation; FROM-first, QUALIFY and DISTINCT ON each cut at set
+    // operations, so each must keep the modifier inside its branch (and
+    // GROUPS, which no longer cuts, must leave both alone)
     def flat(s: String): String = s.replace('\n', ' ')
     val cases = Seq(
       "FROM t SELECT * EXCEPT (b) WHERE a > 0 EXCEPT FROM u SELECT * EXCLUDE (b)" ->
@@ -1380,14 +1410,13 @@ class DuckDbDialectSpec extends AnyFunSuite {
           "__qualify WHERE __qualify_w1 > 2 ORDER BY a"),
       "SELECT * EXCEPT (b), SUM(a) OVER (ORDER BY a GROUPS BETWEEN 1 PRECEDING AND " +
         "CURRENT ROW) AS s FROM t EXCEPT SELECT * EXCLUDE (b), 0 AS s FROM u" ->
-        ("SELECT * EXCEPT (b, __grp1), SUM(a) OVER (ORDER BY __grp1 RANGE BETWEEN 1 " +
-          "PRECEDING AND CURRENT ROW) AS s FROM ( SELECT *, DENSE_RANK() OVER (ORDER " +
-          "BY a) AS __grp1 FROM t ) __groups EXCEPT SELECT * except (b), 0 AS s FROM u"),
+        ("SELECT * EXCEPT (b), SUM(a) OVER (PARTITION BY graft_groups_frame() ORDER BY " +
+          "a ROWS BETWEEN 1 PRECEDING AND CURRENT ROW) AS s FROM t EXCEPT SELECT * " +
+          "except (b), 0 AS s FROM u"),
       "SELECT * EXCLUDE (b) FROM u EXCEPT ALL SELECT * EXCEPT (b), SUM(a) OVER " +
         "(ORDER BY a GROUPS 1 PRECEDING) AS s FROM t" ->
-        ("SELECT * except (b) FROM u EXCEPT ALL SELECT * EXCEPT (b, __grp1), SUM(a) " +
-          "OVER (ORDER BY __grp1 RANGE BETWEEN 1 PRECEDING AND CURRENT ROW) AS s FROM " +
-          "( SELECT *, DENSE_RANK() OVER (ORDER BY a) AS __grp1 FROM t ) __groups"),
+        ("SELECT * except (b) FROM u EXCEPT ALL SELECT * EXCEPT (b), SUM(a) OVER " +
+          "(PARTITION BY graft_groups_frame() ORDER BY a ROWS 1 PRECEDING) AS s FROM t"),
       "SELECT DISTINCT ON (a) * FROM t ORDER BY a, b" ->
         ("SELECT * EXCEPT (__don_rn) FROM ( SELECT *, ROW_NUMBER() OVER (PARTITION BY " +
           "a ORDER BY a, b) AS __don_rn FROM t ) __don WHERE __don_rn = 1 ORDER BY a, b"))
@@ -1830,10 +1859,9 @@ class DuckDbDialectSpec extends AnyFunSuite {
     spark.sql("SELECT * FROM VALUES (1,'a'),(2,'b'),(3,'c'),(4,'d'),(5,'e')," +
       "(6,'f'),(7,'g') AS t(ref,tag)").createOrReplaceTempView("gfr")
     val once = Seq(3L, 3L, 7L, 60L, 60L, 60L, 120L)
-    // a.* over a TWO-relation FROM: the gateway installs the schema
-    // resolver, so the star expands to gft's columns (names unique
-    // against gfr's), qualified outer references (the window args and
-    // the ORDER BY tail) dequalify, and the goldens match the
+    // a.* over a TWO-relation FROM through the gateway: the star is
+    // gft's columns, qualified references (the window args and the ORDER
+    // BY tail) resolve as in any query, and the goldens match the
     // single-relation form's
     val qs = engine.SqlGateway.run(spark,
       "SELECT a.*, CAST(SUM(a.x) OVER (ORDER BY a.o GROUPS 1 PRECEDING) " +
@@ -1848,18 +1876,21 @@ class DuckDbDialectSpec extends AnyFunSuite {
     assert(mixed.columns.toSeq == Seq("i", "tag", "s"))
     assert(mixed.collect().map(r => (r.getInt(0), r.getString(1))).toSeq ==
       Seq(1 -> "a", 2 -> "b", 3 -> "c", 4 -> "d", 5 -> "e", 6 -> "f", 7 -> "g"))
-    // a shared bare name post-wrap is ambiguous — thrown, named (the
-    // self-join makes every gft column collide)
-    val amb = intercept[IllegalArgumentException](engine.SqlGateway.run(spark,
+    // a self-join, where every gft column name is shared by both sides:
+    // a.* is still a's columns (i is unique, so the join is 1:1)
+    def byI(df: org.apache.spark.sql.DataFrame): Seq[Long] = {
+      assert(df.columns.toSeq == Seq("i", "o", "x", "s"))
+      df.collect().map(r => (r.getInt(0), r.getAs[Number]("s").longValue))
+        .sortBy(_._1).map(_._2).toSeq
+    }
+    assert(byI(engine.SqlGateway.run(spark,
       "SELECT a.*, SUM(a.x) OVER (ORDER BY a.o GROUPS 1 PRECEDING) AS s " +
-        "FROM gft a JOIN gft b ON a.i = b.i"))
-    assert(amb.getMessage.contains("also exists"), amb.getMessage)
-    // a DIRECT rewrite() has no schema source: the named bounded error
-    // stays (parity with every pre-round-20 caller)
-    val direct = intercept[IllegalArgumentException](DuckDbDialect.rewrite(
+        "FROM gft a JOIN gft b ON a.i = b.i")) == once)
+    // a DIRECT rewrite() needs no schema source: the rule sees the
+    // analyzed plan, where a.* is already resolved
+    assert(byI(spark.sql(DuckDbDialect.rewrite(
       "SELECT a.*, SUM(a.x) OVER (ORDER BY a.o GROUPS 1 PRECEDING) AS s " +
-        "FROM gft a JOIN gfr b ON a.i = b.ref"))
-    assert(direct.getMessage.contains("sole FROM relation"), direct.getMessage)
+        "FROM gft a JOIN gfr b ON a.i = b.ref"))) == once)
     // an unknown qualifier (struct access shape) passes through
     // untouched rather than being mangled: gateway run still resolves
     // it against the inner star output
