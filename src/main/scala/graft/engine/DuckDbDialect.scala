@@ -1,6 +1,6 @@
 package graft.engine
 
-import graft.functions.GroupsFrame
+import graft.functions.{FrameExclude, GroupsFrame}
 
 /** DuckDB-dialect acceptance shim (VERDICT r11 #3; SURVEY §7.4-1).
   *
@@ -21,8 +21,11 @@ import graft.functions.GroupsFrame
   *     - syntax Spark's parser cannot read or reads differently: `//`,
   *       FROM-first, QUALIFY, DISTINCT ON, `* REPLACE`, `* EXCLUDE`,
   *       ASOF JOIN, USING SAMPLE, SIMILAR TO, in-paren IGNORE NULLS,
-  *       bracket lists and 1-based indexing, DISTINCT window
-  *       aggregates, GROUPS frames and frame EXCLUDE;
+  *       bracket lists and 1-based indexing, and the window-frame
+  *       keywords GROUPS and EXCLUDE, which [[rewriteFrames]] only
+  *       spells as a marked spec for [[graft.functions.DuckWindowRule]];
+  *     - a window aggregate's FILTER clause, which Spark's analyzer
+  *       rejects before any injected rule sees the plan;
   *     - `struct_pack(a := 1)`: Spark cannot parse `:=`;
   *     - 2-arg `regexp_extract` and 3-arg `date_diff`/`datediff`:
   *       Spark builtins with other semantics at that arity, so a
@@ -53,26 +56,18 @@ import graft.functions.GroupsFrame
   *    measured), any FLOAT operand gives plain division (-5.0//2 =
   *    -2.5 — the docs say floor; the engine disagrees), and divisor 0
   *    yields NULL in both regimes.
-  *  - Window-frame `EXCLUDE CURRENT ROW` decomposes to frame-minus-
-  *    current for SUM/COUNT/AVG; `EXCLUDE GROUP`/`TIES` decompose for
-  *    the same aggregates over BOTH frame types (RANGE round 13d; ROWS
-  *    and non-containing RANGE round 15, via DuckDB's measured segment
-  *    arithmetic [fs, ps−1] ∪ [pe+1, fe] expressed as static prefix
-  *    windows); `EXCLUDE NO OTHERS` drops. Frame bounds are classified
-  *    by their TRAILING keyword (multi-token INTERVAL offsets included
-  *    — round 14); an off-frame ROWS `EXCLUDE CURRENT ROW` reproduces
-  *    DuckDB 1.0's measured adjacent-row extension, and the RANGE
-  *    spelling — whose measured extension is in ROW space, including
-  *    ORDER BY peers — decomposes over mixed ROWS/RANGE prefix windows
-  *    (round 15; it was the last frame-exclusion throw). MIN/MAX
-  *    (non-subtractive) and DISTINCT arguments throw.
+  *  - Window-frame EXCLUDE (CURRENT ROW, GROUP, TIES) is computed by
+  *    [[graft.functions.DuckWindowRule]] on the analyzed frame for
+  *    COUNT/SUM/AVG, over ROWS, RANGE and GROUPS frames, including
+  *    DuckDB 1.0's measured extension of a frame that misses the
+  *    current row; `EXCLUDE NO OTHERS` drops. MIN/MAX (non-subtractive)
+  *    and DISTINCT arguments fail with a named error.
   *  - GROUPS frames (for the reference's pinned duckdb>=1.3.2; the
   *    local 1.0 oracle rejects them, so they are pinned against ANSI
-  *    goldens, not oracle-checked): the text pass only spells the frame
-  *    as ROWS and marks the spec ([[rewriteGroups]]); the analyzer rule
-  *    [[graft.functions.GroupsFrameRule]] computes it as a RANGE over
-  *    the spec's DENSE_RANK (dense ranks have no gaps, so value distance
-  *    is group distance — exact). Offsets must be constant integers.
+  *    goldens, not oracle-checked): the same rule computes them as a
+  *    RANGE over the spec's DENSE_RANK (dense ranks have no gaps, so
+  *    value distance is group distance — exact). Offsets must be
+  *    constant integers.
   *  - Bracket syntax (round 15): list literals `[e, …]` (and the
   *    `ARRAY[…]` spelling) become array(...); 1-based indexing `x[i]`
   *    becomes try_element_at — Spark's own bracket indexing is 0-BASED,
@@ -84,12 +79,9 @@ import graft.functions.GroupsFrame
   *    local part truncation for sub-day parts) — Spark's own 2-arg
   *    datediff and unquoted-part spellings pass through untouched.
   *  - DISTINCT window aggregates (`COUNT/SUM/AVG/MIN/MAX(DISTINCT x)
-  *    OVER …`, DuckDB-native, rejected outright by Spark) decompose
-  *    over collect_set: COUNT = size(set), SUM = element-typed fold
-  *    seeded by the set's first element (NULL on empty, like the
-  *    engine), AVG = the pair, MIN/MAX drop the redundant DISTINCT
-  *    (round 15; NULL exclusion, frame semantics and empty-frame
-  *    results all measured).
+  *    OVER …`) need no text at all: Spark parses them and only its
+  *    final check rejects them, so the same rule computes them over one
+  *    collect_set per argument, for any numeric type, DECIMAL included.
   *  - `USING SAMPLE n[%|PERCENT|ROWS]` after a table reference becomes
   *    `TABLESAMPLE (n PERCENT|ROWS)` — an acceptance rewrite: both draw
   *    the requested sample size, by different algorithms (sampling is
@@ -115,10 +107,7 @@ object DuckDbDialect {
   private val passes: Seq[Lex => String] = Seq(
     rewriteFromFirst, rewriteQualifyDeep, rewriteDistinctOn, rewriteStarReplace,
     rewriteAsOfJoin, rewriteOperatorIntDiv, rewriteUsingSample, rewriteSimilarTo,
-    rewriteIgnoreNulls, rewriteBrackets, rewriteDistinctWindow,
-    // EXCLUDE first: it decomposes a GROUPS frame peer-wise and emits GROUPS
-    // frames, which the GROUPS pass then marks with the rest
-    rewriteFrameExclude, rewriteGroups,
+    rewriteIgnoreNulls, rewriteBrackets, rewriteFrames,
     rewriteCalls(_, "date_diff")(dateDiffCall),
     rewriteCalls(_, "datediff")(dateDiffCall), // 3-arg alias; 2-arg passes
     rewriteCalls(_, "struct_pack")(structPackCall),
@@ -1129,7 +1118,7 @@ object DuckDbDialect {
   private val GroupsOffsetRe = s"(?is)(\\d+|$GroupsIntExpr)(\\s+(?:preceding|following))".r
 
   /** Folds the constant-integer offset grammar [[GroupsIntExpr]] admits
-    * into the literal offset [[rewriteGroups]] writes. Throws (named,
+    * into the literal offset [[rewriteFrames]] writes. Throws (named,
     * never silent) on anything non-constant, negative, or outside the
     * +|−|* grammar. */
   private def foldIntOffset(expr0: String): Long = {
@@ -1177,18 +1166,19 @@ object DuckDbDialect {
     v
   }
 
-  /** Locate the first frame-position GROUPS token: outside strings, at
-    * depth 0 of a paren group whose content is a window SPEC (the word
-    * before the open paren is OVER, or AS for a named-window definition
-    * whose content does not start with SELECT/FROM/WITH/VALUES — an AS
-    * followed by a query is a CTE/derived table, not a spec), with
-    * frame-bound-shaped text following (a mere column named `groups`
-    * inside a spec does not match the bound shape). Returns
-    * (tokenPos, specOpenParen). */
-  private def findGroupsFrame(lx: Lex): Option[(Int, Int)] = {
+  /** Locate the first frame-syntax token: a GROUPS frame keyword or an
+    * EXCLUDE clause, outside strings, at depth 0 of a paren group whose
+    * content is a window SPEC (the word before the open paren is OVER, or
+    * AS for a named-window definition whose content does not start with
+    * SELECT/FROM/WITH/VALUES — an AS followed by a query is a CTE/derived
+    * table, not a spec). A GROUPS token must be followed by
+    * frame-bound-shaped text (a mere column named `groups` inside a spec
+    * does not match the bound shape). Returns (tokenPos, specOpenParen). */
+  private def findFrameToken(lx: Lex): Option[(Int, Int)] = {
     val sql = lx.s
     def specOf(i: Int): Option[Int] =
-      if (!lx.word(i, "groups") || GroupsShapeRe.findFirstIn(sql.substring(i)).isEmpty) None
+      if (!lx.word(i, "exclude") &&
+          !(lx.word(i, "groups") && GroupsShapeRe.findFirstIn(sql.substring(i)).isDefined)) None
       else lx.opens(i).headOption.filter { sp =>
         val w = lx.back(sp - 1)
         val kw = sql.substring(lx.identTo(w), w + 1).toLowerCase(java.util.Locale.ROOT)
@@ -1198,392 +1188,130 @@ object DuckDbDialect {
     specOf(at).map(sp => (at, sp))
   }
 
-  /** ANSI GROUPS window frames, for the reference's pinned
-    * `duckdb>=1.3.2` (pyproject.toml:8), which parses them. The local
-    * DuckDB 1.0 oracle does not ("GROUPS mode for window functions is
-    * not implemented yet", measured), so the semantics are pinned
-    * against hand-derived ANSI goldens (DuckDbDialectSpec) and the
-    * soaks' oracle runs a dense-rank equivalent (COVERAGE.md). Spark has
-    * no GROUPS token (checked against the 4.1 SqlBaseLexer), and a text
-    * pass cannot add the Window operator the semantics need, so this
-    * pass only carries the syntax into Catalyst:
+  private val ExcludeRe = "(?is)^exclude\\s+(current\\s+row|group|ties|no\\s+others)".r
+
+  private val FilterFolds = Set("count", "sum", "avg", "min", "max")
+
+  /** DuckDB's filtered window aggregate, `f(x) FILTER (WHERE c) OVER …`,
+    * for COUNT/SUM/AVG/MIN/MAX of one argument: the first one in the
+    * text, with the filter folded into the argument as
+    * `f([DISTINCT] CASE WHEN c THEN x END) OVER …` (`*` counts as 1).
+    * These aggregates skip NULLs, so a row the filter drops is one whose
+    * argument is NULL. Spark parses the clause but rejects it on a window
+    * aggregate while extracting the window, before any injected rule
+    * sees the plan, so the fold is textual. */
+  private def foldWindowFilter(lx: Lex): Option[String] = {
+    val sql = lx.s
+    def foldAt(i: Int): Option[String] = if (!lx.word(i, "filter")) None else {
+      val open = lx.code(i + "filter".length, 1)
+      val where = lx.code(open + 1, 1)
+      val close = if (open < sql.length && sql(open) == '(' && lx.word(where, "where"))
+        lx.closeOf(open) else -1
+      val callEnd = lx.code(i - 1, -1)
+      val callOpen = if (close > 0 && lx.word(lx.code(close + 1, 1), "over") &&
+        callEnd > 0 && sql(callEnd) == ')') lx.openOf(callEnd) else -1
+      val nameEnd = lx.back(callOpen - 1)
+      if (callOpen <= 0 || lx.split(',', callOpen + 1, callEnd).size != 1 || !FilterFolds(
+          sql.substring(lx.identTo(nameEnd), nameEnd + 1).toLowerCase(java.util.Locale.ROOT))) None
+      else {
+        val first = lx.code(callOpen + 1, 1)
+        val (distinct, arg) =
+          if (lx.word(first, "distinct")) ("DISTINCT ", sql.substring(first + 8, callEnd).trim)
+          else ("", sql.substring(callOpen + 1, callEnd).trim)
+        val cond = sql.substring(where + "where".length, close).trim
+        Some(sql.substring(0, callOpen + 1) + distinct +
+          s"CASE WHEN $cond THEN ${if (arg == "*") "1" else arg} END)" + sql.substring(close + 1))
+      }
+    }
+    val at = lx.find()(foldAt(_).isDefined)
+    if (at < 0) None else foldAt(at)
+  }
+
+  /** The window-frame syntax Spark's grammar lacks: ANSI GROUPS frames
+    * and DuckDB's frame EXCLUDE clause, in inline OVER specs and
+    * named-WINDOW definitions alike. A text pass cannot add the Window
+    * operators their meaning needs, so this pass only carries the
+    * syntax into Catalyst, as a marker first in the spec's PARTITION BY:
     *
-    *   OVER ([PARTITION BY p] ORDER BY o GROUPS <bounds>)
-    *     → OVER (PARTITION BY graft_groups_frame()[, p] ORDER BY o ROWS <bounds>)
+    *   OVER ([PARTITION BY p] ORDER BY o GROUPS <bounds> [EXCLUDE <kind>])
+    *     → OVER (PARTITION BY [graft_frame_exclude('<kind>'), ]
+    *               graft_groups_frame()[, p] ORDER BY o ROWS <bounds>)
     *
-    * in inline OVER specs and named-WINDOW definitions alike. ROWS
-    * parses and resolves with any number of ORDER BY keys and constant
-    * offsets; [[graft.functions.GroupsFrameRule]] then sees the marker
-    * in the analyzed Window's partition spec and moves its frames to
-    * rank space (RANGE over a DENSE_RANK of the spec's own partition and
-    * order — exact, since dense ranks have no gaps). WHERE, GROUP BY,
-    * DISTINCT, QUALIFY, set operations and qualified stars compose
-    * because the rule works on the analyzed plan.
+    * [[graft.functions.DuckWindowRule]] then sees the markers in the
+    * analyzed Window's partition spec and computes the frame: GROUPS as
+    * a RANGE over the spec's DENSE_RANK, the exclusion as helper windows
+    * plus arithmetic. `EXCLUDE NO OTHERS`, the ANSI default, is dropped.
+    * WHERE, GROUP BY, DISTINCT, QUALIFY, set operations and qualified
+    * stars compose because the rule works on the analyzed plan.
     *
-    * Checked here, each with a named error: offsets must be integer
-    * literals or the constant expressions [[foldIntOffset]] folds (a
-    * folded expression is replaced by its literal); a negative fold; a
-    * spec without ORDER BY (both engines reject it). The shorthand
-    * `GROUPS n PRECEDING` is BETWEEN n PRECEDING AND CURRENT ROW, as
-    * everywhere else. */
-  private def rewriteGroups(lx0: Lex): String = {
+    * GROUPS is for the reference's pinned `duckdb>=1.3.2`
+    * (pyproject.toml:8); the local DuckDB 1.0 oracle cannot parse it
+    * ("GROUPS mode for window functions is not implemented yet",
+    * measured), so its semantics are pinned against hand-derived ANSI
+    * goldens (DuckDbDialectSpec) and the soaks' oracle runs a dense-rank
+    * equivalent (COVERAGE.md). Spark has no GROUPS token (checked against
+    * the 4.1 SqlBaseLexer); ROWS parses and resolves with any number of
+    * ORDER BY keys and constant offsets.
+    *
+    * Checked here, each with a named error: GROUPS offsets must be
+    * integer literals or the constant expressions [[foldIntOffset]] folds
+    * (a folded expression is replaced by its literal); a negative fold; a
+    * GROUPS spec without ORDER BY (both engines reject it); an exclusion
+    * kind other than CURRENT ROW, GROUP, TIES or NO OTHERS; and a
+    * GROUP/TIES exclusion without a frame clause (DuckDB rejects it too).
+    * The shorthand `GROUPS n PRECEDING` is BETWEEN n PRECEDING AND
+    * CURRENT ROW, as everywhere else. */
+  private def rewriteFrames(lx0: Lex): String = {
     var lx = lx0
-    var next = findGroupsFrame(lx)
+    var folded = foldWindowFilter(lx)
+    while (folded.isDefined) { lx = new Lex(folded.get); folded = foldWindowFilter(lx) }
+    var next = findFrameToken(lx)
     while (next.isDefined) {
       val (at, sp) = next.get
       val sql = lx.s
-      val m = GroupsBetweenRe.findFirstMatchIn(sql.substring(at))
-        .orElse(GroupsSingleRe.findFirstMatchIn(sql.substring(at)))
-        .getOrElse(throw new IllegalArgumentException(
-          "GROUPS frame: only integer-literal, constant-expression " +
-            "((1+1), CAST(2 AS INT)) and UNBOUNDED/CURRENT ROW bounds are " +
-            "supported by the dialect shim (a column-dependent offset has " +
-            "no rank-space frame)"))
-      if (lx.topWord(sp + 1, at, "order") < 0)
-        throw new IllegalArgumentException(
-          "GROUPS frame requires a window ORDER BY (both engines reject it without one)")
-      // ROWS for GROUPS, each offset folded (a literal stays as it is)
-      val frame = "ROWS" + GroupsOffsetRe.replaceAllIn(m.matched.substring("groups".length),
-        o => foldIntOffset(o.group(1)).toString + o.group(2))
+      // the token's text [from, until) becomes `frame`, and the spec
+      // gains `mark` unless it is None
+      val (from, until, frame, mark) = if (lx.word(at, "groups")) {
+        val m = GroupsBetweenRe.findFirstMatchIn(sql.substring(at))
+          .orElse(GroupsSingleRe.findFirstMatchIn(sql.substring(at)))
+          .getOrElse(throw new IllegalArgumentException(
+            "GROUPS frame: only integer-literal, constant-expression " +
+              "((1+1), CAST(2 AS INT)) and UNBOUNDED/CURRENT ROW bounds are " +
+              "supported by the dialect shim (a column-dependent offset has " +
+              "no rank-space frame)"))
+        if (lx.topWord(sp + 1, at, "order") < 0)
+          throw new IllegalArgumentException(
+            "GROUPS frame requires a window ORDER BY (both engines reject it without one)")
+        // ROWS for GROUPS, each offset folded (a literal stays as it is)
+        (at, at + m.matched.length,
+          "ROWS" + GroupsOffsetRe.replaceAllIn(m.matched.substring("groups".length),
+            o => foldIntOffset(o.group(1)).toString + o.group(2)),
+          Some(s"${GroupsFrame.Name}()"))
+      } else {
+        val m = ExcludeRe.findFirstMatchIn(sql.substring(at)).getOrElse(
+          throw new IllegalArgumentException(
+            "window frame EXCLUDE: expected CURRENT ROW, GROUP, TIES or NO OTHERS"))
+        val kind = m.group(1).toLowerCase(java.util.Locale.ROOT).replaceAll("\\s+", " ")
+        if ((kind == "group" || kind == "ties") &&
+            lx.topWord(sp + 1, at, "rows", "range", "groups") < 0)
+          throw new IllegalArgumentException(
+            s"window frame EXCLUDE ${kind.toUpperCase(java.util.Locale.ROOT)} needs an " +
+              "explicit frame clause (DuckDB itself rejects a frameless " +
+              "exclusion — measured parse error)")
+        (lx.back(at - 1) + 1, at + m.matched.length, "",
+          if (kind == "no others") None else Some(s"${FrameExclude.Name}('$kind')"))
+      }
       val partAt = lx.topWord(sp + 1, at, "partition")
-      val (markAt, mark) =
-        if (partAt < 0) (lx.fwd(sp + 1), s"PARTITION BY ${GroupsFrame.Name}() ")
-        else (lx.code(partAt + "partition".length, 1) + "by".length, s" ${GroupsFrame.Name}(),")
-      lx = new Lex(sql.substring(0, markAt) + mark + sql.substring(markAt, at) + frame +
-        sql.substring(at + m.matched.length))
-      next = findGroupsFrame(lx)
+      val (markAt, marked) = mark match {
+        case None => (from, "")
+        case Some(mk) if partAt < 0 => (lx.fwd(sp + 1), s"PARTITION BY $mk ")
+        case Some(mk) => (lx.code(partAt + "partition".length, 1) + "by".length, s" $mk,")
+      }
+      lx = new Lex(sql.substring(0, markAt) + marked + sql.substring(markAt, from) + frame +
+        sql.substring(until))
+      next = findFrameToken(lx)
     }
     lx.s
-  }
-
-  /** DuckDB window frames accept an ANSI frame-exclusion clause
-    * (`ROWS BETWEEN ... EXCLUDE CURRENT ROW`); Spark has none. For the
-    * decomposable aggregates the rewrite subtracts the current row's
-    * contribution from the un-excluded frame (which this pass verified
-    * CONTAINS the current row — otherwise the exclusion is a no-op and
-    * is simply dropped, as is `EXCLUDE NO OTHERS`):
-    *
-    *   COUNT(*)  → COUNT(*) OVER spec − 1
-    *   COUNT(x)  → COUNT(x) OVER spec − (x IS NOT NULL)
-    *   SUM(x)    → SUM(x) OVER spec − COALESCE(x, 0), NULL when no
-    *               other non-null row remains (SUM over ∅ is NULL)
-    *   AVG(x)    → the SUM/COUNT pair above, divided, NULL-guarded
-    *
-    * EXCLUDE GROUP/TIES decompose exactly for COUNT/SUM/AVG over BOTH
-    * frame types (round 15 closed the ROWS and non-containing-RANGE
-    * islands): DuckDB evaluates every exclusion as the row-space
-    * segments [frameStart, exclStart−1] ∪ [exclEnd+1, frameEnd], and
-    * each segment is expressible with static prefix windows — see the
-    * three-case derivation at the GROUP/TIES branch below.
-    *
-    * Bounded (throws, never silently wrong): DISTINCT arguments,
-    * non-decomposable functions (MIN/MAX/...), non-integer-literal ROWS
-    * offsets, and a frameless exclusion (DuckDB rejects it too). Every
-    * frame-type × exclusion-kind combination over COUNT/SUM/AVG is
-    * decomposed (the off-frame RANGE CURRENT ROW case closed round 15).
-    * A GROUPS frame takes the RANGE decompositions: its peers are the
-    * ORDER BY peers, and the windows over peer-wise frames are emitted
-    * as GROUPS frames, so [[rewriteGroups]], which runs next, marks
-    * them with the spec's own frame; the positional ROWS prefix windows
-    * stay unmarked, in row space. */
-  private def rewriteFrameExclude(lx0: Lex): String = {
-    var sql = lx0.s
-    var guard = 0
-    while (guard < 50) {
-      guard += 1
-      val lx = if (sql eq lx0.s) lx0 else new Lex(sql)
-      // the first EXCLUDE token whose enclosing paren group follows OVER
-      def specOf(i: Int): Option[Int] =
-        if (!lx.word(i, "exclude")) None
-        else lx.opens(i).headOption.filter { op =>
-          val w = lx.back(op - 1)
-          op > 0 && sql.substring(lx.identTo(w), w + 1).equalsIgnoreCase("over")
-        }
-      val found = lx.find()(specOf(_).isDefined)
-      if (found < 0) return sql
-      val open = specOf(found).get
-      val m = "(?is)^exclude\\s+(current\\s+row|group|ties|no\\s+others)".r
-        .findFirstMatchIn(sql.substring(found))
-        .getOrElse(throw new IllegalArgumentException(
-          "window frame EXCLUDE: expected CURRENT ROW, GROUP, TIES or NO OTHERS"))
-      val kind = m.group(1).toLowerCase(java.util.Locale.ROOT).replaceAll("\\s+", " ")
-      val exclStart = lx.back(found - 1) + 1
-      val exclEnd = found + m.matched.length
-      val specClose =
-        lx.closeOf(open, required("window frame EXCLUDE: unbalanced OVER specification"))
-      require(exclEnd <= specClose, "window frame EXCLUDE: exclusion outside the OVER spec")
-      val specNoExcl = (sql.substring(open, exclStart) + sql.substring(exclEnd, specClose + 1))
-        .replaceAll("\\s+\\)$", ")")
-      // Does the (un-excluded) frame contain the current row? When it
-      // does NOT, DuckDB 1.0's exclusion is NOT the ANSI no-op: it
-      // computes the segments [start, cur-1] ∪ [cur+1, end] without
-      // checking membership, so a frame ENDING at k PRECEDING (k ≥ 1)
-      // silently EXTENDS its end to cur-1, and one STARTING at
-      // k FOLLOWING extends its start to cur+1 — measured:
-      // SUM over ROWS BETWEEN 3 PRECEDING AND 2 PRECEDING EXCLUDE
-      // CURRENT ROW on b=10i returns 60 at i=4 (= rows 1..3), not the
-      // ANSI 30 (= rows 1..2). The engine is the oracle (the SIMILAR TO
-      // precedent), so the rewrite reproduces the measured frame.
-      val inner = specNoExcl.substring(1, specNoExcl.length - 1)
-      val frameM = "(?is)\\b(rows|range|groups)\\b(.*)$".r.findFirstMatchIn(inner)
-      // Frame clause parsed uniformly: explicit BETWEEN keeps both
-      // bounds; the ANSI single-bound shorthand (`ROWS 2 PRECEDING`,
-      // accepted by DuckDB with EXCLUDE — measured) is BETWEEN <bound>
-      // AND CURRENT ROW; an absent clause is left as None (the default
-      // RANGE BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW).
-      val betweenInfo: Option[(String, String, String, Int)] = frameM.map { fm =>
-        val body = fm.group(2).trim
-        val parts = new Lex(body).splitWord("and")
-        if (body.toLowerCase(java.util.Locale.ROOT).startsWith("between") && parts.length == 2)
-          (parts(0).replaceAll("(?i)^between\\s+", "").trim, parts(1).trim,
-            fm.group(1), fm.start)
-        else (body, "CURRENT ROW", fm.group(1), fm.start)
-      }
-      // GROUPS decomposes peer-wise, like RANGE (its peers are the ORDER
-      // BY peers), and its peer-wise pieces stay GROUPS frames, which
-      // rewriteGroups marks next; the positional ROWS pieces stay in row
-      // space
-      val peerKw =
-        if (betweenInfo.exists(_._3.equalsIgnoreCase("groups"))) "GROUPS" else "RANGE"
-      // Bounds are classified by their TRAILING keyword so multi-token
-      // offsets (e.g. INTERVAL '5' DAY PRECEDING) are positively
-      // recognized — the old ^\S+\s+preceding$ single-token matcher let
-      // such a bound fall through to the subtraction rewrite below,
-      // which assumes the frame holds the current row (silent wrong
-      // result). A zero offset (`0 PRECEDING/FOLLOWING`) is CURRENT ROW
-      // in both engines and classifies as such (the bound-adjust branch
-      // below would otherwise shrink a frame that DOES hold the current
-      // row). Any bound text the classifier cannot place throws.
-      def boundKind(b: String): Int = {
-        val t = b.trim.replaceAll("\\s+", " ").toLowerCase(java.util.Locale.ROOT)
-        if (t == "current row" || t.startsWith("unbounded")) 0
-        else if (t.matches("0+ (preceding|following)")) 0
-        else if (t.endsWith(" following")) 1
-        else if (t.endsWith(" preceding")) -1
-        else throw new IllegalArgumentException(
-          s"window frame EXCLUDE: unrecognized frame bound '${b.trim}'")
-      }
-      val (startsAfter, endsBefore) = betweenInfo match {
-        case Some((a, bnd, _, _)) => (boundKind(a) > 0, boundKind(bnd) < 0)
-        case None => (false, false)
-      }
-      if (kind == "no others") {
-        // the ANSI no-op spelling — frame unchanged in both engines
-        sql = sql.substring(0, exclStart) + sql.substring(exclEnd)
-      } else if ((startsAfter || endsBefore) && kind == "current row" &&
-          betweenInfo.exists(_._3.equalsIgnoreCase("rows"))) {
-        // current row outside a ROWS frame: reproduce DuckDB's measured
-        // segment arithmetic by moving the offending bound to the row
-        // adjacent to current, then drop the exclusion. The RANGE
-        // spelling of this case routes to the prefix-segment form in
-        // the main branch below (round 15 — it was a documented throw).
-        val (a, bnd, kw, fStart) = betweenInfo.get
-        val newA = if (startsAfter) "1 FOLLOWING" else a
-        val newB = if (endsBefore) "1 PRECEDING" else bnd
-        val specAdj = "(" + inner.substring(0, fStart) +
-          s"$kw BETWEEN $newA AND $newB" + ")"
-        sql = sql.substring(0, open) + specAdj + sql.substring(specClose + 1)
-      } else {
-        // fn(args) immediately before OVER
-        val w2 = lx.back(open - 1)
-        val overStart = lx.identTo(w2)
-        require(sql.substring(overStart, w2 + 1).equalsIgnoreCase("over"),
-          "window frame EXCLUDE: lost the OVER anchor")
-        val p2 = lx.back(overStart - 1)
-        require(p2 >= 0 && sql(p2) == ')',
-          "window frame EXCLUDE: expected fn(...) immediately before OVER")
-        val q3 = lx.openOf(p2, required("window frame EXCLUDE: unbalanced window function call"))
-        val idStart = lx.identTo(q3 - 1)
-        require(idStart < q3, "window frame EXCLUDE: expected a function name before OVER")
-        val fn = sql.substring(idStart, q3).toLowerCase(java.util.Locale.ROOT)
-        val arg = sql.substring(q3 + 1, p2).trim
-        if ("(?is)^distinct\\b.*".r.findFirstIn(arg).isDefined)
-          throw new IllegalArgumentException(
-            "window frame EXCLUDE over a DISTINCT aggregate is not supported")
-        val nonNullCur = s"(CASE WHEN ($arg) IS NULL THEN 0 ELSE 1 END)"
-        def unsupportedFn(): Nothing = throw new IllegalArgumentException(
-          s"window frame EXCLUDE ${kind.toUpperCase(java.util.Locale.ROOT)} over $fn() has " +
-            "no decomposable rewrite — the dialect shim supports COUNT/SUM/AVG")
-        val repl = if (kind == "current row" && (startsAfter || endsBefore)) {
-          // RANGE frame NOT containing the current row (round 15 — this
-          // closed the last frame-exclusion throw): DuckDB evaluates the
-          // exclusion as the ROW-space segments [fs, i−1] ∪ [i+1, fe]
-          // (round 14 measured the peer-including extension: RANGE 100
-          // PRECEDING..5 PRECEDING EXCLUDE CURRENT ROW over
-          // (5,100),(10,1),(10,2),(10,4) gives 100/101/103 at the a=10
-          // rows). The value bounds fs/fe and the positional i mix, but
-          // every piece is a STATIC prefix window:
-          //   endsBefore:  [fs, i−1] = P(i−1) − P(fs−1)
-          //     P(i−1)  = ROWS UNBOUNDED..1 PRECEDING
-          //     P(fs−1) = RANGE UNBOUNDED..CURRENT − RANGE(start..CURRENT)
-          //   startsAfter: [i+1, fe] = P(fe) − P(i)
-          //     P(fe) = RANGE UNBOUNDED..end,  P(i) = ROWS UNBOUNDED..CURRENT
-          // The other segment is empty by construction (rows before the
-          // current have values ≤ v < v+c, and symmetrically). Goldens
-          // for both directions, counts, AVG, NULL args and INTERVAL
-          // bounds measured on DuckDB 1.0 (DuckDbDialectSpec).
-          val (bA, bB, _, fStart) = betweenInfo.get
-          val oPrefix = inner.substring(0, fStart)
-          val sep = if (oPrefix.isEmpty || oPrefix.last.isWhitespace) "" else " "
-          def w(frame: String) = s"OVER (${oPrefix}${sep}${frame})"
-          val cntFn = if (arg == "*") "COUNT(*)" else s"COUNT($arg)"
-          def cnt(frame: String) = s"$cntFn ${w(frame)}"
-          def sum(frame: String) = s"COALESCE(SUM($arg) ${w(frame)}, 0)"
-          def segs(g: String => String): String =
-            if (endsBefore)
-              s"(${g("ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING")} " +
-                s"- (${g(s"$peerKw BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW")} " +
-                s"- ${g(s"$peerKw BETWEEN $bA AND CURRENT ROW")}))"
-            else
-              s"(${g(s"$peerKw BETWEEN UNBOUNDED PRECEDING AND $bB")} " +
-                s"- ${g("ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW")})"
-          val remCnt = segs(cnt)
-          fn match {
-            case "count" => remCnt
-            case "sum" => s"(CASE WHEN $remCnt > 0 THEN ${segs(sum)} ELSE NULL END)"
-            case "avg" => s"(CASE WHEN $remCnt > 0 THEN ${segs(sum)} / $remCnt ELSE NULL END)"
-            case _ => unsupportedFn()
-          }
-        } else if (kind == "current row") fn match {
-          case "count" if arg == "*" =>
-            s"(COUNT(*) OVER $specNoExcl - 1)"
-          case "count" =>
-            s"(COUNT($arg) OVER $specNoExcl - $nonNullCur)"
-          case "sum" =>
-            s"(CASE WHEN COUNT($arg) OVER $specNoExcl - $nonNullCur > 0 " +
-              s"THEN SUM($arg) OVER $specNoExcl - COALESCE($arg, 0) ELSE NULL END)"
-          case "avg" =>
-            s"(CASE WHEN COUNT($arg) OVER $specNoExcl - $nonNullCur > 0 " +
-              s"THEN (SUM($arg) OVER $specNoExcl - COALESCE($arg, 0)) " +
-              s"/ (COUNT($arg) OVER $specNoExcl - $nonNullCur) ELSE NULL END)"
-          case _ => unsupportedFn()
-        } else {
-          // EXCLUDE GROUP / TIES. Three exactly-decomposable cases, all
-          // measured on DuckDB 1.0 (DuckDbDialectSpec goldens):
-          //
-          // 1. RANGE frame CONTAINING the current row (round 13d): such
-          //    a frame holds the ENTIRE peer group (peers sit at value-
-          //    distance 0), so GROUP = frame − peers and TIES = frame −
-          //    peers + current, with peers its own window over
-          //    RANGE BETWEEN CURRENT ROW AND CURRENT ROW.
-          // 2. RANGE frame NOT containing the current row (round 15):
-          //    DuckDB computes the exclusion as the SEGMENTS
-          //    [frameStart, peerStart−1] ∪ [peerEnd+1, frameEnd] — the
-          //    same segment arithmetic round 14 measured for EXCLUDE
-          //    CURRENT ROW, frame EXTENSION included (RANGE BETWEEN 15
-          //    PRECEDING AND 5 PRECEDING EXCLUDE GROUP at v=5 over
-          //    v∈(1,5,10×4,20,25) returns 100 — the ANSI frame is
-          //    empty). In value space the segments are exactly
-          //    {val ∈ [v−a, v)} and {val ∈ (v, v+b]}: each is a static
-          //    window minus the peer window, self-clamping to 0.
-          // 3. ROWS frame, any bounds (round 15): the same segments in
-          //    ROW space, [i−sa, ps−1] ∪ [pe+1, i+sb], via prefix sums
-          //    (goldens: frame 1P..1F over the peer block, 3P..2P and
-          //    2F..4F extension cases, NULL args, shorthand, UNBOUNDED):
-          //      seg1 = P(ps−1) − P(i−sa−1)   if precPeers < sa else ∅
-          //      seg2 = P(i+sb) − P(pe)       if follPeers < sb else ∅
-          //    where P(pe) is the RANGE-unbounded-≤-current sum (all
-          //    peers included), P(ps−1) = P(pe) − peerSum, and the
-          //    positional P(i−sa−1)/P(i+sb) are ROWS UNBOUNDED..k
-          //    prefix windows — every frame bound static. precPeers/
-          //    follPeers come from COUNT(*) windows (follPeers =
-          //    rangeLeCnt − rowsLeCnt = pe − i). ROWS offsets must be
-          //    integer literals (constants in both engines); anything
-          //    else throws.
-          //
-          // All helper windows share the spec's partition/order prefix,
-          // so Spark plans them into a single WindowExec over one sort.
-          val (boundA, boundB, kw, fStart) = betweenInfo.getOrElse(
-            throw new IllegalArgumentException(
-              s"window frame EXCLUDE ${kind.toUpperCase(java.util.Locale.ROOT)} needs an " +
-                "explicit frame clause (DuckDB itself rejects a frameless " +
-                "exclusion — measured parse error)"))
-          val oPrefix = inner.substring(0, fStart)
-          val sep = if (oPrefix.isEmpty || oPrefix.last.isWhitespace) "" else " "
-          def w(frame: String) = s"OVER (${oPrefix}${sep}${frame})"
-          val peersF = s"$peerKw BETWEEN CURRENT ROW AND CURRENT ROW"
-          val cntFn = if (arg == "*") "COUNT(*)" else s"COUNT($arg)"
-          def cnt(frame: String) = s"$cntFn ${w(frame)}"
-          def sum(frame: String) = s"COALESCE(SUM($arg) ${w(frame)}, 0)"
-          val keepCur = if (kind == "ties") (if (arg == "*") " + 1" else s" + $nonNullCur") else ""
-          val sumBack = if (kind == "ties") s" + COALESCE($arg, 0)" else ""
-          val (remCnt, remSum): (String, String) =
-            if (!kw.equalsIgnoreCase("rows") &&
-                boundKind(boundA) <= 0 && boundKind(boundB) >= 0) {
-              // case 1 — frame ⊇ peer group
-              val peersSpec = "(" + oPrefix + sep + peersF + ")"
-              (s"($cntFn OVER $specNoExcl - $cntFn OVER $peersSpec$keepCur)",
-                s"(SUM($arg) OVER $specNoExcl " +
-                  s"- COALESCE(SUM($arg) OVER $peersSpec, 0)$sumBack)")
-            } else if (!kw.equalsIgnoreCase("rows")) {
-              // case 2 — value-space segments
-              val (c1, s1) =
-                if (boundKind(boundA) <= 0)
-                  (s"(${cnt(s"$peerKw BETWEEN $boundA AND CURRENT ROW")} - ${cnt(peersF)})",
-                    s"(${sum(s"$peerKw BETWEEN $boundA AND CURRENT ROW")} - ${sum(peersF)})")
-                else ("0", "0")
-              val (c2, s2) =
-                if (boundKind(boundB) >= 0)
-                  (s"(${cnt(s"$peerKw BETWEEN CURRENT ROW AND $boundB")} - ${cnt(peersF)})",
-                    s"(${sum(s"$peerKw BETWEEN CURRENT ROW AND $boundB")} - ${sum(peersF)})")
-                else ("0", "0")
-              (s"($c1 + $c2$keepCur)", s"($s1 + $s2$sumBack)")
-            } else {
-              // case 3 — row-space segments over prefix windows
-              def rowOff(b: String, isStart: Boolean): Option[Long] = {
-                val t = b.trim.replaceAll("\\s+", " ").toLowerCase(java.util.Locale.ROOT)
-                if (t == "current row") Some(0L)
-                else if (t == "unbounded preceding" || t == "unbounded following") None
-                else "^(\\d+) (preceding|following)$".r.findFirstMatchIn(t) match {
-                  case Some(mm) =>
-                    val n = mm.group(1).toLong
-                    val prec = mm.group(2) == "preceding"
-                    Some(if (isStart == prec) n else -n)
-                  case None => throw new IllegalArgumentException(
-                    s"window frame EXCLUDE ${kind.toUpperCase(java.util.Locale.ROOT)} over " +
-                      s"a ROWS frame needs integer-literal offsets — got '${b.trim}'")
-                }
-              }
-              val saO = rowOff(boundA, isStart = true)
-              val sbO = rowOff(boundB, isStart = false)
-              def cstar(frame: String) = s"COUNT(*) ${w(frame)}"
-              val follPeersE =
-                s"(${cstar("RANGE BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW")} " +
-                  s"- ${cstar("ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW")})"
-              val precPeersE = s"(${cstar(peersF)} - 1 - $follPeersE)"
-              def segs(g: String => String): String = {
-                val sLe = g("RANGE BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW")
-                val sPeer = g(peersF)
-                val s1 = saO match {
-                  case None => s"($sLe - $sPeer)"
-                  case Some(sa) if sa <= 0 => "0"
-                  case Some(sa) =>
-                    val pPrec = g(s"ROWS BETWEEN UNBOUNDED PRECEDING AND ${sa + 1} PRECEDING")
-                    s"(CASE WHEN $precPeersE < $sa THEN ($sLe - $sPeer) - $pPrec ELSE 0 END)"
-                }
-                val s2 = sbO match {
-                  case None =>
-                    s"(${g("ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING")} - $sLe)"
-                  case Some(sb) if sb <= 0 => "0"
-                  case Some(sb) =>
-                    val pFoll = g(s"ROWS BETWEEN UNBOUNDED PRECEDING AND $sb FOLLOWING")
-                    s"(CASE WHEN $follPeersE < $sb THEN $pFoll - $sLe ELSE 0 END)"
-                }
-                s"($s1 + $s2)"
-              }
-              (s"(${segs(cnt)}$keepCur)", s"(${segs(sum)}$sumBack)")
-            }
-          fn match {
-            case "count" => remCnt
-            case "sum" => s"(CASE WHEN $remCnt > 0 THEN $remSum ELSE NULL END)"
-            case "avg" => s"(CASE WHEN $remCnt > 0 THEN $remSum / $remCnt ELSE NULL END)"
-            case _ => unsupportedFn()
-          }
-        }
-        sql = sql.substring(0, idStart) + repl + sql.substring(specClose + 1)
-      }
-    }
-    throw new IllegalArgumentException("window frame EXCLUDE rewriting did not converge")
   }
 
   /** DuckDB-keyword set for the bracket classifier: a '[' straight
@@ -1735,100 +1463,6 @@ object DuckDbDialect {
     sql
   }
 
-  /** DuckDB evaluates DISTINCT aggregates as WINDOW functions
-    * (`COUNT/SUM/AVG/MIN/MAX(DISTINCT x) OVER …`); Spark rejects
-    * DISTINCT inside any window function. Measured on DuckDB 1.0
-    * (DuckDbDialectSpec goldens): NULLs are excluded from the distinct
-    * set, COUNT over an all-NULL/empty frame is 0, SUM/AVG are NULL,
-    * and frames apply (the set is the FRAME's distinct values). Exact
-    * decompositions over Spark's set-valued window aggregate:
-    *
-    *   COUNT → size(collect_set(x) OVER spec)          (empty → 0)
-    *   SUM   → aggregate(cs, try_element_at(cs, 1) + CAST(0 AS BIGINT),
-    *                     (a,b) -> a+b) − try_element_at(cs, 1)
-    *           (the first element seeds the fold; the `+ 0L` widens the
-    *           accumulator by Spark's binary-arithmetic promotion with
-    *           no textual type guess — int/smallint seeds become
-    *           BIGINT, matching native SUM's long accumulator instead
-    *           of wrapping/ANSI-failing at the element type's range,
-    *           and double seeds keep DOUBLE (+0L is the identity
-    *           there); the seed is added once more by the fold and
-    *           subtracted back; empty set → NULL seed → NULL, DuckDB's
-    *           empty-SUM. Bounds vs DuckDB: integer totals beyond
-    *           ±2^63 diverge (DuckDB sums in HUGEINT — same bound as
-    *           Spark's native SUM), and DECIMAL arguments remain
-    *           UNSUPPORTED: decimal + BIGINT widens the accumulator's
-    *           precision, the fold then grows precision per addition,
-    *           and Spark's lambda type check rejects the plan — a loud
-    *           analysis error, never a silent value; the fix would
-    *           need the element type, which a text shim doesn't have)
-    *   AVG   → the SUM form / size(cs), NULL-guarded
-    *   MIN/MAX → DISTINCT dropped (identical by definition)
-    *
-    * collect_set's order nondeterminism is immaterial — only the set's
-    * size and a commutative fold are read; the set itself is the
-    * irreducible per-frame state of an exact DISTINCT window on ANY
-    * engine. Ordinary (non-window) DISTINCT aggregates are left alone
-    * (Spark-native). Bound: the collect_set text is spliced 2–4× —
-    * the same deterministic-inputs duplication class documented at the
-    * list-call NULL guards. */
-  private def rewriteDistinctWindow(lx0: Lex): String = {
-    var sql = lx0.s
-    var guard = 0
-    val fns = Seq("count", "sum", "avg", "min", "max")
-    while (guard < 100) {
-      guard += 1
-      val lx = if (sql eq lx0.s) lx0 else new Lex(sql)
-      // first fn( DISTINCT … ) followed by OVER:
-      // (fnStart, fn, end of DISTINCT, the call's close paren)
-      def callAt(idx: Int): Option[(Int, String, Int, Int)] =
-        fns.find(lx.word(idx, _)).flatMap { f =>
-          val j = lx.fwd(idx + f.length)
-          val k = lx.fwd(j + 1)
-          val close = if (j < sql.length && sql(j) == '(' &&
-              sql.regionMatches(true, k, "distinct", 0, 8) &&
-              k + 8 < sql.length && !isIdentChar(sql(k + 8))) lx.closeOf(j) else -1
-          val q = lx.fwd(close + 1)
-          if (close >= 0 && sql.regionMatches(true, q, "over", 0, 4) &&
-              (q + 4 >= sql.length || !isIdentChar(sql(q + 4))))
-            Some((idx, f.toLowerCase(java.util.Locale.ROOT), k + 8, close))
-          else None
-        }
-      callAt(lx.find()(callAt(_).isDefined)) match {
-        case None => return sql
-        case Some((fnStart, f, distEnd, close)) =>
-          val q = lx.fwd(close + 1)
-          var ovEnd = lx.fwd(q + 4)
-          if (ovEnd < sql.length && sql(ovEnd) == '(')
-            ovEnd = lx.closeOf(ovEnd,
-              required("DISTINCT window aggregate: unbalanced OVER specification")) + 1
-          else {
-            val idStart = ovEnd
-            ovEnd = lx.identFrom(ovEnd)
-            require(ovEnd > idStart,
-              "DISTINCT window aggregate: expected a window spec or name after OVER")
-          }
-          val ov = sql.substring(q, ovEnd)
-          val arg = sql.substring(distEnd, close).trim
-          if (arg.isEmpty || arg == "*")
-            throw new IllegalArgumentException(
-              s"window ${f.toUpperCase(java.util.Locale.ROOT)}(DISTINCT ...): " +
-                "expected a column argument")
-          val cs = s"collect_set($arg) $ov"
-          val sumF = s"(aggregate($cs, try_element_at($cs, 1) + CAST(0 AS BIGINT), " +
-            s"(__dw_a, __dw_b) -> __dw_a + __dw_b) - try_element_at($cs, 1))"
-          val repl = f match {
-            case "min" | "max" => s"${f.toUpperCase(java.util.Locale.ROOT)}($arg) $ov"
-            case "count" => s"size(collect_set($arg) $ov)"
-            case "sum" => sumF
-            case _ => s"(CASE WHEN size($cs) > 0 THEN $sumF / size($cs) ELSE NULL END)"
-          }
-          sql = sql.substring(0, fnStart) + repl + sql.substring(ovEnd)
-      }
-    }
-    throw new IllegalArgumentException("DISTINCT window rewriting did not converge")
-  }
-
   /** DuckDB spells IGNORE/RESPECT NULLS INSIDE a window function's call
     * parens, as the last token after the arguments (`last_value(x IGNORE
     * NULLS)`, `lag(x, 1 IGNORE NULLS)`); Spark only parses the ANSI
@@ -1906,7 +1540,7 @@ object DuckDbDialect {
   /** Case-insensitive rename of `from(` call sites outside strings. Only
     * star `EXCLUDE (c1, c2)` → Spark's `EXCEPT (c1, c2)` uses it: the
     * '('-requirement leaves DuckDB's window-frame `EXCLUDE CURRENT ROW`
-    * (no paren; consumed by [[rewriteFrameExclude]]) untouched, and
+    * (no paren; consumed by [[rewriteFrames]]) untouched, and
     * Spark has no EXCLUDE( spelling of its own. */
   private def renameFn(lx: Lex, from: String, to: String): String = {
     val sql = lx.s

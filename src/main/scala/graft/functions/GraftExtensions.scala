@@ -21,9 +21,9 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // `div` (the shim's image of DuckDB `//`) gets DuckDB's measured
     // type-aware semantics — see [[DuckDiv]] for the contract
     e.injectResolutionRule(_ => DuckDivRule)
-    // GROUPS window frames: the shim marks the spec, the rule moves its
-    // frames to rank space — see [[GroupsFrameRule]]
-    e.injectResolutionRule(_ => GroupsFrameRule)
+    // GROUPS frames, frame EXCLUDE and DISTINCT window aggregates: the
+    // shim marks the spec, the rule computes them — see [[DuckWindowRule]]
+    e.injectResolutionRule(_ => DuckWindowRule)
   }
 }
 
@@ -66,5 +66,7 @@ object GraftExtensions {
     entry("duck_div", "duck_div(a, b) - DuckDB // semantics: truncating int division / plain float division, 0 divisor -> NULL")(
       e => DuckDiv(e(0), e(1))),
     entry(GroupsFrame.Name, s"${GroupsFrame.Name}() - marks a GROUPS window frame; valid only first in a window's PARTITION BY")(
-      _ => GroupsFrame()))
+      _ => GroupsFrame()),
+    entry(FrameExclude.Name, s"${FrameExclude.Name}(kind) - marks a window frame EXCLUDE clause; valid only first in a window's PARTITION BY")(
+      FrameExclude.build))
 }

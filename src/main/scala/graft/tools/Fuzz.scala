@@ -1373,11 +1373,12 @@ final class SqlFuzzer(seed: Long) {
       s"FROM $t WHERE ${pred(tbl, 1)} ${orderAll(3)} ${limit()}"
   }
 
-  /** Window-frame EXCLUDE through the shim's rewriteFrameExclude:
-    * DuckDB runs the ANSI frame-exclusion clause natively; Spark gets
-    * the frame-minus-current decomposition (SUM/COUNT/AVG) or the
-    * exclusion dropped when the frame provably misses the current row.
-    * AVG is rounded 6 dp (double division); SUM/COUNT are exact. */
+  /** Window-frame EXCLUDE: DuckDB runs the ANSI frame-exclusion clause
+    * natively; Spark gets the shim's marked spec and the analyzer rule's
+    * (graft.functions.DuckWindowRule) helper windows, or the ROWS bound
+    * moved when the frame misses the current row. Specs are inline or
+    * named WINDOW definitions, and some aggregates carry a FILTER
+    * clause. AVG is rounded 6 dp (double division); SUM/COUNT are exact. */
   private def qDialectFrameExclude(): String = {
     val (t, part, ord, key) = pick(Seq(
       ("orders", "o_custkey", "o_totalprice", "o_orderkey"),
@@ -1483,13 +1484,19 @@ final class SqlFuzzer(seed: Long) {
         s"FROM orders WHERE o_orderdate IS NOT NULL AND o_custkey IS NOT NULL " +
         s"AND ${pred(tbl, 1)} ${orderAll(3)} ${limit()}"
     } else {
-    val over = s"OVER ($spec $frame $excl)"
+    // a named WINDOW definition carries the frame syntax as an inline
+    // spec does; a FILTER clause drops rows from the frame and from the
+    // current-row term alike
+    val named = rnd.nextInt(4) == 0
+    val over = if (named) "OVER w" else s"OVER ($spec $frame $excl)"
+    val window = if (named) s" WINDOW w AS ($spec $frame $excl)" else ""
+    val filter = if (rnd.nextInt(4) == 0) s" FILTER (WHERE $v % ${intLit(2, 5)} <> 0)" else ""
     val exprKind = rnd.nextInt(4)
     val expr = exprKind match {
-      case 0 => s"CAST(SUM($v) $over AS BIGINT)"
-      case 1 => s"CAST(COUNT($v) $over AS BIGINT)"
-      case 2 => s"CAST(COUNT(*) $over AS BIGINT)"
-      case _ => s"ROUND(AVG($v) $over, 6)"
+      case 0 => s"CAST(SUM($v)$filter $over AS BIGINT)"
+      case 1 => s"CAST(COUNT($v)$filter $over AS BIGINT)"
+      case 2 => s"CAST(COUNT(*)$filter $over AS BIGINT)"
+      case _ => s"ROUND(AVG($v)$filter $over, 6)"
     }
     // composition (round 13d): 1/4 of the integer-typed EXCLUDE queries
     // wrap the window in a derived table and aggregate over it — the
@@ -1500,10 +1507,10 @@ final class SqlFuzzer(seed: Long) {
     if (exprKind < 3 && rnd.nextInt(4) == 0)
       s"SELECT c1, CAST(SUM(c3) AS BIGINT) AS c2, CAST(COUNT(*) AS BIGINT) AS c3 " +
         s"FROM (SELECT $part AS c1, $key AS ck, $expr AS c3 " +
-        s"FROM $t WHERE ${pred(tbl, 1)}) q GROUP BY c1 ${orderAll(3)} ${limit()}"
+        s"FROM $t WHERE ${pred(tbl, 1)}$window) q GROUP BY c1 ${orderAll(3)} ${limit()}"
     else
     s"SELECT $key AS c1, CAST(($v) AS BIGINT) AS c2, $expr AS c3 " +
-      s"FROM $t WHERE ${pred(tbl, 1)} ${orderAll(3)} ${limit()}"
+      s"FROM $t WHERE ${pred(tbl, 1)}$window ${orderAll(3)} ${limit()}"
     }
   }
 
@@ -1511,11 +1518,11 @@ final class SqlFuzzer(seed: Long) {
     * [[graft.engine.DuckDbDialect.rewrite]] on Spark. */
   /** DISTINCT window aggregates (round 15): COUNT/SUM/AVG/MIN(DISTINCT)
     * over partition-only and ROWS-framed specs, run natively by DuckDB
-    * vs the shim's collect_set decomposition. The aggregand is a
-    * low-cardinality modulus so distinct sets are real; partition-only
-    * frames are tie-order-free, framed specs anchor on the unique key;
-    * SUM/COUNT/MIN cast BIGINT (the decomposed SUM folds in the element
-    * type), AVG rounds 6 dp. */
+    * vs the analyzer rule's collect_set decomposition. The aggregand is
+    * a low-cardinality modulus, an integer or a DECIMAL(12,2), so
+    * distinct sets are real; partition-only frames are tie-order-free,
+    * framed specs anchor on the unique key; SUM/COUNT/MIN cast BIGINT,
+    * AVG rounds 6 dp as a DOUBLE (DuckDB's AVG type). */
   private def qDialectDistinctWindow(): String = {
     val (t, part, key) = pick(Seq(
       ("orders", "o_custkey", "o_orderkey"),
@@ -1524,6 +1531,7 @@ final class SqlFuzzer(seed: Long) {
     val tbl = tables.find(_.name == t).get
     val v = pick(cols(tbl, IntK)).name
     val gv = s"($v % ${intLit(3, 17)})"
+    val arg = if (rnd.nextInt(3) == 0) s"CAST($gv AS DECIMAL(12,2))" else gv
     val spec = rnd.nextInt(3) match {
       case 0 => s"PARTITION BY $part"
       case 1 => s"PARTITION BY $part ORDER BY $key ASC NULLS FIRST " +
@@ -1532,10 +1540,10 @@ final class SqlFuzzer(seed: Long) {
         "ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW"
     }
     val expr = rnd.nextInt(4) match {
-      case 0 => s"CAST(COUNT(DISTINCT $gv) OVER ($spec) AS BIGINT)"
-      case 1 => s"CAST(SUM(DISTINCT $gv) OVER ($spec) AS BIGINT)"
-      case 2 => s"ROUND(AVG(DISTINCT $gv) OVER ($spec), 6)"
-      case _ => s"CAST(MIN(DISTINCT $gv) OVER ($spec) AS BIGINT)"
+      case 0 => s"CAST(COUNT(DISTINCT $arg) OVER ($spec) AS BIGINT)"
+      case 1 => s"CAST(SUM(DISTINCT $arg) OVER ($spec) AS BIGINT)"
+      case 2 => s"CAST(ROUND(AVG(DISTINCT $arg) OVER ($spec), 6) AS DOUBLE)"
+      case _ => s"CAST(MIN(DISTINCT $arg) OVER ($spec) AS BIGINT)"
     }
     s"SELECT $key AS c1, CAST($gv AS BIGINT) AS c2, $expr AS c3 " +
       s"FROM $t WHERE $v IS NOT NULL AND $part IS NOT NULL " +
@@ -1548,7 +1556,7 @@ final class SqlFuzzer(seed: Long) {
     * equivalent the oracle CAN run — the direct RANGE/ROWS mapping for
     * UNBOUNDED/CURRENT bound mixes, an explicit DENSE_RANK subquery +
     * RANGE for integer offsets — independently of the shim's marker and
-    * the analyzer rule (graft.functions.GroupsFrameRule) that computes
+    * the analyzer rule (graft.functions.DuckWindowRule) that computes
     * the frame. The comparison therefore proves the rule on random
     * shapes (repeated specs, WHERE, named windows, set operations,
     * grouped blocks, ORDER BY/LIMIT tails); the decomposition CONCEPT

@@ -41,7 +41,7 @@ class DialectScanSpec extends AnyFunSuite {
     }
     val labels = "\"[^\"\\n]*unbalanced[^\"\\n]*\"".r.findAllMatchIn(src)
       .filterNot(m => isDoc(m.start)).toSeq
-    assert(labels.size >= 15)
+    assert(labels.size == 12)
     labels.foreach { m =>
       val before = src.substring(math.max(0, m.start - 120), m.start)
       val call = "(closeOf|openOf|innermostFirst)\\(".r.findAllMatchIn(before).toSeq.lastOption

@@ -97,10 +97,10 @@ class DuckDbDialectSpec extends AnyFunSuite {
   test("star EXCLUDE rewrites to EXCEPT; frame EXCLUDE and strings stay") {
     assert(DuckDbDialect.rewrite("SELECT * EXCLUDE (b) FROM t") ==
       "SELECT * except (b) FROM t") // keywords are case-insensitive
-    // frame-level EXCLUDE is consumed by rewriteFrameExclude (its own
-    // test below), never left for the star-level exclude→except rename
-    assert(!DuckDbDialect.rewrite("SUM(x) OVER (ORDER BY y ROWS 1 PRECEDING EXCLUDE CURRENT ROW)")
-      .toLowerCase.contains("exclude"))
+    // frame-level EXCLUDE is consumed by the frame pass (its own tests
+    // below), never left for the star-level exclude→except rename
+    val framed = DuckDbDialect.rewrite("SUM(x) OVER (ORDER BY y ROWS 1 PRECEDING EXCLUDE CURRENT ROW)")
+    assert(!framed.toLowerCase.contains("except") && !framed.contains("EXCLUDE CURRENT ROW"), framed)
     assert(DuckDbDialect.rewrite("SELECT 'exclude (b)' AS s") ==
       "SELECT 'exclude (b)' AS s")
   }
@@ -419,12 +419,13 @@ class DuckDbDialectSpec extends AnyFunSuite {
         "ROWS BETWEEN 1 PRECEDING AND CURRENT ROW) cf, " +
         "MIN(DISTINCT x) OVER (PARTITION BY g) mn " +
         "FROM dwt ORDER BY i")).collect()
-    assert(r.map(_.getInt(1)).toSeq == Seq(2, 2, 2, 1, 1, 1))
-    // the SUM fold's accumulator is widened past the element type (the
-    // seed's + 0L), matching native SUM's long accumulator on int input
+    // COUNT keeps COUNT's BIGINT type, as in DuckDB
+    assert(r.map(_.getLong(1)).toSeq == Seq(2L, 2L, 2L, 1L, 1L, 1L))
+    // the SUM fold's accumulator has native SUM's type (BIGINT on int
+    // input), not the element type
     assert(r.map(_.getAs[Number](2).longValue).toSeq == Seq(30L, 30L, 30L, 30L, 30L, 30L))
     assert(r.map(_.getDouble(3)).toSeq == Seq(15.0, 15.0, 15.0, 30.0, 30.0, 30.0))
-    assert(r.map(_.getInt(4)).toSeq == Seq(1, 1, 2, 0, 1, 1))
+    assert(r.map(_.getLong(4)).toSeq == Seq(1L, 1L, 2L, 0L, 1L, 1L))
     assert(r.map(_.getInt(5)).toSeq == Seq(10, 10, 10, 30, 30, 30))
     // empty frame: COUNT 0, SUM NULL (measured)
     val off = spark.sql(DuckDbDialect.rewrite(
@@ -433,12 +434,12 @@ class DuckDbDialectSpec extends AnyFunSuite {
         "3 PRECEDING AND 2 PRECEDING) c FROM dwt ORDER BY i LIMIT 3")).collect()
     assert(off.map(x => if (x.isNullAt(1)) None else Some(x.getAs[Number](1).longValue)).toSeq
       == Seq(None, None, Some(10L)))
-    assert(off.map(_.getInt(2)).toSeq == Seq(0, 0, 1))
+    assert(off.map(_.getLong(2)).toSeq == Seq(0L, 0L, 1L))
     // named-window spelling wraps too
     val nw = spark.sql(DuckDbDialect.rewrite(
       "SELECT COUNT(DISTINCT x) OVER w c FROM dwt WINDOW w AS (PARTITION BY g) ORDER BY c"))
-      .collect().map(_.getInt(0)).toSeq
-    assert(nw == Seq(1, 1, 1, 2, 2, 2))
+      .collect().map(_.getLong(0)).toSeq
+    assert(nw == Seq(1L, 1L, 1L, 2L, 2L, 2L))
     // ordinary (non-window) DISTINCT aggregates stay untouched
     assert(DuckDbDialect.rewrite("SELECT COUNT(DISTINCT x) FROM t")
       == "SELECT COUNT(DISTINCT x) FROM t")
@@ -457,6 +458,20 @@ class DuckDbDialectSpec extends AnyFunSuite {
       "SELECT SUM(DISTINCT x) OVER () s FROM (SELECT CAST(i AS DOUBLE) / 2 x " +
         "FROM dwo) LIMIT 1")).collect().head.getDouble(0)
     assert(math.abs(dbl - 1.5) < 1e-9, s"double DISTINCT SUM: $dbl")
+  }
+
+  test("DISTINCT window aggregates over a DECIMAL argument") {
+    val spark = TestSpark.spark
+    spark.sql("SELECT * FROM VALUES (1,1,10),(2,1,10),(3,1,20),(4,2,CAST(NULL AS INT))," +
+        "(5,2,30),(6,2,30) AS t(i,g,x)").createOrReplaceTempView("dwt")
+    // goldens measured on DuckDB 1.0: SUM 30.00 in both partitions, AVG
+    // 15.0 and 30.0; the fold sums in SUM's own DECIMAL(20,2)
+    val r = spark.sql(DuckDbDialect.rewrite(
+      "SELECT i, SUM(DISTINCT CAST(x AS DECIMAL(10,2))) OVER (PARTITION BY g) s, " +
+        "AVG(DISTINCT CAST(x AS DECIMAL(10,2))) OVER (PARTITION BY g) a " +
+        "FROM dwt ORDER BY i")).collect()
+    assert(r.map(_.getDecimal(1)).toSeq == Seq.fill(6)(new java.math.BigDecimal("30.00")))
+    assert(r.map(_.getDecimal(2).doubleValue).toSeq == Seq(15.0, 15.0, 15.0, 30.0, 30.0, 30.0))
   }
 
   test("GROUPS frames decompose to RANGE/ROWS and dense-rank hoists (round 16)") {
@@ -519,7 +534,8 @@ class DuckDbDialectSpec extends AnyFunSuite {
     assert(spark.sql(DuckDbDialect.rewrite("SELECT count(*) c FROM (SELECT i, " +
       "SUM(x) OVER (ORDER BY o GROUPS BETWEEN 1 PRECEDING AND CURRENT ROW) s " +
       "FROM gft) WHERE s > 10")).head().getLong(0) == 4L)
-    // EXCLUDE composes: the exclusion pass decomposes peer-wise.
+    // EXCLUDE composes: the rule computes the exclusion after moving
+    // the frame to rank space, so rank peers are the ORDER BY peers.
     // Row i=5 (x=16, G3): frame UNBOUNDED..CURRENT = 63; TIES removes
     // peers 8+32, keeps self → 15; i=7 (singleton G4): 127 unchanged
     val excl = spark.sql(DuckDbDialect.rewrite("SELECT i, SUM(x) OVER (ORDER BY o " +
@@ -531,9 +547,8 @@ class DuckDbDialectSpec extends AnyFunSuite {
     assert(sums("SELECT i, SUM(x) OVER w s FROM gft WINDOW w AS (ORDER BY o " +
       "GROUPS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) ORDER BY i")
       == Seq(3L, 3L, 7L, 63L, 63L, 63L, 127L))
-    // numeric offsets + EXCLUDE compose: the exclusion pass decomposes
-    // the GROUPS frame peer-wise, and every peer-wise piece is itself a
-    // GROUPS frame. Row i=4 (x=8, G3): 1 PRECEDING..CURRENT is
+    // numeric offsets + EXCLUDE compose: the exclusion's helper windows
+    // are RANGE frames over the same dense rank. Row i=4 (x=8, G3): 1 PRECEDING..CURRENT is
     // G2+G3 = 60; EXCLUDE GROUP removes G3 (56) → 4; i=3 (G2):
     // G1+G2 = 7 minus G2 (4) → 3; i=7 (G4): G3+G4 minus G4 → 56
     val nex = spark.sql(DuckDbDialect.rewrite("SELECT i, SUM(x) OVER (ORDER BY o " +
@@ -560,11 +575,10 @@ class DuckDbDialectSpec extends AnyFunSuite {
       "GROUPS BETWEEN 1 PRECEDING AND CURRENT ROW) s FROM gft QUALIFY s > 10 " +
       "ORDER BY i")).collect().map(_.getAs[Number](0).longValue).toSeq
       == Seq(4L, 5L, 6L, 7L))
-    // DISTINCT window + GROUPS composes: the collect_set decomposition
-    // splices the GROUPS spec 3x, all three in one marked window. Row
-    // i=8 duplicates x=8 inside G3, so DISTINCT genuinely drops a value:
-    // plain SUM over G2+G3 would be 68, the distinct set {4,8,16,32}
-    // sums to 60
+    // DISTINCT window + GROUPS composes: the rule's collect_set window
+    // shares the rank-space spec. Row i=8 duplicates x=8 inside G3, so
+    // DISTINCT genuinely drops a value: plain SUM over G2+G3 would be 68,
+    // the distinct set {4,8,16,32} sums to 60
     spark.sql("SELECT * FROM VALUES (1,1,1),(2,1,2),(3,2,4),(4,3,8)," +
         "(5,3,16),(6,3,32),(7,5,64),(8,3,8) AS t(i,o,x)")
       .createOrReplaceTempView("gfd")
@@ -814,7 +828,7 @@ class DuckDbDialectSpec extends AnyFunSuite {
 
   test("a GROUPS frame reaches Catalyst as a marked ROWS frame, with no subquery") {
     // the text pass changes only the frame keyword and the partition
-    // clause; the dense rank is the analyzer rule's (GroupsFrameRule)
+    // clause; the dense rank is the analyzer rule's (DuckWindowRule)
     val cases = Seq(
       "SELECT i, SUM(x) OVER (ORDER BY o GROUPS BETWEEN 1 PRECEDING AND 1 FOLLOWING) s " +
         "FROM gft ORDER BY i" ->
@@ -1103,8 +1117,8 @@ class DuckDbDialectSpec extends AnyFunSuite {
     assert(iv.map(r => if (r.isNullAt(1)) None else Some(r.getLong(1))).toSeq
       == Seq(None, Some(15L), Some(30L), None, Some(40L)))
     assert(iv.map(_.getLong(2)).toSeq == Seq(2L, 1L, 1L, 1L, 0L))
-    // GROUPS + EXCLUDE composes (the exclusion pass decomposes a GROUPS
-    // frame peer-wise, in GROUPS frames): on gft's
+    // GROUPS + EXCLUDE composes (the rule computes the exclusion over
+    // the rank-space frame): on gft's
     // row i=4 (x=8, G3) the 1 PRECEDING..1 FOLLOWING frame is G2+G3+G4
     // = 124; EXCLUDE GROUP removes all of G3 (8+16+32) → 68
     spark.sql("SELECT * FROM VALUES (1,1,1),(2,1,2),(3,2,4),(4,3,8)," +
@@ -1114,13 +1128,15 @@ class DuckDbDialectSpec extends AnyFunSuite {
         "1 FOLLOWING EXCLUDE GROUP) s FROM gfx ORDER BY i")).collect()
     assert(eg.map(_.getAs[Number](1).longValue).toSeq
       == Seq(4L, 4L, 59L, 68L, 68L, 68L, 56L))
-    // non-integer ROWS offsets throw, never silently wrong
-    val er = intercept[IllegalArgumentException](DuckDbDialect.rewrite(
-      "SELECT SUM(x) OVER (ORDER BY v ROWS BETWEEN y PRECEDING AND CURRENT ROW EXCLUDE TIES) FROM t"))
-    assert(er.getMessage.contains("integer-literal"))
-    // MIN has no subtractive form — still a named reject
-    val em = intercept[IllegalArgumentException](DuckDbDialect.rewrite(
-      "SELECT MIN(x) OVER (ORDER BY v ROWS BETWEEN 1 PRECEDING AND 1 FOLLOWING EXCLUDE TIES) FROM t"))
+    // a column ROWS offset fails loudly, never silently wrong: Spark's
+    // parser names it once the clause is gone
+    val er = intercept[org.apache.spark.sql.catalyst.parser.ParseException](
+      SqlGateway.run(spark, "SELECT SUM(x) OVER (ORDER BY v ROWS BETWEEN i PRECEDING AND " +
+        "CURRENT ROW EXCLUDE TIES) FROM exg"))
+    assert(er.getMessage.contains("Frame bound value must be a literal"), er.getMessage)
+    // MIN has no subtractive form — still a named reject, by the rule
+    val em = intercept[IllegalArgumentException](SqlGateway.run(spark,
+      "SELECT MIN(x) OVER (ORDER BY v ROWS BETWEEN 1 PRECEDING AND 1 FOLLOWING EXCLUDE TIES) FROM exg"))
     assert(em.getMessage.contains("no decomposable rewrite"))
     // off-frame RANGE + EXCLUDE CURRENT ROW (round 15 — the last
     // frame-exclusion throw, now decomposed over mixed ROWS/RANGE
@@ -1765,49 +1781,99 @@ class DuckDbDialectSpec extends AnyFunSuite {
     // current row not in frame: DuckDB 1.0's exclusion is NOT the ANSI
     // no-op — its segment arithmetic extends the near bound to the row
     // adjacent to current (measured; found by the dexc fuzz kind, seed
-    // 8282). The rewrite reproduces the measured frame.
-    assert(DuckDbDialect.rewrite("SELECT SUM(b) OVER (ORDER BY a ROWS BETWEEN 3 " +
-      "PRECEDING AND 2 PRECEDING EXCLUDE CURRENT ROW) FROM t")
-      == "SELECT SUM(b) OVER (ORDER BY a ROWS BETWEEN 3 PRECEDING AND 1 PRECEDING) FROM t")
-    assert(DuckDbDialect.rewrite("SELECT SUM(b) OVER (ORDER BY a ROWS BETWEEN 2 " +
-      "FOLLOWING AND 3 FOLLOWING EXCLUDE CURRENT ROW) FROM t")
-      == "SELECT SUM(b) OVER (ORDER BY a ROWS BETWEEN 1 FOLLOWING AND 3 FOLLOWING) FROM t")
-    // EXCLUDE NO OTHERS is the ANSI no-op spelling
-    assert(DuckDbDialect.rewrite("SELECT COUNT(*) OVER (ORDER BY a ROWS BETWEEN 1 " +
-      "PRECEDING AND 1 FOLLOWING EXCLUDE NO OTHERS) FROM t")
-      == "SELECT COUNT(*) OVER (ORDER BY a ROWS BETWEEN 1 PRECEDING AND 1 FOLLOWING) FROM t")
-    // documented bound fails loudly (MIN has no decomposition); ROWS +
-    // GROUP/TIES is SUPPORTED since round 15 (segment algebra — see the
-    // round-15 EXCLUDE test), so it must NOT throw here
-    DuckDbDialect.rewrite(
-      "SELECT SUM(b) OVER (ORDER BY a ROWS BETWEEN 1 PRECEDING AND 1 FOLLOWING EXCLUDE TIES) FROM t")
-    intercept[IllegalArgumentException](DuckDbDialect.rewrite(
-      "SELECT MIN(b) OVER (ORDER BY a ROWS BETWEEN 1 PRECEDING AND 1 FOLLOWING EXCLUDE CURRENT ROW) FROM t"))
-    // multi-token bounds are classified by their trailing keyword — an
-    // INTERVAL offset ending before the current row must NOT fall
-    // through to the subtraction rewrite (round-13 advice). Off-frame
-    // RANGE exclusion is SUPPORTED since round 15 (mixed ROWS/RANGE
-    // prefix segments — see the dedicated test); it must rewrite, not
-    // throw, including with INTERVAL bounds.
-    val offFrameRange = DuckDbDialect.rewrite(
-      "SELECT SUM(b) OVER (ORDER BY d RANGE BETWEEN INTERVAL '5' DAY PRECEDING " +
-        "AND INTERVAL '1' DAY PRECEDING EXCLUDE CURRENT ROW) FROM t")
-    assert(!offFrameRange.contains("EXCLUDE") &&
-      offFrameRange.contains("ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING"))
-    // the numeric spelling rewrites the same way (round 15 closed the
-    // former throw; end-to-end goldens live in the round-15 test)
-    assert(!DuckDbDialect.rewrite(
-      "SELECT SUM(b) OVER (ORDER BY a RANGE BETWEEN 100 PRECEDING AND 5 PRECEDING " +
-        "EXCLUDE CURRENT ROW) FROM t").contains("EXCLUDE"))
-    // an in-frame INTERVAL RANGE exclusion still takes the subtraction
-    // path (the classifier recognizes the multi-token bounds as
-    // containing the current row)
-    assert(DuckDbDialect.rewrite("SELECT SUM(b) OVER (ORDER BY d RANGE BETWEEN " +
-      "INTERVAL '5' DAY PRECEDING AND CURRENT ROW EXCLUDE CURRENT ROW) FROM t")
-      .contains(" - "))
+    // 8282). Goldens [NULL, 10, 10, 40] and [70, 70, 40, NULL]; the ANSI
+    // frames would give [NULL, NULL, 10, 10] and [70, 40, NULL, NULL]
+    def longs(sel: String) = run(sel).map(v => Option(v).map(_.toString.toLong))
+    assert(longs("SUM(b) OVER (ORDER BY a ROWS BETWEEN 3 PRECEDING AND 2 PRECEDING " +
+      "EXCLUDE CURRENT ROW)") == Seq(None, Some(10L), Some(10L), Some(40L)))
+    assert(longs("SUM(b) OVER (ORDER BY a ROWS BETWEEN 2 FOLLOWING AND 3 FOLLOWING " +
+      "EXCLUDE CURRENT ROW)") == Seq(Some(70L), Some(70L), Some(40L), None))
+    // EXCLUDE NO OTHERS is the ANSI no-op spelling: golden [2, 3, 3, 2]
+    assert(longs("COUNT(*) OVER (ORDER BY a ROWS BETWEEN 1 PRECEDING AND 1 FOLLOWING " +
+      "EXCLUDE NO OTHERS)").flatten == Seq(2L, 3L, 3L, 2L))
+    // ROWS + GROUP/TIES decompose (segment algebra — see the round-15
+    // EXCLUDE test): golden [10, 40, 70, 70]
+    assert(longs("SUM(b) OVER (ORDER BY a ROWS BETWEEN 1 PRECEDING AND 1 FOLLOWING " +
+      "EXCLUDE TIES)").flatten == Seq(10L, 40L, 70L, 70L))
+    // documented bound fails loudly: MIN has no decomposition
+    val em = intercept[IllegalArgumentException](run("MIN(b) OVER (ORDER BY a ROWS " +
+      "BETWEEN 1 PRECEDING AND 1 FOLLOWING EXCLUDE CURRENT ROW)"))
+    assert(em.getMessage.contains("no decomposable rewrite"), em.getMessage)
+    // off-frame RANGE exclusion extends in row space too: golden
+    // [NULL, 10, 10, 40] (the ANSI frame gives [NULL, NULL, 10, 10])
+    assert(longs("SUM(b) OVER (ORDER BY a RANGE BETWEEN 100 PRECEDING AND 2 PRECEDING " +
+      "EXCLUDE CURRENT ROW)") == Seq(None, Some(10L), Some(10L), Some(40L)))
+    // multi-token INTERVAL bounds, off-frame and containing the current
+    // row (round-13 advice: an INTERVAL offset ending before the current
+    // row must not take the subtraction). DuckDB goldens over (a, d, b)
+    // = (1,'01-01',10),(2,'01-03',20),(3,'01-04',30),(4,'01-07',40),
+    // (5,'01-08',NULL): [NULL, 10, 30, 50, 90] for both frames (the
+    // off-frame ANSI frame gives [NULL, 10, 10, 50, 50])
+    spark.sql("SELECT * FROM VALUES (1, DATE '2024-01-01', 10), (2, DATE '2024-01-03', 20), " +
+      "(3, DATE '2024-01-04', 30), (4, DATE '2024-01-07', 40), " +
+      "(5, DATE '2024-01-08', CAST(NULL AS INT)) AS t(a, d, b)").createOrReplaceTempView("excd")
+    for (frame <- Seq("INTERVAL '5' DAY PRECEDING AND INTERVAL '2' DAY PRECEDING",
+        "INTERVAL '5' DAY PRECEDING AND CURRENT ROW"))
+      assert(SqlGateway.run(spark, s"SELECT SUM(b) OVER (ORDER BY d RANGE BETWEEN $frame " +
+        "EXCLUDE CURRENT ROW) AS v FROM excd ORDER BY a").collect()
+        .map(r => if (r.isNullAt(0)) None else Some(r.getLong(0))).toSeq
+        == Seq(None, Some(10L), Some(30L), Some(50L), Some(90L)), frame)
     // star EXCLUDE is untouched by the frame pass (no OVER context)
     assert(DuckDbDialect.rewrite("SELECT * EXCLUDE (b) FROM t")
       == "SELECT * except (b) FROM t")
+  }
+
+  test("window frame EXCLUDE reaches Catalyst as a marked frame") {
+    // only the frame clause and the partition marker change; the rule
+    // computes the exclusion on the analyzed plan
+    Seq(
+      ("SELECT SUM(b) OVER (ORDER BY a ROWS BETWEEN 3 PRECEDING AND 2 PRECEDING " +
+        "EXCLUDE CURRENT ROW) FROM t",
+        "SELECT SUM(b) OVER (PARTITION BY graft_frame_exclude('current row') ORDER BY a " +
+          "ROWS BETWEEN 3 PRECEDING AND 2 PRECEDING) FROM t"),
+      ("SELECT COUNT(*) OVER (PARTITION BY g ORDER BY d RANGE BETWEEN 1 PRECEDING AND " +
+        "1 FOLLOWING EXCLUDE GROUP) c FROM t",
+        "SELECT COUNT(*) OVER (PARTITION BY graft_frame_exclude('group'), g ORDER BY d " +
+          "RANGE BETWEEN 1 PRECEDING AND 1 FOLLOWING) c FROM t"),
+      ("SELECT SUM(b) OVER w FROM t WINDOW w AS (ORDER BY a ROWS 1 PRECEDING EXCLUDE TIES)",
+        "SELECT SUM(b) OVER w FROM t WINDOW w AS (PARTITION BY graft_frame_exclude('ties') " +
+          "ORDER BY a ROWS 1 PRECEDING)"),
+      ("SELECT SUM(x) OVER (ORDER BY o GROUPS BETWEEN 1 PRECEDING AND CURRENT ROW " +
+        "EXCLUDE GROUP) FROM t",
+        "SELECT SUM(x) OVER (PARTITION BY graft_frame_exclude('group'), graft_groups_frame() " +
+          "ORDER BY o ROWS BETWEEN 1 PRECEDING AND CURRENT ROW) FROM t"),
+      ("SELECT AVG(b) OVER (ORDER BY a ROWS BETWEEN 1 PRECEDING AND 1 FOLLOWING " +
+        "EXCLUDE NO OTHERS) FROM t",
+        "SELECT AVG(b) OVER (ORDER BY a ROWS BETWEEN 1 PRECEDING AND 1 FOLLOWING) FROM t")
+    ).foreach { case (in, out) => assert(DuckDbDialect.rewrite(in) == out) }
+  }
+
+  test("window frame EXCLUDE in a named WINDOW definition") {
+    val spark = TestSpark.spark
+    import spark.implicits._
+    Seq((1, Some(10)), (2, None: Option[Int]), (3, Some(30)), (4, Some(40)))
+      .toDF("a", "b").createOrReplaceTempView("exc")
+    // DuckDB 1.0 golden: [NULL, 40, 40, 30], as for the inline spec
+    val got = SqlGateway.run(spark, "SELECT SUM(b) OVER w AS v FROM exc WINDOW w AS " +
+      "(ORDER BY a ROWS BETWEEN 1 PRECEDING AND 1 FOLLOWING EXCLUDE CURRENT ROW) ORDER BY a")
+      .collect().map(r => if (r.isNullAt(0)) None else Some(r.getLong(0))).toSeq
+    assert(got == Seq(None, Some(40L), Some(40L), Some(30L)))
+  }
+
+  test("window frame EXCLUDE over a FILTERed aggregate") {
+    val spark = TestSpark.spark
+    import spark.implicits._
+    Seq((1, Some(10)), (2, None: Option[Int]), (3, Some(30)), (4, Some(40)))
+      .toDF("a", "b").createOrReplaceTempView("exc")
+    def run(fn: String): Seq[Option[String]] = SqlGateway.run(spark,
+      s"SELECT $fn FILTER (WHERE b > 10) OVER (ORDER BY a ROWS BETWEEN 1 PRECEDING AND " +
+        "1 FOLLOWING EXCLUDE CURRENT ROW) AS v FROM exc ORDER BY a")
+      .collect().map(r => if (r.isNullAt(0)) None else Some(r.get(0).toString)).toSeq
+    // DuckDB 1.0 goldens: the filter drops b = 10 from every frame and
+    // from the current-row term
+    assert(run("SUM(b)") == Seq(None, Some("30"), Some("40"), Some("30")))
+    assert(run("COUNT(*)") == Seq(Some("0"), Some("1"), Some("1"), Some("1")))
+    assert(run("AVG(b)") == Seq(None, Some("30.0"), Some("40.0"), Some("30.0")))
   }
 
   test("window frame EXCLUDE GROUP/TIES decompose over RANGE frames (round 13d)") {

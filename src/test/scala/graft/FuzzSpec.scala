@@ -123,14 +123,21 @@ class FuzzSpec extends AnyFunSuite {
             graft.engine.SqlGateway.run(spark, sql).collect()
           else {
             val rewritten = graft.engine.DuckDbDialect.rewrite(sql)
-            // the shim is the text pass plus the injected DuckDB function
-            // builders: a dialect query must reach at least one of them
-            val calls = spark.sessionState.sqlParser.parsePlan(rewritten)
+            // the shim is the text pass, the injected DuckDB function
+            // builders and the window rule, which computes DISTINCT window
+            // aggregates with no text: a dialect query must reach one
+            import org.apache.spark.sql.catalyst.analysis.UnresolvedFunction
+            import org.apache.spark.sql.catalyst.expressions.{UnresolvedWindowExpression, WindowExpression}
+            val fns = spark.sessionState.sqlParser.parsePlan(rewritten)
               .collectWithSubqueries { case p => p.expressions.flatMap(_.collect {
-                case f: org.apache.spark.sql.catalyst.analysis.UnresolvedFunction =>
-                  f.nameParts.last.toLowerCase(java.util.Locale.ROOT)
+                case w @ (_: WindowExpression | _: UnresolvedWindowExpression) =>
+                  w.children.head match {
+                    case f: UnresolvedFunction if f.isDistinct => "distinct window"
+                    case _ => ""
+                  }
+                case f: UnresolvedFunction => f.nameParts.last.toLowerCase(java.util.Locale.ROOT)
               }) }.flatten
-            assert(rewritten != sql || calls.exists(duckFunctions),
+            assert(rewritten != sql || fns.exists(f => duckFunctions(f) || f == "distinct window"),
               s"$name: shim left a dialect query untouched")
             spark.sql(rewritten).collect()
           }
