@@ -1,6 +1,6 @@
 package graft.engine
 
-import graft.functions.{FrameExclude, GroupsFrame}
+import graft.functions.{AsOfMarker, FrameExclude, GroupsFrame}
 
 /** DuckDB-dialect acceptance shim (VERDICT r11 #3; SURVEY §7.4-1).
   *
@@ -20,10 +20,12 @@ import graft.functions.{FrameExclude, GroupsFrame}
   *    the DuckDB spelling as a function call:
   *     - syntax Spark's parser cannot read or reads differently: `//`,
   *       FROM-first, QUALIFY, DISTINCT ON, `* REPLACE`, `* EXCLUDE`,
-  *       ASOF JOIN, USING SAMPLE, SIMILAR TO, in-paren IGNORE NULLS,
-  *       bracket lists and 1-based indexing, and the window-frame
-  *       keywords GROUPS and EXCLUDE, which [[rewriteFrames]] only
-  *       spells as a marked spec for [[graft.functions.DuckWindowRule]];
+  *       USING SAMPLE, SIMILAR TO, in-paren IGNORE NULLS, bracket lists
+  *       and 1-based indexing; the window-frame keywords GROUPS and
+  *       EXCLUDE, which [[rewriteFrames]] only spells as a marked spec
+  *       for [[graft.functions.DuckWindowRule]]; and ASOF JOIN, which
+  *       [[rewriteAsOfJoin]] only spells as a join marked for
+  *       [[graft.functions.DuckAsOfRule]];
   *     - a window aggregate's FILTER clause, which Spark's analyzer
   *       rejects before any injected rule sees the plan;
   *     - `struct_pack(a := 1)`: Spark cannot parse `:=`;
@@ -467,205 +469,39 @@ object DuckDbDialect {
 
   // ---- ASOF JOIN -------------------------------------------------------
 
-  /** DuckDB `ASOF [LEFT] JOIN t [alias] ON eq-conds AND one-inequality`
-    * (the reference's contract includes it; Spark has no ASOF operator).
-    * Rewritten to the domain-join + window formulation — ASOF's match
-    * depends only on the left row's (key…, ordering-value) tuple, so the
-    * best right row is computed once per DISTINCT tuple and equi-joined
-    * back:
-    *
-    *   a ASOF JOIN b ON b.k = a.k AND a.ts >= b.ts
-    *     → a JOIN ( SELECT * FROM (
-    *           SELECT d.*, b.*, ROW_NUMBER() OVER (PARTITION BY
-    *             d.__asof_c1, d.__asof_t ORDER BY b.ts DESC) AS __asof_rn
-    *           FROM (SELECT DISTINCT a.k AS __asof_c1, a.ts AS __asof_t
-    *                 FROM lefttable a) d
-    *           JOIN b ON b.k = d.__asof_c1 AND d.__asof_t >= b.ts
-    *         ) __asof_w WHERE __asof_rn = 1
-    *       ) b ON b.__asof_c1 = a.k AND b.__asof_t = a.ts
-    *
-    * Every join here is an EQUI-join (domain⋈right on the keys, derived
-    * ⋈ left on keys + ordering value) and the rank-1 filter plans as
-    * WindowGroupLimit — shuffle-bounded at any size. The obvious
-    * alternative, a correlated `ORDER BY … LIMIT 1` LATERAL, decorrelates
-    * in Catalyst to a BroadcastNestedLoopJoin of the ordering-value
-    * domain against the ENTIRE right table (measured; the equality gets
-    * pulled to the outer join, leaving only the inequality for the
-    * domain join) — a mandatory unbounded broadcast, disqualifying at
-    * scale. The dedicated [[graft.ops.AsOf]] merge formulation remains
-    * the preferred DataFrame-API path (one shuffle, no expansion).
-    *
-    * Bounds (throws, never silently wrong): the right side is a plain
-    * table/view/CTE name or an aliased parenthesized subquery (the
-    * relation text appears once in the rewrite, so a derived table
-    * drops in verbatim); the ON clause a top-level
-    * AND-conjunction of `=` equalities plus EXACTLY one inequality
-    * (>=, <=, >, <); all left-side operands qualified by ONE alias whose
-    * relation is the plain name immediately before ASOF; and the outer
-    * select list must name its columns (a bare `*` would surface the
-    * synthetic `__asof_*` join columns). Ties on the inequality bound
-    * are deterministic only when the ordering expression is unique per
-    * key — the same caveat DuckDB's ASOF documents. NULL ordering values
-    * are 3VL here (a NULL timestamp matches nothing); DuckDB's
-    * sort-based ASOF gives them implementation-defined behavior instead
-    * (observed on 1.0.0: NULL ≈ +∞ under `>=` but direction-dependent
-    * artifacts under `<=`), so rows with NULL ordering keys are outside
-    * the equivalence bound — filter them explicitly when they can
-    * occur. */
+  /** DuckDB `ASOF [LEFT] JOIN r [[AS] alias] ON cond` → `[LEFT] JOIN r
+    * [[AS] alias] ON graft_asof() AND cond`. Only the syntax moves: the
+    * relation `r` is a (dotted) name or a parenthesized subquery, kept
+    * as it is, and the condition needs no end, since the marker leads
+    * it. [[graft.functions.DuckAsOfRule]] plans the marked join on the
+    * analyzed plan, where it tells the two sides apart by attribute set;
+    * its scaladoc has the semantics and the errors for an ON clause
+    * outside `=` equalities plus one inequality. RIGHT/FULL ASOF and
+    * ASOF … USING fail here, by name. */
   private def rewriteAsOfJoin(lx: Lex): String = {
     val sql = lx.s
     val start = lx.find()(lx.word(_, "asof"))
     if (start < 0) return sql
     var j = start + 4
-    def skipWs(): Unit = j = lx.fwd(j)
-    def word(): String = {
-      skipWs(); val s0 = j
-      j = lx.identFrom(j)
-      sql.substring(s0, j)
+    def word(): String = { j = lx.fwd(j); val s0 = j; j = lx.identFrom(j); sql.substring(s0, j) }
+    var w = word()
+    val isLeft = w.equalsIgnoreCase("left")
+    if (isLeft) w = word()
+    require(w.equalsIgnoreCase("join"),
+      s"ASOF: expected [LEFT] JOIN after ASOF, got '$w' (RIGHT/FULL ASOF is outside the shim's bounded support)")
+    val rel = j
+    if (lx.fwd(j) < sql.length && sql(lx.fwd(j)) == '(')
+      j = lx.closeOf(lx.fwd(j), required("ASOF: unbalanced subquery after JOIN")) + 1
+    else {
+      require(word().nonEmpty, "ASOF: expected a table name or subquery after JOIN")
+      while (j < sql.length && sql(j) == '.') { j += 1; word() }
     }
-    var w1 = word()
-    val isLeft = w1.equalsIgnoreCase("left")
-    if (isLeft) w1 = word()
-    require(w1.equalsIgnoreCase("join"),
-      s"ASOF: expected [LEFT] JOIN after ASOF, got '$w1' (RIGHT/FULL ASOF is outside the shim's bounded support)")
-    skipWs()
-    // right side: a plain table/view/CTE name, or (round 13b) a
-    // parenthesized subquery — the relation text appears exactly once in
-    // the rewrite (the domain join), so a derived table drops in as-is;
-    // it must carry an alias (the ON clause references its columns)
-    val table =
-      if (j < sql.length && sql(j) == '(') {
-        val s0 = j
-        j = lx.closeOf(j, required("ASOF: unbalanced subquery after JOIN")) + 1
-        sql.substring(s0, j)
-      } else word()
-    require(table.nonEmpty, "ASOF: expected a table name or subquery after JOIN")
-    var nxt = word()
-    var alias = if (table.startsWith("(")) "" else table
-    if (nxt.equalsIgnoreCase("as")) { alias = word(); nxt = word() }
-    else if (!nxt.equalsIgnoreCase("on") && nxt.nonEmpty) { alias = nxt; nxt = word() }
-    require(alias.nonEmpty,
-      "ASOF JOIN over a subquery needs an alias (its columns are referenced in ON)")
-    require(nxt.equalsIgnoreCase("on"), s"ASOF: expected ON, got '$nxt'")
-    // condition runs to the next top-level clause keyword or join, or EOS
-    val terminators = Seq("where", "group", "having", "order", "limit",
-      "offset", "qualify", "window", "union", "intersect", "except",
-      "join", "inner", "left", "right", "full", "cross", "asof")
-    val condStart = { skipWs(); j }
-    val base = lx.depthAt(condStart)
-    val condEnd = lx.find(condStart)(i => !lx.masked(i) &&
-      lx.depthAt(i) == base && (sql(i) == ')' || terminators.exists(lx.word(i, _)))) match {
-      case -1 => sql.length
-      case e => e
-    }
-    val cond = sql.substring(condStart, condEnd).trim
-    val conjuncts = new Lex(cond).splitWord("and")
-    def opOf(c: String): Option[(String, String, String)] = {
-      val k = new Lex(c).findTop()(i => c(i) == '<' || c(i) == '>' || c(i) == '=')
-      if (k < 0) None
-      else {
-        val op = if (k + 1 < c.length && (c(k + 1) == '=' || c(k + 1) == '>'))
-          c.substring(k, k + 2) else c.substring(k, k + 1)
-        Some((c.substring(0, k).trim, op, c.substring(k + op.length).trim))
-      }
-    }
-    val parsed = conjuncts.map(c => (c, opOf(c)))
-    parsed.collectFirst { case (c, None) => c }.foreach(c =>
-      throw new IllegalArgumentException(s"ASOF: unsupported ON conjunct (no comparison): $c"))
-    val refsRight = (e: String) =>
-      ("(?i)(^|[^A-Za-z0-9_])" + java.util.regex.Pattern.quote(alias) + "\\s*\\.").r
-        .findFirstIn(e).isDefined
-    // split each conjunct into (leftSideExpr, rightSideExpr) with the
-    // joined table's side identified
-    def sides(lhs: String, rhs: String, what: String): (String, String) =
-      (refsRight(lhs), refsRight(rhs)) match {
-        case (false, true) => (lhs, rhs)
-        case (true, false) => (rhs, lhs)
-        case _ => throw new IllegalArgumentException(
-          s"ASOF: exactly one side of each $what must reference the joined " +
-            s"table's alias '$alias' (qualify the columns)")
-      }
-    val ineqs = parsed.collect { case (_, Some(t @ (_, op, _)))
-      if op == "<" || op == ">" || op == "<=" || op == ">=" => t }
-    val eqTriples = parsed.collect { case (_, Some(t @ (_, "=", _))) => t }
-    require(ineqs.size == 1,
-      s"ASOF: expected exactly one inequality in ON, found ${ineqs.size}")
-    require(eqTriples.size + ineqs.size == parsed.size,
-      "ASOF: ON conjuncts must be `=` equalities plus one inequality")
-    val eqs = eqTriples.map { case (l, _, r) => sides(l, r, "equality") }
-    val (ilhs, iop, irhs) = ineqs.head
-    val (itL, itR) = sides(ilhs, irhs, "inequality")
-    // direction in outer-op-right orientation
-    val outerOp =
-      if (!refsRight(ilhs)) iop // already outer op right
-      else iop match { case ">=" => "<="; case "<=" => ">="; case ">" => "<"; case "<" => ">" }
-    // outer >= right → latest right at-or-before → DESC
-    val dir = if (outerOp == ">=" || outerOp == ">") "DESC" else "ASC"
-    val nf = if (dir == "DESC") "NULLS LAST" else "NULLS FIRST"
-    // the ONE alias qualifying every left-side operand
-    val aliasOf = (e: String) =>
-      "([A-Za-z_][A-Za-z0-9_]*)\\s*\\.".r.findFirstMatchIn(e).map(_.group(1))
-    val leftAliases = (eqs.map(_._1) :+ itL).flatMap(aliasOf).distinct
-    require(leftAliases.size == 1, "ASOF: left-side operands must all be " +
-      s"qualified by one alias (found: ${leftAliases.mkString(", ")})")
-    val la = leftAliases.head
-    // the relation named immediately before ASOF must define that alias
-    val leftTable = {
-      var p = start - 1
-      def wordBack(): String = {
-        while (p >= 0 && sql(p).isWhitespace) p -= 1
-        val e = p
-        while (p >= 0 && isIdentChar(sql(p))) p -= 1
-        sql.substring(p + 1, e + 1)
-      }
-      val w2 = wordBack()
-      val w1 = wordBack()
-      if (w2.equalsIgnoreCase(la) && w1.equalsIgnoreCase("from")) la
-      else if (w2.equalsIgnoreCase(la) && w1.nonEmpty &&
-               !w1.equalsIgnoreCase("join") && !w1.equalsIgnoreCase("as")) w1
-      else if (w2.equalsIgnoreCase(la) && w1.equalsIgnoreCase("as")) wordBack()
-      else throw new IllegalArgumentException(
-        s"ASOF: the relation immediately before ASOF must be the plain " +
-          s"table of alias '$la' (multi-join left sides are outside the " +
-          "shim's bounded support — wrap them in a CTE)")
-    }
-    // a bare star in the governing select list would surface the
-    // synthetic __asof_* columns — refuse rather than silently widen
-    locally {
-      val (selAt, fromAt) = lx.selectFrom(0, start)
-      if (selAt >= 0 && fromAt > selAt) {
-        val items = new Lex(sql.substring(selAt + 6, fromAt))
-        items.tops()(items.s(_) == '*').foreach { i =>
-          // multiplication has an operand before the star
-          val q = items.back(i - 1)
-          val isMul = q >= 0 && (isIdentChar(items.s(q)) || items.s(q) == ')' ||
-            items.s(q) == '\'' || items.s(q) == '"')
-          if (!isMul) throw new IllegalArgumentException(
-            "ASOF with a bare * select list is outside the shim's bounded " +
-              "support (the rewrite would surface synthetic __asof_ columns) " +
-              "— name the output columns")
-        }
-      }
-    }
-    val domainCols = eqs.map(_._1) :+ itL
-    val names = domainCols.indices.map(i =>
-      if (i == domainCols.size - 1) "__asof_t" else s"__asof_c${i + 1}")
-    val domainSel = domainCols.zip(names)
-      .map { case (e, n) => s"$e AS $n" }.mkString(", ")
-    val innerOn = (eqs.map(_._2).zip(names.init)
-      .map { case (r, n) => s"$r = d.$n" } :+
-      s"d.${names.last} $outerOp $itR").mkString(" AND ")
-    val outerOn = domainCols.zip(names)
-      .map { case (e, n) => s"$alias.$n = $e" }.mkString(" AND ")
-    val derived =
-      s"SELECT * EXCEPT (__asof_rn) FROM ( SELECT d.*, $alias.*, ROW_NUMBER() OVER (PARTITION BY " +
-        names.map(n => s"d.$n").mkString(", ") +
-        s" ORDER BY $itR $dir $nf) AS __asof_rn " +
-        s"FROM (SELECT DISTINCT $domainSel FROM $leftTable $la) d " +
-        s"JOIN $table $alias ON $innerOn ) __asof_w WHERE __asof_rn = 1"
-    val joinKw = if (isLeft) "LEFT JOIN" else "JOIN"
-    val repl = s"$joinKw ( $derived ) $alias ON $outerOn"
-    rewriteAsOfJoin(new Lex(sql.substring(0, start) + repl + " " + sql.substring(condEnd)))
+    w = word()
+    if (w.equalsIgnoreCase("as")) { word(); w = word() }
+    else if (w.nonEmpty && !Seq("on", "using").exists(w.equalsIgnoreCase)) w = word()
+    require(w.equalsIgnoreCase("on"), s"ASOF: expected ON, got '$w'")
+    rewriteAsOfJoin(new Lex(sql.substring(0, start) + (if (isLeft) "LEFT JOIN" else "JOIN") +
+      sql.substring(rel, j) + s" ${AsOfMarker.Name}() AND" + sql.substring(j)))
   }
 
   // ---- the lexical scanner ----------------------------------------------
@@ -688,8 +524,7 @@ object DuckDbDialect {
     *    a message it answers -1 for unbalanced text; with one it throws
     *    `IllegalArgumentException(message)`, the caller's own text.
     *  - DEPTH-0 SEARCH and SPLIT: [[find]] (any position), [[findTop]],
-    *    [[tops]], [[topWord]], [[selectFrom]]; [[split]] by a character
-    *    and [[splitWord]] by a keyword.
+    *    [[tops]], [[topWord]], [[selectFrom]]; [[split]] by a character.
     *  - SET-OP CUT: [[setOps]]/[[isSetOp]], with one EXCEPT rule.
     *  - BLOCKS: [[opens]] and [[opensQuery]], which [[innermostFirst]]
     *    uses to recurse into the innermost query block.
@@ -822,23 +657,9 @@ object DuckDbDialect {
     }
 
     /** The text of [from, until) cut at each top-level `sep`. */
-    def split(sep: Char, from: Int = 0, until: Int = n): Seq[String] =
-      cut(from, until)(i => if (s(i) == sep) 1 else 0)
-
-    /** The text cut at each top-level keyword `kw` (e.g. AND); pieces
-      * trimmed, empty ones dropped. */
-    def splitWord(kw: String): Seq[String] =
-      cut(0, n)(i => if (word(i, kw)) kw.length else 0).map(_.trim).filter(_.nonEmpty)
-
-    private def cut(from: Int, until: Int)(sepLen: Int => Int): Seq[String] = {
-      val out = Seq.newBuilder[String]
-      var st = from
-      tops(from, until)(sepLen(_) > 0).foreach { i =>
-        out += s.substring(st, i)
-        st = i + sepLen(i)
-      }
-      out += s.substring(st, until)
-      out.result()
+    def split(sep: Char, from: Int = 0, until: Int = n): Seq[String] = {
+      val cuts = tops(from, until)(s(_) == sep)
+      ((from - 1) +: cuts).zip(cuts :+ until).map { case (a, b) => s.substring(a + 1, b) }
     }
 
     /** A set operation (UNION, INTERSECT, EXCEPT) starts at `i`. The one

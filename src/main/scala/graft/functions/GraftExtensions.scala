@@ -24,6 +24,8 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // GROUPS frames, frame EXCLUDE and DISTINCT window aggregates: the
     // shim marks the spec, the rule computes them — see [[DuckWindowRule]]
     e.injectResolutionRule(_ => DuckWindowRule)
+    // ASOF JOIN: the shim marks the join, the rule plans it — see [[DuckAsOfRule]]
+    e.injectResolutionRule(_ => DuckAsOfRule)
   }
 }
 
@@ -68,5 +70,7 @@ object GraftExtensions {
     entry(GroupsFrame.Name, s"${GroupsFrame.Name}() - marks a GROUPS window frame; valid only first in a window's PARTITION BY")(
       _ => GroupsFrame()),
     entry(FrameExclude.Name, s"${FrameExclude.Name}(kind) - marks a window frame EXCLUDE clause; valid only first in a window's PARTITION BY")(
-      FrameExclude.build))
+      FrameExclude.build),
+    entry(AsOfMarker.Name, s"${AsOfMarker.Name}() - marks an ASOF JOIN; valid only as a top-level conjunct of a join's ON")(
+      _ => AsOfMarker()))
 }

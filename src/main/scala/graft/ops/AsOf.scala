@@ -1,28 +1,23 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.functions._
+import graft.functions.AsOfMarker
+import org.apache.spark.sql.{DataFrame, GraftShim}
+import org.apache.spark.sql.catalyst.expressions.{And, EqualTo, GreaterThanOrEqual}
+import org.apache.spark.sql.catalyst.plans.LeftOuter
+import org.apache.spark.sql.catalyst.plans.logical.{Join, JoinHint}
+import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.internal.SQLConf
 
-/** Distributed as-of join (DuckDB `ASOF JOIN`; SURVEY.md §2 "Joins").
+/** Distributed as-of join (DuckDB `ASOF JOIN`; SURVEY.md §2 "Joins"):
+  * for each left row, the most recent right row of the same key with
+  * rightTime <= leftTime. A front end over [[graft.functions.DuckAsOfRule]]:
+  * it builds the marked join SQL's `ASOF LEFT JOIN` becomes, over the
+  * right's key, time and payload columns, so every payload comes from
+  * ONE matched row (one struct in the merge window, whatever the width).
+  * The join is a logical plan: `Dataset.join`'s self-join check assumes
+  * the analyzed plan is still a Join.
   *
-  * For each left row, find the most recent right row of the same key
-  * with rightTime <= leftTime. Spark has no builtin; the naive
-  * emulation (range join + per-row top-1 window) materializes
-  * |left| × |matching rights| intermediate rows — quadratic per key.
-  *
-  * This implementation is the merge formulation: union both sides
-  * tagged, shuffle ONCE by key, sort within key by (time, side), and
-  * carry the latest right value forward with a running last_value
-  * window. Cost is one shuffle + one sort of |left| + |right| — the
-  * same shape as a sort-merge join, which is what a 100 TB as-of join
-  * must be.
-  *
-  * `rightValue` is the single right-side payload column carried to the
-  * output; [[asofJoinCols]] carries N payload columns by packing them
-  * into one struct for the running-last window (ONE state column
-  * regardless of payload width) and unpacking after the filter.
-  */
+  * Output: the left columns, then each payload under its output name. */
 object AsOf {
 
   def asofJoin(
@@ -34,49 +29,24 @@ object AsOf {
       Seq(rightValue -> outName))
 
   /** Multi-payload as-of join: each `(rightColumn, outputName)` pair is
-    * carried from the matched right row. Same single-shuffle merge
-    * formulation; the payloads ride one struct column so the window
-    * state does not multiply with payload width. All payloads come from
-    * the SAME matched right row (N independent single-column as-of
-    * joins would not guarantee that under duplicate timestamps). */
+    * carried from the matched right row. */
   def asofJoinCols(
       left: DataFrame, right: DataFrame,
       leftKey: String, rightKey: String,
       leftTime: String, rightTime: String,
       payload: Seq[(String, String)]): DataFrame = {
     require(payload.nonEmpty, "asofJoinCols: at least one payload column")
-
-    val packed = struct(payload.map { case (c, _) => col(c).as(c) }: _*)
-    val packedType = {
-      // the struct type as built from the right schema, for the typed
-      // NULL the left side carries
-      val r0 = right.select(payload.map { case (c, _) => col(c).as(c) }: _*)
-      org.apache.spark.sql.types.StructType(r0.schema.fields)
-    }
-    val l = left.withColumn("_k", col(leftKey))
-      .withColumn("_t", col(leftTime))
-      .withColumn("_side", lit(1))           // left sorts after right at equal times
-      .withColumn("_rv", lit(null).cast(packedType))
-    val r = right.select(
-      col(rightKey).as("_k"), col(rightTime).as("_t"),
-      lit(0).as("_side"), packed.as("_rv"))
-
-    val unioned = l.select((left.columns.map(col) ++
-      Seq(col("_k"), col("_t"), col("_side"), col("_rv"))).toIndexedSeq: _*)
-      .unionByName(r.select((left.columns.map(c => lit(null).cast(left.schema(c).dataType).as(c)) ++
-        Seq(col("_k"), col("_t"), col("_side"), col("_rv"))).toIndexedSeq: _*))
-
-    // right rows sort before left rows at the same (key, time): an event
-    // AT an order's timestamp matches that order (ts >= o_time semantics)
-    val w = Window.partitionBy(col("_k"))
-      .orderBy(col("_t"), col("_side"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-
-    val matched = unioned
-      .withColumn("_rv_last", last(col("_rv"), ignoreNulls = true).over(w))
-      .filter(col("_side") === 1)
-    payload.foldLeft(matched) { case (df, (c, out)) =>
-      df.withColumn(out, col("_rv_last").getField(c))
-    }.drop("_k", "_t", "_side", "_rv", "_rv_last")
+    val l = left.queryExecution.analyzed
+    // fresh attributes throughout, so `r` never shares one with `l`
+    val r = right.select(col(rightKey).as("k") +: col(rightTime).as("t") +:
+      payload.map { case (c, out) => col(c).as(out) }: _*).queryExecution.analyzed
+    def attr(name: String) = l.resolveQuoted(name, SQLConf.get.resolver).getOrElse(
+      throw new IllegalArgumentException(s"asofJoinCols: no left column $name"))
+    val on = And(AsOfMarker(), And(EqualTo(attr(leftKey), r.output(0)),
+      GreaterThanOrEqual(attr(leftTime), r.output(1))))
+    val joined = GraftShim.ofRows(left.sparkSession, Join(l, r, LeftOuter, Some(on), JoinHint.NONE))
+    // drop r's key and time, which follow the left columns
+    joined.select(joined.queryExecution.analyzed.output.patch(l.output.size, Nil, 2)
+      .map(GraftShim.column): _*)
   }
 }

@@ -548,7 +548,7 @@ object Corpus {
       // runs once, not three times (CacheManager dedups by plan, so
       // repeated invocations share one entry; round-15 solo profile)
       val te0 = sh.filter(col("doc_id") % 2 === 1).select("shingle").distinct()
-      val te = if (Tables.onDiskBytes(s"$d/documents.parquet") <= Tables.cacheMaxBytes)
+      val te = if (Tables.onDiskBytes(s"$d/documents.parquet") <= Tables.CacheMaxBytes)
         te0.cache() else te0
       // m from the holdout's distinct-shingle count (te is already
       // DISTINCT, so count() == the oracle's COUNT(*) over te). One

@@ -115,23 +115,25 @@ object Dedup {
     * dedup queries (CacheManager dedups by plan).
     *
     * The path-taking overload SIZE-GATES the cache on the source
-    * table's on-disk bytes — the same threshold and basis as
-    * [[Tables.t]], because the trade inverts with scale in the same
-    * way: the raw shingle stream is ~10× its source (3-token strings,
-    * one row per distinct shingle), so a bench/probe-scale corpus
-    * (≤ MBs–GBs) pins a working set that MEMORY_AND_DISK holds or
-    * spills harmlessly, while materializing a 100 TB corpus's stream
-    * would write ~10× the corpus to executor disks to save re-running
-    * a codegen'd split/explode over a source that is already columnar —
-    * at the gate's far side, recompute is strictly the better deal.
+    * table's on-disk bytes against `maxBytes` — by default the same
+    * threshold and basis as [[Tables.t]], because the trade inverts
+    * with scale in the same way: the raw shingle stream is ~10× its
+    * source (3-token strings, one row per distinct shingle), so a
+    * bench/probe-scale corpus (≤ MBs–GBs) pins a working set that
+    * MEMORY_AND_DISK holds or spills harmlessly, while materializing a
+    * 100 TB corpus's stream would write ~10× the corpus to executor
+    * disks to save re-running a codegen'd split/explode over a source
+    * that is already columnar — at the gate's far side, recompute is
+    * strictly the better deal.
     * (Contrast [[jaccardPairs]]'s posting cache, which stays ungated:
     * re-reading a disk-backed cache is always cheaper than re-running
     * the shuffles that built it.) */
-  private[graft] def shingleTable(s: SparkSession, d: String): DataFrame =
+  private[graft] def shingleTable(s: SparkSession, d: String,
+      maxBytes: Long = Tables.CacheMaxBytes): DataFrame =
     shingleTable(documents(s, d),
-      cacheable = Tables.onDiskBytes(s"$d/documents.parquet") <= Tables.cacheMaxBytes)
+      cacheable = Tables.onDiskBytes(s"$d/documents.parquet") <= maxBytes)
 
-  private[graft] def shingleTable(docs: DataFrame, cacheable: Boolean = true): DataFrame = {
+  private[graft] def shingleTable(docs: DataFrame, cacheable: Boolean): DataFrame = {
     val toks = split(col("text"), " ")
     val n = size(toks)
     def pair(x: Column, y: Column) = concat(x, lit(" "), y)

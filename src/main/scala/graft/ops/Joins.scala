@@ -347,10 +347,11 @@ object Joins {
     },
 
     // As-of join (DuckDB ASOF JOIN; SURVEY.md §2): for each event, the most
-    // recent order of the same user at or before the event time. Uses the
-    // merge formulation in graft.ops.AsOf — one shuffle by key + one sort
-    // of |events| + |orders|, no per-key pair explosion (the shape an
-    // as-of join must have at 100 TB).
+    // recent order of the same user at or before the event time. graft.ops.AsOf
+    // builds the marked join that DuckAsOfRule plans for SQL's ASOF LEFT JOIN
+    // too: the merge formulation, one shuffle by key + one sort of
+    // |events| + |orders|, no per-key pair explosion (the shape an as-of
+    // join must have at 100 TB).
     OpQuery("q_asof_join",
       """SELECT e.event_id, strftime(o.o_orderdate, '%Y-%m-%d') AS asof_day
         |FROM events e

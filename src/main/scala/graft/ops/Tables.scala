@@ -17,13 +17,12 @@ import org.apache.spark.sql.types._
   * it is the same shuffle shape as a double sum.
   */
 object Tables {
-  /** Max on-disk bytes for a table to be cached (default 4 GiB,
-    * override with -Dgraft.cache.max.bytes=N). Dimensions and bench-SF
-    * facts fit far under it; a 100 TB fact table does not — caching it
-    * would evict everything else and thrash executor storage memory, so
-    * big tables stay scan-through and rely on data locality instead. */
-  private[ops] def cacheMaxBytes: Long =
-    sys.props.get("graft.cache.max.bytes").map(_.toLong).getOrElse(4L << 30)
+  /** Max on-disk bytes for a table to be cached: 4 GiB. Dimensions and
+    * bench-SF facts fit far under it; a 100 TB fact table does not —
+    * caching it would evict everything else and thrash executor storage
+    * memory, so big tables stay scan-through and rely on data locality
+    * instead. */
+  private[graft] val CacheMaxBytes: Long = 4L << 30
 
   /** One recursive walker for (max lastModified, total bytes) over a
     * file or directory — shared by the schema memo and cache size gate
@@ -161,7 +160,7 @@ object Tables {
     * buffer-pool role DuckDB gets from the OS page
     * cache when Verify/Bench run ~114 queries over the same ten tables in
     * one session. The size gate keeps the policy honest at scale: only
-    * tables under [[cacheMaxBytes]] on disk are pinned; anything larger
+    * tables under [[CacheMaxBytes]] on disk are pinned; anything larger
     * streams from the source and relies on locality + shuffle reuse.
     * The operators themselves never depend on the data being resident.
     *
@@ -183,7 +182,7 @@ object Tables {
     // pushdown is visible instead of InMemoryTableScan pushdown). The
     // CacheManager is asked first, so a table already cached is not
     // re-registered; one emptied by clearCache() is cached again.
-    if (!sys.props.contains("graft.no.cache") && bytes <= cacheMaxBytes) Caches.cacheOnce(df)
+    if (!sys.props.contains("graft.no.cache") && bytes <= CacheMaxBytes) Caches.cacheOnce(df)
     df
   }
 

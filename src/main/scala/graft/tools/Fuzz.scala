@@ -1175,30 +1175,37 @@ final class SqlFuzzer(seed: Long) {
 
   /** ASOF joins on an edge whose RIGHT key is unique (orders.o_orderkey):
     * at most one candidate row per left row, so the match is tie-free in
-    * both engines regardless of the inequality direction.
+    * both engines regardless of the inequality direction. The shapes:
+    * the plain `la a`, a bare `*` select list, a derived left table, and
+    * a multi-join left side (`la ⋈ supplier`, unique on s_suppkey); the
+    * right side is the CTE or a parenthesized subquery.
     *
     * Both sides are CTE-prefiltered to NON-NULL ordering values:
-    * divergence class #4 (FUZZ_NOTES) — DuckDB's sort-based ASOF gives
+    * divergence class #5 (FUZZ_NOTES) — DuckDB's sort-based ASOF gives
     * NULL ordering keys implementation-defined match behavior (observed
     * on 1.0.0: a NULL left ts matches in every direction under
     * column-equality keys, NULL ≈ +∞ under `>=`, and direction-dependent
-    * artifacts under `<=`), where the shim's lateral formulation is 3VL
-    * (NULL never matches). The shim documents NULL ordering keys as
+    * artifacts under `<=`), where `DuckAsOfRule`'s merge plan is 3VL
+    * (NULL never matches). The rule documents NULL ordering keys as
     * outside its bounds; the fuzzer pins the agreed surface. */
   private def qDialectAsof(): String = {
     val op = pick(Seq(">=", ">", "<=", "<"))
     val left = if (rnd.nextBoolean()) " LEFT" else ""
-    // half the suite names the CTE, half joins a parenthesized subquery
-    // directly (the shim's round-13b right-side widening)
-    val right = if (rnd.nextBoolean()) "ob"
-      else "(SELECT o_orderkey, o_orderdate, o_totalprice FROM ob " +
-        s"WHERE o_orderkey % ${intLit(2, 5)} >= 0)"
+    val (right, rightCols) = if (rnd.nextBoolean()) ("ob", 6)
+      else ("(SELECT o_orderkey, o_orderdate, o_totalprice FROM ob " +
+        s"WHERE o_orderkey % ${intLit(2, 5)} >= 0)", 3)
+    val cols = "a.l_orderkey AS c1, a.l_linenumber AS c2, b.o_totalprice AS c3"
+    val (sel, from, n) = rnd.nextInt(4) match {
+      case 0 => ("*", "la a", 11 + rightCols) // both sides' columns, names distinct
+      case 1 => (cols, s"(SELECT * FROM la WHERE ${basePred(lineitem)}) a", 3)
+      case 2 => (s"$cols, s.s_nationkey AS c4", "la a JOIN supplier s ON s.s_suppkey = a.l_suppkey", 4)
+      case _ => (cols, "la a", 3)
+    }
     s"WITH la AS (SELECT * FROM lineitem WHERE l_shipdate IS NOT NULL AND l_orderkey IS NOT NULL), " +
       s"ob AS (SELECT * FROM orders WHERE o_orderdate IS NOT NULL) " +
-      s"SELECT a.l_orderkey AS c1, a.l_linenumber AS c2, b.o_totalprice AS c3 " +
-      s"FROM la a ASOF$left JOIN $right b ON b.o_orderkey = a.l_orderkey " +
+      s"SELECT $sel FROM $from ASOF$left JOIN $right b ON b.o_orderkey = a.l_orderkey " +
       s"AND a.l_shipdate $op b.o_orderdate " +
-      s"WHERE a.${basePred(lineitem)} ${orderAll(3)} ${limit()}"
+      s"WHERE a.${basePred(lineitem)} ${orderAll(n)} ${limit()}"
   }
 
   /** PostgreSQL/DuckDB `DISTINCT ON`: first row per key under a total

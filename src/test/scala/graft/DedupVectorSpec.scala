@@ -64,7 +64,7 @@ class DedupVectorSpec extends AnyFunSuite {
       (planted ++ boiler ++ filler).toDF("doc_id", "text")
     }
     def plantedDetected(docs: org.apache.spark.sql.DataFrame, cap: Int): Boolean =
-      Dedup.jaccardPairs(Dedup.shingleTable(docs), cap)
+      Dedup.jaccardPairs(Dedup.shingleTable(docs, cacheable = true), cap)
         .filter(col("jac") >= Dedup.JaccardThreshold)
         .collect().exists(r => r.getLong(0) == 0L && r.getLong(1) == 1L)
     // small corpus (300 docs): phrase df 42 sits under the 50 floor
@@ -91,28 +91,20 @@ class DedupVectorSpec extends AnyFunSuite {
     val un = Dedup.shingleTable(unDocs, cacheable = false)
     assert(!inCache(un))
     val gatedDocs = Seq((901L, "g1 g2 g3 g4")).toDF("doc_id", "text")
-    val gated = Dedup.shingleTable(gatedDocs)
+    val gated = Dedup.shingleTable(gatedDocs, cacheable = true)
     try assert(inCache(gated))
     finally gated.unpersist()
-    // path overload: the gate reads -Dgraft.cache.max.bytes (same knob
-    // as Tables.t); a 1-byte ceiling must disengage the cache for a
-    // real on-disk corpus, the default (4 GiB) must engage it. Earlier
-    // tests in this shared session register the sf-dir shingle cache —
-    // drop that entry first so the isEmpty assertion sees this test's
-    // behavior, not theirs (build-then-unpersist nets to removal).
+    // path overload: the gate compares the source's on-disk bytes with
+    // `maxBytes` (Tables.CacheMaxBytes, as for Tables.t, by default); a
+    // 1-byte ceiling must disengage the cache for a real on-disk corpus,
+    // the default (4 GiB) must engage it. Earlier tests in this shared
+    // session register the sf-dir shingle cache — drop that entry first
+    // so the isEmpty assertion sees this test's behavior, not theirs
+    // (build-then-unpersist nets to removal).
     Dedup.shingleTable(spark, TestSpark.Sf).unpersist()
-    val prev = sys.props.get("graft.cache.max.bytes")
-    try {
-      sys.props("graft.cache.max.bytes") = "1"
-      val big = Dedup.shingleTable(spark, TestSpark.Sf)
-      assert(!inCache(big),
-        "source over the gate must not pin the shingle stream")
-    } finally {
-      prev match {
-        case Some(v) => sys.props("graft.cache.max.bytes") = v
-        case None => sys.props.remove("graft.cache.max.bytes")
-      }
-    }
+    val big = Dedup.shingleTable(spark, TestSpark.Sf, maxBytes = 1)
+    assert(!inCache(big),
+      "source over the gate must not pin the shingle stream")
     val onGate = Dedup.shingleTable(spark, TestSpark.Sf)
     try assert(inCache(onGate))
     finally onGate.unpersist()

@@ -1565,101 +1565,154 @@ class DuckDbDialectSpec extends AnyFunSuite {
 
   // ---- ASOF JOIN -------------------------------------------------------
 
-  test("ASOF JOIN rewrites to the domain-join + window formulation") {
-    val out = DuckDbDialect.rewrite(
-      "SELECT a.id, b.v FROM ticks a ASOF JOIN quotes b ON b.k = a.k AND a.ts >= b.ts")
-    // distinct left-domain, equi-join to the right, rank-1 per domain tuple
-    assert(out.contains("SELECT DISTINCT a.k AS __asof_c1, a.ts AS __asof_t FROM ticks a"), out)
-    assert(out.contains("JOIN quotes b ON b.k = d.__asof_c1 AND d.__asof_t >= b.ts"), out)
-    assert(out.contains("ORDER BY b.ts DESC NULLS LAST) AS __asof_rn"), out)
-    assert(out.contains("WHERE __asof_rn = 1"), out)
-    // the equi-join back to the outer left row
-    assert(out.contains("ON b.__asof_c1 = a.k AND b.__asof_t = a.ts"), out)
-    assert(!out.contains("LATERAL"), out)
-    val left = DuckDbDialect.rewrite(
-      "SELECT a.id, b.v FROM ticks a ASOF LEFT JOIN quotes b ON b.k = a.k AND a.ts >= b.ts")
-    assert(left.contains("LEFT JOIN ( SELECT"), left)
-    // flipped inequality side and direction: right >= outer → earliest ≥ → ASC
-    val fwd = DuckDbDialect.rewrite(
-      "SELECT a.id FROM ticks a ASOF JOIN quotes b ON b.k = a.k AND b.ts >= a.ts")
-    assert(fwd.contains("ORDER BY b.ts ASC NULLS FIRST) AS __asof_rn"), fwd)
-    assert(fwd.contains("d.__asof_t <= b.ts"), fwd)
+  /** The ASOF fixture. asof_r2 adds a right row at id 2's own timestamp,
+    * so `>=`/`>` and `<=`/`<` differ; asof_ln adds a left row with a NULL
+    * ordering value (id 5) and one with a NULL key (id 6). */
+  private def asofViews(): Unit = {
+    import spark.implicits._
+    val l = Seq((1, "k", "2024-01-01 00:00:05"), (2, "k", "2024-01-01 00:00:02"),
+        (3, "k", "2024-01-01 00:00:00"), (4, "z", "2024-01-01 00:00:10"))
+    l.toDF("id", "k", "ts").selectExpr("id", "k", "CAST(ts AS TIMESTAMP) AS ts")
+      .createOrReplaceTempView("asof_l")
+    (l.map { case (i, k, t) => (i, Option(k), Option(t)) } ++
+        Seq((5, Some("k"), None), (6, None, Some("2024-01-01 00:00:03"))))
+      .toDF("id", "k", "ts").selectExpr("id", "k", "CAST(ts AS TIMESTAMP) AS ts")
+      .createOrReplaceTempView("asof_ln")
+    val r = Seq(("k", "2024-01-01 00:00:01", 10.0), ("k", "2024-01-01 00:00:04", 20.0),
+        ("q", "2024-01-01 00:00:00", 99.0))
+    r.toDF("k", "ts", "v").selectExpr("k", "CAST(ts AS TIMESTAMP) AS ts", "v")
+      .createOrReplaceTempView("asof_r")
+    (r :+ (("k", "2024-01-01 00:00:02", 15.0)))
+      .toDF("k", "ts", "v").selectExpr("k", "CAST(ts AS TIMESTAMP) AS ts", "v")
+      .createOrReplaceTempView("asof_r2")
+    Seq((1, "one"), (2, "two"), (3, "three"), (4, "four")).toDF("id", "name")
+      .createOrReplaceTempView("asof_n")
+  }
+
+  /** (id, v) rows of an ASOF statement, in id order. */
+  private def asof(sql: String): Seq[(Int, Option[Double])] =
+    SqlGateway.run(spark, sql).collect()
+      .map(r => (r.getInt(0), Option(r.get(1)).map(_.asInstanceOf[Double]))).toSeq
+
+  test("ASOF JOIN returns DuckDB's rows in all four directions") {
+    asofViews()
+    // goldens from DuckDB 1.0; asof_r2's 00:00:02 right row ties id 2
+    def dir(op: String, flipped: String) = Seq(
+      s"SELECT a.id, b.v FROM asof_l a ASOF LEFT JOIN asof_r2 b ON b.k = a.k AND a.ts $op b.ts ORDER BY a.id",
+      s"SELECT a.id, b.v FROM asof_l a ASOF LEFT JOIN asof_r2 b ON a.k = b.k AND b.ts $flipped a.ts ORDER BY a.id")
+      .map(asof).distinct
+    val (n, k10, k15, k20) = (None, Some(10.0), Some(15.0), Some(20.0))
+    assert(dir(">=", "<=") == Seq(Seq((1, k20), (2, k15), (3, n), (4, n))))
+    assert(dir(">", "<") == Seq(Seq((1, k20), (2, k10), (3, n), (4, n))))
+    assert(dir("<=", ">=") == Seq(Seq((1, n), (2, k15), (3, k10), (4, n))))
+    assert(dir("<", ">") == Seq(Seq((1, n), (2, k20), (3, k10), (4, n))))
+    assert(asof("SELECT a.id, b.v FROM asof_l a ASOF LEFT JOIN asof_r b " +
+      "ON b.k = a.k AND b.ts > a.ts ORDER BY a.id") == Seq((1, n), (2, k20), (3, k10), (4, n)))
+    // no equality: one partition, every right row a candidate
+    assert(asof("SELECT a.id, b.v FROM asof_l a ASOF LEFT JOIN asof_r b " +
+      "ON a.ts >= b.ts ORDER BY a.id") == Seq((1, k20), (2, k10), (3, Some(99.0)), (4, k20)))
   }
 
   test("ASOF JOIN accepts an aliased subquery right side") {
-    val out = DuckDbDialect.rewrite(
-      "SELECT a.id, b.v FROM ticks a ASOF JOIN " +
-        "(SELECT k, ts, v FROM quotes WHERE v > 0) b ON b.k = a.k AND a.ts >= b.ts")
-    // the derived table drops into the domain join verbatim
-    assert(out.contains("JOIN (SELECT k, ts, v FROM quotes WHERE v > 0) b ON"), out)
-    assert(out.contains("ROW_NUMBER() OVER"), out)
-    assert(!out.toUpperCase.contains("ASOF JOIN"), out)
+    asofViews()
+    // golden from DuckDB 1.0: the v > 10 prefilter leaves the 00:00:04
+    // quote, which only id 1 reaches
+    assert(asof("SELECT a.id, b.v FROM asof_l a ASOF LEFT JOIN " +
+      "(SELECT k, ts, v FROM asof_r WHERE v > 10) AS b ON b.k = a.k AND a.ts >= b.ts " +
+      "ORDER BY a.id") == Seq((1, Some(20.0)), (2, None), (3, None), (4, None)))
+    // no alias: the rule tells the sides apart by attribute set
+    assert(asof("SELECT a.id, v FROM asof_l a ASOF JOIN (SELECT k AS rk, ts AS rts, v " +
+      "FROM asof_r) ON rk = a.k AND a.ts >= rts ORDER BY a.id") ==
+      Seq((1, Some(20.0)), (2, Some(10.0))))
+  }
+
+  test("ASOF JOIN under a bare * returns both sides' columns") {
+    asofViews()
+    // golden from DuckDB 1.0: six columns, the right's NULL when unmatched
+    val df = SqlGateway.run(spark,
+      "SELECT * FROM asof_l a ASOF LEFT JOIN asof_r b ON b.k = a.k AND a.ts >= b.ts ORDER BY a.id")
+    assert(df.columns.toSeq == Seq("id", "k", "ts", "k", "ts", "v"))
+    val ts = (s: Int) => Some(f"2024-01-01 00:00:$s%02d.0")
+    assert(df.collect().map(_.toSeq.map(v => Option(v).map(_.toString))).toSeq == Seq(
+      Seq(Some("1"), Some("k"), ts(5), Some("k"), ts(4), Some("20.0")),
+      Seq(Some("2"), Some("k"), ts(2), Some("k"), ts(1), Some("10.0")),
+      Seq(Some("3"), Some("k"), ts(0), None, None, None),
+      Seq(Some("4"), Some("z"), ts(10), None, None, None)))
+  }
+
+  test("ASOF JOIN after a multi-join left side") {
+    asofViews()
+    // golden from DuckDB 1.0
+    val rows = SqlGateway.run(spark, "SELECT n.name, b.v FROM asof_n n " +
+      "JOIN asof_l a ON a.id = n.id ASOF JOIN asof_r b ON b.k = a.k AND a.ts >= b.ts " +
+      "ORDER BY n.id").collect()
+    assert(rows.map(r => (r.getString(0), r.getDouble(1))).toSeq == Seq(("one", 20.0), ("two", 10.0)))
+  }
+
+  test("ASOF JOIN over a derived left table") {
+    asofViews()
+    // golden from DuckDB 1.0
+    assert(asof("SELECT a.id, b.v FROM (SELECT * FROM asof_l WHERE id <> 2) a " +
+      "ASOF LEFT JOIN asof_r b ON b.k = a.k AND a.ts >= b.ts ORDER BY a.id") ==
+      Seq((1, Some(20.0)), (3, None), (4, None)))
+  }
+
+  test("ASOF JOIN: a NULL ordering value or key matches nothing in any direction") {
+    // the documented 3VL bound (DuckDB 1.0 matches a NULL ordering value
+    // instead, FUZZ_NOTES class #5); under DESC the default NULLS LAST
+    // would match id 5 to the smallest right row
+    asofViews()
+    // ids 1-4 match as over asof_l (no ties there): 20.0 and 10.0 twice
+    for (op <- Seq(">=", ">", "<=", "<")) {
+      val rows = asof(s"SELECT a.id, b.v FROM asof_ln a ASOF LEFT JOIN asof_r b " +
+        s"ON b.k = a.k AND a.ts $op b.ts ORDER BY a.id")
+      assert(rows.filter(_._1 > 4) == Seq((5, None), (6, None)), op)
+      assert(rows.flatMap(_._2) == Seq(20.0, 10.0), op)
+      assert(asof(s"SELECT a.id, b.v FROM asof_ln a ASOF JOIN asof_r b " +
+        s"ON b.k = a.k AND a.ts $op b.ts ORDER BY a.id").map(_._1).forall(_ <= 4), op)
+    }
   }
 
   test("ASOF JOIN bounds fail loudly") {
-    val e1 = intercept[IllegalArgumentException] {
-      // a subquery right side WITHOUT an alias has no name for ON to reference
-      DuckDbDialect.rewrite("SELECT 1 FROM a ASOF JOIN (SELECT * FROM q) ON k = a.k AND a.t >= t")
-    }
-    assert(e1.getMessage.contains("alias"))
-    val e2 = intercept[IllegalArgumentException] {
-      DuckDbDialect.rewrite("SELECT 1 FROM a ASOF JOIN q b ON b.k = a.k")
-    }
-    assert(e2.getMessage.contains("exactly one inequality"))
-    val e3 = intercept[IllegalArgumentException] {
-      DuckDbDialect.rewrite("SELECT 1 FROM a ASOF JOIN q b ON a.t >= b.t AND a.u <= b.u")
-    }
-    assert(e3.getMessage.contains("inequality"))
-    // a bare * select list would surface the synthetic __asof_ columns
-    val e4 = intercept[IllegalArgumentException] {
-      DuckDbDialect.rewrite(
-        "SELECT * FROM ticks a ASOF JOIN quotes b ON b.k = a.k AND a.ts >= b.ts")
-    }
-    assert(e4.getMessage.contains("__asof_"))
-    // ...but multiplication in the select list is not a star
-    DuckDbDialect.rewrite(
-      "SELECT a.x * 2 AS y FROM ticks a ASOF JOIN quotes b ON b.k = a.k AND a.ts >= b.ts")
-    // a multi-join left side is refused, not mis-rewritten
-    val e5 = intercept[IllegalArgumentException] {
-      DuckDbDialect.rewrite("SELECT a.x FROM t1 x JOIN t2 a ON a.i = x.i " +
-        "ASOF JOIN quotes b ON b.k = a.k AND a.ts >= b.ts")
-    }
-    assert(e5.getMessage.toLowerCase.contains("bounded support"))
+    asofViews()
+    def err(on: String) = intercept[IllegalArgumentException](SqlGateway.run(spark,
+      s"SELECT a.id FROM asof_l a ASOF JOIN asof_r b ON $on")).getMessage
+    assert(err("b.k = a.k").contains("exactly one inequality"))
+    assert(err("a.ts >= b.ts AND a.id <= b.v").contains("exactly one inequality"))
+    assert(err("b.k = 'k' AND a.ts >= b.ts").contains("exactly one side of each"))
+    assert(err("b.k = a.k AND a.id + b.v >= b.v").contains("exactly one side of each"))
+    assert(err("b.k = a.k OR a.ts >= b.ts").contains("an AND of"))
+    assert(err("b.k LIKE a.k AND a.ts >= b.ts").contains("`=` equalities plus one inequality"))
+    val right = intercept[IllegalArgumentException](DuckDbDialect.rewrite(
+      "SELECT 1 FROM a ASOF RIGHT JOIN q b ON b.k = a.k AND a.t >= b.t"))
+    assert(right.getMessage.contains("RIGHT/FULL"))
+    val using = intercept[IllegalArgumentException](DuckDbDialect.rewrite(
+      "SELECT 1 FROM a ASOF JOIN q b USING (k, t)"))
+    assert(using.getMessage.contains("expected ON, got 'USING'"))
     // 'asof' inside a string literal is untouched
     assert(DuckDbDialect.rewrite("SELECT 'asof join' AS w") == "SELECT 'asof join' AS w")
   }
 
-  test("ASOF rewrite decorrelates to a join, never a per-row nested loop") {
-    // the scale question: Catalyst must decorrelate the LIMIT-1 lateral
-    // (DecorrelateInnerQuery → ranked window over a regular join); a
-    // BroadcastNestedLoopJoin/CartesianProduct here would be O(n·m) and
-    // disqualify the rewrite at any real size
+  test("ASOF JOIN plans one window, never a join operator") {
+    // the scale question: the merge plan is one shuffle by key and one
+    // sort; any join operator here (a BroadcastNestedLoopJoin above all)
+    // would pair rows per key instead
     import graft.ops.Tables
     Seq("lineitem", "orders").foreach { t =>
       Tables.t(spark, TestSpark.Sf, t).createOrReplaceTempView(t)
     }
     for (variant <- Seq("ASOF JOIN", "ASOF LEFT JOIN")) {
-      val sql = DuckDbDialect.rewrite(
-        s"SELECT a.l_orderkey AS k, b.o_totalprice AS v FROM lineitem a $variant orders b " +
-          "ON b.o_orderkey = a.l_orderkey AND a.l_shipdate >= b.o_orderdate")
-      val plan = spark.sql(sql).queryExecution.executedPlan.toString
-      assert(!plan.contains("BroadcastNestedLoopJoin") && !plan.contains("CartesianProduct"),
-        s"$variant planned a nested loop:\n$plan")
+      val sql = s"SELECT a.l_orderkey AS k, b.o_totalprice AS v FROM lineitem a $variant orders b " +
+        "ON b.o_orderkey = a.l_orderkey AND a.l_shipdate >= b.o_orderdate"
+      assert(!DuckDbDialect.rewrite(sql).contains("__asof_"))
+      val plan = SqlGateway.run(spark, sql).queryExecution.executedPlan.toString
+      assert(plan.contains("Window") && !plan.contains("Join") && !plan.contains("CartesianProduct"),
+        s"$variant planned a join:\n$plan")
     }
   }
 
   test("ASOF JOIN matches the AsOf operator end-to-end") {
-    import spark.implicits._
-    Seq((1, "k", "2024-01-01 00:00:05"), (2, "k", "2024-01-01 00:00:02"),
-        (3, "k", "2024-01-01 00:00:00"), (4, "z", "2024-01-01 00:00:10"))
-      .toDF("id", "k", "ts")
-      .selectExpr("id", "k", "CAST(ts AS TIMESTAMP) AS ts")
-      .createOrReplaceTempView("asof_l")
-    Seq(("k", "2024-01-01 00:00:01", 10.0), ("k", "2024-01-01 00:00:04", 20.0),
-        ("q", "2024-01-01 00:00:00", 99.0))
-      .toDF("k", "ts", "v")
-      .selectExpr("k", "CAST(ts AS TIMESTAMP) AS ts", "v")
-      .createOrReplaceTempView("asof_r")
+    asofViews()
     val rows = SqlGateway.run(spark,
       "SELECT a.id, b.v FROM asof_l a ASOF LEFT JOIN asof_r b " +
         "ON b.k = a.k AND a.ts >= b.ts ORDER BY a.id").collect()
